@@ -406,29 +406,6 @@ def test_stratified_sample_default_rate_zero_drops_unlisted(spark):
     assert [r["domain"] for r in out.collect()] == ["x"]
 
 
-def test_ivf_indexed_layout_prunes_partitions(spark, sf_dir, tmp_path):
-    """The materialized IVF index: search results identical to the on-the-fly
-    assignment, and the probe scan carries PartitionFilters on ivf_list —
-    directory pruning, the 100 TB claim made executable."""
-    from venice_spark.plans.reference_queries import W64
-    from venice_spark.similarity import (
-        ivf_build_index, ivf_topk, ivf_topk_indexed, train_ivf_centroids,
-    )
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    cents = train_ivf_centroids(emb, "embedding", n_centroids=8, sample_fraction=1.0)
-    idx = str(tmp_path / "ivf_idx")
-    ivf_build_index(emb, "embedding", "vec_id", cents, idx)
-
-    got = ivf_topk_indexed(spark, idx, W64, "embedding", "vec_id", cents, k=10, nprobe=4)
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "ivf_list" in plan.split("PartitionFilters")[1][:200], plan
-
-    fly = ivf_topk(emb, W64, "embedding", "vec_id", cents, k=10, nprobe=4)
-    assert [r["vec_id"] for r in got.collect()] == [r["vec_id"] for r in fly.collect()]
-
-
-
 def test_minhash_bucket_cap_bounds_degenerate_corpus(spark):
     """A corpus with a large block of identical boilerplate must not blow up
     candidate generation: with max_bucket_size the boilerplate bucket is

@@ -224,3 +224,61 @@ def test_schema_narrow_lazy_delta_does_not_crash_search(engine, spark):
 def test_view_df_rejects_ivf_views(engine):
     with pytest.raises(ValueError, match="ann_topk"):
         engine.store("emb").view_df("ann")
+
+
+def test_ann_topk_matches_on_the_fly_ivf_topk(engine, spark):
+    """The index view is the IVF layout written once: a partial probe over
+    its list directories returns exactly what on-the-fly assignment with
+    the same codebook returns over the store."""
+    from venice_spark.push import open_view
+    from venice_spark.similarity import ivf_topk
+
+    st = engine.store("emb")
+    cents = open_view(engine.catalog, "emb", "ann", IvfIndexViewDef).spec.centroids
+    q = _vec(42)
+    got = [r["vid"] for r in st.ann_topk("ann", q, k=10, nprobe=4).collect()]
+    fly = ivf_topk(st.df(), q, "vec", "vid", cents, k=10, nprobe=4)
+    assert got == [r["vid"] for r in fly.collect()]
+
+
+def test_composite_key_store_folds_deltas_and_refuses_knn_join(spark, tmp_root):
+    """Index endpoints carry the FULL store key: a lazy delta on (5, 1)
+    masks only that row — its sibling (5, 0) keeps serving from the index —
+    and knn_join_vs, whose [lid, rid, cos, rank] contract has one rid,
+    refuses a composite key instead of returning rows keyed on `a` alone."""
+    from venice_spark.functions import vectors as VX
+
+    eng = VeniceSparkEngine(spark, tmp_root)
+    eng.create_store("ck", key_fields=["a", "b"], partition_count=2)
+    rows = [(i // 2, i % 2, _vec(i)) for i in range(200)]
+    eng.push(
+        "ck",
+        spark.createDataFrame(rows, "a long, b long, vec array<double>"),
+        views=[IvfIndexViewDef("ann", vec_col="vec", n_centroids=8, sample_fraction=1.0)],
+    )
+    q = _vec(10)  # row (5, 0)
+    delta = spark.createDataFrame(
+        [(5, 1, _vec(10, shift=0.001))], "a long, b long, vec array<double>"
+    )
+    eng.incremental_push("ck", delta, eager=False)
+    st = eng.store("ck")
+
+    got = [
+        (r["a"], r["b"])
+        for r in st.ann_topk("ann", q, k=5, nprobe=8).collect()
+    ]
+    cos = VX.cosine_similarity("vec", list(q))
+    brute = [
+        (r["a"], r["b"])
+        for r in st.df()
+        .select("a", "b", cos.alias("c"))
+        .orderBy(F.col("c").desc(), "a", "b")
+        .limit(5)
+        .collect()
+    ]
+    assert got == brute
+    assert got[:2] == [(5, 0), (5, 1)]  # untouched sibling + moved row
+
+    left = spark.createDataFrame([(1, q)], "qid long, v array<double>")
+    with pytest.raises(ValueError, match="single-field store key"):
+        st.knn_join_vs("ann", left, "qid", vec_col="v", k=3)

@@ -73,15 +73,20 @@ class StoreMeta:
         return StoreMeta(**d)
 
 
-# Bucketed-view naming, shared by push.BucketedViewDef (writes) and
-# retire_old_versions (drops): ONE encoding of dir suffix and table name,
-# so retirement can never silently stop matching what write registered
-# (code-review r4).
+# View naming, shared by the push view defs (writes), push.open_view
+# (reads) and retire_old_versions (drops): ONE encoding of dir suffix and
+# table name, so retirement can never silently stop matching what write
+# registered (code-review r4).
+VIEW_INFIX = "__view_"
 BUCKETED_VIEW_INFIX = "__bucketed_"
 
 
 def bucketed_view_table_name(store: str, view_name: str, version: int) -> str:
     return f"{store}__{view_name}_v{version}"
+
+
+def view_dir(version_dir: str, view_name: str) -> str:
+    return f"{version_dir}{VIEW_INFIX}{view_name}"
 
 
 def bucketed_view_dir(version_dir: str, view_name: str) -> str:
@@ -509,9 +514,9 @@ class StoreCatalog:
                 if v != meta.current_version:
                     vdir = self.version_dir(store, v)
                     shutil.rmtree(vdir, ignore_errors=True)
-                    # materialized views live in SIBLING dirs
-                    # (v{N}__view_* — push.MaterializedViewDef.view_dir);
-                    # retire them with their base or they leak forever
+                    # views live in SIBLING dirs (view_dir /
+                    # bucketed_view_dir above); retire them with their
+                    # base or they leak forever
                     base = os.path.basename(vdir)
                     parent = os.path.dirname(vdir)
                     for name in os.listdir(parent):
@@ -636,11 +641,12 @@ class StoreCatalog:
         survive resolution until filtered at the end, so a delete in d2
         hides a put in d1.
 
-        This is the ONE latest-wins LSM kernel: view/bucketed-view readers
-        reuse it with `window_keys` (their bases carry no store
-        partition_id, or a differently-keyed one) and `delta_columns`
-        (project the store-shaped delta rows down to the view's columns
-        before the union)."""
+        This is the ONE latest-wins LSM kernel: every view reader reaches
+        it through push.fold_view_deltas / push.fold_index_deltas, which
+        pass `window_keys` (their bases carry no store partition_id, or a
+        differently-keyed one) and `delta_columns` (project the
+        store-shaped delta rows down to the view's columns before the
+        union)."""
         import pyspark.sql.functions as F
         from pyspark.sql import Window
 

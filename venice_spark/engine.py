@@ -27,27 +27,19 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from venice_spark.catalog import StoreCatalog
 from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder
 from venice_spark.push import (
+    BandIndexViewDef,
     BatchPushJob,
+    IvfIndexViewDef,
     MaterializedViewDef,
     PushResult,
     compact_store,
+    declared_view,
+    fold_index_deltas,
+    fold_view_deltas,
     incremental_push,
+    open_view,
     repush,
 )
-
-
-def _union_delta_keys(spark: SparkSession, deltas: list[str], keys: list[str]) -> DataFrame:
-    """Key columns of every delta dir, unioned PER DIRECTORY — a single
-    multi-path `read.parquet(d1, d2, ...)` over partition_id-partitioned
-    sibling dirs raises CONFLICTING_DIRECTORY_STRUCTURES the moment a
-    store carries two or more lazy deltas (caught by the ingest lifecycle
-    fuzzer); per-dir reads are exactly what _resolve_delta_view does.
-    Key columns are present in every delta by construction."""
-    out = None
-    for d in deltas:
-        dd = spark.read.parquet(d).select(*keys)
-        out = dd if out is None else out.unionByName(dd)
-    return out.dropDuplicates(list(keys))
 
 
 class StoreHandle:
@@ -206,104 +198,32 @@ class StoreHandle:
         MultiGetRecordStreamDecoder's incremental delivery."""
         return self.batch_get(keys).toLocalIterator()
 
-    # ---- R4-R10 compute ----
-    def _spec_or_declared(self, written, view_name: str, kind):
-        """Resolve a view's effective spec: the WRITTEN sidecar (already
-        read from the view dir) beats the store-level declaration — the
-        declaration can change after a version landed (deregistration or
-        re-declare) without its files being rewritten. Falls back to the
-        declared view of the wanted kind; None when neither exists (a
-        pre-sidecar version whose view was since deregistered)."""
-        if isinstance(written, kind):
-            return written
-        from venice_spark.push import declared_views
-
-        meta = self.catalog.get_store(self.name)
-        return next(
-            (
-                d
-                for d in declared_views(meta)
-                if d.name == view_name and isinstance(d, kind)
-            ),
-            None,
-        )
-
+    # ---- W15 view reads ----
     def view_df(self, view_name: str, version: int | None = None) -> DataFrame:
         """Read a materialized view co-written with the given (default:
         current) version — the consumer side of W15 (reference:
         MaterializedView.java consumers subscribe to the view's re-keyed
         topics). The view is re-partitioned/projected by its own key fields,
-        so filters on those fields prune like a store's own key."""
-        import os
-
-        v = version if version is not None else self.catalog.current_version(self.name)
-        path = f"{self.catalog.version_dir(self.name, v)}__view_{view_name}"
-        if not os.path.isdir(path):
-            raise ValueError(
-                f"store {self.name} v{v} has no materialized view {view_name!r}"
-            )
-        from venice_spark.push import BandIndexViewDef as _Band
-        from venice_spark.push import IvfIndexViewDef as _Ivf
-        from venice_spark.push import read_view_spec as _rvs
-
-        written = _rvs(path)
-        if isinstance(written, _Ivf):
-            # same __view_ dir pattern, different contract: serving an IVF
-            # layout through the generic reader would hand out delta rows
-            # with a NULL/stale ivf_list — use the search endpoint instead
-            raise ValueError(
-                f"view {view_name!r} of store {self.name} is an IVF index "
-                "view — query it with store.ann_topk(...)"
-            )
-        if isinstance(written, _Band):
-            # band tables have `bands` rows per key; the generic reader's
-            # latest-wins delta resolution (one row per store key) would
-            # silently collapse them — use the probe endpoint instead
-            raise ValueError(
-                f"view {view_name!r} of store {self.name} is a MinHash band "
-                "index view — probe it with store.near_dups_vs(...)"
-            )
-        base = self.spark.read.parquet(path)
-        # Lazy incremental pushes (eager=False) append to the version's
-        # delta log without touching the materialized view files. Resolve
-        # the view the same way store reads resolve the base — the shared
-        # latest-wins kernel, windowed per STORE key (view rows retain the
-        # store keys precisely for this) with deltas projected down to the
-        # view's columns. Without deltas this is the plain parquet read.
-        deltas = self.catalog.list_delta_dirs(self.name, v)
-        if not deltas:
-            return base
-        from venice_spark.push import MaterializedViewDef
-
-        meta = self.catalog.get_store(self.name)
-        store_keys = meta.key_fields
-        if any(k not in base.columns for k in store_keys):
-            raise ValueError(
-                f"view {view_name!r} of store {self.name} predates store-key "
-                "retention and cannot resolve a delta log — run "
-                "push.compact_store to fold the deltas and rewrite the view"
-            )
-        spec = self._spec_or_declared(written, view_name, MaterializedViewDef)
-        vcols = [c for c in base.columns if c != "partition_id"]
-        out = self.catalog._resolve_delta_view(
-            self.spark,
-            base.select(*vcols),
-            deltas,
-            store_keys,
-            window_keys=store_keys,
-            delta_columns=vcols,
+        so filters on those fields prune like a store's own key. Lazy-push
+        deltas resolve through the view (push.fold_view_deltas); without
+        deltas this is the plain parquet read."""
+        view = open_view(
+            self.catalog, self.name, view_name, MaterializedViewDef, version
         )
-        if spec is None:
-            # pre-sidecar version whose view was since deregistered: the
-            # data still resolves correctly (store keys are in the files);
-            # only the partition_id re-stamp needs a spec, so return the
-            # resolved rows without it rather than refusing the read
+        out = fold_view_deltas(
+            self.spark, self.catalog, self.name, view.version,
+            self.spark.read.parquet(view.path), f"view {view_name!r}",
+        )
+        if "partition_id" in out.columns or view.spec is None:
+            # no delta folded, or a pre-sidecar version whose view was
+            # since deregistered: the data still resolves correctly (store
+            # keys are in the files); only the re-stamp needs a spec
             return out
         # re-stamp the VIEW's routing column so the schema never flaps with
         # delta-log state (the plain-parquet path carries partition_id)
         from venice_spark.partitioner import with_partition_id
 
-        return with_partition_id(out, spec.key_fields, spec.partition_count)
+        return with_partition_id(out, view.spec.key_fields, view.spec.partition_count)
 
     def get_by(self, view_name: str, **field_values: Any) -> DataFrame:
         """Secondary-index lookup: equality filters on a materialized view's
@@ -327,70 +247,42 @@ class StoreHandle:
         (push.IvfIndexViewDef): rank the persisted codebook's centroids
         against the query driver-side, scan ONLY the nprobe nearest lists'
         directories (PartitionFilters on ivf_list), exact cosine within
-        them, bounded top-k. Lazy-push deltas are folded in: delta rows are
-        assigned on the fly and rows whose store key a delta touches are
-        anti-joined out of the index scan, so an overridden vector can
-        never serve from its stale list."""
-        import os
-
-        from venice_spark.push import IvfIndexViewDef, read_view_spec
+        them, bounded top-k. Lazy-push deltas fold in
+        (push.fold_index_deltas): rows whose store key a delta touches
+        leave the index scan, so an overridden vector can never serve from
+        its stale list, and the touched keys' current rows are assigned on
+        the fly."""
+        from venice_spark.functions import vectors as VX
         from venice_spark.similarity import ivf_assign, ivf_probe_lists
 
-        v = version if version is not None else self.catalog.current_version(self.name)
-        path = f"{self.catalog.version_dir(self.name, v)}__view_{view_name}"
-        if not os.path.isdir(path):
-            raise ValueError(
-                f"store {self.name} v{v} has no IVF index view {view_name!r}"
-            )
-        # the sidecar's codebook matches the FILES (the declaration may
-        # have been re-declared for retraining since this version landed)
-        spec = self._spec_or_declared(read_view_spec(path), view_name, IvfIndexViewDef)
-        if spec is None or not spec.centroids:
-            raise ValueError(
-                f"view {view_name!r} of store {self.name} carries no IVF codebook"
-            )
+        view, spec = self._ivf_view(view_name, version)
         nprobe = nprobe if nprobe is not None else max(1, len(spec.centroids) // 4)
         # probe selection shares ivf_assign's normalization (similarity.py)
         probe = ivf_probe_lists(list(query), spec.centroids, nprobe)
-
-        meta = self.catalog.get_store(self.name)
-        keys = meta.key_fields
-        base = self.spark.read.parquet(path).filter(F.col("ivf_list").isin(probe))
-        deltas = self.catalog.list_delta_dirs(self.name, v)
-        if deltas:
-            # every delta-touched key leaves the index scan (its vector may
-            # have moved lists — a stale row must never serve); the touched
-            # set unions per delta dir, the shared kernel resolves
-            # latest-wins among the slots themselves
-            touched = _union_delta_keys(self.spark, deltas, list(keys))
-            base = base.join(F.broadcast(touched), on=list(keys), how="left_anti")
-            d0 = self.spark.read.parquet(deltas[0]).limit(0)
-            resolved = self.catalog._resolve_delta_view(
-                self.spark, d0, deltas, keys, window_keys=list(keys)
-            )
-            # schema-narrow deltas are full-value upserts: a missing column
-            # is NULL on the upserted row (view_df/df() behave identically).
-            # A null/absent vector can never rank, so such rows only mask
-            # their base rows (the anti-join above) and contribute nothing.
-            if spec.vec_col in resolved.columns:
-                dd = resolved.filter(F.col(spec.vec_col).isNotNull())
-                dd = dd.withColumn("ivf_list", ivf_assign(spec.vec_col, spec.centroids))
-                dd = dd.filter(F.col("ivf_list").isin(probe))
-                dd = dd.select(
-                    *[
-                        F.col(c) if c in dd.columns else F.lit(None).cast(t.dataType).alias(c)
-                        for c, t in zip(base.columns, base.schema.fields)
-                    ]
-                )
-                base = base.unionByName(dd)
-        from venice_spark.functions import vectors as VX
-
+        base = fold_index_deltas(
+            self.spark, self.catalog, self.name, view.version,
+            self.spark.read.parquet(view.path).filter(F.col("ivf_list").isin(probe)),
+            spec.vec_col,
+            lambda cur: cur.withColumn(
+                "ivf_list", ivf_assign(spec.vec_col, spec.centroids)
+            ).filter(F.col("ivf_list").isin(probe)),
+        )
+        keys = self.key_fields
         cos = VX.cosine_similarity(spec.vec_col, list(query))
         return (
             base.select(*keys, cos.alias("cos"))
             .orderBy(F.col("cos").desc_nulls_last(), *[F.col(c).asc() for c in keys])
             .limit(k)
         )
+
+    def _ivf_view(self, view_name: str, version: int | None):
+        """(opened view, effective spec) of an IVF index view with a codebook."""
+        view = open_view(self.catalog, self.name, view_name, IvfIndexViewDef, version)
+        if view.spec is None or not view.spec.centroids:
+            raise ValueError(
+                f"view {view_name!r} of store {self.name} carries no IVF codebook"
+            )
+        return view, view.spec
 
     def knn_join_vs(
         self,
@@ -410,58 +302,39 @@ class StoreHandle:
         at query time and the candidate side scans only (key, ivf_list) —
         vectors are read once, by the rescore projection, instead of the
         raw-corpus path's assign-scan + rescore-scan. Lazy-push deltas
-        fold in exactly like ann_topk: delta-touched keys leave the index
-        (their vector may have moved lists) and the survivors' CURRENT
-        rows assign on the fly — a delta-sized digest, never a corpus
-        rescan. Returns [lid, rid, cos, rank] (ivf_knn_join's contract)."""
-        import os
-
-        from venice_spark.push import IvfIndexViewDef, read_view_spec
+        fold in exactly like ann_topk — a delta-sized digest, never a
+        corpus rescan. Returns [lid, rid, cos, rank] (ivf_knn_join's
+        contract): one `rid` column, so a composite-key store is refused
+        (query it per vector with ann_topk)."""
         from venice_spark.similarity import ivf_assign, ivf_knn_join
 
-        v = version if version is not None else self.catalog.current_version(self.name)
-        path = f"{self.catalog.version_dir(self.name, v)}__view_{view_name}"
-        if not os.path.isdir(path):
+        keys = self.key_fields
+        if len(keys) != 1:
             raise ValueError(
-                f"store {self.name} v{v} has no IVF index view {view_name!r}"
+                "knn_join_vs needs a single-field store key: its [lid, rid, "
+                f"cos, rank] contract carries one rid (store {self.name!r} "
+                f"has {keys}) — use ann_topk per query vector"
             )
-        spec = self._spec_or_declared(read_view_spec(path), view_name, IvfIndexViewDef)
-        if spec is None or not spec.centroids:
-            raise ValueError(
-                f"view {view_name!r} of store {self.name} carries no IVF codebook"
-            )
+        view, spec = self._ivf_view(view_name, version)
         nprobe = nprobe if nprobe is not None else max(1, len(spec.centroids) // 4)
-        meta = self.catalog.get_store(self.name)
-        kid = meta.key_fields[0]
-        base = self.spark.read.parquet(path)
-        deltas = self.catalog.list_delta_dirs(self.name, v)
-        if deltas:
-            touched = _union_delta_keys(self.spark, deltas, [kid])
-            base = base.join(F.broadcast(touched), on=kid, how="left_anti")
-            d0 = self.spark.read.parquet(deltas[0]).limit(0)
-            resolved = self.catalog._resolve_delta_view(
-                self.spark, d0, deltas, [kid], window_keys=[kid]
-            )
-            if spec.vec_col in resolved.columns:
-                dd = resolved.filter(F.col(spec.vec_col).isNotNull())
-                dd = dd.withColumn("ivf_list", ivf_assign(spec.vec_col, spec.centroids))
-                dd = dd.select(
-                    *[
-                        F.col(c) if c in dd.columns else F.lit(None).cast(t.dataType).alias(c)
-                        for c, t in zip(base.columns, base.schema.fields)
-                    ]
-                )
-                base = base.unionByName(dd)
+        base = fold_index_deltas(
+            self.spark, self.catalog, self.name, view.version,
+            self.spark.read.parquet(view.path),
+            spec.vec_col,
+            lambda cur: cur.withColumn(
+                "ivf_list", ivf_assign(spec.vec_col, spec.centroids)
+            ),
+        )
         probe = left_df.select(
             F.col(left_id).alias("__qid"),
             F.col(vec_col or spec.vec_col).alias(spec.vec_col),
         )
         return ivf_knn_join(
             probe,
-            base.select(kid, spec.vec_col, "ivf_list"),
+            base.select(keys[0], spec.vec_col, "ivf_list"),
             spec.vec_col,
             "__qid",
-            kid,
+            keys[0],
             spec.centroids,
             k=k,
             nprobe=nprobe,
@@ -483,77 +356,48 @@ class StoreHandle:
         probed, never re-shingled — then exact-jaccard verification
         touches only the matched store docs
         (dedup.minhash_pairs_vs_history, probe/index parameter parity
-        asserted from the sidecar spec). Lazy-push deltas fold in:
-        delta-touched keys leave the index (their text may have changed;
-        deleted keys simply vanish) and their CURRENT resolved rows
-        re-band on the fly — a batch-sized digest, never a corpus rescan.
+        asserted from the sidecar spec). Lazy-push deltas fold in
+        (push.fold_index_deltas): delta-touched keys leave the index
+        (their text may have changed; deleted keys simply vanish) and
+        their CURRENT resolved rows re-band on the fly — a batch-sized
+        digest, never a corpus rescan.
 
         Returns [new_id, hist_id, jaccard]. If the batch shares the
         store's id space (a re-ingest), identical docs pair with
         themselves — filter new_id != hist_id when that is noise."""
-        import os
-
         from venice_spark.dedup import minhash_band_table, minhash_pairs_vs_history
-        from venice_spark.push import BandIndexViewDef, read_view_spec
 
-        v = version if version is not None else self.catalog.current_version(self.name)
-        path = f"{self.catalog.version_dir(self.name, v)}__view_{view_name}"
-        if not os.path.isdir(path):
-            raise ValueError(
-                f"store {self.name} v{v} has no band index view {view_name!r}"
-            )
-        # the sidecar's parameters match the FILES (the declaration may
-        # have been re-declared since this version landed)
-        written = read_view_spec(path)
-        spec = self._spec_or_declared(written, view_name, BandIndexViewDef)
+        view = open_view(self.catalog, self.name, view_name, BandIndexViewDef, version)
+        spec = view.spec
         if spec is None:
             raise ValueError(
-                f"view {view_name!r} of store {self.name} is not a MinHash "
-                "band index view"
+                f"view {view_name!r} of store {self.name} has neither a "
+                "written nor a declared band index spec"
             )
-        meta = self.catalog.get_store(self.name)
-        kid = meta.key_fields[0]
-        hist_bands = self.spark.read.parquet(path)
+        kid = self.key_fields[0]
 
-        base_docs = self.catalog.read_version(self.spark, self.name, v)
-        deltas = self.catalog.list_delta_dirs(self.name, v)
-        hist_docs = base_docs.select(kid, spec.text_col)
-        if deltas:
-            # every delta-touched key leaves the index (stale bands must
-            # never produce candidates for changed/deleted text) ...
-            touched = _union_delta_keys(self.spark, deltas, [kid])
-            hist_bands = hist_bands.join(
-                F.broadcast(touched), on=kid, how="left_anti"
+        def fold(index: DataFrame, rederive) -> DataFrame:
+            return fold_index_deltas(
+                self.spark, self.catalog, self.name, view.version,
+                index, spec.text_col, rederive,
             )
-            # ... and the survivors' CURRENT rows re-band on the fly. For a
-            # touched key the latest delta row IS the current row (deltas
-            # outrank the base), so latest-wins resolves among the deltas
-            # alone over an empty base — the window is delta-sized, never a
-            # corpus rescan (same shape as ann_topk's delta fold)
-            d0 = self.spark.read.parquet(deltas[0]).limit(0)
-            resolved = self.catalog._resolve_delta_view(
-                self.spark, d0, deltas, [kid], window_keys=[kid]
-            )
-            if spec.text_col in resolved.columns:
-                # schema-narrow deltas leave text NULL — nothing to index
-                cur = resolved.filter(
-                    F.col(spec.text_col).isNotNull()
-                ).select(kid, spec.text_col)
-            else:
-                cur = hist_docs.limit(0)
-            fresh = minhash_band_table(
-                cur, spec.text_col, kid,
+
+        hist_bands = fold(
+            self.spark.read.parquet(view.path),
+            lambda cur: minhash_band_table(
+                cur.select(kid, spec.text_col), spec.text_col, kid,
                 num_hashes=spec.num_hashes, bands=spec.bands,
                 shingle_n=spec.shingle_n,
-            )
-            hist_bands = hist_bands.unionByName(fresh)
-            # verification texts: untouched keys read straight from the
-            # base files (broadcast anti — no corpus-wide window), touched
-            # keys read their resolved current rows
-            hist_docs = hist_docs.join(
-                F.broadcast(touched), on=kid, how="left_anti"
-            ).unionByName(cur)
-
+            ),
+        )
+        # verification texts: untouched keys read straight from the base
+        # files (broadcast anti — no corpus-wide window), touched keys read
+        # their resolved current rows
+        hist_docs = fold(
+            self.catalog.read_version(self.spark, self.name, view.version)
+            .select(kid, spec.text_col),
+            lambda cur: cur,
+        )
         probe = new_df.select(
             F.col(id_col).alias(kid),
             F.col(text_col or spec.text_col).alias(spec.text_col),
@@ -574,7 +418,7 @@ class StoreHandle:
             # fallback they come from the live declaration — which may have
             # been re-declared since the files landed — so the check is the
             # only guard against silently-zero results (code-review r5).
-            check_params=not isinstance(written, BandIndexViewDef),
+            check_params=view.written is None,
         )
 
     def hybrid_view_df(self, view_name: str, replay) -> DataFrame:
@@ -587,16 +431,15 @@ class StoreHandle:
         prunes, no second maintenance pipeline to keep consistent. Any
         handle with .read() works, so aa_serve's DCR-resolved replay
         serves views the same way."""
-        from venice_spark.push import MaterializedViewDef, declared_views
-
         meta = self.catalog.get_store(self.name)
-        for view in declared_views(meta):
-            if view.name == view_name and isinstance(view, MaterializedViewDef):
-                return view.project(replay.read(), meta.key_fields)
-        raise ValueError(
-            f"store {self.name} declares no repartition view {view_name!r}"
-        )
+        view = declared_view(meta, view_name, MaterializedViewDef)
+        if view is None:
+            raise ValueError(
+                f"store {self.name} declares no repartition view {view_name!r}"
+            )
+        return view.project(replay.read(), meta.key_fields)
 
+    # ---- R4-R10 compute ----
     def compute(self) -> ComputeRequestBuilder:
         # R4-R8 key batches ride R2's routing: execute(keys) goes through
         # batch_get, so partition ids prune version directories instead of

@@ -288,13 +288,6 @@ def minhash_from_hashes(hashes_col: Column, num_hashes: int = 16) -> list[Column
     return out
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> list[Column]:
-    """MinHash signature columns straight from shingles (convenience; the
-    two-step shingle_hashes → minhash_from_hashes with a persist between is
-    the fast path — see dedup.minhash_lsh_pairs)."""
-    return minhash_from_hashes(shingle_hashes(shingle_col, num_hashes), num_hashes)
-
-
 def simhash(col: Column | str, bits: int = 16) -> Column:
     """SimHash over whitespace tokens: per-bit majority vote of token hashes,
     packed into a bigint. Pure expression (fold over tokens). The hashed

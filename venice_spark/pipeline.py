@@ -1105,8 +1105,6 @@ def ingest_crawl_batch(
     (clients/venice-push-job/src/main/java/com/linkedin/venice/hadoop/VenicePushJob.java:1)
     has no dedup-against-history notion — this is the training-corpus
     extension of W9 incremental push."""
-    import os
-
     cfg = config or CorpusPrepConfig()
     # fail every misconfig before any corpus-scale job runs
     if cfg.pack_budget is not None:
@@ -1128,12 +1126,9 @@ def ingest_crawl_batch(
         if not have_history:
             band_view = None  # nothing to probe yet; the view lands with v1
         else:
-            v = engine.catalog.current_version(store)
-            vpath = f"{engine.catalog.version_dir(store, v)}__view_{band_view}"
-            if not os.path.isdir(vpath):
-                raise ValueError(
-                    f"store {store} v{v} has no band index view {band_view!r}"
-                )
+            from venice_spark.push import BandIndexViewDef, open_view
+
+            open_view(engine.catalog, store, band_view, BandIndexViewDef)
 
     in_cols = list(batch.columns)
     stats: dict = {"received": batch.count()}

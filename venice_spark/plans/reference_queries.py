@@ -3036,7 +3036,8 @@ def x_ann_lsh_recall(spark, sf_dir):
 def x_ann_ivf_recall(spark, sf_dir):
     """IVF ANN certification: recall@10 of nprobe=5-of-8 inverted-list search
     vs brute force, gated at 0.6 (measured 0.8-0.9 across SFs). At scale the
-    list filter is partition pruning on the IVF layout (ivf_build_index)."""
+    list filter is partition pruning on the IVF layout (push.IvfIndexViewDef
+    + StoreHandle.ann_topk)."""
     from venice_spark.similarity import brute_force_topk, ivf_topk, train_ivf_centroids
 
     emb = _t(spark, sf_dir, "embeddings")

@@ -22,12 +22,15 @@ are never funneled through Python.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from venice_spark.catalog import StoreCatalog
+from venice_spark.catalog import StoreCatalog, bucketed_view_dir
+from venice_spark.catalog import view_dir as _plain_view_dir
 from venice_spark.partitioner import repartition_and_sort, with_partition_id
 
 
@@ -604,8 +607,19 @@ def read_view_spec(view_dir: str):
         return view_from_spec(_json.load(f))
 
 
+class _ViewDef:
+    """What every view def shares: the dir a version's view files land in.
+    Each def also names its kind (`_label`) and its read endpoint
+    (`_reader`) for open_view's errors."""
+
+    _dir = staticmethod(_plain_view_dir)
+
+    def view_dir(self, catalog: StoreCatalog, store: str, version: int) -> str:
+        return self._dir(catalog.version_dir(store, version), self.name)
+
+
 @dataclass
-class MaterializedViewDef:
+class MaterializedViewDef(_ViewDef):
     """W15: re-partitioned / projected copy maintained at write time
     (internal/venice-common/.../views/MaterializedView.java:22-70,
     projection fields meta/MaterializedViewParameters.java:34).
@@ -621,6 +635,9 @@ class MaterializedViewDef:
     key_fields: list[str]
     projection: list[str] | None = None  # None = all columns
 
+    _label = "materialized view"
+    _reader = "store.view_df(...)"
+
     def spec(self) -> dict:
         """JSON-serializable registration record for the store catalog
         (the reference keeps viewConfigs on the Store — ZKStore)."""
@@ -631,9 +648,6 @@ class MaterializedViewDef:
             "key_fields": list(self.key_fields),
             "projection": list(self.projection) if self.projection is not None else None,
         }
-
-    def view_dir(self, catalog: StoreCatalog, store: str, version: int) -> str:
-        return f"{catalog.version_dir(store, version)}__view_{self.name}"
 
     def project(self, df: DataFrame, store_key_fields: list[str]) -> DataFrame:
         """Store-shaped rows -> view-shaped rows (store keys retained)."""
@@ -664,7 +678,7 @@ class MaterializedViewDef:
 
 
 @dataclass
-class BucketedViewDef:
+class BucketedViewDef(_ViewDef):
     """Bucket-table edition of a materialized view (W15): written with
     bucketBy(key) + sortBy(key), so any join or aggregation on the key
     between stores sharing the bucket spec plans with ZERO Exchange on the
@@ -692,6 +706,10 @@ class BucketedViewDef:
     key_fields: list[str]
     projection: list[str] | None = None
 
+    _label = "bucketed view"
+    _reader = "push.read_bucketed_view(...)"
+    _dir = staticmethod(bucketed_view_dir)
+
     def spec(self) -> dict:
         return {
             "kind": "bucketed",
@@ -705,11 +723,6 @@ class BucketedViewDef:
         from venice_spark.catalog import bucketed_view_table_name
 
         return bucketed_view_table_name(store, self.name, version)
-
-    def view_dir(self, catalog: StoreCatalog, store: str, version: int) -> str:
-        from venice_spark.catalog import bucketed_view_dir
-
-        return bucketed_view_dir(catalog.version_dir(store, version), self.name)
 
     def write(self, catalog: StoreCatalog, store: str, version: int, df: DataFrame) -> None:
         out = df.drop("partition_id")
@@ -751,27 +764,24 @@ def read_bucketed_view(
     """Read a bucketed view, re-registering its table (with bucket metadata)
     if this session has not seen it — bucketing only takes effect through
     the catalog, a plain parquet read of the same files loses it."""
+    import os
+
     if version is None:
         version = catalog.current_version(store)
     tn = view.table_name(store, version)
-    path = view.view_dir(catalog, store, version)
-    import os
-
-    if not os.path.isdir(path):
+    try:
+        opened = open_view(catalog, store, view.name, BucketedViewDef, version)
+    except ValueError:
         # a catalog entry may survive retirement (retire_old_versions
         # without spark=...) — never trust tableExists over the LOCATION
         spark.sql(f"DROP TABLE IF EXISTS {tn}")
-        raise ValueError(
-            f"bucketed view {tn!r} has no data at {path!r} — version "
-            f"{version} of store {store!r} was retired or never wrote this view"
-        )
+        raise
+    path = opened.path
     # validate (and prefer) the WRITTEN spec over the caller's def: a def
     # that drifted since the write would register wrong bucket metadata and
     # silently break co-located joins (code-review r4)
     n_buckets, key_fields = view.n_buckets, view.key_fields
-    written_spec = read_view_spec(path)
-    if not isinstance(written_spec, BucketedViewDef):
-        written_spec = None
+    written_spec = opened.written
     if written_spec is None and os.path.exists(os.path.join(path, "_bucket_spec.json")):
         # legacy pre-unification sidecar
         import json as _json
@@ -804,33 +814,18 @@ def read_bucketed_view(
             f"CLUSTERED BY ({cols}) SORTED BY ({sort_cols}) "
             f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
         )
-    out = spark.table(tn)
     # Lazy incremental pushes leave bucketed view files stale exactly like
     # materialized views. Resolve the delta log through the view so the
     # data is CORRECT; the union necessarily forfeits the zero-exchange
     # bucketed-join property until compact_store folds the log (documented
     # trade: correctness always, co-location when compacted).
-    deltas = catalog.list_delta_dirs(store, version)
-    if not deltas:
-        return out
-    meta = catalog.get_store(store)
-    if any(k not in out.columns for k in meta.key_fields):
-        raise ValueError(
-            f"bucketed view {tn!r} predates store-key retention and cannot "
-            "resolve a delta log — run push.compact_store first"
-        )
-    return StoreCatalog._resolve_delta_view(
-        spark,
-        out,
-        deltas,
-        meta.key_fields,
-        window_keys=list(meta.key_fields),
-        delta_columns=list(out.columns),
+    return fold_view_deltas(
+        spark, catalog, store, version, spark.table(tn), f"bucketed view {tn!r}"
     )
 
 
 @dataclass
-class IvfIndexViewDef:
+class IvfIndexViewDef(_ViewDef):
     """ANN-index edition of a materialized view (W15 shape, north-star
     content): the store's vector column written PARTITIONED BY its IVF
     list id, maintained on every write path like any declared view — the
@@ -851,6 +846,9 @@ class IvfIndexViewDef:
     seed: int = 42
     centroids: list | None = None  # learned at first write, then pinned
 
+    _label = "IVF index view"
+    _reader = "store.ann_topk(...)"
+
     def spec(self) -> dict:
         return {
             "kind": "ivf",
@@ -861,9 +859,6 @@ class IvfIndexViewDef:
             "seed": self.seed,
             "centroids": self.centroids,
         }
-
-    def view_dir(self, catalog: StoreCatalog, store: str, version: int) -> str:
-        return f"{catalog.version_dir(store, version)}__view_{self.name}"
 
     def write(self, catalog: StoreCatalog, store: str, version: int, df: DataFrame) -> None:
         from venice_spark.similarity import ivf_assign, train_ivf_centroids
@@ -894,7 +889,7 @@ class IvfIndexViewDef:
 
 
 @dataclass
-class BandIndexViewDef:
+class BandIndexViewDef(_ViewDef):
     """Near-dup-index edition of a materialized view (W15 shape, dedup
     content): the store's text column digested to the persistent MinHash
     LSH band table (dedup.minhash_band_table — (key, band_idx, band_hash)
@@ -918,6 +913,9 @@ class BandIndexViewDef:
     bands: int = 4
     shingle_n: int = 3
 
+    _label = "band index view"
+    _reader = "store.near_dups_vs(...)"
+
     def spec(self) -> dict:
         return {
             "kind": "band_index",
@@ -927,9 +925,6 @@ class BandIndexViewDef:
             "bands": self.bands,
             "shingle_n": self.shingle_n,
         }
-
-    def view_dir(self, catalog: StoreCatalog, store: str, version: int) -> str:
-        return f"{catalog.version_dir(store, version)}__view_{self.name}"
 
     def write(self, catalog: StoreCatalog, store: str, version: int, df: DataFrame) -> None:
         from venice_spark.dedup import minhash_band_table
@@ -1000,6 +995,145 @@ def declared_views(meta) -> "list[MaterializedViewDef | BucketedViewDef]":
     pushes, compactions and repushes instead of silently vanishing with
     the version swap."""
     return [view_from_spec(s) for s in meta.config.get("views", [])]
+
+
+def declared_view(meta, name: str, kind: type) -> "_ViewDef | None":
+    """The store-level declaration of view `name` as a `kind`, or None."""
+    return next(
+        (d for d in declared_views(meta) if d.name == name and isinstance(d, kind)),
+        None,
+    )
+
+
+class OpenView(NamedTuple):
+    version: int
+    path: str
+    written: "_ViewDef | None"  # the sidecar; None on pre-sidecar versions
+    spec: "_ViewDef | None"  # effective spec of the wanted kind
+
+
+def open_view(
+    catalog: StoreCatalog,
+    store: str,
+    name: str,
+    kind: type,
+    version: int | None = None,
+) -> OpenView:
+    """The ONE way a reader opens a version's (default: current) view:
+    the dir, its existence, the WRITTEN sidecar and the effective spec.
+    The sidecar matches the FILES and beats the store-level declaration,
+    which can change after a version landed (deregistration, re-declare,
+    retraining) without its files being rewritten; on a pre-sidecar
+    version the declared view of the wanted kind stands in, and the spec
+    is None when neither exists (the view was since deregistered). A view
+    written as another kind is refused and pointed at its own reader —
+    e.g. an IVF layout served through the generic reader would hand out
+    delta rows with a NULL/stale ivf_list, and a band table's `bands` rows
+    per key would collapse under latest-wins."""
+    import os
+
+    v = version if version is not None else catalog.current_version(store)
+    path = kind._dir(catalog.version_dir(store, v), name)
+    if not os.path.isdir(path):
+        raise ValueError(
+            f"store {store} v{v} has no {kind._label} {name!r}: the version "
+            "was retired or never wrote this view"
+        )
+    written = read_view_spec(path)
+    if written is not None and not isinstance(written, kind):
+        raise ValueError(
+            f"view {name!r} of store {store} was written as a "
+            f"{written._label!r}, not a {kind._label!r} — query it with "
+            f"{written._reader}"
+        )
+    spec = (
+        written if written is not None
+        else declared_view(catalog.get_store(store), name, kind)
+    )
+    return OpenView(v, path, written, spec)
+
+
+def fold_view_deltas(
+    spark: SparkSession,
+    catalog: StoreCatalog,
+    store: str,
+    version: int,
+    view: DataFrame,
+    what: str,
+) -> DataFrame:
+    """Whole-view latest-wins: resolve the version's lazy-delta log (lazy
+    incremental pushes append to it without touching view files) through
+    `view` with the shared kernel, windowed per STORE key — view rows
+    retain the store keys precisely for this — and the store-shaped delta
+    rows projected down to the view's columns. The view's own routing
+    column (partition_id) does not survive a fold; without deltas `view`
+    comes back as is."""
+    deltas = catalog.list_delta_dirs(store, version)
+    if not deltas:
+        return view
+    keys = list(catalog.get_store(store).key_fields)
+    if any(k not in view.columns for k in keys):
+        raise ValueError(
+            f"{what} of store {store} predates store-key retention and cannot "
+            "resolve a delta log — run push.compact_store to fold the deltas "
+            "and rewrite the view"
+        )
+    cols = [c for c in view.columns if c != "partition_id"]
+    return StoreCatalog._resolve_delta_view(
+        spark, view.select(*cols), deltas, keys,
+        window_keys=keys, delta_columns=cols,
+    )
+
+
+def fold_index_deltas(
+    spark: SparkSession,
+    catalog: StoreCatalog,
+    store: str,
+    version: int,
+    index: DataFrame,
+    value_col: str,
+    rederive: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Index fold: every delta-touched store key leaves `index` (its value
+    may have moved lists, changed or been deleted — a stale row must never
+    serve), and the touched keys' CURRENT rows come back re-derived by
+    `rederive` (store-shaped rows in, index-shaped rows out; columns it
+    does not produce null-fill). For a touched key the latest delta row IS
+    the current row (deltas outrank the base), so latest-wins resolves
+    among the deltas alone over an empty base — a delta-sized window,
+    never a corpus rescan. Schema-narrow deltas are full-value upserts: a
+    NULL or absent `value_col` only masks its base rows. Keys are the
+    full store key list; without deltas `index` comes back as is."""
+    deltas = catalog.list_delta_dirs(store, version)
+    if not deltas:
+        return index
+    keys = list(catalog.get_store(store).key_fields)
+    # touched keys union PER DELTA DIR: one multi-path read over
+    # partition_id-partitioned sibling dirs raises
+    # CONFLICTING_DIRECTORY_STRUCTURES once a store carries two deltas
+    touched = None
+    for d in deltas:
+        dk = spark.read.parquet(d).select(*keys)
+        touched = dk if touched is None else touched.unionByName(dk)
+    out = index.join(
+        F.broadcast(touched.dropDuplicates(keys)), on=keys, how="left_anti"
+    )
+    resolved = StoreCatalog._resolve_delta_view(
+        spark, spark.read.parquet(deltas[0]).limit(0), deltas, keys,
+        window_keys=keys,
+    )
+    if value_col not in resolved.columns:
+        return out
+    fresh = rederive(resolved.filter(F.col(value_col).isNotNull()))
+    return out.unionByName(
+        fresh.select(
+            *[
+                F.col(f.name) if f.name in fresh.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in index.schema.fields
+            ]
+        )
+    )
 
 
 def maintain_views(

@@ -787,9 +787,10 @@ def ivf_knn_join(
     Plan shape (no cartesian): left explodes to nprobe (id, list) rows —
     ids ONLY, vectors never ride the candidate shuffle (knn_join_lsh's
     discipline); right carries its single list id (precomputed
-    `right_list_col` when right IS an IVF index layout — ivf_build_index /
-    IvfIndexViewDef — else assigned on the fly); one hash join on the list
-    id, then the shared rescore joins vectors back by lid/rid. Candidate
+    `right_list_col` when right IS an IVF index layout —
+    push.IvfIndexViewDef, served by StoreHandle.knn_join_vs — else
+    assigned on the fly); one hash join on the list id, then the shared
+    rescore joins vectors back by lid/rid. Candidate
     volume = Σ_left (sizes of its nprobe lists): tunable via (n_centroids,
     nprobe), never O(n²). Each right row lives in exactly one list, so a
     (left, right) pair joins at most once — no dedup stage. The candidate
@@ -812,43 +813,6 @@ def ivf_knn_join(
     )
     cand = lb.join(rb, "__list").select("lid", "rid")
     return _rescore_topk(cand, left, right, vec_col, left_id, right_id, k)
-
-
-def ivf_build_index(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    centroids: list[list[float]],
-    path: str,
-) -> None:
-    """Materialize the IVF scale layout: the corpus written to `path`
-    PARTITIONED BY its IVF list id. Probing then prunes directories — a
-    search with nprobe lists scans nprobe/n_centroids of the files before
-    a single row is read (the claim SCALE.md makes; the plan-shape test
-    asserts PartitionFilters on the probe scan). One shuffle-free pass:
-    ivf_assign is pure JVM expressions."""
-    out = df.withColumn("ivf_list", ivf_assign(vec_col, centroids))
-    out.write.mode("overwrite").partitionBy("ivf_list").parquet(path)
-
-
-def ivf_topk_indexed(
-    spark,
-    path: str,
-    query: Sequence[float],
-    vec_col: str,
-    id_col: str,
-    centroids: list[list[float]],
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """IVF search against a materialized index dir (ivf_build_index):
-    the `ivf_list IN (probes)` filter lands on the partition column, so
-    only the probed lists' directories are ever opened."""
-    df = spark.read.parquet(path)
-    return ivf_topk(
-        df, query, vec_col, id_col, centroids, k=k, nprobe=nprobe, list_col="ivf_list"
-    )
-
 
 
 def kmeans_fit(
@@ -1142,7 +1106,7 @@ def ivf_pq_topk(
 ) -> DataFrame:
     """IVF-PQ (the FAISS IVFPQ composition): the coarse quantizer prunes
     the scan to `nprobe` inverted lists (partition pruning when the corpus
-    is written partitioned by `list_col` — ivf_build_index), and PQ codes
+    is written partitioned by `list_col` — push.IvfIndexViewDef), and PQ codes
     shrink what those lists read 16-32×; ADC + optional exact re-rank
     within the probed lists only. At 100 TB: scan nprobe/n_lists of the
     directories × m bytes per vector — both axes of the search cost cut by

@@ -145,35 +145,16 @@ def run_corpus_ingest_to_store(
         # eager write — and, when a version is already serving, it must be
         # MATERIALIZED as a band index on that version (a declared-but-
         # unbuilt view would fail the first probe mid-stream)
-        import os
-
-        from venice_spark.push import BandIndexViewDef, declared_views, read_view_spec
+        from venice_spark.push import BandIndexViewDef, declared_view, open_view
 
         meta = engine.catalog.get_store(store)
-        declared = any(
-            d.name == band_view and isinstance(d, BandIndexViewDef)
-            for d in declared_views(meta)
-        )
-        if not declared:
+        if declared_view(meta, band_view, BandIndexViewDef) is None:
             raise ValueError(
                 f"store {store!r} declares no band index view {band_view!r} "
                 "— register it in the store config so every push maintains it"
             )
-        v = engine.catalog.current_version(store)
-        if v > 0:
-            vpath = f"{engine.catalog.version_dir(store, v)}__view_{band_view}"
-            if not os.path.isdir(vpath):
-                raise ValueError(
-                    f"band index view {band_view!r} is declared but not "
-                    f"materialized on served v{v} — run an eager push or "
-                    "compact_store to build it before streaming"
-                )
-            written = read_view_spec(vpath)
-            if written is not None and not isinstance(written, BandIndexViewDef):
-                raise ValueError(
-                    f"view {band_view!r} on {store!r} v{v} is not a MinHash "
-                    "band index"
-                )
+        if engine.catalog.current_version(store) > 0:
+            open_view(engine.catalog, store, band_view, BandIndexViewDef)
 
     prepped = streaming_corpus_prep(
         stream, text_col=text_col, ts_col=ts_col, **prep_kwargs

@@ -72,13 +72,6 @@ class UpdateBuilder:
 
 # ---- expression library ----
 
-def merged_scalar(old: Column, set_col: Column | None) -> Column:
-    """W3 setNewFieldValue: NULL update = NoOp."""
-    if set_col is None:
-        return old
-    return F.coalesce(set_col, old)
-
-
 def merged_list(
     old: Column,
     add_col: Column | None,
