@@ -175,6 +175,9 @@ def main():
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
+    # per-get latency quantiles of the store serving section: sidecar only
+    # (BENCH_detail.json), so the stdout line keeps its shape
+    get_latency: dict[str, float] = {}
 
     # warm the JVM, codegen and file listings once (md5/regexp codegen for the
     # doc tables is a one-off ~10s cost that would otherwise land on the first
@@ -261,6 +264,15 @@ def main():
             assert st.get(sample[0]) is not None
             dt = round(time.monotonic() - t0, 3)
             timings["r1_store_point_get"] = min(timings.get("r1_store_point_get", dt), dt)
+            lat = []
+            for key in sample:
+                t0 = time.perf_counter()
+                st.get(key)
+                lat.append(time.perf_counter() - t0)
+            lat.sort()  # nearest-rank quantiles, min over passes
+            for q, v in (("p50_ms", lat[len(lat) // 2]), ("p99_ms", lat[-(len(lat) // 100) - 1])):
+                get_latency[q] = round(min(1e3 * v, get_latency.get(q, 1e3 * v)), 3)
+            get_latency["gets"] = len(lat)
             section = "r2_store_batch_get"
             keys = sample
             t0 = time.monotonic()
@@ -434,6 +446,8 @@ def main():
         pass  # trend is advisory; never fail the bench over it
     try:
         detail = dict(out)
+        if get_latency:
+            detail["r1_store_point_get_latency"] = get_latency
         if prior_queries:
             detail["vs_prior"] = {
                 "baseline": prior_name,

@@ -347,13 +347,16 @@ def test_predicates_match_null_fields(spark):
 def test_compute_execute_routes_through_partition_pruning(spark, tmp_root, sf_dir):
     """StoreHandle.compute().execute(keys) rides batch_get's routing: the
     scan is filtered to the key batch's partition ids instead of reading
-    every directory of the store."""
+    every directory of the store. Pinned on the Spark batch_get (a lazy
+    delta slot keeps the read off the Arrow path, which routes the same
+    way but reads the owning dirs outside Spark)."""
     from venice_spark.engine import VeniceSparkEngine
 
     eng = VeniceSparkEngine(spark, tmp_root)
     eng.create_store("emb", key_fields=["vec_id"], partition_count=8)
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     eng.push("emb", df)
+    eng.incremental_push("emb", df.orderBy("vec_id").limit(1), eager=False)
     h = eng.store("emb")
     keys = [r[0] for r in df.select("vec_id").limit(3).collect()]
     out = h.compute().project("label").execute(keys)

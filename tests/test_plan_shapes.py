@@ -135,12 +135,17 @@ def test_delta_resolved_get_still_prunes_partitions(spark, tmp_path):
 
 
 def test_store_get_prunes_partition_dirs(spark, sf_dir, tmp_path):
+    """The Spark batch_get (here: under a lazy delta slot, which keeps a
+    read off the Arrow path) prunes version directories."""
     from venice_spark import VeniceSparkEngine
 
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     eng.create_store("c", key_fields=["c_custkey"], partition_count=8)
-    eng.push("c", spark.read.parquet(f"{sf_dir}/customer.parquet"))
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    eng.push("c", cust)
+    eng.incremental_push("c", cust.filter("c_custkey = 5"), eager=False)
     st = eng.store("c")
+    assert st._served_files() is None  # the live slot routes reads to Spark
     out = st.batch_get([1, 2, 3])
     plan = out._jdf.queryExecution().executedPlan().toString()
     # version layout is partitioned by partition_id -> the scan must carry
@@ -148,6 +153,49 @@ def test_store_get_prunes_partition_dirs(spark, sf_dir, tmp_path):
     assert "PartitionFilters: [" in plan and "partition_id" in plan.split("PartitionFilters")[1][:200], plan
     assert st.get(1) is not None
     assert st.get(10**9) is None
+
+
+def _spark_jobs(spark, fn):
+    """(result, Spark jobs launched while fn ran)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def test_plain_version_get_and_batch_get_launch_no_spark_job(spark, sf_dir, tmp_path):
+    """With no delta slot, get and a collected batch_get read the owning
+    partition dirs through Arrow: zero Spark jobs."""
+    from venice_spark import VeniceSparkEngine
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("c", key_fields=["c_custkey"], partition_count=8)
+    eng.push("c", spark.read.parquet(f"{sf_dir}/customer.parquet"))
+    st = eng.store("c")
+    row, jobs = _spark_jobs(spark, lambda: st.get(1))
+    assert row["c_custkey"] == 1 and jobs == 0
+    missing, jobs = _spark_jobs(spark, lambda: st.get(10**9))
+    assert missing is None and jobs == 0
+    rows, jobs = _spark_jobs(spark, lambda: st.batch_get([1, 2, 3, 10**9]).collect())
+    assert sorted(r["c_custkey"] for r in rows) == [1, 2, 3] and jobs == 0
+
+
+def test_batch_over_arrow_bound_plans_broadcast_join(spark, sf_dir, tmp_path):
+    """ARROW_BATCH_MAX_KEYS bounds the driver-side Arrow read: a batch at
+    the bound is a local scan, one key over it is the broadcast join."""
+    from venice_spark import VeniceSparkEngine
+    from venice_spark.engine import ARROW_BATCH_MAX_KEYS
+
+    assert ARROW_BATCH_MAX_KEYS >= 200  # bench.py's r2_store_batch_get batch
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("c", key_fields=["c_custkey"], partition_count=8)
+    eng.push("c", spark.read.parquet(f"{sf_dir}/customer.parquet"))
+    st = eng.store("c")
+    keys = list(range(1, ARROW_BATCH_MAX_KEYS + 2))
+    at_bound = _plan(st.batch_get(keys[:-1]))
+    assert "LocalTableScan" in at_bound and "BroadcastHashJoin" not in at_bound, at_bound
+    over = _plan(st.batch_get(keys))
+    assert "BroadcastHashJoin" in over, over
 
 
 def test_per_row_corpus_metrics_have_no_shuffle_and_no_python(spark, sf_dir):

@@ -32,8 +32,11 @@ here, `_resolve_delta_view` there); the order key is the semantic choice.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import types as T
 
 from venice_spark.catalog import StoreCatalog
 
@@ -1077,32 +1080,55 @@ def align_to_log_schema(df: DataFrame, serving_dir: str) -> DataFrame:
     return df
 
 
-def resolve_registry_reader(df: DataFrame, reg: dict) -> DataFrame:
-    """Registry reader-schema resolution, shared by EVERY read surface
-    (code-review r9 — four hand-rolled copies had already diverged): a
-    registry column absent from the frame null-fills (defaulted add); a
-    column whose registry type is an Avro promotion of the frame type
-    widens via the FULL lattice (avro_promotion_target — the frame is
-    already scanned, so the cast is a plain projection and no native-
-    parquet-widening constraint applies). Genuinely incompatible registry
-    types leave the frame type untouched: files are ground truth on read,
-    a true retype migrates through `admin compact --cast` / the next
-    push. Reference: reads deserialize with the latest registered value
-    schema, schema/SchemaEntry.java."""
+class ReaderColumn(NamedTuple):
+    """One output column of a reader-schema plan: `keep` the file column,
+    `cast` it to `type`, or `null`-fill a registry column the files
+    predate. `type` is the column's type after resolution."""
+
+    name: str
+    action: str
+    type: T.DataType
+
+
+def reader_plan(fields: list, reg: dict) -> list[ReaderColumn]:
+    """Registry reader-schema resolution as data — the ONE statement of
+    the rules every read surface applies (resolve_registry_reader for
+    Spark frames, the engine's Arrow point reads). Output order is the
+    file's columns, then the null-filled registry columns in registry
+    order. A registry column absent from the files null-fills (defaulted
+    add); a column whose registry type is an Avro promotion of the file
+    type widens via the FULL lattice (avro_promotion_target — the data is
+    already scanned, so the cast is a plain projection and no
+    native-parquet-widening constraint applies). Genuinely incompatible
+    registry types keep the file type: files are ground truth on read, a
+    true retype migrates through `admin compact --cast` / the next push.
+    Reference: reads deserialize with the latest registered value schema,
+    schema/SchemaEntry.java."""
     from venice_spark.schema_compat import avro_promotion_target
 
-    if not reg:
-        return df
-    types = {f.name: f.dataType for f in df.schema.fields}
-    for name, t in reg.items():
-        cur = types.get(name)
-        if cur is None:
-            df = df.withColumn(name, F.lit(None).cast(t))
-        elif cur != t:
-            target = avro_promotion_target(cur, t)
-            if target is not None and target != cur:
-                df = df.withColumn(name, F.col(name).cast(target))
-    return df
+    plan = []
+    for f in fields:
+        t = reg.get(f.name)
+        target = None if t is None else avro_promotion_target(f.dataType, t)
+        if target is not None and target != f.dataType:
+            plan.append(ReaderColumn(f.name, "cast", target))
+        else:
+            plan.append(ReaderColumn(f.name, "keep", f.dataType))
+    have = {f.name for f in fields}
+    plan += [ReaderColumn(n, "null", t) for n, t in reg.items() if n not in have]
+    return plan
+
+
+def resolve_registry_reader(df: DataFrame, reg: dict) -> DataFrame:
+    """Apply reader_plan to a scanned frame, shared by EVERY Spark read
+    surface (code-review r9 — four hand-rolled copies had already
+    diverged): promoted columns cast in place, added ones append."""
+    changes = {
+        c.name: (F.lit(None) if c.action == "null" else F.col(c.name)).cast(c.type)
+        for c in reader_plan(df.schema.fields, reg)
+        if c.action != "keep"
+    }
+    return df.withColumns(changes) if changes else df
 
 
 def read_log(spark: SparkSession, serving_dir: str, schema=None) -> DataFrame:
