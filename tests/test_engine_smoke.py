@@ -94,16 +94,13 @@ def test_compute_over_keys(spark, tmp_root, sf_dir):
         assert r["__veniceComputationError__"] == {}
 
 
-def test_pandas_dot_udf_matches_fold_and_null_edges(spark, sf_dir):
-    """The wide-vector pandas-UDF dot (batched GEMV since r10) must agree
-    with the codegen fold kernel on every corpus row and keep its NULL
-    semantics: null vector, empty vector and length mismatch all yield
-    SQL NULL (a NaN would survive Arrow as NaN, not NULL — regression
-    pin; the factory's type hints also resolve only through the
-    module-level pandas import, which this test exercises)."""
-    import pyspark.sql.functions as F
+def test_dot_fold_matches_numpy_and_null_edges(spark, sf_dir):
+    """The codegen fold dot product must agree with a float64 numpy dot
+    on every corpus row and keep its NULL semantics: null vector, empty
+    vector and length mismatch all yield SQL NULL."""
+    import numpy as np
 
-    from venice_spark.functions.vectors import dot_product, make_dot_product_pandas_udf
+    from venice_spark.functions.vectors import dot_product
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -113,22 +110,18 @@ def test_pandas_dot_udf_matches_fold_and_null_edges(spark, sf_dir):
         "vec_id long, embedding array<float>",
     )
     p = [0.1 * (i % 7 - 3) for i in range(64)]
-    udf_dot = make_dot_product_pandas_udf(p)
     rows = (
         emb.unionByName(edge)
-        .select(
-            "vec_id",
-            udf_dot("embedding").alias("u"),
-            dot_product("embedding", p).alias("f"),
-        )
+        .select("vec_id", "embedding", dot_product("embedding", p).alias("f"))
         .collect()
     )
     for r in rows:
         if r["vec_id"] >= 900000:
-            assert r["u"] is None and r["f"] is None
+            assert r["f"] is None
         else:
-            assert r["u"] is not None
-            assert abs(r["u"] - r["f"]) < 1e-9
+            want = float(np.asarray(r["embedding"], dtype=np.float64) @ np.asarray(p))
+            assert r["f"] is not None
+            assert abs(want - r["f"]) < 1e-9
 
 
 def test_compression_strategy_config(engine, spark, tmp_path):
@@ -180,6 +173,22 @@ def test_compute_dsl_over_delta_resolved_store(spark, tmp_path):
     )
     scores = {r["vec_id"]: r["score"] for r in out.collect()}
     assert scores == {1: 2.0, 2: 1.0}  # vec 1 reflects the delta, not the base
+
+
+def test_store_builders_build_the_frame_for_whole_store_plans(engine):
+    """StoreHandle's builders pass the store frame unbuilt; the
+    whole-store plans (execute_with_filter, the bucket count) build it and
+    match builders over the built frame."""
+    from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder
+
+    st = engine.store("customers")
+    pred = F.col("c_custkey") <= 5
+    got = st.compute().project("c_name").execute_with_filter(pred)
+    want = ComputeRequestBuilder(st.df(), st.key_fields).project("c_name").execute_with_filter(pred)
+    assert sorted(got.collect()) == sorted(want.collect()) and len(want.collect()) == 6  # keys 0-5
+    buckets = {"low": F.col("c_acctbal") < 0, "high": F.col("c_acctbal") >= 5000}
+    got = st.aggregate().count_group_by_bucket(buckets).collect()
+    assert got == ComputeAggregationBuilder(st.df(), st.key_fields).count_group_by_bucket(buckets).collect()
 
 
 def test_create_temp_views_sql_over_stores(spark, tmp_root):

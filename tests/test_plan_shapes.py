@@ -198,6 +198,86 @@ def test_batch_over_arrow_bound_plans_broadcast_join(spark, sf_dir, tmp_path):
     assert "BroadcastHashJoin" in over, over
 
 
+def test_plain_version_frame_takes_footer_schema_without_a_job(spark, tmp_path):
+    """df() of a plain version reads with the files' footer schema: the
+    schema (nullability and field metadata included) and rows of an
+    inferred spark.read.parquet, and no schema-inference job."""
+    from venice_spark import VeniceSparkEngine
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("p", key_fields=["k"], partition_count=4)
+    import pyspark.sql.types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("s", T.StringType(), True, {"comment": "kept"}),
+            T.StructField("v", T.ArrayType(T.DoubleType(), False), True),
+            T.StructField("b", T.BooleanType(), False),
+        ]
+    )
+    src = spark.createDataFrame(
+        [(k, f"s{k}" if k % 3 else None, [k * 0.5], k % 2 == 0) for k in range(40)], schema
+    )
+    eng.push("p", src)
+    st = eng.store("p")
+    inferred = spark.read.parquet(eng.catalog.version_dir("p", 1))
+    df, jobs = _spark_jobs(spark, st.df)
+    assert jobs == 0
+    assert df.schema == inferred.schema
+    assert [f.nullable for f in df.schema.fields] == [f.nullable for f in inferred.schema.fields]
+    assert df.schema["s"].metadata == inferred.schema["s"].metadata
+    assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect()))
+
+
+def test_keyed_compute_and_facet_counts_launch_no_spark_job(spark, sf_dir, tmp_path):
+    """On a small plain version, compute().execute(keys) never builds the
+    store frame and the facet counts are counted through Arrow: zero
+    Spark jobs, collects included."""
+    from venice_spark import VeniceSparkEngine
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("e", key_fields=["vec_id"], partition_count=8)
+    eng.push("e", spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    st = eng.store("e")
+    dim = len(st.get(0)["embedding"])
+    p = [0.1 * (i % 5 - 2) for i in range(dim)]
+    rows, jobs = _spark_jobs(
+        spark,
+        lambda: st.compute()
+        .project("label")
+        .dot_product("embedding", p, "dot")
+        .cosine_similarity("embedding", p, "cos")
+        .execute([0, 1, 2, 10**9])
+        .collect(),
+    )
+    assert sorted(r["vec_id"] for r in rows) == [0, 1, 2] and jobs == 0
+    out, jobs = _spark_jobs(spark, lambda: st.aggregate().count_group_by_value(3, "label", "vec_id"))
+    assert jobs == 0
+    for f, frame in out.items():
+        counted, jobs = _spark_jobs(spark, frame.collect)
+        assert 0 < len(counted) <= 3 and jobs == 0, f
+
+
+def test_facet_count_over_arrow_bound_plans_hash_aggregate(spark, tmp_path):
+    """ARROW_SCAN_MAX_ROWS bounds the driver-side facet count: a version
+    one row over it is counted by Spark's HashAggregate, and the bound
+    itself would still be counted through Arrow."""
+    from venice_spark import VeniceSparkEngine
+    from venice_spark.engine import ARROW_SCAN_MAX_ROWS
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("big", key_fields=["k"], partition_count=4)
+    eng.push("big", spark.range(ARROW_SCAN_MAX_ROWS + 1).select(
+        F.col("id").alias("k"), (F.col("id") % 7).cast("int").alias("v")
+    ))
+    st = eng.store("big")
+    assert eng.catalog.version_manifest("big")["rows"] == ARROW_SCAN_MAX_ROWS + 1
+    plan = _plan(st.aggregate().count_group_by_value(3, "v")["v"])
+    assert "HashAggregate" in plan and "LocalTableScan" not in plan, plan
+    assert st._served_files().value_counts(3, ["v"], ARROW_SCAN_MAX_ROWS) is not None
+
+
 def test_per_row_corpus_metrics_have_no_shuffle_and_no_python(spark, sf_dir):
     """repetition metrics and PII scrub are pure per-row expression chains:
     one scan, zero Exchange, zero Python stage — the shape that stays

@@ -30,6 +30,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -97,6 +98,41 @@ def _struct_from_json(s: str) -> T.StructType:
     return T.StructType.fromJson(json.loads(s))
 
 
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _data_files(d: str) -> list[str]:
+    """The data files Spark would read in `d` (hidden `.`/`_` names
+    skipped); [] for a missing dir."""
+    try:
+        names = os.listdir(d)
+    except FileNotFoundError:
+        return []
+    return sorted(os.path.join(d, n) for n in names if not n.startswith((".", "_")))
+
+
+def _partition_dirs(version_dir: str) -> list[str]:
+    """A version's partition_id=P subdirs; [] when it has none (an empty
+    version is written plain) or is missing."""
+    try:
+        names = os.listdir(version_dir)
+    except FileNotFoundError:
+        return []
+    return [os.path.join(version_dir, n) for n in names if n.startswith("partition_id=")]
+
+
+def _footer_schema(version_dir: str) -> T.StructType | None:
+    """The Spark schema of a version's data files, read from one file's
+    footer (`org.apache.spark.sql.parquet.row.metadata` — the schema
+    Spark's own reader takes, so column order and types match an inferred
+    read without its listing or inference job). None when the dir has no
+    partition_id=P subdirs or no footer schema."""
+    for p in _partition_dirs(version_dir):
+        files = _data_files(p)
+        if files:
+            raw = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+            return None if raw is None else T.StructType.fromJson(json.loads(raw))
+    return None
 
 
 class StoreCatalog:
@@ -614,7 +650,7 @@ class StoreCatalog:
         meta = self.get_store(store)
         if meta.current_version <= 0:
             raise ValueError(f"store {store!r} has no current version")
-        base = spark.read.parquet(self.version_dir(store, meta.current_version))
+        base = self.read_version(spark, store, meta.current_version)
         deltas = self.list_delta_dirs(store, meta.current_version)
         if not deltas or not resolve_deltas:
             return base
@@ -674,7 +710,15 @@ class StoreCatalog:
         return out
 
     def read_version(self, spark: SparkSession, store: str, version: int) -> DataFrame:
-        return spark.read.parquet(self.version_dir(store, version))
+        """A version's files. With a footer schema the read takes it (plus
+        the int partition column) instead of running Spark's
+        schema-inference job; otherwise Spark infers."""
+        vdir = self.version_dir(store, version)
+        schema = _footer_schema(vdir)
+        if schema is None:
+            return spark.read.parquet(vdir)
+        pid = T.StructField("partition_id", T.IntegerType(), True)
+        return spark.read.schema(T.StructType([*schema.fields, pid])).parquet(vdir)
 
     # ---- internals ----
     def _write_meta(self, meta: StoreMeta) -> None:

@@ -25,7 +25,7 @@ rowgroup pruning, the moral equivalent of RocksDB prefix iteration
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
@@ -45,9 +45,23 @@ class _Op:
     param: Sequence[float] | None = None
 
 
+class _StoreFrame:
+    """`df` is the frame a builder plans over, or a zero-arg function
+    building it. StoreHandle passes its unbuilt `df` so that a keyed
+    execute (served by batch_get) or an Arrow facet count never lists the
+    version: the frame is built on the first whole-store plan."""
+
+    df: DataFrame | Callable[[], DataFrame]
+
+    def frame(self) -> DataFrame:
+        if not isinstance(self.df, DataFrame):
+            self.df = self.df()
+        return self.df
+
+
 @dataclass
-class ComputeRequestBuilder:
-    df: DataFrame
+class ComputeRequestBuilder(_StoreFrame):
+    df: DataFrame | Callable[[], DataFrame]
     key_fields: list[str]
     projections: list[str] = dc_field(default_factory=list)
     ops: list[_Op] = dc_field(default_factory=list)
@@ -120,7 +134,7 @@ class ComputeRequestBuilder:
 
     def plan(self) -> DataFrame:
         """Lower to a DataFrame over the whole store (no key restriction)."""
-        return self.df.select(*self._result_columns())
+        return self.frame().select(*self._result_columns())
 
     def execute(
         self,
@@ -142,18 +156,19 @@ class ComputeRequestBuilder:
         if self.key_batch_source is not None:
             joined = self.key_batch_source(keys)
         else:
-            spark = self.df.sparkSession
+            df = self.frame()
+            spark = df.sparkSession
             # explicit schema from the store frame: with only field NAMES an
             # empty key batch has nothing to infer types from and
             # createDataFrame raises CANNOT_INFER_EMPTY_SCHEMA — batchGet
             # semantics say an empty batch is an empty result, not a crash
             # (code-review r4)
-            key_schema = self.df.select(*self.key_fields).schema
+            key_schema = df.select(*self.key_fields).schema
             if len(self.key_fields) == 1:
                 kdf = spark.createDataFrame([(k,) for k in keys], schema=key_schema)
             else:
                 kdf = spark.createDataFrame(list(keys), schema=key_schema)
-            joined = self.df.join(F.broadcast(kdf), on=self.key_fields, how="inner")
+            joined = df.join(F.broadcast(kdf), on=self.key_fields, how="inner")
         return ComputeRequestBuilder(
             joined, self.key_fields, self.projections, self.ops, self.with_error_channel
         ).plan()
@@ -163,7 +178,7 @@ class ComputeRequestBuilder:
         predicate (AvroComputeRequestBuilderV4.java:33-75). Pushdown replaces
         RocksDB prefix iteration."""
         return ComputeRequestBuilder(
-            self.df.filter(predicate),
+            self.frame().filter(predicate),
             self.key_fields,
             self.projections,
             self.ops,
@@ -196,23 +211,33 @@ class ComputeRequestBuilder:
 
 
 @dataclass
-class ComputeAggregationBuilder:
+class ComputeAggregationBuilder(_StoreFrame):
     """Facet aggregations (R11/R12) —
     clients/venice-thin-client/.../ComputeAggregationRequestBuilder.java:16-31.
     The reference counts client-side over returned records
-    (FacetCountingUtils.java:30); here the cluster does it: groupBy/count
-    with map-side partial aggregation."""
+    (FacetCountingUtils.java:30). A store's small plain-file version is
+    counted the same way, on the driver through Arrow
+    (`value_counts_source`, plugged in by StoreHandle.aggregate); anything
+    else is a groupBy/count with map-side partial aggregation."""
 
-    df: DataFrame
+    df: DataFrame | Callable[[], DataFrame]
     key_fields: list[str]
+    # (top_k, fields) -> {field: frame}, or None when Spark must count
+    value_counts_source: Any = None
 
     def count_group_by_value(self, top_k: int, *fields: str) -> dict[str, DataFrame]:
         """Top-K most frequent values per field. Deterministic order:
-        count desc, then value asc (ties)."""
+        count desc, then value asc (ties, nulls first). Columns: value
+        (the field's type), count (long, not null)."""
+        if self.value_counts_source is not None:
+            counted = self.value_counts_source(top_k, fields)
+            if counted is not None:
+                return counted
+        df = self.frame()
         out = {}
         for f_name in fields:
             out[f_name] = (
-                self.df.groupBy(F.col(f_name).alias("value"))
+                df.groupBy(F.col(f_name).alias("value"))
                 .agg(F.count("*").alias("count"))
                 .orderBy(F.col("count").desc(), F.col("value").asc())
                 .limit(top_k)
@@ -225,4 +250,4 @@ class ComputeAggregationBuilder:
         aggs = [
             F.count(F.when(pred, F.lit(1))).alias(name) for name, pred in buckets.items()
         ]
-        return self.df.agg(*aggs)
+        return self.frame().agg(*aggs)

@@ -11,8 +11,7 @@ Reference operators (internal/venice-client-common/src/main/java/com/linkedin/ve
 Spark-first: everything here is a JVM-side Column expression
 (zip_with/aggregate run inside whole-stage codegen; no Python in the hot
 path). Arithmetic is done in float64 with a strict left-to-right fold so
-results are bit-reproducible and oracle-checkable. A numpy pandas_udf
-variant is provided for very wide vectors where Arrow batching wins.
+results are bit-reproducible and oracle-checkable.
 
 Semantics parity:
   - empty/null vector -> NULL result (DotProductOperator.java:40-45)
@@ -27,7 +26,6 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-import pandas as pd  # module-level: pandas_udf type hints must resolve here
 import pyspark.sql.functions as F
 from pyspark.sql import Column
 
@@ -37,8 +35,22 @@ def _as_double_array(col: Column | str) -> Column:
     return c.cast("array<double>")
 
 
+def _double_sql(v: float) -> str:
+    """A non-null double literal in Spark SQL: the shortest round-trip
+    repr (bit-exact through Java's parser), and NaN/±Infinity as string
+    casts wrapped in coalesce, which keeps the element non-nullable as a
+    literal is."""
+    if math.isfinite(v):
+        return f"{v!r}D"
+    spelled = "NaN" if math.isnan(v) else ("Infinity" if v > 0 else "-Infinity")
+    return f"coalesce(CAST('{spelled}' AS DOUBLE), 0D)"
+
+
 def _lit_array(values: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(v)).cast("double") for v in values])
+    """A constant array<double> built in one JVM call: one parsed
+    expression instead of a lit and a cast per element (two py4j round
+    trips each, ~105 ms for a 64-dim param)."""
+    return F.expr("array(" + ", ".join(_double_sql(float(v)) for v in values) + ")")
 
 
 def _fold_sum(products: Column) -> Column:
@@ -163,40 +175,6 @@ def compute_error_entries(
     return F.when(err.isNotNull(), F.create_map(F.lit(key), err)).otherwise(
         F.create_map().cast("map<string,string>")
     )
-
-
-# ---- numpy fast path for wide vectors (Arrow-batched, ~10-100x over row UDFs) ----
-
-def make_dot_product_pandas_udf(param: Sequence[float]):
-    """Pandas-UDF dot product: use when vectors are wide (>=512 dims) and the
-    fold expression gets expensive to codegen. Same NULL semantics."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    p = np.asarray(param, dtype=np.float64)
-
-    @pandas_udf("double")
-    def dot(col: pd.Series) -> pd.Series:
-        # whole-batch GEMV (guide §4.2): valid rows stack into one (n, d)
-        # matrix and hit BLAS once; per-row Python only filters the
-        # null/length-mismatch rows (same NULL semantics as the fold form)
-        vals = col.to_numpy()
-        # object carrier: invalid rows must surface as SQL NULL, and a
-        # float64 NaN would not (NaN != NULL through Arrow)
-        out = np.full(len(vals), None, dtype=object)
-        ok = [
-            i
-            for i, v in enumerate(vals)
-            if v is not None and len(v) > 0 and len(v) == len(p)
-        ]
-        if ok:
-            X = np.asarray([vals[i] for i in ok], dtype=np.float64)
-            for i, d in zip(ok, (X @ p).tolist()):
-                out[i] = d
-        return pd.Series(out)
-
-    return dot
 
 
 def oracle_dot_sql(array_expr: str, param: Sequence[float]) -> str:
