@@ -27,6 +27,28 @@ def _mk(eng, spark):
     return eng.store("aa")
 
 
+def _batch_kernel(spark, st, ops):
+    """The one-shot oracle: base ∪ every op folded through merge_op_log in
+    ONE batch."""
+    from venice_spark.merge.dcr import merge_op_log
+
+    base_ops = st.df().drop("partition_id").select(
+        "k", F.lit("PUT").alias("op"), F.lit(0).cast("long").alias("ts"),
+        F.lit(0).alias("colo"), "name", "score",
+    )
+    log_ops = spark.createDataFrame(
+        [{**{c: None for c in ["k", "op", "ts", "colo", "name", "score", "set_name"]}, **r}
+         for r in ops],
+        OPS_SCHEMA,
+    )
+    batch = merge_op_log(
+        base_ops.unionByName(log_ops, allowMissingColumns=True),
+        ["k"],
+        "k long, name string, score double",
+    )
+    return {r["k"]: (r["name"], r["score"]) for r in batch.collect()}
+
+
 def test_aa_replay_field_level_updates_and_tombstones(spark, tmp_path):
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     st = _mk(eng, spark)
@@ -69,8 +91,6 @@ def test_aa_replay_matches_batch_kernel(spark, tmp_path):
     the stateful AA path (two micro-batch rounds) must equal folding
     base ∪ whole-log through merge_op_log in one batch — the same kernel,
     so the same state regardless of batching."""
-    from venice_spark.merge.dcr import merge_op_log
-
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     st = _mk(eng, spark)
     p = st.producer()
@@ -93,37 +113,21 @@ def test_aa_replay_matches_batch_kernel(spark, tmp_path):
         for r in st.aa_serve(["name", "score"]).read().collect()
     }
 
-    base_ops = st.df().drop("partition_id").select(
-        "k", F.lit("PUT").alias("op"), F.lit(0).cast("long").alias("ts"),
-        F.lit(0).alias("colo"), "name", "score",
-    )
-    log_ops = spark.createDataFrame(
-        [{**{c: None for c in ["k", "op", "ts", "colo", "name", "score", "set_name"]}, **r}
-         for r in r1 + r2],
-        OPS_SCHEMA,
-    )
-    batch = merge_op_log(
-        base_ops.unionByName(log_ops, allowMissingColumns=True),
-        ["k"],
-        "k long, name string, score double",
-    )
-    expected = {r["k"]: (r["name"], r["score"]) for r in batch.collect()}
+    expected = _batch_kernel(spark, st, r1 + r2)
     assert aa == expected
 
 
 @pytest.mark.slow
 def test_aa_append_mode_matches_rewrite_and_bounds_bytes(spark, tmp_path):
-    """The AA serving LSM (mode='append', the aa_serve default): (1) final
-    state equals rewrite mode on the same log — batching/materialization
-    strategy never changes content; (2) a small micro-batch against a
-    large serving table writes a small, flat number of bytes, never a
-    table-proportional rewrite; (3) compact() folds without changing
-    content; (4) rewrite mode refuses an append-shaped log."""
+    """The AA serving LSM: (1) final state equals a one-shot rewrite of
+    the table — base ∪ every op through merge_op_log in one batch;
+    batching/materialization strategy never changes content; (2) a small
+    micro-batch against a large serving table writes a small, flat
+    number of bytes, never a table-proportional rewrite; (3) compact()
+    folds without changing content."""
     import os
 
-    import pytest
-
-    from venice_spark.streaming.aa import ActiveActiveReplay
+    from venice_spark.streaming.hybrid import gc_pending, run_deferred_gc
 
     def dir_bytes(path):
         return sum(
@@ -132,76 +136,57 @@ def test_aa_append_mode_matches_rewrite_and_bounds_bytes(spark, tmp_path):
             for f in fns
         )
 
-    states = {}
-    for mode in ("append", "rewrite"):
-        eng = VeniceSparkEngine(spark, str(tmp_path / f"root_{mode}"))
-        eng.create_store("aa", key_fields=["k"], partition_count=2, active_active=True)
-        big = spark.range(5000).select(
-            F.col("id").alias("k"),
-            F.concat(F.lit("n"), F.col("id")).alias("name"),
-            (F.col("id") * 1.0).alias("score"),
-        )
-        eng.push("aa", big)
-        st = eng.store("aa")
-        p = st.producer()
-        _flush(p, [
-            {"k": 1, "op": "PUT", "ts": 100, "colo": 0, "name": "a2", "score": 10.0},
-            {"k": 2, "op": "UPDATE", "ts": 100, "colo": 0, "set_name": "b2"},
-            {"k": 3, "op": "DELETE", "ts": 100, "colo": 0},
-        ])
-        serving = os.path.join(eng.catalog.store_dir("aa"), "aa_serving")
-        replay = st.aa_serve(["name", "score"], mode=mode, compact_every=0)
-        if mode == "append":
-            seeded = dir_bytes(serving)
-            # second micro-batch: 3 touched keys against 5000 rows
-            _flush(p, [
-                {"k": 7, "op": "PUT", "ts": 200, "colo": 0, "name": "g", "score": 7.0},
-                {"k": 3, "op": "PUT", "ts": 90, "colo": 1, "name": "zombie", "score": 0.0},
-                {"k": 2, "op": "UPDATE", "ts": 150, "colo": 1, "set_name": "b3"},
-            ])
-            before = dir_bytes(serving)
-            replay = st.aa_serve(["name", "score"], mode=mode, compact_every=0)
-            added = dir_bytes(serving) - before
-            assert added < seeded / 10, (added, seeded)
-            # rewrite over the append log is refused
-            with pytest.raises(ValueError, match="append-mode AA log"):
-                ActiveActiveReplay(
-                    spark, eng.catalog, "aa", serving, ["name", "score"],
-                    mode="rewrite",
-                )
-            # compact: content stable; superseded files retained one GC
-            # cycle (r7 reader isolation), physically folded after GC
-            from venice_spark.streaming.hybrid import gc_pending, run_deferred_gc
-
-            pre = {r["k"]: (r["name"], r["score"]) for r in replay.read().collect()}
-            pre_reader = replay.read()  # plan resolved BEFORE the compact
-            replay.compact()
-            assert {
-                r["k"]: (r["name"], r["score"]) for r in replay.read().collect()
-            } == pre
-            # the pre-compact reader still executes (retained snapshot)
-            assert {
-                r["k"]: (r["name"], r["score"]) for r in pre_reader.collect()
-            } == pre
-            assert gc_pending(serving) is not None
-            run_deferred_gc(serving)
-            raw = spark.read.option("mergeSchema", "true").parquet(serving)
-            assert raw.count() == raw.select("k").distinct().count()
-            assert {
-                r["k"]: (r["name"], r["score"]) for r in replay.read().collect()
-            } == pre
-        else:
-            _flush(p, [
-                {"k": 7, "op": "PUT", "ts": 200, "colo": 0, "name": "g", "score": 7.0},
-                {"k": 3, "op": "PUT", "ts": 90, "colo": 1, "name": "zombie", "score": 0.0},
-                {"k": 2, "op": "UPDATE", "ts": 150, "colo": 1, "set_name": "b3"},
-            ])
-            replay = st.aa_serve(["name", "score"], mode=mode, compact_every=0)
-        out = {r["k"]: (r["name"], r["score"]) for r in replay.read().collect()}
-        assert out[1] == ("a2", 10.0) and out[2] == ("b3", 2.0) and out[7] == ("g", 7.0)
-        assert 3 not in out  # tombstone register blocks the stale put
-        states[mode] = out
-    assert states["append"] == states["rewrite"]
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("aa", key_fields=["k"], partition_count=2, active_active=True)
+    big = spark.range(5000).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("n"), F.col("id")).alias("name"),
+        (F.col("id") * 1.0).alias("score"),
+    )
+    eng.push("aa", big)
+    st = eng.store("aa")
+    p = st.producer()
+    ops1 = [
+        {"k": 1, "op": "PUT", "ts": 100, "colo": 0, "name": "a2", "score": 10.0},
+        {"k": 2, "op": "UPDATE", "ts": 100, "colo": 0, "set_name": "b2"},
+        {"k": 3, "op": "DELETE", "ts": 100, "colo": 0},
+    ]
+    _flush(p, ops1)
+    serving = os.path.join(eng.catalog.store_dir("aa"), "aa_serving")
+    replay = st.aa_serve(["name", "score"], compact_every=0)
+    seeded = dir_bytes(serving)
+    # second micro-batch: 3 touched keys against 5000 rows
+    ops2 = [
+        {"k": 7, "op": "PUT", "ts": 200, "colo": 0, "name": "g", "score": 7.0},
+        {"k": 3, "op": "PUT", "ts": 90, "colo": 1, "name": "zombie", "score": 0.0},
+        {"k": 2, "op": "UPDATE", "ts": 150, "colo": 1, "set_name": "b3"},
+    ]
+    _flush(p, ops2)
+    before = dir_bytes(serving)
+    replay = st.aa_serve(["name", "score"], compact_every=0)
+    added = dir_bytes(serving) - before
+    assert added < seeded / 10, (added, seeded)
+    # compact: content stable; superseded files retained one GC
+    # cycle (r7 reader isolation), physically folded after GC
+    pre = {r["k"]: (r["name"], r["score"]) for r in replay.read().collect()}
+    pre_reader = replay.read()  # plan resolved BEFORE the compact
+    replay.compact()
+    assert {
+        r["k"]: (r["name"], r["score"]) for r in replay.read().collect()
+    } == pre
+    # the pre-compact reader still executes (retained snapshot)
+    assert {
+        r["k"]: (r["name"], r["score"]) for r in pre_reader.collect()
+    } == pre
+    assert gc_pending(serving) is not None
+    run_deferred_gc(serving)
+    raw = spark.read.option("mergeSchema", "true").parquet(serving)
+    assert raw.count() == raw.select("k").distinct().count()
+    out = {r["k"]: (r["name"], r["score"]) for r in replay.read().collect()}
+    assert out == pre
+    assert out[1] == ("a2", 10.0) and out[2] == ("b3", 2.0) and out[7] == ("g", 7.0)
+    assert 3 not in out  # tombstone register blocks the stale put
+    assert out == _batch_kernel(spark, st, ops1 + ops2)
 
 
 def test_aa_append_survives_checkpoint_reset(spark, tmp_path):
@@ -260,86 +245,3 @@ def test_aa_facade_auto_compaction_fires(spark, tmp_path):
     assert n_stamps <= 2, f"auto-compaction never fired ({n_stamps} live stamps)"
     out = {r["k"]: r["name"] for r in st.aa_serve(["name", "score"]).read().collect()}
     assert out[0] == "n0" and out[3] == "n3"
-
-
-def test_aa_bucketed_log_equals_flat_and_prunes_directories(spark, tmp_path):
-    """r6 scale path: with buckets set, the AA append log lays out
-    partitionBy(__kb = xxhash64(key) % buckets). Content must be identical
-    to the flat layout under the same op stream (puts, field updates,
-    deletes, stale cross-batch arrivals, compaction), the per-trigger
-    candidate prune must reach the scan as a PARTITION filter (directory
-    pruning — the scan the 20M-row probe showed growing with the log), and
-    reopening a log with the other layout refuses loudly."""
-    import os
-
-    import pytest as _pt
-
-    from venice_spark.producer import read_rt_log
-    from venice_spark.streaming.aa import ActiveActiveReplay
-
-    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
-    st = _mk(eng, spark)
-    p = st.producer()
-    _flush(p, [
-        {"k": 1, "op": "PUT", "ts": 100, "colo": 0, "name": "a2", "score": 10.0},
-        {"k": 2, "op": "UPDATE", "ts": 100, "colo": 0, "set_name": "b2"},
-        {"k": 3, "op": "DELETE", "ts": 100, "colo": 0},
-    ])
-    _flush(p, [
-        {"k": 3, "op": "PUT", "ts": 90, "colo": 1, "name": "zombie", "score": 0.0},
-        {"k": 4, "op": "PUT", "ts": 120, "colo": 1, "name": "d", "score": 4.0},
-        {"k": 1, "op": "UPDATE", "ts": 130, "colo": 1, "set_name": "a3"},
-    ])
-
-    rt_dir = eng.catalog.update_log_dir("aa")
-    schema = read_rt_log(spark, eng.catalog, "aa").schema
-
-    def replica(buckets, tag):
-        serving = str(tmp_path / f"srv_{tag}")
-        r = ActiveActiveReplay(
-            spark, eng.catalog, "aa", serving, ["name", "score"],
-            mode="append", compact_every=0, buckets=buckets,
-        )
-        r.seed(st.df().drop("partition_id"))
-        r.start(
-            spark.readStream.schema(schema).parquet(rt_dir),
-            str(tmp_path / f"ck_{tag}"),
-        ).awaitTermination(120)
-        return r
-
-    flat = replica(0, "flat")
-    bk = replica(8, "bk")
-
-    def view(r):
-        return {row["k"]: (row["name"], row["score"]) for row in r.read().collect()}
-
-    expected = {1: ("a3", 10.0), 2: ("b2", 2.0), 4: ("d", 4.0)}
-    assert view(flat) == view(bk) == expected
-
-    # the candidate prune is a PARTITION filter on __kb (directory pruning)
-    probe = spark.createDataFrame([(1,), (4,)], "k long")
-    plan = bk._resolve_log(keys=probe)._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__kb" in plan.split("PartitionFilters")[1][:300], plan
-
-    # compaction preserves the bucketed layout and the content
-    bk.compact()
-    assert view(bk) == expected
-    assert any(e.startswith("__kb=") for e in os.listdir(str(tmp_path / "srv_bk")))
-
-    # layout is fixed at seed time: reopening with the other layout refuses
-    with _pt.raises(ValueError, match="layout is fixed"):
-        ActiveActiveReplay(
-            spark, eng.catalog, "aa", str(tmp_path / "srv_bk"),
-            ["name", "score"], mode="append", buckets=0,
-        )
-    with _pt.raises(ValueError, match="layout is fixed"):
-        ActiveActiveReplay(
-            spark, eng.catalog, "aa", str(tmp_path / "srv_flat"),
-            ["name", "score"], mode="append", buckets=8,
-        )
-    # and buckets without the append log is a config error
-    with _pt.raises(ValueError, match="append-mode"):
-        ActiveActiveReplay(
-            spark, eng.catalog, "aa", str(tmp_path / "srv_new"),
-            ["name", "score"], mode="rewrite", buckets=8,
-        )

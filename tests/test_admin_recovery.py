@@ -71,7 +71,7 @@ def test_recover_heals_stranded_swap_and_slots(spark, tmp_path, capsys, monkeypa
     p = eng.store("s").producer()
     p.put(1, {"v": "rt"}, ts=100)
     p.flush(schema="k long, op string, ts long, colo int, v string")
-    eng.store("s").hybrid_serve(mode="rewrite")
+    eng.store("s").hybrid_serve()
     serving = os.path.join(cat.store_dir("s"), "serving")
     shutil.move(serving, f"{serving}__stream_old")
 
@@ -388,7 +388,7 @@ def test_inspect_log_reports_crashed_swap_without_healing(spark, tmp_path, capsy
     p = st.producer()
     p.put(2, {"v": "b"}, ts=10)
     p.flush()
-    st.hybrid_serve(mode="rewrite")
+    st.hybrid_serve()
     serving = os.path.join(eng.catalog.store_dir("h"), "serving")
     shutil.move(serving, f"{serving}__stream_old")
 

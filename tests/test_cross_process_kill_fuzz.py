@@ -62,7 +62,7 @@ rng = random.Random(seed)
 spark = get_spark("xkill_hybrid_child")
 cat = StoreCatalog(root)
 serving = os.path.join(cat.store_dir("s"), "serving")
-replay = HybridReplay(spark, cat, "s", serving, mode="append")
+replay = HybridReplay(spark, cat, "s", serving)
 p = VeniceProducer(spark, cat, "s", colo=1)
 open(ready, "w").write("up")
 i = j = 0
@@ -93,9 +93,7 @@ rng = random.Random(seed)
 spark = get_spark("xkill_aa_child")
 cat = StoreCatalog(root)
 serving = os.path.join(cat.store_dir("aa"), "aa_serving")
-replay = ActiveActiveReplay(
-    spark, cat, "aa", serving, ["name", "score"], mode="append"
-)
+replay = ActiveActiveReplay(spark, cat, "aa", serving, ["name", "score"])
 p = VeniceProducer(spark, cat, "aa", colo=2)
 open(ready, "w").write("up")
 i = j = 0
@@ -175,7 +173,7 @@ def _admin():
 
 @pytest.mark.parametrize("seed", fuzz_seeds([11, 23]))
 def test_cross_process_kill_hybrid_fuzz(spark, tmp_path, seed):
-    from venice_spark.streaming.hybrid import read_serving
+    from venice_spark.streaming.hybrid import HybridReplay
 
     rng = random.Random(seed)
     root = str(tmp_path / "cat")
@@ -214,7 +212,9 @@ def test_cross_process_kill_hybrid_fuzz(spark, tmp_path, seed):
                 # compact + deferred GC must neither throw nor lose base
                 rows = {
                     r["k"]: r["v"]
-                    for r in read_serving(spark, serving).collect()
+                    for r in HybridReplay(spark, eng.catalog, "s", serving)
+                    .read()
+                    .collect()
                 }
                 assert 1 in rows and 2 in rows, rows
             elif act == "compact":

@@ -278,37 +278,24 @@ def test_hybrid_serve_marker_survives_swaps_rewind_safe(spark, tmp_path):
 
 
 def test_aa_serve_marker_survives_swaps(spark, tmp_path):
-    """AA twin of the marker-survival test: rewrite-mode _merge_batch and
-    append-mode compact() both swap the serving dir; the seed marker must
-    survive BOTH swap paths so the next aa_serve resumes from the
-    checkpoint instead of wiping state. (mode='rewrite' is explicit —
-    under the append default no per-batch swap happens and the rewrite
-    swap path would go untested; code-review r5.)"""
+    """AA twin of the marker-survival test: the seed marker must survive
+    the trigger's append and compact()'s fold so the next aa_serve
+    resumes from the checkpoint instead of wiping state."""
     import os
 
     from venice_spark.streaming.hybrid import seeded_version
 
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
-    eng.create_store("h6", key_fields=["k"], partition_count=2, hybrid=True)
-    eng.push("h6", spark.createDataFrame([(1, "a")], "k long, v string"))
-    st = eng.store("h6")
-    p = st.producer()
-    p.put(2, {"v": "b"}, ts=100)
-    p.flush(schema="k long, op string, ts long, colo int, v string")
-    st.aa_serve(value_cols=["v"], mode="rewrite")
-    serving = os.path.join(eng.catalog.store_dir("h6"), "aa_serving")
-    assert seeded_version(serving) == eng.catalog.current_version("h6")
-
-    # append-mode swap path: compact() must carry the marker too
     eng.create_store("h7", key_fields=["k"], partition_count=2, hybrid=True)
     eng.push("h7", spark.createDataFrame([(1, "a")], "k long, v string"))
     st7 = eng.store("h7")
     p7 = st7.producer()
     p7.put(2, {"v": "b"}, ts=100)
     p7.flush(schema="k long, op string, ts long, colo int, v string")
-    replay = st7.aa_serve(value_cols=["v"])  # append default
-    replay.compact()
     serving7 = os.path.join(eng.catalog.store_dir("h7"), "aa_serving")
+    replay = st7.aa_serve(value_cols=["v"])
+    assert seeded_version(serving7) == eng.catalog.current_version("h7")
+    replay.compact()
     assert seeded_version(serving7) == eng.catalog.current_version("h7")
 
 

@@ -115,7 +115,7 @@ def test_streaming_replay_into_hybrid_serving(spark, tmp_path):
         spark, BOOTSTRAP, topic=topic, starting_offsets="earliest", streaming=True
     )
     stream = decode_kafka_updates(wire, "key string, val double, ts long, op string")
-    replay = HybridReplay(spark, catalog, "h", serving, mode="append")
+    replay = HybridReplay(spark, catalog, "h", serving)
     replay.start(stream, str(tmp_path / "ckpt")).awaitTermination(180)
     out = {r["key"]: r["val"] for r in replay.read().collect()}
     assert out == {"a": 5.0, "c": 7.0}  # b deleted, stale put suppressed

@@ -45,7 +45,7 @@ root, ready = sys.argv[1], sys.argv[2]
 spark = get_spark("sigkill_child")
 cat = StoreCatalog(root)
 serving = os.path.join(cat.store_dir("s"), "serving")
-replay = HybridReplay(spark, cat, "s", serving, mode="append")
+replay = HybridReplay(spark, cat, "s", serving)
 p = VeniceProducer(spark, cat, "s", colo=1)
 open(ready, "w").write("up")
 i = 0

@@ -80,7 +80,7 @@ def test_length_mismatch_error_entry(spark):
 # Serving-LSM evolution (VERDICT r6 #2): a live hybrid/AA store must keep
 # serving across a value-schema ADDITION — the reference's value schemas are
 # a versioned evolvable list (schema/SchemaEntry.java:1, SchemaData.java) and
-# hybrid stores serve through additions. The append-mode read schema comes
+# hybrid stores serve through additions. The serving-log read schema comes
 # from the writers' sidecar + the registry (hybrid.log_schema), never from a
 # sampled footer (which silently dropped the added column whenever the sample
 # predated it) and never from mergeSchema in the hot path (footer-bound: the
@@ -106,10 +106,49 @@ def _no_merge_schema(monkeypatch):
     monkeypatch.setattr(rw.DataFrameReader, "option", guard)
 
 
-def _evolved_hybrid(spark, tmp_path, mode, monkeypatch):
+def _one_shot_hybrid(st) -> dict:
+    """The reseeded-rewrite oracle for a hybrid store: resolve_latest over
+    the seed ∪ the whole RT log in ONE batch, read through the registry
+    like every serving surface. Rows keyed by k."""
+    from venice_spark.producer import read_rt_log
+    from venice_spark.streaming.hybrid import (
+        latest_wins,
+        registered_value_types,
+        resolve_registry_reader,
+    )
+
+    seed = st.df().drop("partition_id").withColumn("ts", F.lit(0).cast("long"))
+    log = read_rt_log(st.spark, st.catalog, st.name)
+    out = latest_wins(
+        seed.unionByName(log, allowMissingColumns=True), ["k"], "ts"
+    )
+    out = resolve_registry_reader(out, registered_value_types(st.catalog, st.name))
+    return {r["k"]: r for r in out.collect()}
+
+
+def _one_shot_aa(st, value_schema: str) -> dict:
+    """The reseeded-rewrite oracle for an AA store: base ∪ every RT op
+    folded through merge_op_log in ONE batch (the kernel the replay
+    shares). Rows keyed by k."""
+    from venice_spark.merge.dcr import merge_op_log
+    from venice_spark.producer import read_rt_log
+
+    base = st.df().drop("partition_id")
+    value_cols = [c for c in base.columns if c != "k" and not c.startswith("_")]
+    base_ops = base.select(
+        "k", F.lit("PUT").alias("op"), F.lit(0).cast("long").alias("ts"),
+        F.lit(0).alias("colo"), *value_cols,
+    )
+    ops = base_ops.unionByName(
+        read_rt_log(st.spark, st.catalog, st.name), allowMissingColumns=True
+    )
+    return {r["k"]: r for r in merge_op_log(ops, ["k"], value_schema).collect()}
+
+
+def _evolved_hybrid(spark, tmp_path, monkeypatch):
     from venice_spark.engine import VeniceSparkEngine
 
-    eng = VeniceSparkEngine(spark, str(tmp_path / f"root_{mode}"))
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     eng.catalog.create_store(
         "h",
         key_fields=["k"],
@@ -122,7 +161,7 @@ def _evolved_hybrid(spark, tmp_path, mode, monkeypatch):
     p = st.producer()
     p.put(1, {"v": "v1"}, ts=100)
     p.flush(schema="k long, op string, ts long, colo int, v string")
-    live = st.hybrid_serve(mode=mode)
+    live = st.hybrid_serve()
     got = {r["k"]: r["v"] for r in live.read().collect()}
     assert got == {1: "v1", 2: "base"}, got
 
@@ -137,26 +176,21 @@ def _evolved_hybrid(spark, tmp_path, mode, monkeypatch):
     p.put(3, {"v": "v3", "rank": 7}, ts=200)
     p.put(1, {"v": "v1b", "rank": 9}, ts=300)
     p.flush(schema="k long, op string, ts long, colo int, v string, rank long")
-    live = st.hybrid_serve(mode=mode)
-    if mode == "append":
-        _no_merge_schema(monkeypatch)
+    live = st.hybrid_serve()
+    _no_merge_schema(monkeypatch)
     rows = {r["k"]: (r["v"], r["rank"]) for r in live.read().collect()}
     monkeypatch.undo()
-    if mode == "append":
-        # compaction folds the log AFTER the evolution: the evolved
-        # column must survive the fold (the compact output is written
-        # with the sidecar-derived read schema)
-        live.compact()
-        after = {r["k"]: (r["v"], r["rank"]) for r in live.read().collect()}
-        assert after == rows, f"compaction dropped evolved data: {after}"
-    return rows
+    # compaction folds the log AFTER the evolution: the evolved column
+    # must survive the fold (the compact output is written with the
+    # sidecar-derived read schema)
+    live.compact()
+    after = {r["k"]: (r["v"], r["rank"]) for r in live.read().collect()}
+    assert after == rows, f"compaction dropped evolved data: {after}"
+    return rows, st
 
 
-@pytest.mark.parametrize("mode", ["append", "rewrite"])
-def test_hybrid_store_serves_across_value_schema_addition(
-    spark, tmp_path, mode, monkeypatch
-):
-    rows = _evolved_hybrid(spark, tmp_path, mode, monkeypatch)
+def test_hybrid_store_serves_across_value_schema_addition(spark, tmp_path, monkeypatch):
+    rows, _ = _evolved_hybrid(spark, tmp_path, monkeypatch)
     assert rows == {
         1: ("v1b", 9),   # touched after evolution: new field present
         2: ("base", None),  # untouched pre-evolution row: null-filled
@@ -167,17 +201,18 @@ def test_hybrid_store_serves_across_value_schema_addition(
 def test_hybrid_append_evolution_matches_reseeded_rewrite(
     spark, tmp_path, monkeypatch
 ):
-    """Parity: the evolved append-mode LSM serves exactly what a reseeded
-    rewrite-mode store serves over the same op stream."""
-    a = _evolved_hybrid(spark, tmp_path / "a", "append", monkeypatch)
-    b = _evolved_hybrid(spark, tmp_path / "b", "rewrite", monkeypatch)
+    """Parity: the evolved serving LSM serves exactly what a reseeded
+    one-shot rewrite (seed ∪ the whole RT log, resolved in one batch)
+    serves over the same op stream."""
+    a, st = _evolved_hybrid(spark, tmp_path, monkeypatch)
+    b = {k: (r["v"], r["rank"]) for k, r in _one_shot_hybrid(st).items()}
     assert a == b
 
 
-def _evolved_aa(spark, tmp_path, mode, buckets, monkeypatch):
+def _evolved_aa(spark, tmp_path, monkeypatch):
     from venice_spark.engine import VeniceSparkEngine
 
-    eng = VeniceSparkEngine(spark, str(tmp_path / f"root_{mode}_{buckets}"))
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     eng.catalog.create_store(
         "aa",
         key_fields=["k"],
@@ -198,7 +233,7 @@ def _evolved_aa(spark, tmp_path, mode, buckets, monkeypatch):
     fs = "k long, op string, ts long, colo int, name string, score double"
     p._buffer.append({"k": 1, "op": "PUT", "ts": 100, "colo": 0, "name": "a2", "score": 9.0})
     p.flush(schema=fs)
-    live = st.aa_serve(["name", "score"], mode=mode, buckets=buckets)
+    live = st.aa_serve(["name", "score"])
     got = {r["k"]: r["name"] for r in live.read().collect()}
     assert got == {1: "a2", 2: "b"}, got
 
@@ -216,27 +251,20 @@ def _evolved_aa(spark, tmp_path, mode, buckets, monkeypatch):
     p._buffer.append({"k": 3, "op": "PUT", "ts": 200, "colo": 1, "name": "c", "score": 3.0, "rank": 7})
     p._buffer.append({"k": 1, "op": "UPDATE", "ts": 300, "colo": 0, "set_rank": 9})
     p.flush(schema=fs2.replace("rank long", "rank long, set_rank long"))
-    live = st.aa_serve(["name", "score", "rank"], mode=mode, buckets=buckets)
-    if mode == "append":
-        _no_merge_schema(monkeypatch)
+    live = st.aa_serve(["name", "score", "rank"])
+    _no_merge_schema(monkeypatch)
     rows = {r["k"]: (r["name"], r["score"], r["rank"]) for r in live.read().collect()}
     monkeypatch.undo()
-    if mode == "append":
-        live.compact()
-        after = {
-            r["k"]: (r["name"], r["score"], r["rank"]) for r in live.read().collect()
-        }
-        assert after == rows, f"compaction dropped evolved data: {after}"
-    return rows
+    live.compact()
+    after = {
+        r["k"]: (r["name"], r["score"], r["rank"]) for r in live.read().collect()
+    }
+    assert after == rows, f"compaction dropped evolved data: {after}"
+    return rows, st
 
 
-@pytest.mark.parametrize(
-    "mode,buckets", [("append", 0), ("append", 8), ("rewrite", 0)]
-)
-def test_aa_store_serves_across_value_schema_addition(
-    spark, tmp_path, mode, buckets, monkeypatch
-):
-    rows = _evolved_aa(spark, tmp_path, mode, buckets, monkeypatch)
+def test_aa_store_serves_across_value_schema_addition(spark, tmp_path, monkeypatch):
+    rows, _ = _evolved_aa(spark, tmp_path, monkeypatch)
     assert rows == {
         1: ("a2", 9.0, 9),    # set_rank UPDATE landed on the evolved field
         2: ("b", 2.0, None),  # untouched pre-evolution row: null-filled
@@ -246,20 +274,21 @@ def test_aa_store_serves_across_value_schema_addition(
 
 @pytest.mark.slow
 def test_aa_append_evolution_matches_reseeded_rewrite(spark, tmp_path, monkeypatch):
-    a = _evolved_aa(spark, tmp_path / "a", "append", 0, monkeypatch)
-    bk = _evolved_aa(spark, tmp_path / "bk", "append", 8, monkeypatch)
-    b = _evolved_aa(spark, tmp_path / "b", "rewrite", 0, monkeypatch)
-    assert a == b == bk
+    """Parity: the evolved AA serving LSM serves exactly what a reseeded
+    one-shot rewrite (base ∪ every op through merge_op_log) serves."""
+    a, st = _evolved_aa(spark, tmp_path, monkeypatch)
+    b = _one_shot_aa(st, "k long, name string, score double, rank long")
+    assert a == {k: (r["name"], r["score"], r["rank"]) for k, r in b.items()}
 
 
-def _promoted_hybrid(spark, tmp_path, mode, monkeypatch):
+def _promoted_hybrid(spark, tmp_path, monkeypatch):
     """int->long and float->double promotion on a LIVE hybrid store: the
     registry evolves mid-serve, old log/RT files keep their narrow
     physical types, and every read widens (VERDICT r7 #2 — the reference
     accepts these promotions, SchemaCompatibility.java)."""
     from venice_spark.engine import VeniceSparkEngine
 
-    eng = VeniceSparkEngine(spark, str(tmp_path / f"proot_{mode}"))
+    eng = VeniceSparkEngine(spark, str(tmp_path / "proot"))
     eng.catalog.create_store(
         "h",
         key_fields=["k"],
@@ -278,7 +307,7 @@ def _promoted_hybrid(spark, tmp_path, mode, monkeypatch):
     p = st.producer()
     p.put(1, {"count": 10, "score": 1.25}, ts=100)
     p.flush(schema="k long, op string, ts long, colo int, count int, score float")
-    live = st.hybrid_serve(mode=mode)
+    live = st.hybrid_serve()
     got = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
     assert got == {1: (10, 1.25), 2: (6, 2.5)}, got
 
@@ -294,23 +323,20 @@ def _promoted_hybrid(spark, tmp_path, mode, monkeypatch):
     p.put(3, {"count": big, "score": 3.5}, ts=200)
     p.put(1, {"count": big + 1, "score": 0.25}, ts=300)
     p.flush(schema="k long, op string, ts long, colo int, count long, score double")
-    live = st.hybrid_serve(mode=mode)
-    if mode == "append":
-        _no_merge_schema(monkeypatch)
+    live = st.hybrid_serve()
+    _no_merge_schema(monkeypatch)
     rows = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
     monkeypatch.undo()
-    if mode == "append":
-        # compaction folds a log whose files mix int32 and int64 physical
-        # types; the fold must write the widened type and lose nothing
-        live.compact()
-        after = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
-        assert after == rows, f"compaction corrupted promoted data: {after}"
-    return rows
+    # compaction folds a log whose files mix int32 and int64 physical
+    # types; the fold must write the widened type and lose nothing
+    live.compact()
+    after = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
+    assert after == rows, f"compaction corrupted promoted data: {after}"
+    return rows, st
 
 
-@pytest.mark.parametrize("mode", ["append", "rewrite"])
-def test_hybrid_store_serves_across_type_promotion(spark, tmp_path, mode, monkeypatch):
-    rows = _promoted_hybrid(spark, tmp_path, mode, monkeypatch)
+def test_hybrid_store_serves_across_type_promotion(spark, tmp_path, monkeypatch):
+    rows, _ = _promoted_hybrid(spark, tmp_path, monkeypatch)
     assert rows == {
         1: ((1 << 40) + 1, 0.25),  # re-put post-promotion: wide value
         2: (6, 2.5),               # untouched narrow row reads widened
@@ -319,17 +345,18 @@ def test_hybrid_store_serves_across_type_promotion(spark, tmp_path, mode, monkey
 
 
 def test_hybrid_promotion_append_matches_reseeded_rewrite(spark, tmp_path, monkeypatch):
-    """Parity: the promoted append-mode LSM serves exactly what a reseeded
-    rewrite-mode store serves over the same op stream."""
-    a = _promoted_hybrid(spark, tmp_path / "a", "append", monkeypatch)
-    b = _promoted_hybrid(spark, tmp_path / "b", "rewrite", monkeypatch)
+    """Parity: the promoted serving LSM serves exactly what a reseeded
+    one-shot rewrite (seed ∪ the whole RT log, resolved in one batch and
+    read through the registry) serves over the same op stream."""
+    a, st = _promoted_hybrid(spark, tmp_path, monkeypatch)
+    b = {k: (r["count"], r["score"]) for k, r in _one_shot_hybrid(st).items()}
     assert a == b
 
 
-def _promoted_aa(spark, tmp_path, mode, buckets, monkeypatch):
+def _promoted_aa(spark, tmp_path, monkeypatch):
     from venice_spark.engine import VeniceSparkEngine
 
-    eng = VeniceSparkEngine(spark, str(tmp_path / f"paroot_{mode}_{buckets}"))
+    eng = VeniceSparkEngine(spark, str(tmp_path / "paroot"))
     eng.catalog.create_store(
         "aa",
         key_fields=["k"],
@@ -349,7 +376,7 @@ def _promoted_aa(spark, tmp_path, mode, buckets, monkeypatch):
     fs = "k long, op string, ts long, colo int, count int, score float"
     p._buffer.append({"k": 1, "op": "PUT", "ts": 100, "colo": 0, "count": 10, "score": 1.25})
     p.flush(schema=fs)
-    live = st.aa_serve(["count", "score"], mode=mode, buckets=buckets)
+    live = st.aa_serve(["count", "score"])
     got = {r["k"]: r["count"] for r in live.read().collect()}
     assert got == {1: 10, 2: 6}, got
 
@@ -366,21 +393,18 @@ def _promoted_aa(spark, tmp_path, mode, buckets, monkeypatch):
     # the fold with the widened declared type (narrow would Arrow-error)
     p._buffer.append({"k": 1, "op": "UPDATE", "ts": 300, "colo": 0, "set_count": big + 1})
     p.flush(schema=fs2.replace("count long", "count long, set_count long"))
-    live = st.aa_serve(["count", "score"], mode=mode, buckets=buckets)
-    if mode == "append":
-        _no_merge_schema(monkeypatch)
+    live = st.aa_serve(["count", "score"])
+    _no_merge_schema(monkeypatch)
     rows = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
     monkeypatch.undo()
-    if mode == "append":
-        live.compact()
-        after = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
-        assert after == rows, f"compaction corrupted promoted data: {after}"
-    return rows
+    live.compact()
+    after = {r["k"]: (r["count"], r["score"]) for r in live.read().collect()}
+    assert after == rows, f"compaction corrupted promoted data: {after}"
+    return rows, st
 
 
-@pytest.mark.parametrize("mode,buckets", [("append", 0), ("append", 8), ("rewrite", 0)])
-def test_aa_store_serves_across_type_promotion(spark, tmp_path, mode, buckets, monkeypatch):
-    rows = _promoted_aa(spark, tmp_path, mode, buckets, monkeypatch)
+def test_aa_store_serves_across_type_promotion(spark, tmp_path, monkeypatch):
+    rows, _ = _promoted_aa(spark, tmp_path, monkeypatch)
     assert rows == {
         1: ((1 << 40) + 1, 1.25),  # UPDATE widened count; score carried
         2: (6, 2.5),               # untouched narrow row reads widened
@@ -432,10 +456,11 @@ def test_hybrid_store_serves_across_string_bytes_promotion(
 
 @pytest.mark.slow
 def test_aa_promotion_append_matches_reseeded_rewrite(spark, tmp_path, monkeypatch):
-    a = _promoted_aa(spark, tmp_path / "a", "append", 0, monkeypatch)
-    bk = _promoted_aa(spark, tmp_path / "bk", "append", 8, monkeypatch)
-    b = _promoted_aa(spark, tmp_path / "b", "rewrite", 0, monkeypatch)
-    assert a == b == bk
+    """Parity: the promoted AA serving LSM serves exactly what a reseeded
+    one-shot rewrite (base ∪ every op through merge_op_log) serves."""
+    a, st = _promoted_aa(spark, tmp_path, monkeypatch)
+    b = _one_shot_aa(st, "k long, count long, score double")
+    assert a == {k: (r["count"], r["score"]) for k, r in b.items()}
 
 
 def test_log_schema_sidecar_refuses_silent_retype(tmp_path):
@@ -748,7 +773,7 @@ def test_avro_promotion_target_full_matrix():
     )
 
 
-def _cast_promoted_hybrid(spark, tmp_path, mode):
+def _cast_promoted_hybrid(spark, tmp_path):
     """Drive a long→double registry evolution on a LIVE hybrid store —
     the promotion the r8 lattice refused because the vectorized parquet
     reader cannot widen int64 on scan. Cast-on-read (VERDICT r8 missing
@@ -758,7 +783,7 @@ def _cast_promoted_hybrid(spark, tmp_path, mode):
     fileset split), and more ops."""
     from venice_spark.engine import VeniceSparkEngine
 
-    eng = VeniceSparkEngine(spark, str(tmp_path / f"croot_{mode}"))
+    eng = VeniceSparkEngine(spark, str(tmp_path / "croot"))
     eng.catalog.create_store(
         "h",
         key_fields=["k"],
@@ -773,47 +798,40 @@ def _cast_promoted_hybrid(spark, tmp_path, mode):
     p = st.producer()
     p.put(3, {"n": 7}, ts=100)
     p.flush(schema="k long, op string, ts long, colo int, n long")
-    live = st.hybrid_serve(mode=mode)
+    live = st.hybrid_serve()
     assert {r["k"]: r["n"] for r in live.read().collect()} == {1: big, 2: 6, 3: 7}
 
     # the evolution the r8 lattice refused — must now serve, not raise
     eng.catalog.add_value_schema(
         "h", T.StructType([T.StructField("n", T.DoubleType())])
     )
-    live = st.hybrid_serve(mode=mode)
+    live = st.hybrid_serve()
     assert dict(live.read().dtypes)["n"] == "double"
 
     # keep writing (narrow producer) and serving across a compact
     p.put(4, {"n": 8}, ts=200)
     p.flush(schema="k long, op string, ts long, colo int, n long")
-    live = st.hybrid_serve(mode=mode)
-    if mode == "append":
-        live.compact()  # double files land beside int64 files
-        p.put(2, {"n": 9}, ts=300)
-        p.flush(schema="k long, op string, ts long, colo int, n long")
-        live = st.hybrid_serve(mode=mode)
+    live = st.hybrid_serve()
+    live.compact()  # double files land beside int64 files
+    p.put(2, {"n": 9}, ts=300)
+    p.flush(schema="k long, op string, ts long, colo int, n long")
+    live = st.hybrid_serve()
     return {r["k"]: r["n"] for r in live.read().collect()}
 
 
-@pytest.mark.parametrize("mode", ["append", "rewrite"])
-def test_hybrid_store_serves_across_long_double_promotion(spark, tmp_path, mode):
-    rows = _cast_promoted_hybrid(spark, tmp_path, mode)
+def test_hybrid_store_serves_across_long_double_promotion(spark, tmp_path):
+    rows = _cast_promoted_hybrid(spark, tmp_path)
     big = (1 << 40) + 3
-    expect = (
-        {1: float(big), 2: 9.0, 3: 7.0, 4: 8.0}
-        if mode == "append"
-        else {1: float(big), 2: 6.0, 3: 7.0, 4: 8.0}
-    )
-    assert rows == expect, rows
+    assert rows == {1: float(big), 2: 9.0, 3: 7.0, 4: 8.0}, rows
 
 
 def test_hybrid_cast_promotion_append_matches_reseeded_rewrite(spark, tmp_path):
-    """Parity: the cast-promoted append-mode LSM (legacy int64 files +
+    """Parity: the cast-promoted serving LSM (legacy int64 files +
     compacted double files under one sidecar) serves exactly what a fresh
-    rewrite-mode store serves over the same op stream."""
+    store typed double from birth serves for the same final state."""
     from venice_spark.engine import VeniceSparkEngine
 
-    a = _cast_promoted_hybrid(spark, tmp_path / "a", "append")
+    a = _cast_promoted_hybrid(spark, tmp_path / "a")
     # reseed: replay the identical final state through a plain push on a
     # new store typed double from birth
     eng = VeniceSparkEngine(spark, str(tmp_path / "fresh"))
@@ -829,42 +847,40 @@ def test_hybrid_cast_promotion_append_matches_reseeded_rewrite(spark, tmp_path):
 @pytest.mark.slow
 def test_aa_store_serves_across_long_double_promotion(spark, tmp_path):
     """AA flavor: the DCR replay's serving log takes the same cast-on-read
-    promotion (shared sidecar/read_log machinery), including bucketed
-    (__kb=) layouts where the legacy split must keep partition pruning."""
+    promotion (shared sidecar/read_log machinery)."""
     from venice_spark.engine import VeniceSparkEngine
 
-    for buckets in (0, 4):
-        eng = VeniceSparkEngine(spark, str(tmp_path / f"aab{buckets}"))
-        eng.catalog.create_store(
-            "h",
-            key_fields=["k"],
-            partition_count=2,
-            hybrid=True,
-            active_active=True,
-            value_schema=T.StructType([T.StructField("n", T.LongType())]),
-            schema_compat="backward",
-        )
-        big = (1 << 40) + 5
-        eng.push("h", spark.createDataFrame([(1, big), (2, 6)], "k long, n long"))
-        st = eng.store("h")
-        p = st.producer()
-        p.put(3, {"n": 7}, ts=100)
-        p.flush(schema="k long, op string, ts long, colo int, n long")
-        live = st.aa_serve(["n"], buckets=buckets)
-        got = {r["k"]: r["n"] for r in live.read().collect()}
-        assert got == {1: big, 2: 6, 3: 7}, (buckets, got)
+    eng = VeniceSparkEngine(spark, str(tmp_path / "aab"))
+    eng.catalog.create_store(
+        "h",
+        key_fields=["k"],
+        partition_count=2,
+        hybrid=True,
+        active_active=True,
+        value_schema=T.StructType([T.StructField("n", T.LongType())]),
+        schema_compat="backward",
+    )
+    big = (1 << 40) + 5
+    eng.push("h", spark.createDataFrame([(1, big), (2, 6)], "k long, n long"))
+    st = eng.store("h")
+    p = st.producer()
+    p.put(3, {"n": 7}, ts=100)
+    p.flush(schema="k long, op string, ts long, colo int, n long")
+    live = st.aa_serve(["n"])
+    got = {r["k"]: r["n"] for r in live.read().collect()}
+    assert got == {1: big, 2: 6, 3: 7}, got
 
-        eng.catalog.add_value_schema(
-            "h", T.StructType([T.StructField("n", T.DoubleType())])
-        )
-        live = st.aa_serve(["n"], buckets=buckets)
-        assert dict(live.read().dtypes)["n"] == "double", buckets
-        live.compact()  # double fileset beside int64 under one sidecar
-        p.put(4, {"n": 8}, ts=200)
-        p.flush(schema="k long, op string, ts long, colo int, n long")
-        live = st.aa_serve(["n"], buckets=buckets)
-        got = {r["k"]: r["n"] for r in live.read().collect()}
-        assert got == {1: float(big), 2: 6.0, 3: 7.0, 4: 8.0}, (buckets, got)
+    eng.catalog.add_value_schema(
+        "h", T.StructType([T.StructField("n", T.DoubleType())])
+    )
+    live = st.aa_serve(["n"])
+    assert dict(live.read().dtypes)["n"] == "double"
+    live.compact()  # double fileset beside int64 under one sidecar
+    p.put(4, {"n": 8}, ts=200)
+    p.flush(schema="k long, op string, ts long, colo int, n long")
+    live = st.aa_serve(["n"])
+    got = {r["k"]: r["n"] for r in live.read().collect()}
+    assert got == {1: float(big), 2: 6.0, 3: 7.0, 4: 8.0}, got
 
 
 def test_rt_flush_auto_migrates_nonnative_widening(spark, tmp_path):
@@ -989,19 +1005,16 @@ def test_rt_auto_migration_mid_aa_serve_stays_dcr_exact(spark, tmp_path):
     }, got
 
 
-def test_rewrite_mode_reads_resolve_registry_like_every_other_surface(
-    spark, tmp_path
-):
-    """Code-review r9: the rewrite-mode read paths (hybrid AND AA) must
-    resolve the registry exactly like append mode and the batch surface —
-    the first cut widened only hybrid and forgot the null-fill for
-    registry-ADDED columns, so a rewrite store answered `long` (or
-    AnalysisException'd on the added column) while every sibling surface
-    answered `double`/null. One shared helper now serves all four
-    (hybrid.resolve_registry_reader)."""
+def test_serving_reads_resolve_registry_like_every_other_surface(spark, tmp_path):
+    """Code-review r9: the serving-log reads (hybrid AND AA) must resolve
+    the registry exactly like the batch surface — a registry evolution
+    that lands with no new data (long→double plus an ADDED column) must
+    still answer `double`/null on the next read, not `long` or an
+    AnalysisException on the added column. One shared helper serves
+    every surface (hybrid.resolve_registry_reader)."""
     from venice_spark.engine import VeniceSparkEngine
 
-    # hybrid rewrite: long→double promotion + added column null-fills
+    # hybrid: long→double promotion + added column null-fills
     eng = VeniceSparkEngine(spark, str(tmp_path / "hr"))
     eng.catalog.create_store(
         "h",
@@ -1015,20 +1028,20 @@ def test_rewrite_mode_reads_resolve_registry_like_every_other_surface(
     p = st.producer()
     p.put(2, {"n": 7}, ts=10)
     p.flush(schema="k long, op string, ts long, colo int, n long")
-    st.hybrid_serve(mode="rewrite")
+    st.hybrid_serve()
     eng.catalog.add_value_schema(
         "h",
         T.StructType(
             [T.StructField("n", T.DoubleType()), T.StructField("extra", T.StringType())]
         ),
     )
-    live = st.hybrid_serve(mode="rewrite")
+    live = st.hybrid_serve()
     dt = dict(live.read().dtypes)
     assert dt["n"] == "double", dt
     got = {r["k"]: (r["n"], r["extra"]) for r in live.read().collect()}
     assert got == {1: (6.0, None), 2: (7.0, None)}, got
 
-    # AA rewrite: same contract through the DCR replay
+    # AA: same contract through the DCR replay
     eng2 = VeniceSparkEngine(spark, str(tmp_path / "ar"))
     eng2.catalog.create_store(
         "a",
@@ -1043,11 +1056,11 @@ def test_rewrite_mode_reads_resolve_registry_like_every_other_surface(
     p2 = st2.producer()
     p2.put(2, {"n": 7}, ts=10)
     p2.flush(schema="k long, op string, ts long, colo int, n long")
-    st2.aa_serve(["n"], mode="rewrite")
+    st2.aa_serve(["n"])
     eng2.catalog.add_value_schema(
         "a", T.StructType([T.StructField("n", T.DoubleType())])
     )
-    live2 = st2.aa_serve(["n"], mode="rewrite")
+    live2 = st2.aa_serve(["n"])
     dt2 = dict(live2.read().dtypes)
     assert dt2["n"] == "double", dt2
     got2 = {r["k"]: r["n"] for r in live2.read().collect()}

@@ -48,7 +48,7 @@ def test_hybrid_replay_file_stream(spark, tmp_path):
     q = replay.start(stream, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
-    out = {r["key"]: r["val"] for r in spark.read.parquet(serving).collect()}
+    out = {r["key"]: r["val"] for r in replay.read().collect()}
     assert out == {"a": 5.0, "b": 1.0, "c": 7.0}
     # ready-to-serve: serving caught up with the RT batch
     rt = spark.read.parquet(rt_dir)
@@ -75,7 +75,7 @@ def test_hybrid_rewind_filters_old_rows(spark, tmp_path):
     q = replay.start(stream, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
-    out = {r["key"]: r["val"] for r in spark.read.parquet(serving).collect()}
+    out = {r["key"]: r["val"] for r in replay.read().collect()}
     assert out == {"a": 1.0, "b": 2.0}
 
 
@@ -165,10 +165,10 @@ def test_hybrid_replay_tombstone_blocks_stale_put(spark, tmp_path):
 
 @pytest.mark.slow
 def test_hybrid_replay_append_mode(spark, tmp_path):
-    """mode='append': each micro-batch appends batch-resolved rows (O(batch)
-    per trigger, base never rewritten); reads resolve base ∪ appends; the
-    tombstone / stale-PUT contract holds across batches; compact() folds
-    the log without changing content."""
+    """The serving LSM: each micro-batch appends batch-resolved rows
+    (O(batch) per trigger, base never rewritten); reads resolve base ∪
+    appends; the tombstone / stale-PUT contract holds across batches;
+    compact() folds the log without changing content."""
     root = str(tmp_path / "cat")
     catalog = StoreCatalog(root)
     catalog.create_store("h", key_fields=["key"], hybrid=True, rewind_seconds=0)
@@ -183,7 +183,7 @@ def test_hybrid_replay_append_mode(spark, tmp_path):
 
     rt_dir = str(tmp_path / "rt")
     os.makedirs(rt_dir)
-    replay = HybridReplay(spark, catalog, "h", serving, mode="append", compact_every=0)
+    replay = HybridReplay(spark, catalog, "h", serving, compact_every=0)
 
     # batch 1: update a, delete b
     spark.createDataFrame(
@@ -192,7 +192,7 @@ def test_hybrid_replay_append_mode(spark, tmp_path):
     stream = spark.readStream.schema(SCHEMA + ", op string").parquet(rt_dir)
     replay.start(stream, str(tmp_path / "ckpt")).awaitTermination(120)
 
-    # base files untouched (append mode never rewrites them)
+    # base files untouched (the log never rewrites them)
     assert base_files <= set(glob.glob(f"{serving}/*.parquet"))
     out = {r["key"]: r["val"] for r in replay.read().collect()}
     assert out == {"a": 5.0}
@@ -230,32 +230,39 @@ def test_hybrid_replay_append_mode(spark, tmp_path):
 
 
 def test_hybrid_append_mode_matches_rewrite_mode(spark, tmp_path):
-    """Determinism: the same RT log replayed through both modes yields the
-    same final state (batching/merge strategy must never change content —
-    Merge.java:27-31 extended to the materialization strategy)."""
+    """Determinism: the RT log replayed through the serving LSM yields the
+    state a one-shot rewrite of the whole table would — resolve_latest
+    over seed ∪ the whole RT log (batching/merge strategy must never
+    change content — Merge.java:27-31 extended to the materialization
+    strategy). The seed is the stampless shape a whole-table swap left on
+    disk, tombstone included: its DELETE must still block a stale PUT."""
     rows = [
         ("a", 1.0, 10, "PUT"), ("a", 3.0, 30, "PUT"), ("a", 2.0, 20, "PUT"),
         ("b", 4.0, 15, "PUT"), ("b", 0.0, 15, "DELETE"),   # delete wins tie
         ("c", 6.0, 11, "PUT"), ("c", 0.0, 10, "DELETE"),
+        ("y", 8.0, 3, "PUT"),  # stale: loses to the seed's tombstone
     ]
-    states = {}
-    for mode in ("rewrite", "append"):
-        root = str(tmp_path / f"cat_{mode}")
-        catalog = StoreCatalog(root)
-        catalog.create_store("h", key_fields=["key"], hybrid=True, rewind_seconds=0)
-        serving = str(tmp_path / f"serving_{mode}")
-        spark.createDataFrame([("z", 9.0, 1)], schema=SCHEMA).write.parquet(serving)
-        rt_dir = str(tmp_path / f"rt_{mode}")
-        os.makedirs(rt_dir)
-        replay = HybridReplay(spark, catalog, "h", serving, mode=mode)
-        spark.createDataFrame(rows, schema=SCHEMA + ", op string").write.mode(
-            "append"
-        ).parquet(rt_dir)
-        stream = spark.readStream.schema(SCHEMA + ", op string").parquet(rt_dir)
-        replay.start(stream, str(tmp_path / f"ckpt_{mode}")).awaitTermination(120)
-        states[mode] = {(r["key"], r["val"], r["ts"]) for r in replay.read().collect()}
-    assert states["rewrite"] == states["append"]
-    assert states["append"] == {("a", 3.0, 30), ("c", 6.0, 11), ("z", 9.0, 1)}
+    catalog = StoreCatalog(str(tmp_path / "cat"))
+    catalog.create_store("h", key_fields=["key"], hybrid=True, rewind_seconds=0)
+    serving = str(tmp_path / "serving")
+    seed = spark.createDataFrame(
+        [("z", 9.0, 1, "PUT"), ("y", 0.0, 5, "DELETE")], schema=SCHEMA + ", op string"
+    )
+    seed.write.parquet(serving)
+    rt_dir = str(tmp_path / "rt")
+    os.makedirs(rt_dir)
+    replay = HybridReplay(spark, catalog, "h", serving)
+    rt = spark.createDataFrame(rows, schema=SCHEMA + ", op string")
+    rt.write.mode("append").parquet(rt_dir)
+    stream = spark.readStream.schema(SCHEMA + ", op string").parquet(rt_dir)
+    replay.start(stream, str(tmp_path / "ckpt")).awaitTermination(120)
+    served = {(r["key"], r["val"], r["ts"]) for r in replay.read().collect()}
+    one_shot = {
+        (r["key"], r["val"], r["ts"])
+        for r in latest_wins(seed.unionByName(rt), ["key"], "ts").collect()
+    }
+    assert served == one_shot
+    assert served == {("a", 3.0, 30), ("c", 6.0, 11), ("z", 9.0, 1)}
 
 
 def test_change_events_batch(spark):
@@ -304,12 +311,12 @@ def test_cdc_stream_with_snapshot(spark, tmp_path):
 def test_cdc_parity_across_serving_modes_and_compaction(spark, tmp_path):
     """VERDICT r5 #3: the change-event stream is a function of the RT op
     log ALONE (reference contract VeniceChangelogConsumer.java:19-209 —
-    every mutation, exactly once). The r5 serving-LSM change (append-mode
-    default, compaction coalescing winners to one stamp) must be invisible
-    to a changelog consumer: serving the same store through the append LSM
-    (with a forced compaction) and the rewrite table yields identical live
-    views, leaves the RT log byte-untouched, and a checkpointed CDC
-    consumer re-run after serve+compact emits ZERO new events."""
+    every mutation, exactly once). The serving LSM (compaction coalescing
+    winners to one stamp) must be invisible to a changelog consumer:
+    serving the store through the LSM (with a forced compaction) yields
+    the live view a one-shot resolve of base ∪ the whole RT log does,
+    leaves the RT log byte-untouched, and a checkpointed CDC consumer
+    re-run after serve+compact emits ZERO new events."""
     from venice_spark.engine import VeniceSparkEngine
     from venice_spark.producer import read_rt_log
 
@@ -354,28 +361,23 @@ def test_cdc_parity_across_serving_modes_and_compaction(spark, tmp_path):
         (11, 250, "PUT", None, "w1"),
     ]
 
-    # two serving replicas of the SAME log, one per mode
-    def replica(mode, tag, compact_every):
-        serving = str(tmp_path / f"serving_{tag}")
-        base = st.df().drop("partition_id").withColumn(
-            "ts", F.lit(0).cast("long")
-        )
-        base.write.parquet(serving)
-        r = HybridReplay(
-            spark, eng.catalog, "h", serving, mode=mode, compact_every=compact_every
-        )
-        r.start(
-            spark.readStream.schema(schema).parquet(rt_dir),
-            str(tmp_path / f"ckpt_{tag}"),
-        ).awaitTermination(120)
-        return r
-
-    ra = replica("append", "a", compact_every=0)
-    rb = replica("rewrite", "b", compact_every=0)
+    # a serving replica of the log vs the one-shot resolve of the SAME log
+    serving = str(tmp_path / "serving_a")
+    base = st.df().drop("partition_id").withColumn("ts", F.lit(0).cast("long"))
+    base.write.parquet(serving)
+    ra = HybridReplay(spark, eng.catalog, "h", serving, compact_every=0)
+    ra.start(
+        spark.readStream.schema(schema).parquet(rt_dir), str(tmp_path / "ckpt_a")
+    ).awaitTermination(120)
     ra.compact()
     view_a = {r["k"]: r["v"] for r in ra.read().collect()}
-    view_b = {r["k"]: r["v"] for r in rb.read().collect()}
-    assert view_a == view_b == {1: "base", 11: "w1"}, "serving-mode parity broken"
+    one_shot = latest_wins(
+        base.unionByName(read_rt_log(spark, eng.catalog, "h"), allowMissingColumns=True),
+        ["k"],
+        "ts",
+    )
+    view_b = {r["k"]: r["v"] for r in one_shot.collect()}
+    assert view_a == view_b == {1: "base", 11: "w1"}, "serving-log parity broken"
 
     # serving + compaction fabricated no change events and consumed nothing
     assert (
@@ -563,12 +565,11 @@ def _dir_bytes(path):
 
 
 def test_hybrid_append_per_batch_bytes_scale_with_batch(spark, tmp_path):
-    """VERDICT r4 #3 cost contract: in append mode (the hybrid_serve
-    default) a micro-batch's write cost scales with the BATCH, not the
-    store — a 10-row trigger against a 20k-row serving table must write
-    a tiny fraction of the table's bytes, and the per-trigger cost must
-    stay flat as triggers accumulate (rewrite mode pays O(table) per
-    trigger by design; that is what the default moved away from)."""
+    """VERDICT r4 #3 cost contract: on the serving log a micro-batch's
+    write cost scales with the BATCH, not the store — a 10-row trigger
+    against a 20k-row serving table must write a tiny fraction of the
+    table's bytes, and the per-trigger cost must stay flat as triggers
+    accumulate (a whole-table swap would pay O(table) per trigger)."""
     root = str(tmp_path / "cat")
     catalog = StoreCatalog(root)
     catalog.create_store("h", key_fields=["key"], hybrid=True, rewind_seconds=0)
@@ -584,7 +585,7 @@ def test_hybrid_append_per_batch_bytes_scale_with_batch(spark, tmp_path):
 
     rt_dir = str(tmp_path / "rt")
     os.makedirs(rt_dir)
-    replay = HybridReplay(spark, catalog, "h", serving, mode="append", compact_every=0)
+    replay = HybridReplay(spark, catalog, "h", serving, compact_every=0)
 
     per_batch = []
     for i in range(3):
@@ -610,33 +611,6 @@ def test_hybrid_append_per_batch_bytes_scale_with_batch(spark, tmp_path):
     replay.compact()
     out2 = {r["key"]: r["val"] for r in replay.read().collect()}
     assert out2 == out
-
-
-def test_rewrite_mode_refuses_append_shaped_log(spark, tmp_path):
-    """code-review r5: opening an append-mode serving log with
-    mode='rewrite' must refuse loudly — rewrite reads are bare (no
-    mergeSchema, no resolve) and would silently serve one row per append."""
-    import pytest
-
-    root = str(tmp_path / "cat")
-    catalog = StoreCatalog(root)
-    catalog.create_store("h", key_fields=["key"], hybrid=True, rewind_seconds=0)
-    serving = str(tmp_path / "serving")
-    spark.createDataFrame([("a", 1.0, 10)], schema=SCHEMA).write.parquet(serving)
-    rt_dir = str(tmp_path / "rt")
-    os.makedirs(rt_dir)
-    replay = HybridReplay(spark, catalog, "h", serving, mode="append", compact_every=0)
-    spark.createDataFrame(
-        [("a", 5.0, 20, "PUT")], schema=SCHEMA + ", op string"
-    ).write.mode("append").parquet(rt_dir)
-    stream = spark.readStream.schema(SCHEMA + ", op string").parquet(rt_dir)
-    replay.start(stream, str(tmp_path / "ckpt")).awaitTermination(120)
-
-    with pytest.raises(ValueError, match="append-mode hybrid log"):
-        HybridReplay(spark, catalog, "h", serving, mode="rewrite")
-    # append-mode reopening still works and serves the resolved view
-    again = HybridReplay(spark, catalog, "h", serving, mode="append")
-    assert {r["key"]: r["val"] for r in again.read().collect()} == {"a": 5.0}
 
 
 @pytest.mark.slow
@@ -691,8 +665,8 @@ def test_concurrent_serving_writers_serialize_without_sidecar_loss(
     spark.createDataFrame([("s", 0.0, 1)], schema=SCHEMA).write.parquet(serving)
     mark_seeded_version(serving, 1)
 
-    h1 = HybridReplay(spark, catalog, "h", serving, mode="append")
-    h2 = HybridReplay(spark, catalog, "h", serving, mode="append")
+    h1 = HybridReplay(spark, catalog, "h", serving)
+    h2 = HybridReplay(spark, catalog, "h", serving)
 
     real = hyb.log_schema
 
@@ -759,7 +733,7 @@ def test_three_writers_with_compacts_stay_model_exact(spark, tmp_path):
 
     n_writers, n_batches = 3, 3
     handles = [
-        HybridReplay(spark, catalog, "h", serving, mode="append", compact_every=0)
+        HybridReplay(spark, catalog, "h", serving, compact_every=0)
         for _ in range(n_writers)
     ]
     model: dict = {}
@@ -837,7 +811,7 @@ def test_stamp_memo_serves_writer_and_rescans_on_foreign_writes(spark, tmp_path)
     p = st.producer()
     p.put(1, {"v": 1.0}, ts=10)
     p.flush()
-    st.hybrid_serve()  # append-mode trigger: memo recorded post-append
+    st.hybrid_serve()  # trigger: memo recorded post-append
     serving = os.path.join(eng.catalog.store_dir("s"), "serving")
     key = os.path.realpath(serving)
     assert key in _STAMP_MEMO

@@ -287,8 +287,8 @@ def _cmd_recover(cat: StoreCatalog, args: argparse.Namespace) -> int:
     # compact (which holds the flock between staging its `__compact_*`
     # fileset and merging it in) would delete the staged fileset and let
     # record_gc_pending queue the only copy of the serving rows for
-    # deletion; a swap-heal racing a live rewrite-mode writer mid-swap
-    # could mis-heal. Under the lock, recover against a still-running
+    # deletion; a swap-heal racing a live `compact --cast` or RT
+    # migration mid-swap could mis-heal. Under the lock, recover against a still-running
     # writer is a safe WAIT instead of silent corruption. Only the
     # stranded-delta carry stays outside (it is version-level state
     # guarded by its own lineage-manifest protocol and needs a

@@ -3,17 +3,14 @@
 Measures the foreachBatch merge body (`_merge_batch`) directly — the
 per-trigger cost a serve loop pays — for the hybrid latest-ts-wins log
 (streaming/hybrid.HybridReplay) and the active-active DCR log
-(streaming/aa.ActiveActiveReplay), in both modes, across store sizes, with
-a fixed 100-row micro-batch. The append mode should be ~flat in store size
-(O(batch) fold + append; the stamp agg and candidate prune read one column
-of the log), the rewrite mode linear (full-table swap per trigger).
+(streaming/aa.ActiveActiveReplay) across store sizes, with a fixed
+100-row micro-batch. Both should be ~flat in store size (O(batch) fold +
+append; the stamp agg and candidate prune read one column of the log).
 
-The r5 hybrid numbers in SCALE.md came from an uncommitted throwaway; this
-is the committed, reproducible edition covering AA too, plus the bucketed
-AA layout (buckets=1024) whose measured NEGATIVE result at local scale is
-recorded in SCALE.md — per-trigger listing + partitioned writes of the
-1024-dir tree cost a fixed ~5s that the pruned data scan never earns back
-at sizes this box can hold.
+SCALE.md records the curves, including those of the two layouts this
+probe used to compare against (a whole-table swap per trigger, and a
+key-bucketed AA log), both deleted after they measured slower than
+the flat append log at scale.
 
 AA seeding note: replaying a 2M-row seed through the per-key Pandas fold
 would dominate the probe's wall; since per-trigger merge cost does not
@@ -22,12 +19,13 @@ with one driver-computed RecordState JSON shared by every key (constant
 seed value) — byte-identical to what seed() would produce for that value.
 
 Usage: python tools/serving_probe.py [sizes...]   (default: 20000 200000 2000000)
-Prints one JSON line per (engine, mode, size): min-of-2 warm seconds.
+Prints one JSON line per (engine, size): min-of-2 warm seconds.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import tempfile
@@ -35,7 +33,7 @@ import time
 
 import pyspark.sql.functions as F
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from venice_spark.catalog import StoreCatalog  # noqa: E402
 from venice_spark.session import get_spark  # noqa: E402
@@ -65,17 +63,17 @@ def _batch(spark, n_store: int, schema_extra: str):
     )
 
 
-def probe_hybrid(spark, workdir: str, n: int, mode: str) -> float:
+def probe_hybrid(spark, workdir: str, n: int) -> float:
     from venice_spark.streaming.hybrid import HybridReplay, mark_seeded_version
 
-    catalog = StoreCatalog(f"{workdir}/cat_h_{mode}_{n}")
+    catalog = StoreCatalog(f"{workdir}/cat_h_{n}")
     catalog.create_store("h", key_fields=["k"], hybrid=True, rewind_seconds=0)
-    serving = f"{workdir}/serving_h_{mode}_{n}"
+    serving = f"{workdir}/serving_h_{n}"
     spark.range(n).select(
         F.col("id").alias("k"), F.lit(1.0).alias("v"), F.lit(0).cast("long").alias("ts")
     ).write.parquet(serving)
     mark_seeded_version(serving, 1)
-    replay = HybridReplay(spark, catalog, "h", serving, mode=mode, compact_every=0)
+    replay = HybridReplay(spark, catalog, "h", serving, compact_every=0)
     batch = _batch(spark, n, "")
     replay._merge_batch(batch, 0)  # warm (JIT, shuffle service, file listing)
     best = None
@@ -87,13 +85,13 @@ def probe_hybrid(spark, workdir: str, n: int, mode: str) -> float:
     return round(best, 3)
 
 
-def probe_aa(spark, workdir: str, n: int, mode: str, buckets: int = 0) -> float:
+def probe_aa(spark, workdir: str, n: int) -> float:
     from venice_spark.streaming.aa import ActiveActiveReplay
     from venice_spark.streaming.hybrid import mark_seeded_version
 
-    catalog = StoreCatalog(f"{workdir}/cat_a_{mode}_{n}_{buckets}")
+    catalog = StoreCatalog(f"{workdir}/cat_a_{n}")
     catalog.create_store("a", key_fields=["k"], active_active=True)
-    serving = f"{workdir}/serving_a_{mode}_{n}_{buckets}"
+    serving = f"{workdir}/serving_a_{n}"
     state = _aa_seed_state_json(1.0)
     seed = spark.range(n).select(
         F.col("id").alias("k"),
@@ -101,18 +99,10 @@ def probe_aa(spark, workdir: str, n: int, mode: str, buckets: int = 0) -> float:
         F.lit(1.0).alias("v"),
         F.lit(False).alias("__deleted"),
     )
-    if buckets:
-        seed = seed.withColumn(
-            "__kb", F.pmod(F.xxhash64("k"), F.lit(buckets)).cast("int")
-        )
-        # cluster by bucket: a bare partitionBy writes tasks x buckets files
-        seed.repartition("__kb").write.partitionBy("__kb").parquet(serving)
-    else:
-        seed.write.parquet(serving)
+    seed.write.parquet(serving)
     mark_seeded_version(serving, 1)
     replay = ActiveActiveReplay(
-        spark, catalog, "a", serving, value_cols=["v"], mode=mode,
-        compact_every=0, buckets=buckets,
+        spark, catalog, "a", serving, value_cols=["v"], compact_every=0
     )
     batch = _batch(spark, n, "")
     replay._merge_batch(batch, 0)  # warm
@@ -131,19 +121,10 @@ def main():
     workdir = tempfile.mkdtemp(prefix="vs_serving_probe_")
     try:
         for n in sizes:
-            for mode in ("append", "rewrite"):
-                sec = probe_hybrid(spark, workdir, n, mode)
-                print(json.dumps({"engine": "hybrid", "mode": mode, "rows": n,
+            for engine, probe in (("hybrid", probe_hybrid), ("aa", probe_aa)):
+                sec = probe(spark, workdir, n)
+                print(json.dumps({"engine": engine, "rows": n,
                                   "batch": BATCH_ROWS, "sec": sec}), flush=True)
-            for mode in ("append", "rewrite"):
-                sec = probe_aa(spark, workdir, n, mode)
-                print(json.dumps({"engine": "aa", "mode": mode, "rows": n,
-                                  "batch": BATCH_ROWS, "sec": sec}), flush=True)
-            # bucketed append log: candidate prune becomes directory pruning
-            sec = probe_aa(spark, workdir, n, "append", buckets=1024)
-            print(json.dumps({"engine": "aa", "mode": "append", "rows": n,
-                              "buckets": 1024, "batch": BATCH_ROWS, "sec": sec}),
-                  flush=True)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
         spark.stop()

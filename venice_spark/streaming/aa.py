@@ -13,13 +13,14 @@ __deleted) where __state__ is the serialized RecordState — exactly the
 role of the reference's RMD: per-field/per-element timestamp registers
 plus the record tombstone. Each micro-batch:
 
-  1. ops repartition-join against the prior state of the keys they touch
-     (one shuffle on the key — untouched keys are never read or written
-     beyond the anti-join);
+  1. ops join against the prior state of the keys they touch (the log
+     resolved for just those keys — untouched keys are never read beyond
+     the semi-join);
   2. one applyInPandas fold per touched key: rebuild RecordState from
      JSON, apply the batch's ops through the SAME kernel the batch path
      uses (apply_pdf), re-serialize;
-  3. untouched rows ∪ refreshed rows swap in atomically.
+  3. the refreshed rows append to the serving log, stamped above every
+     earlier append.
 
 Because every register is a pointwise max, the fold is commutative —
 arrival order across micro-batches, colos, or replays cannot change the
@@ -35,7 +36,6 @@ merge_op_log accepts in batch mode.
 from __future__ import annotations
 
 import os
-import shutil
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -44,21 +44,19 @@ from venice_spark.catalog import StoreCatalog
 
 
 class ActiveActiveReplay:
-    """Two merge modes, mirroring HybridReplay:
-
-    mode="rewrite": each micro-batch folds touched keys and the FULL table
-    is atomically swapped — O(table) write amplification per trigger.
-
-    mode="append" (the 100 TB shape): each micro-batch appends ONLY its
-    refreshed rows, stamped with a log-derived monotone sequence number
-    (max existing + 1 — robust to checkpoint resets, unlike the streaming
-    batch id); reads resolve latest-stamp-wins per key. Unlike the raw hybrid log (where slot order would let a
-    stale PUT beat a fresher row), slot order IS correct here: every
-    refreshed row was folded FROM the prior state through the commutative
-    DCR kernel, so a later batch's row is authoritative by construction —
-    the registers inside __state__ carry the cross-batch timestamp truth.
-    `compact()` folds the log to one row per key (tombstone rows kept:
-    their registers are what stop stale resurrections)."""
+    """The AA serving table is an LSM log, like HybridReplay's: each
+    micro-batch appends ONLY its refreshed rows, stamped with a log-derived
+    monotone sequence number (max existing + 1 — robust to checkpoint
+    resets, unlike the streaming batch id); reads resolve
+    latest-stamp-wins per key. Unlike the raw hybrid log (where slot order
+    would let a stale PUT beat a fresher row), slot order IS correct here:
+    every refreshed row was folded FROM the prior state through the
+    commutative DCR kernel, so a later batch's row is authoritative by
+    construction — the registers inside __state__ carry the cross-batch
+    timestamp truth. `compact()` folds the log to one row per key
+    (tombstone rows kept: their registers are what stop stale
+    resurrections). A stampless flat table (the seed, or a dir written by
+    the whole-table swap mode older releases offered) sorts oldest."""
 
     def __init__(
         self,
@@ -70,12 +68,8 @@ class ActiveActiveReplay:
         list_fields: set[str] | None = None,
         map_fields: set[str] | None = None,
         ts_col: str = "ts",
-        mode: str = "rewrite",
         compact_every: int = 16,
-        buckets: int = 0,
     ):
-        if mode not in ("rewrite", "append"):
-            raise ValueError(f"unknown merge mode {mode!r}")
         self.spark = spark
         self.catalog = catalog
         self.store = store
@@ -85,56 +79,28 @@ class ActiveActiveReplay:
         self.list_fields = set(list_fields or set())
         self.map_fields = set(map_fields or set())
         self.ts_col = ts_col
-        self.mode = mode
         self.compact_every = compact_every
         self._writer_lock_owner = None
-        # buckets > 0: the append log is laid out partitionBy(__kb) where
-        # __kb = xxhash64(key) % buckets. Per-trigger candidate pruning
-        # (_resolve_log(keys=touched)) then reads only the touched keys'
-        # bucket DIRECTORIES instead of the whole log's key/stamp/state
-        # columns — the scan the r6 20M-row probe showed growing with the
-        # log (SCALE.md). A probed batch touches at most min(batch,
-        # buckets) dirs, so the read is O(log/buckets * batch-coverage),
-        # flat once buckets track store growth. Layout is fixed at seed
-        # time: mixing bucketed and flat files in one dir would break
-        # partition discovery, so reopening an existing log with the
-        # other layout refuses loudly.
-        self.buckets = int(buckets)
-        if self.buckets and mode != "append":
-            raise ValueError(
-                "buckets only applies to the append-mode log (rewrite mode "
-                "swaps the full table; there is no candidate scan to prune)"
-            )
+        from venice_spark.streaming.hybrid import recover_swap_dir, sweep_leaked_tmps
+
         # Heal a crash-stranded swap BEFORE probing the layout: between
         # atomic_swap_dir's two renames the serving dir is ABSENT, so an
-        # unhealed probe sees entries=[] and skips the mismatch refusal —
-        # a caller constructed with the wrong `buckets` would then append
-        # in the other layout once a later read heals the dir (ADVICE r6).
-        from venice_spark.streaming.hybrid import recover_swap_dir
-
+        # unhealed probe would see no entries and let a retired layout
+        # through once a later read heals the dir (ADVICE r6).
         recover_swap_dir(serving_dir)
-        from venice_spark.streaming.hybrid import sweep_leaked_tmps
-
         sweep_leaked_tmps(serving_dir)
         entries = os.listdir(serving_dir) if os.path.isdir(serving_dir) else []
-        # __kb= partition dirs start with an underscore, so the "has data"
-        # probe must name them explicitly (underscore-prefixed entries are
-        # otherwise markers like _SUCCESS/_seeded_version)
-        has_data = any(
-            e.startswith("__kb=") or not e.startswith(("_", ".")) for e in entries
-        )
-        if has_data:
-            on_disk = any(e.startswith("__kb=") for e in entries)
-            if on_disk != (self.buckets > 0):
-                raise ValueError(
-                    f"serving dir {serving_dir!r} is "
-                    f"{'bucketed' if on_disk else 'flat'} but buckets="
-                    f"{buckets} was requested — layout is fixed at seed time"
-                )
-        if mode == "rewrite":
-            from venice_spark.streaming.hybrid import refuse_rewrite_over_append
-
-            refuse_rewrite_over_append(spark, serving_dir, "__aa_batch", "AA")
+        if any(e.startswith("__kb=") for e in entries):
+            # the retired bucketed layout (partitionBy __kb = key hash %
+            # buckets): measured slower than the flat log at every size
+            # (SCALE.md round 7) and no longer read or written
+            raise ValueError(
+                f"serving dir {serving_dir!r} holds the retired bucketed "
+                "(__kb=) AA log layout; drop the serving dir and its replay "
+                "checkpoint (aa_serve: `aa_serving` and `_aa_checkpoint` in "
+                "the store dir) so aa_serve re-seeds it from the current "
+                "version and replays the RT log"
+            )
 
     # ---- serving-table schema helpers ----
     def _fold_schema(self, ops: DataFrame, snap: DataFrame | None = None) -> "object":
@@ -191,32 +157,11 @@ class ActiveActiveReplay:
             + [T.StructField("__deleted", T.BooleanType(), False)]
         )
 
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "__kb",
-            F.pmod(
-                F.xxhash64(*[F.col(k) for k in self.key_fields]),
-                F.lit(self.buckets),
-            ).cast("int"),
-        )
-
-    def _bucket_prune(self, df: DataFrame, keys: DataFrame) -> DataFrame:
-        """Directory-prune the log to the probed keys' buckets: the
-        distinct-bucket collect is bounded by `buckets` (a config constant,
-        never data-sized), and the resulting IN filter is a partition
-        filter Spark turns into directory pruning."""
-        touched = [
-            r["__kb"]
-            for r in self._with_bucket(keys).select("__kb").distinct().collect()
-        ]
-        return df.filter(F.col("__kb").isin(touched))
-
     def seed(self, base: DataFrame, base_ts: int = 0) -> None:
         """Initialize the serving table from a batch version: every row
         becomes a PUT at `base_ts` folded through the kernel, so RT writes
         with higher timestamps win exactly as the reference's batch-then-RT
-        precedence dictates. With buckets set, the log is laid out
-        partitionBy(__kb) from the first write."""
+        precedence dictates."""
         ops = base.select(
             *self.key_fields,
             F.lit("PUT").alias("op"),
@@ -227,21 +172,8 @@ class ActiveActiveReplay:
         folded = self._fold_new(ops)
         from venice_spark.streaming.hybrid import set_log_schema
 
-        if self.buckets:
-            # cluster rows by bucket before the partitioned write: a bare
-            # partitionBy from key-partitioned tasks writes up to
-            # tasks x buckets files (32k for one 20M-row seed — measured
-            # 10x slower per trigger from listing alone); after the
-            # repartition each bucket lands in exactly one task, so the
-            # file count is ~buckets
-            bucketed = self._with_bucket(folded)
-            bucketed.repartition("__kb").write.mode("overwrite").partitionBy(
-                "__kb"
-            ).parquet(self.serving_dir)
-            set_log_schema(self.serving_dir, bucketed.schema)
-        else:
-            folded.write.mode("overwrite").parquet(self.serving_dir)
-            set_log_schema(self.serving_dir, folded.schema)
+        folded.write.mode("overwrite").parquet(self.serving_dir)
+        set_log_schema(self.serving_dir, folded.schema)
 
     def _fold_new(
         self,
@@ -322,8 +254,6 @@ class ActiveActiveReplay:
         )
 
         recover_swap_dir(self.serving_dir)  # self-heal a crashed swap
-        if self.mode != "append":
-            return self.spark.read.parquet(self.serving_dir)
         base = log_schema(self.serving_dir)
         if base is None:
             # pre-sidecar log: the historical one-footer sample (the AA
@@ -356,14 +286,11 @@ class ActiveActiveReplay:
         shuffle the ENTIRE log for a batch-sized probe instead of relying
         on an optimizer rule pushing a later semi join through the
         Filter + Window (code-review r5). `raw` lets a caller reuse one
-        already-listed read of the log (each `_raw()` re-lists the dir —
-        3x per trigger added up on a bucketed layout)."""
+        already-listed read of the log (each `_raw()` re-lists the dir)."""
         from pyspark.sql import Window
 
         df = self._raw() if raw is None else raw
         if keys is not None:
-            if self.buckets:
-                df = self._bucket_prune(df, keys)
             df = df.join(F.broadcast(keys), on=self.key_fields, how="left_semi")
         if "__aa_batch" not in df.columns:
             return df
@@ -390,88 +317,56 @@ class ActiveActiveReplay:
             self._merge_batch_locked(batch_df, batch_id)
 
     def _merge_batch_locked(self, batch_df: DataFrame, batch_id: int) -> None:
-        from venice_spark.streaming.hybrid import atomic_swap_dir, recover_swap_dir
+        from venice_spark.streaming.hybrid import (
+            align_to_log_schema,
+            clear_dead_job_staging,
+            extend_log_schema,
+            log_stamp_pressure,
+            record_stamp_after_append,
+            recover_swap_dir,
+        )
 
         # heal a swap that died between its renames before reading or
         # stamping against the serving dir (ADVICE r5)
         recover_swap_dir(self.serving_dir)
-        if self.mode == "append":
-            # O(batch) writes: only the touched keys' refreshed rows land.
-            # Prior state = resolved log pruned to the touched keys before
-            # the window, so compute is batch-sized too; scanning the
-            # log's files is the LSM read amplification compact() bounds.
-            # Stamp + compaction pressure come from the LOG, not the
-            # streaming batch id / an in-memory counter: batch ids restart
-            # on checkpoint resets, and the aa_serve facade builds a fresh
-            # handle per call so a counter never fires (code-review r5).
-            # One _raw() serves the whole trigger (stamp agg + prior
-            # resolve + fold schema) — each read re-lists the log dir.
-            raw = self._raw()
-            # stamp + pressure via the shared helper (same max/floor-
-            # filtered-distinct semantics this block used to hand-roll):
-            # a one-column scan instead of the full read schema, and the
-            # r9 fileset-signature memo makes steady triggers skip the
-            # store-sized read entirely (hybrid got this first; the 200M
-            # probe showed AA's agg as its own slowly-growing term)
-            from venice_spark.streaming.hybrid import log_stamp_pressure
-
-            stamp, n_stamps = log_stamp_pressure(
-                self.spark, self.serving_dir, "__aa_batch"
-            )
-            touched = batch_df.select(*self.key_fields).distinct()
-            prior = self._resolve_log(keys=touched, raw=raw)
-            refreshed = self._fold_new(batch_df, prior=prior, snap=raw)
-            stamped = refreshed.withColumn("__aa_batch", F.lit(stamp).cast("long"))
-            from venice_spark.streaming.hybrid import (
-                align_to_log_schema,
-                extend_log_schema,
-            )
-
-            if self.buckets:
-                out = self._with_bucket(stamped)
-                # write-ahead: the sidecar learns this batch's columns
-                # BEFORE any file lands (see extend_log_schema)
-                extend_log_schema(self.spark, self.serving_dir, out.schema)
-                out = align_to_log_schema(out, self.serving_dir)
-                from venice_spark.streaming.hybrid import clear_dead_job_staging
-
-                clear_dead_job_staging(self.serving_dir)
-                out.write.mode("append").partitionBy("__kb").parquet(
-                    self.serving_dir
-                )
-                from venice_spark.streaming.hybrid import record_stamp_after_append
-
-                _, n_live = record_stamp_after_append(
-                    self.serving_dir, stamp + 1, n_stamps + 1
-                )
-            else:
-                extend_log_schema(self.spark, self.serving_dir, stamped.schema)
-                stamped = align_to_log_schema(stamped, self.serving_dir)
-                from venice_spark.streaming.hybrid import clear_dead_job_staging
-
-                clear_dead_job_staging(self.serving_dir)
-                stamped.write.mode("append").parquet(self.serving_dir)
-                from venice_spark.streaming.hybrid import record_stamp_after_append
-
-                _, n_live = record_stamp_after_append(
-                    self.serving_dir, stamp + 1, n_stamps + 1
-                )
-            # n_live, not n_stamps + 1: an empty batch publishes no files,
-            # so pressure must not advance (ADVICE r9 — a no-op compact
-            # per compact_every empty triggers otherwise)
-            if self.compact_every and n_live >= self.compact_every:
-                self.compact()
-            return
-        snap = self.spark.read.parquet(self.serving_dir)
+        # O(batch) writes: only the touched keys' refreshed rows land.
+        # Prior state = resolved log pruned to the touched keys before
+        # the window, so compute is batch-sized too; scanning the
+        # log's files is the LSM read amplification compact() bounds.
+        # Stamp + compaction pressure come from the LOG, not the
+        # streaming batch id / an in-memory counter: batch ids restart
+        # on checkpoint resets, and the aa_serve facade builds a fresh
+        # handle per call so a counter never fires (code-review r5).
+        # One _raw() serves the whole trigger (stamp agg + prior
+        # resolve + fold schema) — each read re-lists the log dir.
+        raw = self._raw()
+        # stamp + pressure via the shared helper (same max/floor-
+        # filtered-distinct semantics this block used to hand-roll):
+        # a one-column scan instead of the full read schema, and the
+        # r9 fileset-signature memo makes steady triggers skip the
+        # store-sized read entirely (hybrid got this first; the 200M
+        # probe showed AA's agg as its own slowly-growing term)
+        stamp, n_stamps = log_stamp_pressure(
+            self.spark, self.serving_dir, "__aa_batch"
+        )
         touched = batch_df.select(*self.key_fields).distinct()
-        prior = snap.join(touched, on=self.key_fields, how="left_semi")
-        refreshed = self._fold_new(batch_df, prior=prior, snap=snap)
-        kept = snap.join(touched, on=self.key_fields, how="left_anti")
-        # allowMissingColumns: after a value-schema addition the kept
-        # (pre-evolution) snapshot rows lack the new column — null-fill
-        # them instead of failing the union (added fields default to null)
-        new_snap = kept.unionByName(refreshed, allowMissingColumns=True)
-        atomic_swap_dir(new_snap, self.serving_dir, tag="aa")
+        prior = self._resolve_log(keys=touched, raw=raw)
+        refreshed = self._fold_new(batch_df, prior=prior, snap=raw)
+        stamped = refreshed.withColumn("__aa_batch", F.lit(stamp).cast("long"))
+        # write-ahead: the sidecar learns this batch's columns BEFORE any
+        # file lands (see extend_log_schema)
+        extend_log_schema(self.spark, self.serving_dir, stamped.schema)
+        stamped = align_to_log_schema(stamped, self.serving_dir)
+        clear_dead_job_staging(self.serving_dir)
+        stamped.write.mode("append").parquet(self.serving_dir)
+        _, n_live = record_stamp_after_append(
+            self.serving_dir, stamp + 1, n_stamps + 1
+        )
+        # n_live, not n_stamps + 1: an empty batch publishes no files,
+        # so pressure must not advance (ADVICE r9 — a no-op compact
+        # per compact_every empty triggers otherwise)
+        if self.compact_every and n_live >= self.compact_every:
+            self.compact()
 
     def compact(self) -> None:
         """Fold the append log to one row per key (tombstone rows kept —
@@ -500,6 +395,7 @@ class ActiveActiveReplay:
             list_log_data_files,
             merge_fileset_in,
             record_gc_pending,
+            record_stamp_after_append,
             run_deferred_gc,
             sweep_compact_orphans,
         )
@@ -519,23 +415,11 @@ class ActiveActiveReplay:
             "__aa_batch", F.lit(stamp).cast("long")
         )
         staging = f"{self.serving_dir}__compact_{uuid.uuid4().hex}"
-        if self.buckets:
-            if "__kb" not in out.columns:
-                out = self._with_bucket(out)
-            # see seed(): cluster by bucket or the write fans out
-            # tasks x buckets files
-            out = out.repartition("__kb")
-            extend_log_schema(self.spark, self.serving_dir, out.schema)
-            out = align_to_log_schema(out, self.serving_dir)
-            out.write.mode("overwrite").partitionBy("__kb").parquet(staging)
-        else:
-            extend_log_schema(self.spark, self.serving_dir, out.schema)
-            out = align_to_log_schema(out, self.serving_dir)
-            out.write.mode("overwrite").parquet(staging)
+        extend_log_schema(self.spark, self.serving_dir, out.schema)
+        out = align_to_log_schema(out, self.serving_dir)
+        out.write.mode("overwrite").parquet(staging)
         merge_fileset_in(staging, self.serving_dir)
         record_gc_pending(self.serving_dir, old_files, stamp)
-        from venice_spark.streaming.hybrid import record_stamp_after_append
-
         record_stamp_after_append(self.serving_dir, stamp + 1, 1)
 
     def start(self, rt_stream: DataFrame, checkpoint_dir: str):
@@ -548,23 +432,8 @@ class ActiveActiveReplay:
         )
 
     def read(self) -> DataFrame:
-        """Live view: deleted keys filtered, state column dropped. Rewrite
-        mode resolves the registry on read like every other surface
-        (code-review r9: it bypassed the r9 cast-on-read widening — an AA
-        rewrite store kept serving `long` after a long→double registry
-        evolution while append mode, hybrid, and the batch surface all
-        served `double`)."""
-        df = self._resolve_log() if self.mode == "append" else self._raw()
-        if self.mode != "append":
-            from venice_spark.streaming.hybrid import (
-                registered_value_types,
-                resolve_registry_reader,
-            )
-
-            reg = registered_value_types(self.catalog, self.store)
-            df = resolve_registry_reader(
-                df, {c: reg[c] for c in self.value_cols if c in reg}
-            )
+        """Live view: deleted keys filtered, state column dropped."""
+        df = self._resolve_log()
         return df.filter(~F.col("__deleted")).select(*self.key_fields, *self.value_cols)
 
 
@@ -574,9 +443,7 @@ def aa_serve(
     list_fields: set[str] | None = None,
     map_fields: set[str] | None = None,
     ts_col: str = "ts",
-    mode: str = "append",
     compact_every: int = 16,
-    buckets: int = 0,
     now_ts: int | None = None,
 ):
     """One-call AA serving loop (the facade twin of hybrid_serve for
@@ -586,8 +453,8 @@ def aa_serve(
     serving table + checkpoint and re-seeds (per-version buffer replay),
     and the stream schema merges ALL flush footers — a bare read would
     silently drop columns absent from the sampled flush (code-review r4).
-    Default mode is "append": per-trigger write cost is O(touched keys),
-    never O(table) — see ActiveActiveReplay."""
+    Per-trigger write cost is O(touched keys), never O(table), with
+    compaction every `compact_every` triggers — see ActiveActiveReplay."""
     from venice_spark.producer import read_rt_log
     from venice_spark.streaming.hybrid import (
         mark_seeded_version,
@@ -605,7 +472,7 @@ def aa_serve(
     reset_serving_if_stale(serving, ckpt, cur)
     replay = ActiveActiveReplay(
         spark, catalog, name, serving, value_cols, list_fields, map_fields, ts_col,
-        mode=mode, compact_every=compact_every, buckets=buckets,
+        compact_every=compact_every,
     )
     if not os.path.isdir(serving):
         replay.seed(engine_store.df().drop("partition_id"))

@@ -197,18 +197,17 @@ def sweep_leaked_tmps(
     return removed
 
 
-def atomic_swap_dir(
-    df: DataFrame, target: str, tag: str = "swap", partition_by: str | None = None
-) -> None:
+def atomic_swap_dir(df: DataFrame, target: str, tag: str = "swap") -> None:
     """Write `df` to a tmp sibling, move the old dir aside, move the new one
     in, then drop the old — readers always see either the full old or full
     new dir. A leftover from a crash BETWEEN the two moves is first
     recovered (recover_swap_dir), THEN stale leftovers are cleared — the
     old order rmtree'd the .old dir unconditionally, which after such a
     crash deleted the only intact copy of the serving state (ADVICE r5).
-    ONE implementation shared by the hybrid/AA/CDC serving swaps (three
-    copies had already drifted on crash-leftover handling; code-review
-    r4)."""
+    ONE implementation shared by every whole-dir swap: `compact --cast`
+    on a serving log, the RT-log widening migration and the CDC snapshot
+    (three copies had already drifted on crash-leftover handling;
+    code-review r4)."""
     import os
     import shutil
 
@@ -217,21 +216,14 @@ def atomic_swap_dir(
     old = f"{target}__{tag}_old"
     shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(old, ignore_errors=True)
-    writer = df.write.mode("overwrite")
-    if partition_by is not None:
-        # preserve a bucketed layout across compaction swaps (the AA
-        # serving log's directory-pruning column). partitionBy leaves no
-        # top-level _SUCCESS-adjacent data files but DOES write _SUCCESS,
-        # so recover_swap_dir's completeness probe still holds.
-        writer = writer.partitionBy(partition_by)
-    writer.parquet(tmp)
+    df.write.mode("overwrite").parquet(tmp)
     # Carry the _seeded_version marker across the swap: the marker lives
-    # INSIDE the serving dir, and every rewrite-mode micro-batch / AA merge /
-    # append-mode compact replaces that dir. Losing it makes the next
-    # hybrid_serve()/aa_serve() call see seeded_version()=None != current
-    # and reset_serving_if_stale wipes serving + checkpoint — with rewind
-    # set, already-merged RT ops older than the window are silently lost;
-    # without it, the full RT log replays on every call (ADVICE r4, high).
+    # INSIDE the serving dir, and a `compact --cast` swap replaces that
+    # dir. Losing it makes the next hybrid_serve()/aa_serve() call see
+    # seeded_version()=None != current and reset_serving_if_stale wipes
+    # serving + checkpoint — with rewind set, already-merged RT ops older
+    # than the window are silently lost; without it, the full RT log
+    # replays on every call (ADVICE r4, high).
     # The marker is written into TMP before any move, so there is no crash
     # window in which the new dir exists without it (code-review r5).
     seed = seeded_version(target)
@@ -245,32 +237,6 @@ def atomic_swap_dir(
         shutil.move(target, old)
     shutil.move(tmp, target)
     shutil.rmtree(old, ignore_errors=True)
-
-
-def refuse_rewrite_over_append(
-    spark: SparkSession, serving_dir: str, stamp_col: str, label: str
-) -> None:
-    """Shared rewrite-mode guard for the two serving LSMs (HybridReplay /
-    ActiveActiveReplay): a bare rewrite-mode read of an unresolved append
-    log would silently serve one row per APPEND. Stamp columns only ever
-    come from append-mode merges, so their presence is the shape test
-    (code-review r5; consolidated so the two copies cannot drift)."""
-    import os
-
-    if os.path.isdir(serving_dir):
-        side = log_schema(serving_dir)
-        cols = (
-            side.names
-            if side is not None
-            else spark.read.option("mergeSchema", "true").parquet(serving_dir).columns
-        )
-        if stamp_col in cols:
-            raise ValueError(
-                f"serving dir {serving_dir!r} holds an append-mode {label} "
-                f"log ({stamp_col} stamps present); open it with "
-                "mode='append' — rewrite-mode reads would serve "
-                "duplicate/stale rows from the unresolved log"
-            )
 
 
 # per-process memo for log_stamp_pressure, keyed on the log's exact data
@@ -369,7 +335,7 @@ def clear_dead_job_staging(log_dir: str) -> bool:
 def log_stamp_pressure(
     spark: SparkSession, serving_dir: str, stamp_col: str
 ) -> tuple[int, int]:
-    """(next_stamp, distinct_stamps) for an append-mode serving log.
+    """(next_stamp, distinct_stamps) for a serving log.
 
     The stamp is derived from the LOG (max existing + 1), never from the
     streaming batch id: batch ids restart at 0 when a checkpoint is
@@ -422,17 +388,15 @@ def log_stamp_pressure(
 
 
 def list_log_data_files(serving_dir: str) -> list[str]:
-    """Relative paths of the log's parquet data files (recurses the
-    bucketed `__kb=` partition dirs; skips `_` markers/sidecars)."""
+    """Relative paths of the log's parquet data files (skips `_`/`.`
+    markers, sidecars and staging dirs)."""
     import os
 
     out = []
     if not os.path.isdir(serving_dir):
         return out
     for root, dirs, files in os.walk(serving_dir):
-        dirs[:] = [
-            d for d in dirs if d.startswith("__kb=") or not d.startswith(("_", "."))
-        ]
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for f in files:
             if not f.startswith(("_", ".")) and f.endswith(".parquet"):
                 out.append(
@@ -497,13 +461,6 @@ def run_deferred_gc(serving_dir: str) -> int:
             with contextlib.suppress(OSError):
                 os.unlink(p)
                 n += 1
-    # drop now-empty bucket dirs so partition discovery never sees an
-    # empty __kb= dir's schema-less husk
-    for e in os.listdir(serving_dir):
-        d = os.path.join(serving_dir, e)
-        if e.startswith("__kb=") and os.path.isdir(d) and not os.listdir(d):
-            with contextlib.suppress(OSError):
-                os.rmdir(d)
     with contextlib.suppress(OSError):
         os.unlink(os.path.join(serving_dir, "_gc_pending.json"))
     return n
@@ -566,8 +523,7 @@ def sweep_compact_orphans(serving_dir: str) -> int:
 
 def merge_fileset_in(staging: str, serving_dir: str) -> None:
     """Move a staged fileset's data files into the serving dir, mirroring
-    relative paths (flat files stay flat; `__kb=` bucket files land in the
-    matching bucket dir). Each move is an atomic rename; a crash midway
+    relative paths. Each move is an atomic rename; a crash midway
     leaves a PARTIAL compacted fileset alongside the full old one, which
     still resolves to identical content (the moved rows outrank their old
     copies; unmoved keys fall back to the old rows — same values either
@@ -619,8 +575,6 @@ def compact_cast(spark, catalog, store: str, serving_dir: str) -> dict:
 
 
 def _compact_cast_locked(spark, catalog, store: str, serving_dir: str) -> dict:
-    import os
-
     recover_swap_dir(serving_dir)
     base = log_schema(serving_dir)
     # read_log: a dir carrying cast-on-read legacy groups still migrates
@@ -653,14 +607,7 @@ def _compact_cast_locked(spark, catalog, store: str, serving_dir: str) -> dict:
     casted = df
     for c in audit:
         casted = casted.withColumn(c, F.col(c).try_cast(reg[c]))
-    bucketed = any(
-        e.startswith("__kb=")
-        for e in os.listdir(serving_dir)
-        if os.path.isdir(os.path.join(serving_dir, e))
-    )
-    atomic_swap_dir(
-        casted, serving_dir, tag="cast", partition_by="__kb" if bucketed else None
-    )
+    atomic_swap_dir(casted, serving_dir, tag="cast")
     return {"cast": audit, "nulled": nulled}
 
 
@@ -833,7 +780,7 @@ def log_schema(serving_dir: str):
     writers (extend_log_schema) and reset on swaps (the dir then holds
     exactly the swapped fileset). None when absent (pre-sidecar log).
 
-    WHY a sidecar: append-mode logs accumulate files with differing column
+    WHY a sidecar: serving logs accumulate files with differing column
     sets (the seed has no op/stamp column; schema evolution adds value
     columns mid-serve). mergeSchema reads every footer on every read —
     the r6 20M-row probe showed it dominating the trigger (8.9s vs 2.9s
@@ -1001,8 +948,7 @@ def extend_log_schema(spark, serving_dir: str, schema, cast_groups: bool = True)
     if base is None:
         base_fields = []
         if os.path.isdir(serving_dir) and any(
-            not e.startswith(("_", ".")) or e.startswith("__kb=")
-            for e in os.listdir(serving_dir)
+            not e.startswith(("_", ".")) for e in os.listdir(serving_dir)
         ):
             base_fields = list(
                 spark.read.option("mergeSchema", "true")
@@ -1052,8 +998,8 @@ def extend_log_schema(spark, serving_dir: str, schema, cast_groups: bool = True)
 
 def set_log_schema(serving_dir: str, schema) -> None:
     """Reset the sidecar to exactly `schema` — for swap writers, whose new
-    dir holds exactly one fileset (the compact/rewrite output already
-    carries the full read schema, so nothing is lost by the reset; legacy
+    dir holds exactly one fileset (the swapped output already carries the
+    full read schema, so nothing is lost by the reset; legacy
     cast groups clear too — the swapped fileset is homogeneous)."""
     _write_log_sidecar(serving_dir, schema, [])
 
@@ -1235,37 +1181,24 @@ def run_replay_query(start_query, max_restarts: int = 2) -> None:
             attempt += 1
 
 
-def read_serving(spark: SparkSession, serving_dir: str) -> DataFrame:
-    """Read a hybrid serving table for queries: tombstone rows (op='DELETE',
-    kept on disk so stale PUTs cannot resurrect deleted keys) are filtered
-    and the op column dropped. Self-heals a crashed swap and sweeps
-    crash-leaked visible tmp files first (either would fail the read)."""
-    recover_swap_dir(serving_dir)
-    sweep_leaked_tmps(serving_dir)
-    df = spark.read.parquet(serving_dir)
-    if "op" in df.columns:
-        df = df.filter(~_is_delete()).drop("op")
-    return df
-
-
 class HybridReplay:
     """Structured-Streaming replay of an RT update log into a serving table.
 
-    Two merge modes:
+    The serving table is an LSM log (the 100 TB shape): each micro-batch is
+    resolved WITHIN itself (batch-sized work) and appended as new files;
+    nothing existing is read or rewritten. Reads resolve base ∪ appends
+    latest-ts-wins on the fly (correct under any arrival order — the DCR
+    determinism contract means resolution commutes with batching), and
+    `compact()` folds the accumulated log back to one row per key
+    (auto-triggered every `compact_every` micro-batches). Per-trigger cost
+    is O(batch), not O(table) — the same LSM trade the lazy incremental
+    push makes, and the one ingestion path the reference's leader takes
+    into its RocksDB LSM (ActiveActiveStoreIngestionTask.java:615,640).
 
-    mode="rewrite" (default): each micro-batch folds into the serving table
-    and the table is atomically swapped — reads are always one resolved
-    file set, but every trigger rewrites the FULL table: O(table) write
-    amplification per micro-batch.
-
-    mode="append" (the 100 TB shape): each micro-batch is resolved WITHIN
-    itself (batch-sized work) and appended as new files; nothing existing
-    is read or rewritten. Reads resolve base ∪ appends latest-ts-wins on
-    the fly (correct under any arrival order — the DCR determinism contract
-    means resolution commutes with batching), and `compact()` folds the
-    accumulated log back to one row per key (auto-triggered every
-    `compact_every` micro-batches). Per-trigger cost drops from O(table)
-    to O(batch) — the same LSM trade the lazy incremental push makes."""
+    A stampless flat table — a fresh seed, or a serving dir written by
+    the whole-table swap mode older releases offered, tombstone rows
+    included — reads as the log's seed: its rows carry no `__batch` stamp
+    and so sort oldest."""
 
     def __init__(
         self,
@@ -1276,12 +1209,9 @@ class HybridReplay:
         ts_col: str = "ts",
         rewind_seconds: int | None = None,
         now_ts: int | None = None,
-        mode: str = "rewrite",
         compact_every: int = 16,
         ts_unit: str = "raw",
     ):
-        if mode not in ("rewrite", "append"):
-            raise ValueError(f"unknown merge mode {mode!r}")
         # ts_unit: what ONE unit of the ts column is worth in seconds-land.
         # "raw" (default): rewind_seconds / lag_threshold_seconds are in the
         # same unit as ts (historical behavior); "ms": ts is epoch millis —
@@ -1300,12 +1230,9 @@ class HybridReplay:
         self.key_fields = meta.key_fields
         self.rewind_seconds = meta.rewind_seconds if rewind_seconds is None else rewind_seconds
         self.now_ts = now_ts
-        self.mode = mode
         self.compact_every = compact_every
         self.ts_scale = 1000 if ts_unit == "ms" else 1
         self._writer_lock_owner = None
-        if mode == "rewrite":
-            refuse_rewrite_over_append(spark, serving_dir, "__batch", "hybrid")
 
     def _serialized_writer(self):
         """Serialize serving-LSM writers on the catalog store lock
@@ -1334,11 +1261,10 @@ class HybridReplay:
     def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """foreachBatch body.
 
-        The serving table PERSISTS tombstones (op='DELETE' rows): dropping
+        The serving log PERSISTS tombstones (op='DELETE' rows): dropping
         them would let a stale PUT with an older ts, arriving in a later
         micro-batch, resurrect the key — violating the arrival-order
-        determinism contract (Merge.java:27-31). Readers use `read()` /
-        `read_serving()` which filter tombstones.
+        determinism contract (Merge.java:27-31). `read()` filters them.
 
         The whole trigger body runs under the store writer lock
         (_serialized_writer, VERDICT r7 #4)."""
@@ -1346,68 +1272,45 @@ class HybridReplay:
             self._merge_batch_locked(batch_df, batch_id)
 
     def _merge_batch_locked(self, batch_df: DataFrame, batch_id: int) -> None:
-        # a compact()/rewrite swap that died between its renames left the
+        # a `compact --cast` swap that died between its renames left the
         # serving dir absent; heal before reading or stamping against it —
         # an append onto a missing dir would restart the log from empty
         recover_swap_dir(self.serving_dir)
         sweep_leaked_tmps(self.serving_dir)
-        if self.mode == "append":
-            # O(batch): fold the micro-batch to one row per key, append.
-            # Cross-batch resolution is the reader's (resolve_latest is
-            # associative over ts order, so batch-then-read == all-at-once).
-            # __batch stamps arrival order as the ts-tie tiebreak — the
-            # append-mode twin of rewrite mode's __src (a later batch's PUT
-            # wins an exact ts tie); the initial snapshot has no __batch
-            # (NULL sorts last on desc = oldest). The stamp and the
-            # compaction pressure come from the LOG, not the streaming
-            # batch id / an in-memory counter: batch ids restart on
-            # checkpoint resets, and facade callers build a fresh handle
-            # per call so a counter never fires (code-review r5).
-            stamp, n_stamps = log_stamp_pressure(
-                self.spark, self.serving_dir, "__batch"
-            )
-            resolved = resolve_latest(
-                self._norm_op(batch_df).withColumn(
-                    "__batch", F.lit(stamp).cast("long")
-                ),
-                self.key_fields,
-                self.ts_col,
-            )
-            # write-ahead: the sidecar learns this batch's columns BEFORE
-            # any file lands, so no read can ever drop them (extend_log_schema)
-            extend_log_schema(self.spark, self.serving_dir, resolved.schema)
-            # cast-on-read invariant: new files carry the (possibly just
-            # widened) sidecar types — they are in no legacy group, so
-            # read_log scans them with the current schema
-            resolved = align_to_log_schema(resolved, self.serving_dir)
-            clear_dead_job_staging(self.serving_dir)  # killed-trigger staging
-            resolved.write.mode("append").parquet(self.serving_dir)
-            # this append made `stamp` the new max with one more live
-            # stamp — memo it so the next trigger skips the column scan
-            # (no-op for an empty batch that published no files)
-            _, n_live = record_stamp_after_append(
-                self.serving_dir, stamp + 1, n_stamps + 1
-            )
-            if self.compact_every and n_live >= self.compact_every:
-                self.compact()
-            return
-        serving = self._norm_op(self.spark.read.parquet(self.serving_dir))
-        merged = resolve_latest(
-            serving.withColumn("__src", F.lit(0)).unionByName(
-                self._norm_op(batch_df).withColumn("__src", F.lit(1)),
-                allowMissingColumns=True,
-            ),
+        # O(batch): fold the micro-batch to one row per key, append.
+        # Cross-batch resolution is the reader's (resolve_latest is
+        # associative over ts order, so batch-then-read == all-at-once).
+        # __batch stamps arrival order as the ts-tie tiebreak (a later
+        # batch's PUT wins an exact ts tie); the initial snapshot has no
+        # __batch (NULL sorts last on desc = oldest). The stamp and the
+        # compaction pressure come from the LOG, not the streaming
+        # batch id / an in-memory counter: batch ids restart on
+        # checkpoint resets, and facade callers build a fresh handle
+        # per call so a counter never fires (code-review r5).
+        stamp, n_stamps = log_stamp_pressure(self.spark, self.serving_dir, "__batch")
+        resolved = resolve_latest(
+            self._norm_op(batch_df).withColumn("__batch", F.lit(stamp).cast("long")),
             self.key_fields,
             self.ts_col,
-            tiebreak=["__src"],
-        ).drop("__src")
-        self._swap_in(merged)
-
-    def _swap_in(self, merged: DataFrame) -> None:
-        atomic_swap_dir(merged, self.serving_dir, tag="stream")
+        )
+        # write-ahead: the sidecar learns this batch's columns BEFORE
+        # any file lands, so no read can ever drop them (extend_log_schema)
+        extend_log_schema(self.spark, self.serving_dir, resolved.schema)
+        # cast-on-read invariant: new files carry the (possibly just
+        # widened) sidecar types — they are in no legacy group, so
+        # read_log scans them with the current schema
+        resolved = align_to_log_schema(resolved, self.serving_dir)
+        clear_dead_job_staging(self.serving_dir)  # killed-trigger staging
+        resolved.write.mode("append").parquet(self.serving_dir)
+        # this append made `stamp` the new max with one more live
+        # stamp — memo it so the next trigger skips the column scan
+        # (no-op for an empty batch that published no files)
+        _, n_live = record_stamp_after_append(self.serving_dir, stamp + 1, n_stamps + 1)
+        if self.compact_every and n_live >= self.compact_every:
+            self.compact()
 
     def _raw(self) -> DataFrame:
-        # Append mode accumulates files whose column sets may differ (the
+        # The log accumulates files whose column sets may differ (the
         # initial batch-push snapshot has no op column; schema evolution
         # adds value columns mid-serve). The read schema comes from the
         # schema SIDECAR the writers maintain (see log_schema) unioned with
@@ -1416,10 +1319,8 @@ class HybridReplay:
         # filled on old files) no matter which files predate it. Only a
         # pre-sidecar log pays mergeSchema, once per read until its next
         # write upgrades it.
-        recover_swap_dir(self.serving_dir)  # self-heal a crashed compact swap
+        recover_swap_dir(self.serving_dir)  # self-heal a crashed swap
         sweep_leaked_tmps(self.serving_dir)
-        if self.mode != "append":
-            return self.spark.read.parquet(self.serving_dir)
         from pyspark.sql import types as T
 
         base = log_schema(self.serving_dir)
@@ -1508,18 +1409,8 @@ class HybridReplay:
 
     def read(self) -> DataFrame:
         """The store's live view: tombstones filtered, op dropped."""
-        if self.mode == "append":
-            out = self._resolve_log().filter(~_is_delete()).drop("op")
-            return out.drop("__batch") if "__batch" in out.columns else out
-        # rewrite mode: the swapped table keeps whatever physical types the
-        # last fold produced; a registry promotion (incl. the cast-on-read
-        # pairs, long→double) still widens the READ — same reader-schema
-        # authority as append mode's _raw and the batch surface
-        # (engine._resolve_reader_schema)
-        df = read_serving(self.spark, self.serving_dir)
-        return resolve_registry_reader(
-            df, registered_value_types(self.catalog, self.store)
-        )
+        out = self._resolve_log().filter(~_is_delete()).drop("op")
+        return out.drop("__batch") if "__batch" in out.columns else out
 
     def start(self, rt_stream: DataFrame, checkpoint_dir: str, available_now: bool = True):
         """Run the replay. `rt_stream` is a streaming DataFrame of update rows
@@ -1545,7 +1436,7 @@ class HybridReplay:
         src_max = rt_batch.agg(F.max(self.ts_col)).collect()[0][0]
         if src_max is None:
             return True
-        # _raw(): append mode accumulates heterogeneous footers; a bare
+        # _raw(): the log accumulates heterogeneous footers; a bare
         # read samples one and could miss the ts column's latest values
         serving = self._raw()
         srv_max = serving.agg(F.max(self.ts_col)).collect()[0][0]
