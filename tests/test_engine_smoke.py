@@ -130,15 +130,22 @@ def test_compression_strategy_config(engine, spark, tmp_path):
     for codec, ext in (("no_op", ""), ("gzip", ".gz.parquet"), ("zstd", ".zstd.parquet")):
         name = f"comp_{codec}"
         engine.create_store(name, key_fields=["k"], compression=codec)
-        engine.push(name, spark.createDataFrame([(1, "a" * 100)], "k long, v string"))
-        files = glob.glob(
-            f"{engine.catalog.version_dir(name, 1)}/partition_id=*/*.parquet"
-        )
-        assert files
-        if ext:
-            assert any(f.endswith(ext) for f in files), (codec, files)
-        else:
-            assert all(".gz." not in f and ".zstd." not in f for f in files), files
+        row = spark.createDataFrame([(1, "a" * 100)], "k long, v string")
+        engine.push(name, row)
+        # every committer writes the store's codec: v2 is an eager
+        # incremental push, v3 a compaction of a lazy slot
+        engine.incremental_push(name, row)
+        engine.incremental_push(name, row, eager=False)
+        engine.compact(name)
+        for version in (1, 2, 3):
+            files = glob.glob(
+                f"{engine.catalog.version_dir(name, version)}/partition_id=*/*.parquet"
+            )
+            assert files
+            if ext:
+                assert any(f.endswith(ext) for f in files), (codec, files)
+            else:
+                assert all(".gz." not in f and ".zstd." not in f for f in files), files
 
 
 def test_partial_subscribe(engine, spark, sf_dir):

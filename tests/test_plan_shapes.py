@@ -5,6 +5,7 @@ column pruning for projections. If a refactor silently de-optimizes a
 plan, these fail before any benchmark notices."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from venice_spark.plans.reference_queries import QUERIES
 
@@ -105,6 +106,69 @@ def test_incremental_push_merge_never_shuffles_base(spark, sf_dir):
     plan = _plan(QUERIES["w9_incremental_push"](spark, sf_dir))
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan and "Window" not in plan, plan
+
+
+def _ancestry(plan: str, marker: str) -> list[str]:
+    """The operator lines from the one scan whose line holds `marker` up to
+    the plan root, scan first (tree-string depth = the `:+- ` prefix)."""
+    lines = plan.splitlines()
+
+    def depth(line):
+        return len(line) - len(line.lstrip(" :+-"))
+
+    (i,) = [n for n, line in enumerate(lines) if "Scan parquet" in line and marker in line]
+    path, d = [lines[i]], depth(lines[i])
+    for line in reversed(lines[:i]):
+        if depth(line) < d:
+            path.append(line)
+            d = depth(line)
+    return path
+
+
+@pytest.mark.parametrize("fold", ["compact", "eager_push"])
+def test_engine_fold_never_shuffles_base(spark, tmp_path, monkeypatch, fold):
+    """The folds the engine builds itself — compaction, and an eager push
+    over a pending lazy slot — meet the base with a broadcast left-anti
+    join only: from the base scan to the version repartition there is no
+    Window and no other Exchange (a window fold hashes the whole base on
+    (partition_id, key), sorts it, then repartitions it again)."""
+    import venice_spark.push as push_mod
+    from venice_spark import VeniceSparkEngine
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("f", key_fields=["k"], partition_count=4)
+    schema = "k long, v double"
+    eng.push("f", spark.createDataFrame([(i, i * 1.0) for i in range(100)], schema))
+    for k in (1, 2):
+        eng.incremental_push("f", spark.createDataFrame([(k, 9.0)], schema), eager=False)
+
+    folds = []
+    real = push_mod.repartition_and_sort
+
+    def capture(df, *a, **k):
+        folds.append(real(df, *a, **k))
+        return folds[-1]
+
+    monkeypatch.setattr(push_mod, "repartition_and_sort", capture)
+    if fold == "compact":
+        eng.compact("f")
+    else:
+        eng.incremental_push("f", spark.createDataFrame([(3, 7.0)], schema))
+    assert eng.store("f").get(1)["v"] == 9.0 and eng.store("f").get(50)["v"] == 50.0
+
+    key = "spark.sql.maxMetadataStringLength"  # full scan paths in the plan
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plan = _plan(folds[0])
+    finally:
+        spark.conf.set(key, prev)
+    path = _ancestry(plan, f"{eng.catalog.version_dir('f', 1)}]")
+    first_exchange = next(i for i, line in enumerate(path) if "Exchange" in line)
+    assert "REPARTITION_BY_NUM" in path[first_exchange], plan
+    below = path[:first_exchange]
+    assert any("BroadcastHashJoin" in op and "LeftAnti" in op for op in below), plan
+    assert not any("Window" in op for op in below), plan
 
 
 def test_delta_resolved_get_still_prunes_partitions(spark, tmp_path):

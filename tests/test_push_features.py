@@ -311,8 +311,8 @@ def test_bloom_filter_store_config_writes_parquet_blooms(spark, tmp_path):
     eng.push("plain", rows)
     eng.push("bloomy", rows)
 
-    def total_bytes(store):
-        path = eng.catalog.version_dir(store, 1)
+    def total_bytes(store, version=1):
+        path = eng.catalog.version_dir(store, version)
         return sum(
             os.path.getsize(f) for f in glob.glob(f"{path}/partition_id=*/*.parquet")
         )
@@ -324,6 +324,16 @@ def test_bloom_filter_store_config_writes_parquet_blooms(spark, tmp_path):
     assert bloomy > plain + 10_000, (plain, bloomy)
     # and the bloomed store still serves correctly
     assert eng.store("bloomy").get(7)["val"] == "v7"
+
+    # a compaction writes the store's blooms too
+    for store in ("plain", "bloomy"):
+        eng.incremental_push(
+            store, spark.createDataFrame([(7, "w7")], ["k", "val"]), eager=False
+        )
+        eng.compact(store)
+    plain, bloomy = total_bytes("plain", 2), total_bytes("bloomy", 2)
+    assert bloomy > plain + 10_000, (plain, bloomy)
+    assert eng.store("bloomy").get(7)["val"] == "w7"
 
 
 def test_repush_applies_updated_partition_count(spark, tmp_path):
@@ -503,10 +513,10 @@ def test_compact_restamps_late_delta_after_layout_change(engine, spark, monkeypa
     cat.update_store("s", partition_count=5)  # layout change before compaction
 
     # Simulate the race: the delta lands between compaction's resolve
-    # snapshot and its sweep. Hide the slot from the first two lookups
-    # (snapshot + read_current's resolve) so the sweep sees it as late.
+    # snapshot and its sweep. Hide the slot from the first lookup (the
+    # snapshot the fold reads) so the sweep sees it as late.
     real = cat.list_delta_dirs
-    hidden = {"left": 2}
+    hidden = {"left": 1}
     def fake(store, version):
         out = real(store, version)
         if version == old_v and hidden["left"] > 0:
@@ -627,10 +637,10 @@ def test_eager_push_carries_concurrent_lazy_delta(engine, spark, monkeypatch):
     engine.incremental_push("s", lazy, eager=False)
     old_v = cat.current_version("s")
 
-    # hide the slot from the eager push's snapshot + resolve (it "lands"
-    # after them), then reveal it to the sweep
+    # hide the slot from the eager push's snapshot (it "lands" after it),
+    # then reveal it to the sweep
     real = cat.list_delta_dirs
-    hidden = {"left": 2}
+    hidden = {"left": 1}
     def fake(store, version):
         out = real(store, version)
         if version == old_v and hidden["left"] > 0:
@@ -648,22 +658,44 @@ def test_eager_push_carries_concurrent_lazy_delta(engine, spark, monkeypatch):
     assert out["late"] == 5.0 and out["b"] == 99.0
 
 
+def _race_newer_version(cat, spark, state, rows):
+    """A commit_version stand-in: before the first commit it sees, a
+    concurrent writer lands and commits a newer version holding `rows`."""
+    from venice_spark.partitioner import repartition_and_sort
+
+    real_commit = cat.commit_version
+
+    def racing_commit(store, version, manifest=None, make_current=True):
+        if state["winner"] is None:
+            w = cat.begin_version(store)
+            wdf = spark.createDataFrame(rows, "key string, val double, _rmd_ts long")
+            out = repartition_and_sort(wdf, ["key"], 2, False)
+            out.write.mode("overwrite").partitionBy("partition_id").parquet(
+                cat.version_dir(store, w)
+            )
+            real_commit(
+                store, w, manifest={"partition_count": 2, "partitioner": "xxhash64"}
+            )
+            state["winner"] = w
+        return real_commit(store, version, manifest=manifest, make_current=make_current)
+
+    return racing_commit
+
+
 def test_sweep_targets_actual_current_version_after_lost_race(engine, spark, monkeypatch):
     """ADVICE r4 (medium): when a concurrent push commits a NEWER version
     first, the loser's commit early-returns — but its late-delta sweep must
     then target the winning (current) version, not the loser's never-served
     one, or those upserts are stranded forever."""
-    from venice_spark.partitioner import repartition_and_sort
-
     cat = engine.catalog
     lazy = spark.createDataFrame([("late", 5.0, 50)], "key string, val double, _rmd_ts long")
     engine.incremental_push("s", lazy, eager=False)
     old_v = cat.current_version("s")
 
-    # hide the lazy slot from the eager push's snapshot + resolve so the
-    # sweep sees it as late (same interleaving as the carry test above)
+    # hide the lazy slot from the eager push's snapshot so the sweep sees
+    # it as late (same interleaving as the carry test above)
     real_list = cat.list_delta_dirs
-    hidden = {"left": 2}
+    hidden = {"left": 1}
     def fake_list(store, version):
         out = real_list(store, version)
         if version == old_v and hidden["left"] > 0:
@@ -674,30 +706,15 @@ def test_sweep_targets_actual_current_version_after_lost_race(engine, spark, mon
 
     # when the eager push (the loser) tries to commit, a concurrent winner
     # lands a higher version first
-    real_commit = cat.commit_version
     state = {"winner": None}
-    def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            w = cat.begin_version(store)
-            wdf = spark.createDataFrame(
-                [("winner", 7.0, 70)], "key string, val double, _rmd_ts long"
-            )
-            out = repartition_and_sort(wdf, ["key"], 2, False)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                cat.version_dir(store, w)
-            )
-            real_commit(
-                store, w,
-                manifest={"partition_count": 2, "partitioner": "xxhash64"},
-            )
-            state["winner"] = w
-        return real_commit(store, version, manifest=manifest, make_current=make_current)
-    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    monkeypatch.setattr(
+        cat, "commit_version",
+        _race_newer_version(cat, spark, state, [("winner", 7.0, 70)]),
+    )
 
     eager = spark.createDataFrame([("b", 99.0, 60)], "key string, val double, _rmd_ts long")
     res = engine.incremental_push("s", eager)  # loses the commit race
-    monkeypatch.setattr(cat, "list_delta_dirs", real_list)
-    monkeypatch.setattr(cat, "commit_version", real_commit)
+    monkeypatch.undo()
 
     cur = cat.current_version("s")
     assert cur == state["winner"], "winner's version should be current"
@@ -717,36 +734,18 @@ def test_lost_race_restages_tombstones_too(engine, spark, monkeypatch):
     (nulls_as_deletes) must delete it on the winning version too — the
     restaged lazy slot carries the __del tombstone through the resolve
     view, not just the upsert rows."""
-    from venice_spark.partitioner import repartition_and_sort
-
     cat = engine.catalog
-    real_commit = cat.commit_version
     state = {"winner": None}
-
-    def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            w = cat.begin_version(store)
-            wdf = spark.createDataFrame(
-                [("a", 100.0, 70), ("winner", 7.0, 70)],
-                "key string, val double, _rmd_ts long",
-            )
-            out = repartition_and_sort(wdf, ["key"], 2, False)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                cat.version_dir(store, w)
-            )
-            real_commit(
-                store, w, manifest={"partition_count": 2, "partitioner": "xxhash64"}
-            )
-            state["winner"] = w
-        return real_commit(store, version, manifest=manifest, make_current=make_current)
-
-    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    monkeypatch.setattr(
+        cat, "commit_version",
+        _race_newer_version(cat, spark, state, [("a", 100.0, 70), ("winner", 7.0, 70)]),
+    )
     # all value columns NULL == tombstone (ETL union[null, T] convention)
     tomb = spark.createDataFrame(
         [("a", None, None)], "key string, val double, _rmd_ts long"
     )
     res = engine.incremental_push("s", tomb, nulls_as_deletes=True)
-    monkeypatch.setattr(cat, "commit_version", real_commit)
+    monkeypatch.undo()
 
     assert res.superseded_by == state["winner"]
     # winner's FULL snapshot replaced the base (only a+winner rows); the
@@ -765,37 +764,19 @@ def test_lost_race_restage_resolves_overlapping_keys_by_order_col(
     only delta rows at least as fresh as the winner's value for the key —
     record-order resolution (the reference resolves concurrent RT/
     incremental writes by record timestamp/offset, never commit order)."""
-    from venice_spark.partitioner import repartition_and_sort
-
     cat = engine.catalog
-    real_commit = cat.commit_version
     state = {"winner": None}
-
-    def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            w = cat.begin_version(store)
-            wdf = spark.createDataFrame(
-                [("a", 100.0, 70), ("b", 200.0, 70)],
-                "key string, val double, _rmd_ts long",
-            )
-            out = repartition_and_sort(wdf, ["key"], 2, False)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                cat.version_dir(store, w)
-            )
-            real_commit(
-                store, w, manifest={"partition_count": 2, "partitioner": "xxhash64"}
-            )
-            state["winner"] = w
-        return real_commit(store, version, manifest=manifest, make_current=make_current)
-
-    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    monkeypatch.setattr(
+        cat, "commit_version",
+        _race_newer_version(cat, spark, state, [("a", 100.0, 70), ("b", 200.0, 70)]),
+    )
     # loser's delta: 'a' is STALER than the winner's (60 < 70) and must not
     # override; 'b' is FRESHER (80 > 70) and must
     delta = spark.createDataFrame(
         [("a", 1.0, 60), ("b", 2.0, 80)], "key string, val double, _rmd_ts long"
     )
     res = engine.incremental_push("s", delta, order_col="_rmd_ts")
-    monkeypatch.setattr(cat, "commit_version", real_commit)
+    monkeypatch.undo()
 
     assert res.superseded_by == state["winner"]
     out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
@@ -808,34 +789,17 @@ def test_lost_race_restage_with_all_stale_rows_appends_no_slot(
 ):
     """Companion: when every delta row is staler than the winner, nothing
     restages — no empty slot joins the resolve union for every later read."""
-    from venice_spark.partitioner import repartition_and_sort
-
     cat = engine.catalog
-    real_commit = cat.commit_version
     state = {"winner": None}
-
-    def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            w = cat.begin_version(store)
-            wdf = spark.createDataFrame(
-                [("a", 100.0, 70)], "key string, val double, _rmd_ts long"
-            )
-            out = repartition_and_sort(wdf, ["key"], 2, False)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                cat.version_dir(store, w)
-            )
-            real_commit(
-                store, w, manifest={"partition_count": 2, "partitioner": "xxhash64"}
-            )
-            state["winner"] = w
-        return real_commit(store, version, manifest=manifest, make_current=make_current)
-
-    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    monkeypatch.setattr(
+        cat, "commit_version",
+        _race_newer_version(cat, spark, state, [("a", 100.0, 70)]),
+    )
     delta = spark.createDataFrame(
         [("a", 1.0, 60)], "key string, val double, _rmd_ts long"
     )
     res = engine.incremental_push("s", delta, order_col="_rmd_ts")
-    monkeypatch.setattr(cat, "commit_version", real_commit)
+    monkeypatch.undo()
 
     assert res.superseded_by == state["winner"]
     assert cat.list_delta_dirs("s", state["winner"]) == []
@@ -849,30 +813,12 @@ def test_lost_race_restage_keeps_null_order_rows(engine, spark, monkeypatch):
     evaluates to NULL and fails the freshness filter. The non-racing path
     applies an unordered upsert unconditionally (slot outranks base), so
     the racing path must restage it too."""
-    from venice_spark.partitioner import repartition_and_sort
-
     cat = engine.catalog
-    real_commit = cat.commit_version
     state = {"winner": None}
-
-    def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            w = cat.begin_version(store)
-            wdf = spark.createDataFrame(
-                [("a", 100.0, 70), ("c", 300.0, 70)],
-                "key string, val double, _rmd_ts long",
-            )
-            out = repartition_and_sort(wdf, ["key"], 2, False)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                cat.version_dir(store, w)
-            )
-            real_commit(
-                store, w, manifest={"partition_count": 2, "partitioner": "xxhash64"}
-            )
-            state["winner"] = w
-        return real_commit(store, version, manifest=manifest, make_current=make_current)
-
-    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    monkeypatch.setattr(
+        cat, "commit_version",
+        _race_newer_version(cat, spark, state, [("a", 100.0, 70), ("c", 300.0, 70)]),
+    )
     # 'a' has NO order value but is contested by the winner — must still
     # restage (non-racing parity); 'b' is uncontested control
     delta = spark.createDataFrame(
@@ -880,13 +826,96 @@ def test_lost_race_restage_keeps_null_order_rows(engine, spark, monkeypatch):
         "key string, val double, _rmd_ts long",
     )
     res = engine.incremental_push("s", delta, order_col="_rmd_ts")
-    monkeypatch.setattr(cat, "commit_version", real_commit)
+    monkeypatch.undo()
 
     assert res.superseded_by == state["winner"]
     out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
     assert out["a"] == 1.0, f"NULL-order row dropped on contested key: {out}"
     assert out["b"] == 2.0
     assert out["c"] == 300.0
+
+
+def test_lost_compaction_reports_superseded_by(engine, spark, monkeypatch):
+    """Every committer reports a lost commit: a compaction beaten by an
+    eager incremental push (which folded the same slot) names the winner
+    in superseded_by instead of returning its orphan as if it served, and
+    the slot it folded still serves through the winner."""
+    from venice_spark.push import compact_store
+
+    cat = engine.catalog
+    schema = "key string, val double, _rmd_ts long"
+    engine.incremental_push("s", spark.createDataFrame([("a", 9.0, 90)], schema), eager=False)
+    real_commit = cat.commit_version
+    state = {"winner": None}
+
+    def racing_commit(store, version, manifest=None, make_current=True):
+        if state["winner"] is None:
+            monkeypatch.setattr(cat, "commit_version", real_commit)
+            won = engine.incremental_push(
+                "s", spark.createDataFrame([("z", 1.0, 1)], schema)
+            )
+            state["winner"] = won.version
+        return real_commit(store, version, manifest=manifest, make_current=make_current)
+
+    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    res = compact_store(spark, cat, "s")
+
+    assert res.superseded_by == state["winner"] == cat.current_version("s")
+    assert res.version < state["winner"]
+    out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
+    assert out == {"a": 9.0, "b": 2.0, "c": 3.0, "z": 1.0}
+
+
+def test_lost_batch_push_reports_superseded_by_and_defer_swap_does_not(
+    engine, spark, monkeypatch
+):
+    """The batch push reports a lost commit too; a defer_swap push never
+    asked to serve, so it is not a loss."""
+    cat = engine.catalog
+    df = spark.createDataFrame([("x", 5.0, 50)], "key string, val double, _rmd_ts long")
+    deferred = engine.push("s", df, defer_swap=True)
+    assert deferred.superseded_by is None
+    assert cat.current_version("s") == 1
+
+    state = {"winner": None}
+    monkeypatch.setattr(
+        cat, "commit_version", _race_newer_version(cat, spark, state, [("w", 7.0, 70)])
+    )
+    res = engine.push("s", df)
+    assert res.superseded_by == state["winner"] == cat.current_version("s")
+    assert {r["key"] for r in engine.store("s").df().collect()} == {"w"}
+
+
+@pytest.mark.parametrize("eager", [True, False], ids=["eager", "lazy"])
+def test_incremental_push_refuses_conflicting_duplicate_keys(engine, spark, eager):
+    """Without order_col a delta holding one key with two values is refused
+    like a batch push (DuplicateKeyError), before anything lands; identical
+    duplicates are one upsert."""
+    from venice_spark.push import DuplicateKeyError
+
+    cat = engine.catalog
+    schema = "key string, val double, _rmd_ts long"
+    bad = spark.createDataFrame([("k7", 1.0, 5), ("k7", 2.0, 5)], schema)
+    with pytest.raises(DuplicateKeyError, match="k7"):
+        engine.incremental_push("s", bad, eager=eager)
+    assert cat.current_version("s") == 1 and cat.list_delta_dirs("s", 1) == []
+
+    same = spark.createDataFrame([("k7", 1.0, 5), ("k7", 1.0, 5)], schema)
+    res = engine.incremental_push("s", same, eager=eager)
+    assert engine.store("s").get("k7")["val"] == 1.0
+    if not eager:
+        assert res.rows == 1
+
+
+@pytest.mark.parametrize("first", [1.0, 2.0])
+def test_incremental_push_order_col_ties_break_by_value_json(engine, spark, first):
+    """With order_col, two rows of one key at the same order value resolve
+    by resolve_latest's rule — the larger canonical value JSON wins — in
+    whichever order they arrive."""
+    rows = [("k7", first, 5), ("k7", 3.0 - first, 5)]
+    delta = spark.createDataFrame(rows, "key string, val double, _rmd_ts long")
+    engine.incremental_push("s", delta, order_col="_rmd_ts", eager=False)
+    assert engine.store("s").get("k7")["val"] == 2.0
 
 
 def test_batch_push_accepts_partition_id_input(engine, spark):

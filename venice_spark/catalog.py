@@ -40,6 +40,15 @@ def _slot_index(slot_dir: str) -> int:
     return int(os.path.basename(slot_dir)[1:])
 
 
+def drop_tombstones(df: DataFrame) -> DataFrame:
+    """Resolved slot rows minus their `__del` tombstones (nulls_as_deletes)."""
+    if "__del" not in df.columns:
+        return df
+    import pyspark.sql.functions as F
+
+    return df.filter(~F.coalesce(F.col("__del"), F.lit(False))).drop("__del")
+
+
 class StoreNotFoundError(KeyError):
     pass
 
@@ -660,12 +669,13 @@ class StoreCatalog:
     def _resolve_delta_view(
         spark: SparkSession,
         base: DataFrame,
-        delta_dirs: list[str],
+        delta_dirs: list,
         key_fields: list[str],
         window_keys: list[str] | None = None,
-        delta_columns: list[str] | None = None,
     ) -> DataFrame:
         """base ∪ d1 ∪ ... ∪ dk with per-key precedence dk > ... > d1 > base.
+        Each d is a slot dir, or an already-read frame (the eager push's
+        in-flight delta rides on top of the slots this way).
 
         Each delta is already one-row-per-key (deduped at push time), so
         precedence is purely the delta index. By default the window
@@ -677,24 +687,18 @@ class StoreCatalog:
         survive resolution until filtered at the end, so a delete in d2
         hides a put in d1.
 
-        This is the ONE latest-wins LSM kernel: every view reader reaches
-        it through push.fold_view_deltas / push.fold_index_deltas, which
-        pass `window_keys` (their bases carry no store partition_id, or a
-        differently-keyed one) and `delta_columns` (project the
-        store-shaped delta rows down to the view's columns before the
-        union)."""
+        This is the ONE latest-wins LSM kernel. Folds that must not window
+        their base (compaction, the eager merge, every view reader) reach
+        it through push._fold_slots, which resolves the slots among
+        themselves over an empty base with `window_keys` = the store key
+        (slot reads carry no base partition_id there)."""
         import pyspark.sql.functions as F
         from pyspark.sql import Window
 
         wkeys = window_keys if window_keys is not None else ["partition_id"] + list(key_fields)
         parts = [base.withColumn("__src", F.lit(0))]
         for i, d in enumerate(delta_dirs, start=1):
-            dd = spark.read.parquet(d)
-            if delta_columns is not None:
-                keep = [c for c in delta_columns if c in dd.columns]
-                if "__del" in dd.columns:
-                    keep = keep + ["__del"]
-                dd = dd.select(*keep)
+            dd = spark.read.parquet(d) if isinstance(d, str) else d
             parts.append(dd.withColumn("__src", F.lit(i)))
         allp = parts[0]
         for p in parts[1:]:
@@ -705,9 +709,7 @@ class StoreCatalog:
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__src")
         )
-        if "__del" in out.columns:
-            out = out.filter(~F.coalesce(F.col("__del"), F.lit(False))).drop("__del")
-        return out
+        return drop_tombstones(out)
 
     def read_version(self, spark: SparkSession, store: str, version: int) -> DataFrame:
         """A version's files. With a footer schema the read takes it (plus

@@ -1,5 +1,5 @@
 """Batch push job: full-version write with atomic swap, plus incremental
-push, repush and TTL repush.
+push, compaction, repush and TTL repush.
 
 Mirrors the reference's own Spark data-writer pipeline stage-for-stage
 (clients/venice-push-job/src/main/java/com/linkedin/venice/spark/datawriter/jobs/AbstractDataWriterSparkJob.java:886-1000):
@@ -17,19 +17,31 @@ dedup happens INSIDE it (groupBy(partition_id, key) — the repartition's hash
 partitioning satisfies the grouping distribution because partition_id is a
 pure function of the key, so Catalyst plans exactly one exchange). Values
 are never funneled through Python.
+
+One version writer: the batch push, compaction and the eager incremental
+push all land and commit a version through `_write_version` (the store's
+codec and key blooms, declared views, manifest, commit, late-slot sweep,
+lost-race report). Compaction and the eager merge fold the slot log the
+way the index readers do (`_fold_slots`): base ⟕anti touched keys ∪ the
+slots resolved among themselves, so the base crosses one exchange — the
+version repartition. Every slot write goes through `_stage_slot`.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import os
+import shutil
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 from typing import NamedTuple
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 
-from venice_spark.catalog import StoreCatalog, bucketed_view_dir
+from venice_spark.catalog import StoreCatalog, _slot_index, bucketed_view_dir, drop_tombstones
 from venice_spark.catalog import view_dir as _plain_view_dir
 from venice_spark.partitioner import repartition_and_sort, with_partition_id
 
@@ -53,8 +65,12 @@ class PushResult:
     partitions: int
     path: str
     # set when this push's version lost a concurrent commit race and never
-    # became current: the winning (serving) version number. For an eager
-    # incremental push the delta was restaged as a lazy slot on the winner
+    # became current: the winning (serving) version number. Every
+    # committer reports it (batch push, compaction, eager incremental
+    # push — the one version writer); a defer_swap push never asked to
+    # serve, so it is not a loss. A lost compaction's slots stay on the
+    # log it folded. For an eager incremental push the delta was restaged
+    # as a lazy slot on the winner
     # (reference semantics: incremental data applies to current and future
     # versions — VenicePushJob.java:919-931; ADVICE r5), so the upserts ARE
     # served; the orphan version stays addressable via set_version.
@@ -73,23 +89,8 @@ def _fix_empty_partitioned_dir(out: DataFrame, path: str, col: str = "partition_
     subdirs (unreadable — no schema anywhere); rewrite plain so the parquet
     footer carries the schema. Post-write directory check instead of a
     pre-write take(1), which would recompute the pipeline's first partition."""
-    import os
-
     if not any(e.startswith(f"{col}=") for e in os.listdir(path)):
         out.write.mode("overwrite").parquet(path)
-
-
-def _dedup_latest_wins(df: DataFrame, key_fields: list[str], order_col: str | None) -> DataFrame:
-    """Keep one row per key. With an order column, highest wins (deterministic);
-    without, rows must be identical duplicates (checked by caller)."""
-    if order_col is None:
-        return df.dropDuplicates(key_fields)
-    w = Window.partitionBy(*key_fields).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def check_duplicate_keys(df: DataFrame, key_fields: list[str]) -> DataFrame:
@@ -147,10 +148,6 @@ def sweep_late_deltas(
     sweeping onto the loser's never-served version would strand those
     upserts — the winning (current) version never receives them and the
     old version is no longer read (ADVICE r4, medium)."""
-    import os
-    import shutil
-    import uuid
-
     meta = catalog.get_store(store)
     old_parts, old_md5p = _version_layout(catalog, store, old_version, meta)
     with catalog._locked(store):
@@ -168,12 +165,7 @@ def sweep_late_deltas(
         if not late:
             return
         os.makedirs(catalog.deltas_dir(store, new_version), exist_ok=True)
-        existing = catalog.list_delta_dirs(store, new_version)
-        k = (
-            max(int(os.path.basename(d)[1:]) for d in existing) + 1
-            if existing
-            else 1
-        )
+        k = _next_slot_index(catalog.list_delta_dirs(store, new_version))
         # `late` comes back from list_delta_dirs in ARRIVAL order; the
         # carried slots keep their original `_slot_meta.json` arrival
         # sequence (the rename moves it with the dir; the restage copies it
@@ -185,17 +177,10 @@ def sweep_late_deltas(
             if (old_parts, old_md5p) == (new_parts, new_md5p):
                 os.rename(d, target)
             else:
-                ldf = spark.read.parquet(d)
-                if "partition_id" in ldf.columns:
-                    ldf = ldf.drop("partition_id")
-                # stage-then-rename: a crash mid-restage must never leave a
-                # half-written d{K} visible to list_delta_dirs
-                staging = os.path.join(
-                    catalog.store_dir(store), f"_delta_staging-{uuid.uuid4().hex}"
+                staging, _ = _stage_slot(
+                    catalog, store, spark.read.parquet(d).drop("partition_id"),
+                    key_fields, (new_parts, new_md5p),
                 )
-                o = repartition_and_sort(ldf, key_fields, new_parts, new_md5p)
-                o.write.mode("overwrite").partitionBy("partition_id").parquet(staging)
-                _fix_empty_partitioned_dir(o, staging)
                 side = os.path.join(d, "_slot_meta.json")
                 if os.path.exists(side):
                     shutil.copy2(side, os.path.join(staging, "_slot_meta.json"))
@@ -204,14 +189,39 @@ def sweep_late_deltas(
             k += 1
 
 
-def _resolved_basenames(resolved_deltas: set) -> list[str]:
-    """Manifest form of a committer's resolved-slot snapshot (basenames,
-    sorted) — what recover_stranded_deltas needs to tell a RESOLVED slot
-    (folded into the new version's content, stays on the old version for
-    rollback) from a LATE one (landed after the snapshot, must carry)."""
-    import os
+def _next_slot_index(slots: list[str]) -> int:
+    """K of the next `d{K}` slot dir on a log holding `slots`."""
+    return max((_slot_index(d) for d in slots), default=0) + 1
 
-    return sorted(os.path.basename(d) for d in resolved_deltas)
+
+def _stage_slot(
+    catalog: StoreCatalog,
+    store: str,
+    rows: DataFrame,
+    key_fields: list[str],
+    layout: tuple[int, bool],
+) -> tuple[str, int]:
+    """Write `rows` (store-shaped, no partition_id) as a slot stamped with
+    `layout` — the (partition count, md5 parity) of the version whose log
+    it joins — into a fresh staging dir under the store; returns (staging
+    dir, rows written). Every slot write (a lazy push's append, the sweep's
+    restamp) goes through here, and the caller renames the dir into its log
+    under the store lock: a crash mid-write never leaves a half-written
+    d{K} visible to list_delta_dirs. The stamp MUST match the base's full
+    layout (modulus AND hash — code-review r4): the read-side resolve
+    groups on (partition_id, key), so a mismatched stamp would split one
+    key's base and slot rows (duplicate served rows)."""
+    n_parts, md5p = layout
+    staging = os.path.join(
+        catalog.store_dir(store), f"_delta_staging-{uuid.uuid4().hex}"
+    )
+    obs = Observation()
+    out = repartition_and_sort(rows, key_fields, n_parts, md5p)
+    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    out.write.mode("overwrite").partitionBy("partition_id").parquet(staging)
+    _fix_empty_partitioned_dir(out, staging)
+    # row count observed on the write job itself — no re-read pass
+    return staging, int(obs.get["rows"])
 
 
 def recover_stranded_deltas(
@@ -230,8 +240,6 @@ def recover_stranded_deltas(
     gap: a deferred version activated later via set_version never ran a
     sweep at all — its manifest makes the late slots recoverable here.
     Returns the number of slots carried."""
-    import os
-
     meta = catalog.get_store(store)
     cur = meta.current_version
     if cur <= 0:
@@ -269,6 +277,110 @@ def recover_stranded_deltas(
         )
         carried += n_late
     return carried
+
+
+def _write_version(
+    spark: SparkSession,
+    catalog: StoreCatalog,
+    store: str,
+    meta,
+    out: DataFrame,
+    *,
+    md5p: bool,
+    push_type: str,
+    swept_from: int,
+    resolved_deltas: list[str],
+    views: list | None = None,
+    defer_swap: bool = False,
+) -> PushResult:
+    """Write `out` as a new version of `store` and commit it: the ONE
+    version writer behind the batch push, compaction and the eager
+    incremental push. `out` carries `partition_id` stamped with the
+    store's partition count and `md5p`, already repartitioned on it and
+    sorted within partitions.
+
+    `swept_from` is the version whose slot log the caller snapshotted
+    (`resolved_deltas` — folded into `out`, or superseded by a full push);
+    the manifest records both so recover_stranded_deltas can tell resolved
+    slots from late ones, and after the commit every later slot carries
+    over (sweep_late_deltas). `views` default to the store's declared
+    views. defer_swap lands the version without flipping the pointer
+    (DEFER_VERSION_SWAP, VenicePushJob.java:436 — activate later via
+    engine.set_version; the next committer's recovery sweeps for it). The
+    result's superseded_by names the serving version when the commit lost
+    to a newer one."""
+    version = catalog.begin_version(store)
+    path = catalog.version_dir(store, version)
+    # partition_id as a *directory* partition: point/batch gets prune to
+    # one dir (the Spark twin of routing a key to its owning partition),
+    # and each dir holds one key-sorted file for rowgroup min/max pruning.
+    # Compression strategy is store-level (CompressionStrategy.java:11-13
+    # NO_OP/GZIP/ZSTD_WITH_DICT): parquet codec none/gzip/zstd — zstd's
+    # trained dictionary is parquet dictionary encoding, built in.
+    codec = {"no_op": "none", "gzip": "gzip", "zstd": "zstd"}[
+        str(meta.config.get("compression", "zstd")).lower()
+    ]
+    # manifest row count observed ON the write job (CollectMetrics)
+    # instead of a post-write `written.count()` pass — one less job per
+    # push, and at scale one less listing+footer sweep of the version
+    # dir (guide §1.4 territory: don't re-run a pass to learn what the
+    # pass you just ran already knew)
+    obs = Observation()
+    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    writer = out.write.mode("overwrite").option("compression", codec)
+    # Store config `bloom_filter=True`: write parquet bloom filters on
+    # the key columns — the RocksDB-bloom parity for point-get-heavy
+    # stores (RocksDBStoragePartition uses block-based bloom filters to
+    # skip SSTs; parquet blooms skip rowgroups the min/max stats can't,
+    # e.g. high-cardinality string keys where sorted ranges still
+    # overlap). Costs ~1 bit-array per rowgroup per key column at write.
+    if meta.config.get("bloom_filter"):
+        for k in meta.key_fields:
+            writer = writer.option(f"parquet.bloom.filter.enabled#{k}", "true")
+    writer.partitionBy("partition_id").parquet(path)
+    _fix_empty_partitioned_dir(out, path)
+
+    # W15 views are rebuilt in full from the FILES just written, never
+    # from the in-flight `out` (that would re-run the write's shuffle once
+    # per view). The read-back is only paid when views exist (guide §6 —
+    # metadata passes are real I/O at scale). Measured (SCALE.md, 2M rows
+    # / 1k delta): an "incremental" variant — old view minus delta-touched
+    # store keys plus projected inserts — was 2x SLOWER than this rebuild:
+    # both rewrite the complete view file set, the rebuild's re-projection
+    # is already view-sized (column pruning), and the anti-join adds a
+    # join stage. A delta that should not pay a view rewrite belongs in
+    # the lazy eager=False mode, where view readers fold the slot log.
+    views = declared_views(meta) if views is None else views
+    if views:
+        written = spark.read.parquet(path)
+        for view in views:
+            view.write(catalog, store, version, written)
+    rows = int(obs.get["rows"])
+
+    # W8 atomic swap (+ Version-record manifest, meta/Version.java:1)
+    won = catalog.commit_version(
+        store,
+        version,
+        manifest={
+            "rows": rows,
+            "partition_count": meta.partition_count,
+            "partitioner": "md5" if md5p else "xxhash64",
+            "push_type": push_type,
+            "swept_from": swept_from,
+            "resolved_deltas": sorted(os.path.basename(d) for d in resolved_deltas),
+        },
+        make_current=not defer_swap,
+    )
+    superseded_by = None
+    if not defer_swap:
+        if swept_from > 0:
+            sweep_late_deltas(
+                spark, catalog, store, swept_from, set(resolved_deltas),
+                version, meta.key_fields, meta.partition_count, md5p,
+            )
+        if not won:
+            superseded_by = catalog.current_version(store)
+    return PushResult(store, version, rows, meta.partition_count, path, superseded_by)
 
 
 class BatchPushJob:
@@ -310,11 +422,7 @@ class BatchPushJob:
         # deferred until the version's data and view files have landed: a
         # push that fails validation/quota/duplicate-key must not mutate
         # the store's declaration (code-review r4 continuation).
-        register_views: list | None = None
-        if views is None:
-            views = declared_views(meta)
-        else:
-            register_views = list(views)
+        register_views = None if views is None else list(views)
 
         # W14: per-record transform/filter during ingestion
         # (DaVinciRecordTransformer.java:44-154)
@@ -335,11 +443,7 @@ class BatchPushJob:
         # NEW slot while this push runs must be carried onto the new
         # version after the swap, or it is silently lost (code-review r4)
         pre_version = meta.current_version
-        pre_deltas = (
-            set(self.catalog.list_delta_dirs(store, pre_version))
-            if pre_version > 0
-            else set()
-        )
+        pre_deltas = self.catalog.list_delta_dirs(store, pre_version)
 
         # declarative pre-write quality gate (validation.py): all scalar
         # rules evaluate in ONE aggregation pass; a failed rule aborts the
@@ -377,8 +481,6 @@ class BatchPushJob:
         # (AbstractPartitionWriter.java, after
         # repartitionAndSortWithinPartitions). The previous dropDuplicates →
         # repartition sequence shuffled the full input twice.
-        version = self.catalog.begin_version(store)
-        path = self.catalog.version_dir(store, version)
         parted = with_partition_id(df, key_fields, meta.partition_count, md5_parity)
         parted = parted.repartition(meta.partition_count, F.col("partition_id"))
         value_cols = [c for c in df.columns if c not in key_fields]
@@ -423,52 +525,13 @@ class BatchPushJob:
         # EliminateSorts removes the node entirely (a bare key sort re-sorts
         # the full partition; pinned by the single-Sort plan test).
         out = out.sortWithinPartitions("partition_id", *key_fields)
-        # partition_id as a *directory* partition: point/batch gets prune to
-        # one dir (the Spark twin of routing a key to its owning partition),
-        # and each dir holds one key-sorted file for rowgroup min/max pruning.
-        # Compression strategy is store-level (CompressionStrategy.java:11-13
-        # NO_OP/GZIP/ZSTD_WITH_DICT): parquet codec none/gzip/zstd — zstd's
-        # trained dictionary is parquet dictionary encoding, built in.
-        codec = {"no_op": "none", "gzip": "gzip", "zstd": "zstd"}[
-            str(meta.config.get("compression", "zstd")).lower()
-        ]
-        # manifest row count observed ON the write job (CollectMetrics)
-        # instead of a post-write `written.count()` pass — one less job per
-        # push, and at scale one less listing+footer sweep of the version
-        # dir (guide §1.4 territory: don't re-run a pass to learn what the
-        # pass you just ran already knew)
-        from pyspark.sql import Observation
-
-        push_obs = Observation("push_rows")
-        out = out.observe(push_obs, F.count(F.lit(1)).alias("rows"))
-        writer = out.write.mode("overwrite").option("compression", codec)
-        # Store config `bloom_filter=True`: write parquet bloom filters on
-        # the key columns — the RocksDB-bloom parity for point-get-heavy
-        # stores (RocksDBStoragePartition uses block-based bloom filters to
-        # skip SSTs; parquet blooms skip rowgroups the min/max stats can't,
-        # e.g. high-cardinality string keys where sorted ranges still
-        # overlap). Costs ~1 bit-array per rowgroup per key column at write.
-        if meta.config.get("bloom_filter"):
-            for k in key_fields:
-                writer = writer.option(f"parquet.bloom.filter.enabled#{k}", "true")
         try:
-            writer.partitionBy("partition_id").parquet(path)
-            _fix_empty_partitioned_dir(out, path)
-
-            # W15 materialized views are co-written in the same job — from
-            # the FILES just written, not the push plan: handing views the
-            # in-flight `out` would re-run the repartition + dedup
-            # aggregation once per view before the view's own shuffle.
-            # The read-back exists ONLY for the views: with none declared
-            # it was still paying a listing + schema/footer sweep of the
-            # fresh version dir per push (guide §6 — metadata passes are
-            # real I/O at scale), so build it lazily.
-            if views:
-                written = spark.read.parquet(path)
-                for view in views:
-                    view.write(self.catalog, store, version, written)
-
-            rows = int(push_obs.get["rows"])
+            res = _write_version(
+                spark, self.catalog, store, meta, out,
+                md5p=md5_parity, push_type="full", swept_from=pre_version,
+                resolved_deltas=pre_deltas, views=register_views,
+                defer_swap=defer_swap,
+            )
         finally:
             # the quota/conflict persists must never outlive the push — a
             # DuplicateKeyError/validation/write failure above would
@@ -478,27 +541,6 @@ class BatchPushJob:
             if conflict_persisted is not None:
                 conflict_persisted.unpersist()
 
-        # W8 atomic swap (+ Version-record manifest, meta/Version.java:1);
-        # defer_swap lands the version without flipping the pointer
-        # (DEFER_VERSION_SWAP, VenicePushJob.java:436) — activate later via
-        # engine.set_version
-        self.catalog.commit_version(
-            store,
-            version,
-            manifest={
-                "rows": rows,
-                "partition_count": meta.partition_count,
-                "partitioner": "md5" if md5_parity else "xxhash64",
-                "push_type": "full",
-                # crash-recovery record: which old-version slots this push
-                # RESOLVED (stay behind for rollback) — anything else found
-                # there later is a stranded late slot
-                # (recover_stranded_deltas)
-                "swept_from": pre_version,
-                "resolved_deltas": _resolved_basenames(pre_deltas),
-            },
-            make_current=not defer_swap,
-        )
         # registration lands only after the version COMMITTED: a failure in
         # the count/commit steps above must leave the declaration untouched
         # (code-review r4 continuation — the pre-commit placement still had
@@ -508,15 +550,10 @@ class BatchPushJob:
         if register_views is not None:
             specs = []
             for v in register_views:
-                written_spec = read_view_spec(v.view_dir(self.catalog, store, version))
+                written_spec = read_view_spec(v.view_dir(self.catalog, store, res.version))
                 specs.append((written_spec or v).spec())
             self.catalog.update_store(store, views=specs)
-        if not defer_swap and pre_version > 0:
-            sweep_late_deltas(
-                spark, self.catalog, store, pre_version, pre_deltas,
-                version, key_fields, meta.partition_count, md5_parity,
-            )
-        return PushResult(store, version, rows, meta.partition_count, path)
+        return res
 
 
 class RecordTransformer:
@@ -1063,11 +1100,11 @@ def fold_view_deltas(
 ) -> DataFrame:
     """Whole-view latest-wins: resolve the version's lazy-delta log (lazy
     incremental pushes append to it without touching view files) through
-    `view` with the shared kernel, windowed per STORE key — view rows
-    retain the store keys precisely for this — and the store-shaped delta
-    rows projected down to the view's columns. The view's own routing
-    column (partition_id) does not survive a fold; without deltas `view`
-    comes back as is."""
+    `view` with the one slot fold (`_fold_slots`), keyed per STORE key —
+    view rows retain the store keys precisely for this — and the latest
+    store-shaped slot rows projected down to the view's columns. The
+    view's own routing column (partition_id) does not survive a fold;
+    without deltas `view` comes back as is."""
     deltas = catalog.list_delta_dirs(store, version)
     if not deltas:
         return view
@@ -1079,10 +1116,47 @@ def fold_view_deltas(
             "and rewrite the view"
         )
     cols = [c for c in view.columns if c != "partition_id"]
-    return StoreCatalog._resolve_delta_view(
-        spark, view.select(*cols), deltas, keys,
-        window_keys=keys, delta_columns=cols,
+    kept, latest = _fold_slots(spark, view.select(*cols), deltas, keys)
+    return kept.unionByName(
+        latest.select(*[c for c in cols if c in latest.columns]),
+        allowMissingColumns=True,
     )
+
+
+def _fold_slots(
+    spark: SparkSession,
+    base: DataFrame,
+    slots: list[str],
+    keys: list[str],
+    top: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The one slot fold — compaction, the eager merge and the index
+    readers all resolve a slot log here. Returns (kept, latest): `base`
+    minus every key a slot (or `top`, an in-flight prepared delta that
+    outranks them all) touched, and each touched key's latest row with
+    tombstones dropped. For a touched key the latest slot row IS its
+    current row (slots outrank the base), so latest-wins resolves among
+    the slots alone — a delta-sized window, never a corpus rescan — and
+    the base meets only a broadcast left-anti join: no exchange, sort or
+    window touches it (a windowed merge would shuffle AND sort 100 TB to
+    override 0.01% of its keys). A slot holds one row per key, so a lone
+    log needs no window. Schema-narrow slots are full-value upserts:
+    their missing columns null-fill. Keys are the full store key list."""
+    # one read PER SLOT DIR: a multi-path read over partition_id-
+    # partitioned sibling dirs raises CONFLICTING_DIRECTORY_STRUCTURES
+    logs = [spark.read.parquet(d).drop("partition_id") for d in slots]
+    if top is not None:
+        logs.append(top)
+    touched = functools.reduce(
+        DataFrame.unionByName, [log.select(*keys) for log in logs]
+    )
+    kept = base.join(F.broadcast(touched), on=keys, how="left_anti")
+    if len(logs) == 1:
+        return kept, drop_tombstones(logs[0])
+    latest = StoreCatalog._resolve_delta_view(
+        spark, logs[0].limit(0), logs, keys, window_keys=keys
+    )
+    return kept, latest
 
 
 def fold_index_deltas(
@@ -1094,37 +1168,21 @@ def fold_index_deltas(
     value_col: str,
     rederive: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Index fold: every delta-touched store key leaves `index` (its value
-    may have moved lists, changed or been deleted — a stale row must never
-    serve), and the touched keys' CURRENT rows come back re-derived by
-    `rederive` (store-shaped rows in, index-shaped rows out; columns it
-    does not produce null-fill). For a touched key the latest delta row IS
-    the current row (deltas outrank the base), so latest-wins resolves
-    among the deltas alone over an empty base — a delta-sized window,
-    never a corpus rescan. Schema-narrow deltas are full-value upserts: a
-    NULL or absent `value_col` only masks its base rows. Keys are the
-    full store key list; without deltas `index` comes back as is."""
+    """Index fold (`_fold_slots`): every delta-touched store key leaves
+    `index` (its value may have moved lists, changed or been deleted — a
+    stale row must never serve), and the touched keys' CURRENT rows come
+    back re-derived by `rederive` (store-shaped rows in, index-shaped rows
+    out; columns it does not produce null-fill). A NULL or absent
+    `value_col` only masks its base rows. Without deltas `index` comes
+    back as is."""
     deltas = catalog.list_delta_dirs(store, version)
     if not deltas:
         return index
     keys = list(catalog.get_store(store).key_fields)
-    # touched keys union PER DELTA DIR: one multi-path read over
-    # partition_id-partitioned sibling dirs raises
-    # CONFLICTING_DIRECTORY_STRUCTURES once a store carries two deltas
-    touched = None
-    for d in deltas:
-        dk = spark.read.parquet(d).select(*keys)
-        touched = dk if touched is None else touched.unionByName(dk)
-    out = index.join(
-        F.broadcast(touched.dropDuplicates(keys)), on=keys, how="left_anti"
-    )
-    resolved = StoreCatalog._resolve_delta_view(
-        spark, spark.read.parquet(deltas[0]).limit(0), deltas, keys,
-        window_keys=keys,
-    )
-    if value_col not in resolved.columns:
+    out, latest = _fold_slots(spark, index, deltas, keys)
+    if value_col not in latest.columns:
         return out
-    fresh = rederive(resolved.filter(F.col(value_col).isNotNull()))
+    fresh = rederive(latest.filter(F.col(value_col).isNotNull()))
     return out.unionByName(
         fresh.select(
             *[
@@ -1136,39 +1194,6 @@ def fold_index_deltas(
     )
 
 
-def maintain_views(
-    spark: SparkSession,
-    catalog: StoreCatalog,
-    store: str,
-    version: int,
-    path: str,
-) -> None:
-    """Bring every DECLARED view up to date for a freshly written version:
-    full rebuild from the written version files.
-
-    Takes the version PATH, not a read-back DataFrame: the read-back
-    (listing + schema/footer sweep of the fresh version dir) is only paid
-    when the store actually declares views (guide §6 — a per-commit
-    metadata pass removed for the common no-view store).
-
-    Measured (SCALE.md, 2M rows / 1k delta): an "incremental" variant —
-    old view minus delta-touched store keys plus projected inserts — was
-    2x SLOWER than this rebuild, because both must rewrite the complete
-    view file set and the rebuild's base re-projection is already free
-    (column pruning reads only the view's columns from the new version,
-    which is view-sized), while the anti-join adds a join stage. The true
-    no-rewrite scale path for small deltas is the LAZY push mode
-    (eager=False): views stay untouched and view_df resolves the store's
-    delta log through the view projection at read time."""
-    meta = catalog.get_store(store)
-    views = declared_views(meta)
-    if not views:
-        return
-    written = spark.read.parquet(path)
-    for view in views:
-        view.write(catalog, store, version, written)
-
-
 def _prepare_delta(
     delta: DataFrame, key_fields: list[str], order_col: str | None, nulls_as_deletes: bool
 ) -> DataFrame:
@@ -1176,15 +1201,44 @@ def _prepare_delta(
 
     nulls_as_deletes: ETL-shaped inputs encode deletes as null values
     (union[null, T] — etl/UnionValueWithNull.avsc, TestBatch.java:768-791);
-    a delta row whose value columns are all NULL tombstones its key."""
+    a delta row whose value columns are all NULL tombstones its key.
+
+    With `order_col` the highest value wins per key and equal values break
+    ties by streaming.hybrid.resolve_latest's rule (the larger canonical
+    JSON of the value columns), so one delta always resolves the same way.
+    Without it a key's rows must be identical: conflicting values raise
+    DuplicateKeyError, the batch push's I6 policy. The dedup and the
+    conflict count are one delta-sized aggregation; the base is never
+    read."""
     if nulls_as_deletes:
         vcols = [c for c in delta.columns if c not in key_fields and c != order_col]
         is_del = F.lit(True)
         for c in vcols:
             is_del = is_del & F.col(c).isNull()
         delta = delta.withColumn("__del", is_del)
-    # dedup WITHIN the delta only (it is small; the base never sees a window)
-    return _dedup_latest_wins(delta, key_fields, order_col)
+    if order_col is not None:
+        from venice_spark.streaming.hybrid import resolve_latest
+
+        return resolve_latest(delta, key_fields, order_col)
+    value_cols = [c for c in delta.columns if c not in key_fields]
+    if not value_cols:
+        return delta.dropDuplicates(key_fields)  # key-only rows never conflict
+    grouped = delta.groupBy(*key_fields).agg(
+        F.first(F.struct(*value_cols)).alias("__v"),
+        F.countDistinct(F.struct(*value_cols)).alias("__distinct_values"),
+    )
+    conflict = (
+        grouped.filter(F.col("__distinct_values") > 1)
+        .select(*key_fields)
+        .limit(1)
+        .collect()
+    )
+    if conflict:
+        raise DuplicateKeyError(
+            f"key {tuple(conflict[0])} has conflicting values in the delta "
+            "— pass order_col to resolve them latest-wins"
+        )
+    return grouped.select(*key_fields, "__v.*")
 
 
 def _append_delta_slot(
@@ -1198,44 +1252,19 @@ def _append_delta_slot(
     next lazy slot on the store's CURRENT version; returns
     (version, slot_path, rows, total_slots_on_version).
 
-    Stage-then-rename: write the full delta into a staging dir first, then
-    atomically rename it to its log slot while holding the store lock.
-    Readers (list_delta_dirs matches only complete d{K} names) can never
-    observe a half-written delta, and two concurrent lazy pushes can never
-    claim the same K — each appends its own slot, ordered by whoever locks
-    first (the reference serializes incremental pushes per store through
-    the controller the same way). Shared by the lazy push mode and the
-    eager push's lost-race restage (ADVICE r5)."""
-    import os
-    import uuid
-
+    Staged by `_stage_slot`, then renamed to its log slot while holding
+    the store lock: readers (list_delta_dirs matches only complete d{K}
+    names) never observe a half-written delta, and two concurrent lazy
+    pushes never claim the same K — each appends its own slot, ordered by
+    whoever locks first (the reference serializes incremental pushes per
+    store through the controller the same way). Shared by the lazy push
+    mode and the eager push's lost-race restage (ADVICE r5)."""
     meta = catalog.get_store(store)
     cur = meta.current_version
     if cur <= 0:
         raise ValueError(f"store {store!r} has no current version to delta onto")
-
-    def _stage(layout: tuple) -> tuple:
-        # the delta MUST share the BASE version's full layout (modulus
-        # AND partitioner hash — code-review r4 extended ADVICE r3's
-        # count check): the resolve view groups on (partition_id, key),
-        # so a mismatched stamp splits a key's base and delta rows into
-        # different groups (duplicate served rows)
-        n_parts, base_md5p = layout
-        s = os.path.join(
-            catalog.store_dir(store), f"_delta_staging-{uuid.uuid4().hex}"
-        )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        o = repartition_and_sort(delta, key_fields, n_parts, base_md5p)
-        o = o.observe(obs, F.count(F.lit(1)).alias("rows"))
-        o.write.mode("overwrite").partitionBy("partition_id").parquet(s)
-        _fix_empty_partitioned_dir(o, s)
-        # row count observed on the write job itself — no re-read pass
-        return s, int(obs.get["rows"])
-
     staged_layout = _version_layout(catalog, store, cur, meta)
-    staging, rows = _stage(staged_layout)
+    staging, rows = _stage_slot(catalog, store, delta, key_fields, staged_layout)
     with catalog._locked(store):
         # re-resolve the CURRENT version under the lock: the staging
         # write can take minutes, and a concurrent compact/eager/batch
@@ -1249,16 +1278,11 @@ def _append_delta_slot(
         if target_layout != staged_layout:
             # rare: the new current version was written with a
             # different layout — restage to match it
-            import shutil as _sh
-
-            _sh.rmtree(staging, ignore_errors=True)
-            staging, rows = _stage(target_layout)
+            shutil.rmtree(staging, ignore_errors=True)
+            staging, rows = _stage_slot(
+                catalog, store, delta, key_fields, target_layout
+            )
         existing = catalog.list_delta_dirs(store, cur)
-        k = (
-            max(int(os.path.basename(d)[1:]) for d in existing) + 1
-            if existing
-            else 1
-        )
         # Arrival sequence sidecar: precedence metadata rides INSIDE the
         # slot (written before the rename, so it is atomic with the slot's
         # visibility) and survives a carry to a later version unchanged —
@@ -1268,7 +1292,9 @@ def _append_delta_slot(
         with open(os.path.join(staging, "_slot_meta.json"), "w") as f:
             json.dump({"seq": seq}, f)
         os.makedirs(catalog.deltas_dir(store, cur), exist_ok=True)
-        dpath = os.path.join(catalog.deltas_dir(store, cur), f"d{k}")
+        dpath = os.path.join(
+            catalog.deltas_dir(store, cur), f"d{_next_slot_index(existing)}"
+        )
         os.rename(staging, dpath)
     return cur, dpath, rows, len(existing) + 1
 
@@ -1287,27 +1313,29 @@ def incremental_push(
     The reference applies incremental-push records in place on the current
     version (VenicePushJob.java:919-931). Two Spark-first materializations:
 
-    eager=True (default): compact base ∪ delta into a NEW version dir and
-    flip the catalog pointer — atomic (os.replace of store.json), a crash
-    mid-push never loses the previous snapshot. The merge is a BROADCAST
-    LEFT-ANTI join (base keys minus delta keys) + union: the delta is tiny
-    relative to the base, so the base side is never shuffled or sorted for
-    the merge — only the unavoidable repartition for the version write
-    remains. (A windowed row_number over base ∪ delta would shuffle AND
-    sort 100 TB to override 0.01% of its keys.)
+    eager=True (default): fold the current version — base, pending lazy
+    slots, and the delta on top — into a NEW version dir (compact_store's
+    fold, `_fold_slots`) and flip the catalog pointer — atomic (os.replace
+    of store.json), a crash mid-push never loses the previous snapshot.
+    The base meets only a BROADCAST LEFT-ANTI join on the touched keys +
+    union: the delta is tiny relative to the base, so the base side is
+    never shuffled or sorted for the merge — only the unavoidable
+    repartition for the version write remains.
 
     eager=False: LSM shape — append the delta to the current version's
     delta log (catalog.deltas_dir) WITHOUT touching the base; reads resolve
     base ∪ deltas latest-wins (StoreCatalog._resolve_delta_view) and
     compaction is deferred to compact_store / the `delta_compact_threshold`
     store config (default 8). At 100 TB an incremental push then costs
-    delta-sized I/O, not a full rewrite."""
+    delta-sized I/O, not a full rewrite.
+
+    A delta holding one key with conflicting values needs `order_col`
+    (see _prepare_delta); without it the push raises DuplicateKeyError."""
     # heal a predecessor that died between commit and sweep first — the
-    # eager path's read_current snapshot must include recovered slots
+    # eager path's slot snapshot must include recovered slots
     recover_stranded_deltas(spark, catalog, store)
     meta = catalog.get_store(store)
     key_fields = meta.key_fields
-    md5p = bool(meta.config.get("md5_parity", False))
     delta = _prepare_delta(delta, key_fields, order_col, nulls_as_deletes)
 
     if not eager:
@@ -1319,167 +1347,103 @@ def incremental_push(
             return compact_store(spark, catalog, store)
         return PushResult(store, cur, rows, meta.partition_count, dpath)
 
-    old_version = meta.current_version
-    resolved_deltas = (
-        set(catalog.list_delta_dirs(store, old_version)) if old_version > 0 else set()
-    )
-    base = catalog.read_current(spark, store)
-    if "partition_id" in base.columns:
-        base = base.drop("partition_id")
-    # rows in delta override rows in base (put = full-value upsert, W1)
-    keys_only = F.broadcast(delta.select(*key_fields))
-    survivors = base.join(keys_only, on=key_fields, how="left_anti")
-    inserts = delta
-    if nulls_as_deletes:
-        inserts = inserts.filter(~F.coalesce(F.col("__del"), F.lit(False))).drop("__del")
-    merged = survivors.unionByName(inserts, allowMissingColumns=True)
-    version = catalog.begin_version(store)
-    path = catalog.version_dir(store, version)
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = repartition_and_sort(merged, key_fields, meta.partition_count, md5p)
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-    out.write.mode("overwrite").partitionBy("partition_id").parquet(path)
-    _fix_empty_partitioned_dir(out, path)
-    rows = int(obs.get["rows"])  # observed on the write job — no re-read pass
-    # declared views ride every write path (rebuilt from the files just
-    # written — see maintain_views for why a delta-incremental variant
-    # loses; a delta that should not pay a view rewrite belongs in the
-    # lazy eager=False mode, where view_df resolves the log at read time)
-    maintain_views(spark, catalog, store, version, path)
-    won = catalog.commit_version(
-        store,
-        version,
-        manifest={
-            "rows": rows,
-            "partition_count": meta.partition_count,
-            "partitioner": "md5" if md5p else "xxhash64",
-            "push_type": "incremental",
-            "swept_from": old_version,
-            "resolved_deltas": _resolved_basenames(resolved_deltas),
-        },
-    )
-    # a lazy delta that landed on the old version between our read_current
-    # snapshot and the commit must be carried forward (code-review r4 —
-    # compact_store's race, present here identically)
-    if old_version > 0:
-        sweep_late_deltas(
-            spark, catalog, store, old_version, resolved_deltas,
-            version, key_fields, meta.partition_count, md5p,
-        )
-    if not won:
-        # Lost the commit race: a concurrent push committed a newer version
-        # first, so this push's merged snapshot never serves and its
-        # upserts lived only in the orphan version (reachable via
-        # set_version). Reference semantics apply incremental data to
-        # current AND future versions (VenicePushJob.java:919-931), so
-        # restage the delta — tombstones included — as a lazy slot on the
-        # version actually serving (ADVICE r5). The restage only fires on
-        # a commit-time LOSS: after a won commit, a later winner's base
-        # already contains these rows, and re-appending them could regress
-        # the later push's fresher values.
-        #
-        # Freshness on overlapping keys (ADVICE r6, low): a restaged slot
-        # outranks the winner's base unconditionally, which would let the
-        # race LOSER override the winner regardless of record order. When
-        # the caller supplied order_col (the reference's record
-        # timestamp/offset — ActiveActiveStoreIngestionTask resolves
-        # concurrent writes by it, never by commit order), the restage
-        # keeps only delta rows at least as fresh as the winner's current
-        # value for that key (>= : the incremental write wins ties, same
-        # as put's last-writer-wins). Without order_col there is nothing
-        # to compare, and the restage keeps the documented
-        # last-RESTAGED-wins semantics (see PushResult.superseded_by).
-        actual = catalog.current_version(store)
-        restage = delta
-        if order_col is not None and order_col in restage.columns:
-            winner = catalog.read_current(spark, store)
-            if order_col in winner.columns:
-                cur_ord = (
-                    winner.join(
-                        F.broadcast(restage.select(*key_fields).distinct()),
-                        on=key_fields,
-                        how="left_semi",
-                    ).select(
-                        *key_fields, F.col(order_col).alias("__winner_ord")
-                    )
+    res = _fold_version(spark, catalog, store, "incremental", top=delta)
+    if res.superseded_by is None:
+        return res
+    # Lost the commit race: a concurrent push committed a newer version
+    # first, so this push's merged snapshot never serves and its upserts
+    # lived only in the orphan version (reachable via set_version).
+    # Reference semantics apply incremental data to current AND future
+    # versions (VenicePushJob.java:919-931), so restage the delta —
+    # tombstones included — as a lazy slot on the version actually serving
+    # (ADVICE r5). The restage only fires on a commit-time LOSS: after a
+    # won commit, a later winner's base already contains these rows, and
+    # re-appending them could regress the later push's fresher values.
+    #
+    # Freshness on overlapping keys (ADVICE r6, low): a restaged slot
+    # outranks the winner's base unconditionally, which would let the race
+    # LOSER override the winner regardless of record order. When the
+    # caller supplied order_col (the reference's record timestamp/offset —
+    # ActiveActiveStoreIngestionTask resolves concurrent writes by it,
+    # never by commit order), the restage keeps only delta rows at least as
+    # fresh as the winner's current value for that key (>= : the
+    # incremental write wins ties, same as put's last-writer-wins). Without
+    # order_col there is nothing to compare, and the restage keeps the
+    # documented last-RESTAGED-wins semantics (see PushResult.superseded_by).
+    restage = delta
+    if order_col is not None and order_col in restage.columns:
+        winner = catalog.read_current(spark, store)
+        if order_col in winner.columns:
+            cur_ord = (
+                winner.join(
+                    F.broadcast(restage.select(*key_fields).distinct()),
+                    on=key_fields,
+                    how="left_semi",
+                ).select(
+                    *key_fields, F.col(order_col).alias("__winner_ord")
                 )
-                # NULL-order delta rows stay restageable (ADVICE r7, low):
-                # the non-racing path applies an unordered upsert
-                # unconditionally (the slot outranks the base by arrival),
-                # so losing the commit race must not silently drop it —
-                # NULL >= __winner_ord would evaluate to NULL and fail the
-                # filter. An unordered row therefore restages even on a
-                # contested key, keeping racing and non-racing outcomes
-                # identical for writers that never supplied order_col values.
-                restage = (
-                    restage.join(F.broadcast(cur_ord), on=key_fields, how="left")
-                    .filter(
-                        F.col("__winner_ord").isNull()
-                        | F.col(order_col).isNull()
-                        | (F.col(order_col) >= F.col("__winner_ord"))
-                    )
-                    .drop("__winner_ord")
+            )
+            # NULL-order delta rows stay restageable (ADVICE r7, low): the
+            # non-racing path applies an unordered upsert unconditionally
+            # (the slot outranks the base by arrival), so losing the commit
+            # race must not silently drop it — NULL >= __winner_ord would
+            # evaluate to NULL and fail the filter. An unordered row
+            # therefore restages even on a contested key, keeping racing
+            # and non-racing outcomes identical for writers that never
+            # supplied order_col values.
+            restage = (
+                restage.join(F.broadcast(cur_ord), on=key_fields, how="left")
+                .filter(
+                    F.col("__winner_ord").isNull()
+                    | F.col(order_col).isNull()
+                    | (F.col(order_col) >= F.col("__winner_ord"))
                 )
-        if restage.limit(1).count() > 0:
-            _append_delta_slot(spark, catalog, store, restage, key_fields)
-        return PushResult(
-            store, version, rows, meta.partition_count, path,
-            superseded_by=actual,
-        )
-    return PushResult(store, version, rows, meta.partition_count, path)
+                .drop("__winner_ord")
+            )
+    if restage.limit(1).count() > 0:
+        _append_delta_slot(spark, catalog, store, restage, key_fields)
+    return res
 
 
 def compact_store(spark: SparkSession, catalog: StoreCatalog, store: str) -> PushResult:
     """Fold the current version's delta log into a new compacted version and
     flip the pointer (the lazy half of eager=False incremental pushes —
-    RocksDB compaction's role in the reference's storage tier). Resolution
-    happens through the same _resolve_delta_view readers use, so compaction
-    never changes observable content, only read cost."""
-    import os
-
+    RocksDB compaction's role in the reference's storage tier). The fold
+    (`_fold_slots`) resolves latest-wins exactly as readers do, so
+    compaction never changes observable content, only read cost. A
+    compaction that loses its commit to a newer version reports it in
+    superseded_by; the slots it folded stay on their log."""
     recover_stranded_deltas(spark, catalog, store)
-    meta = catalog.get_store(store)
-    old_version = meta.current_version
-    resolved_deltas = set(catalog.list_delta_dirs(store, old_version))
-    resolved = catalog.read_current(spark, store)  # delta-resolved view
-    if "partition_id" in resolved.columns:
-        resolved = resolved.drop("partition_id")
-    version = catalog.begin_version(store)
-    path = catalog.version_dir(store, version)
-    md5p = bool(meta.config.get("md5_parity", False))
-    from pyspark.sql import Observation
+    return _fold_version(spark, catalog, store, "compaction")
 
-    obs = Observation()
-    out = repartition_and_sort(resolved, meta.key_fields, meta.partition_count, md5p)
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
-    out.write.mode("overwrite").partitionBy("partition_id").parquet(path)
-    _fix_empty_partitioned_dir(out, path)
-    rows = int(obs.get["rows"])  # observed on the write job — no re-read pass
-    # compaction folds an unbounded delta log, so declared views rebuild
-    # from the compacted files (no small-delta assumption to exploit)
-    maintain_views(spark, catalog, store, version, path)
-    catalog.commit_version(
-        store,
-        version,
-        manifest={
-            "rows": rows,
-            "partition_count": meta.partition_count,
-            "partitioner": "md5" if md5p else "xxhash64",
-            "push_type": "compaction",
-            "swept_from": old_version,
-            "resolved_deltas": _resolved_basenames(resolved_deltas),
-        },
+
+def _fold_version(
+    spark: SparkSession,
+    catalog: StoreCatalog,
+    store: str,
+    push_type: str,
+    top: DataFrame | None = None,
+) -> PushResult:
+    """Compaction and the eager merge: the serving version's base with its
+    slot log — and `top`, the eager push's prepared delta, over it — folded
+    by `_fold_slots` into a new version (`_write_version`). The slots listed
+    here are exactly the ones folded, so the manifest's resolved set
+    matches the content and every later slot carries over."""
+    meta = catalog.get_store(store)
+    old = meta.current_version
+    if old <= 0:
+        raise ValueError(f"store {store!r} has no current version")
+    slots = catalog.list_delta_dirs(store, old)
+    merged = catalog.read_version(spark, store, old).drop("partition_id")
+    if slots or top is not None:
+        kept, latest = _fold_slots(spark, merged, slots, meta.key_fields, top)
+        merged = kept.unionByName(latest, allowMissingColumns=True)
+    md5p = bool(meta.config.get("md5_parity", False))
+    out = repartition_and_sort(merged, meta.key_fields, meta.partition_count, md5p)
+    return _write_version(
+        spark, catalog, store, meta, out, md5p=md5p, push_type=push_type,
+        swept_from=old, resolved_deltas=slots,
     )
-    # Late-delta sweep (shared with eager incremental and batch push):
-    # carry slots that landed after our resolve snapshot onto the new
-    # version, restamping on any layout mismatch.
-    sweep_late_deltas(
-        spark, catalog, store, old_version, resolved_deltas,
-        version, meta.key_fields, meta.partition_count, md5p,
-    )
-    return PushResult(store, version, rows, meta.partition_count, path)
 
 
 def repush(

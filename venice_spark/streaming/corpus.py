@@ -162,13 +162,15 @@ def run_corpus_ingest_to_store(
 
     def _push(target: str, frame: DataFrame) -> None:
         if engine.catalog.current_version(target) > 0:
-            engine.incremental_push(target, frame)
+            # an id crawled twice in one batch with different text resolves
+            # latest-wins on ts_col; without one it is a DuplicateKeyError
+            order = ts_col if ts_col in frame.columns else None
+            engine.incremental_push(target, frame, order_col=order)
         else:
             # first batch bootstraps the store (the reference's hybrid
             # lifecycle: a batch push precedes RT consumption); duplicate
-            # keys keep one row deterministically — the incremental path
-            # resolves key collisions latest-wins, so the bootstrap must
-            # not fail the whole stream on the same input shape
+            # keys keep one row, so the bootstrap does not fail the whole
+            # stream on the input shape
             engine.push(target, frame, allow_duplicate_key=True)
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
