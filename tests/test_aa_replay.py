@@ -189,6 +189,34 @@ def test_aa_append_mode_matches_rewrite_and_bounds_bytes(spark, tmp_path):
     assert out == _batch_kernel(spark, st, ops1 + ops2)
 
 
+def test_aa_compact_runs_no_stamp_scan_of_its_own(spark, tmp_path):
+    """AA compaction takes its stamp from the memoized log_stamp_pressure,
+    as hybrid's does. With the memo warm (the serve just appended), a
+    compact() launches exactly the Spark jobs of its fold's write — run
+    on its own here into a scratch dir — and no aggregate over the stamp
+    column on top."""
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    st = _mk(eng, spark)
+    _flush(st.producer(), [
+        {"k": 1, "op": "PUT", "ts": 100, "colo": 0, "name": "a2", "score": 10.0},
+        {"k": 3, "op": "DELETE", "ts": 100, "colo": 0},
+    ])
+    replay = st.aa_serve(["name", "score"], compact_every=0)
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs(fn) -> int:
+        before = set(tracker.getJobIdsForGroup(None))
+        fn()
+        return len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    fold = replay._resolve_log()
+    write_jobs = jobs(lambda: fold.write.parquet(str(tmp_path / "fold_only")))
+    assert write_jobs >= 1
+    assert jobs(replay.compact) == write_jobs
+    out = {r["k"]: (r["name"], r["score"]) for r in replay.read().collect()}
+    assert out == {1: ("a2", 10.0), 2: ("b", 2.0)}
+
+
 def test_aa_append_survives_checkpoint_reset(spark, tmp_path):
     """code-review r5: streaming batch ids restart at 0 when a checkpoint
     is deleted/recreated (a standard ops move). Stamps are derived from the

@@ -159,6 +159,38 @@ def test_partial_subscribe(engine, spark, sf_dir):
     part.unpersist()
 
 
+def test_subscribe_all_materializes_the_whole_current_version(spark, tmp_root):
+    eng = VeniceSparkEngine(spark, tmp_root)
+    eng.create_store("all", key_fields=["k"], partition_count=4)
+    rows = [(i, f"v{i}") for i in range(40)]
+    eng.push("all", spark.createDataFrame(rows, "k long, v string"))
+    local = eng.store("all").subscribe_all()
+    try:
+        assert local.is_cached
+        assert {r["partition_id"] for r in local.collect()} == {0, 1, 2, 3}
+        assert sorted((r["k"], r["v"]) for r in local.collect()) == rows
+    finally:
+        local.unpersist()
+
+
+def test_approx_unique_keys_counts_whole_composite_keys(spark, tmp_root):
+    """The HLL estimate counts distinct KEYS: on a composite-key store
+    that is the (a, b) pairs, not the distinct values of either field."""
+    eng = VeniceSparkEngine(spark, tmp_root)
+    eng.create_store("one", key_fields=["k"], partition_count=4)
+    eng.push("one", spark.range(1000).select(F.col("id").alias("k"), F.lit(1).alias("v")))
+    eng.create_store("two", key_fields=["a", "b"], partition_count=4)
+    pairs = spark.range(1000).select(
+        (F.col("id") % 20).alias("a"),
+        (F.col("id") / 20).cast("long").cast("string").alias("b"),
+        F.lit(1).alias("v"),
+    )
+    eng.push("two", pairs)
+    for store in ("one", "two"):
+        est = eng.store(store).approx_unique_keys(rsd=0.05)
+        assert abs(est - 1000) <= 150, (store, est)
+
+
 def test_compute_dsl_over_delta_resolved_store(spark, tmp_path):
     """Read-compute must see through the LSM delta log: a dot product over a
     store with pending deltas uses the delta-resolved values."""

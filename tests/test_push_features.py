@@ -979,3 +979,21 @@ def test_bucketed_view_read_uses_written_spec(spark, tmp_path):
         df = read_bucketed_view(spark, eng.catalog, "b1", drifted)
         assert any("written with" in str(x.message) for x in w)
     assert df.count() == 50  # correct data under the written 4-bucket spec
+
+
+@pytest.mark.parametrize("d_first", [False, True], ids=["a_first", "d_first"])
+def test_batch_push_order_ties_break_like_incremental_push(spark, tmp_root, d_first):
+    """Two rows for one key with an equal dedup_order_col value: the batch
+    push keeps the row an incremental push with the same order_col keeps
+    (resolve_latest's larger value JSON, so 'd' over 'a'), whichever row
+    reaches the aggregation first."""
+    fs = "key string, val string, _rmd_ts long"
+    rows = [("k", "a", 5), ("k", "d", 5)]
+    dup = spark.createDataFrame(rows[::-1] if d_first else rows, fs).coalesce(1)
+    eng = VeniceSparkEngine(spark, tmp_root)
+    eng.create_store("b", key_fields=["key"], partition_count=2)
+    eng.push("b", dup, dedup_order_col="_rmd_ts")
+    eng.create_store("i", key_fields=["key"], partition_count=2)
+    eng.push("i", spark.createDataFrame([("z", "base", 0)], fs))
+    eng.incremental_push("i", dup, order_col="_rmd_ts")
+    assert eng.store("b").get("k")["val"] == eng.store("i").get("k")["val"] == "d"

@@ -30,7 +30,6 @@ def test_bucket_dir_prefix_spelled_in_one_module():
         aa.ActiveActiveReplay.__init__,
         StoreHandle.hybrid_serve,
         StoreHandle.aa_serve,
-        aa.aa_serve,
     ],
     ids=lambda fn: fn.__qualname__,
 )

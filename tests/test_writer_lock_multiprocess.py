@@ -2,7 +2,7 @@
 
 The r8 concurrency tests ran two/three replay handles in ONE process, so
 the fcntl store lock's cross-process behavior — the actual deployment
-story (hybrid._writer_lock brackets every serving-LSM write in
+story (AppendLogReplay._serialized_writer brackets every serving-LSM write in
 catalog._locked, an advisory flock next to store.json) — was exercised
 only implicitly. Here a REAL subprocess (its own JVM, its own
 SparkSession) runs a loop of producer flushes and serving-LSM compacts

@@ -835,66 +835,80 @@ class StoreHandle:
         test_streaming.test_hybrid_append_per_batch_bytes_scale_with_batch).
         It is the only serving layout: a whole-table swap per trigger was
         measured 3.3x slower at 20M rows (SCALE.md)."""
+        from venice_spark.streaming.hybrid import HybridReplay
+
+        return self._serve_replay(
+            "serving",
+            "_rt_checkpoint",
+            lambda serving: HybridReplay(
+                self.spark,
+                self.catalog,
+                self.name,
+                serving,
+                ts_col=ts_col,
+                rewind_seconds=rewind_seconds,
+                now_ts=now_ts,
+                compact_every=compact_every,
+                ts_unit=self._rt_ts_unit(),
+            ),
+            ts_col,
+            now_ts,
+            rewind_seconds,
+        )
+
+    def _serve_replay(
+        self,
+        serving_name: str,
+        ckpt_name: str,
+        make_replay,
+        ts_col: str,
+        now_ts: int | None,
+        rewind: int | None = None,
+    ):
+        """The one serving step behind hybrid_serve and aa_serve: refuse a
+        misconfigured retention before any replay work (per-call rewind
+        honored); drop the serving log + checkpoint when a NEW batch
+        version landed since the seed (the reference's per-version buffer
+        replay; code-review r4); seed from the current version when the
+        log is absent; replay every new RT file through
+        `make_replay(serving_dir)`'s handle; then apply per-store RT
+        retention. The stream's schema comes from read_rt_log's sidecar
+        union: each flush writes only the columns its ops carried, and a
+        bare read samples one footer and would silently drop the other
+        flushes' value columns (code-review r4)."""
         import os
 
         from venice_spark.producer import read_rt_log
-        from venice_spark.streaming.hybrid import (
-            HybridReplay,
-            mark_seeded_version,
-            reset_serving_if_stale,
-        )
+        from venice_spark.streaming import hybrid
 
-        # misconfig fails before replay work (per-call rewind honored)
-        self._rt_retention_seconds(rewind_seconds)
+        self._rt_retention_seconds(rewind)
         store_dir = self.catalog.store_dir(self.name)
-        serving = os.path.join(store_dir, "serving")
-        ckpt = os.path.join(store_dir, "_rt_checkpoint")
+        serving = os.path.join(store_dir, serving_name)
+        ckpt = os.path.join(store_dir, ckpt_name)
         cur = self.catalog.current_version(self.name)
-        reset_serving_if_stale(serving, ckpt, cur)
+        hybrid.reset_serving_if_stale(serving, ckpt, cur)
+        replay = make_replay(serving)
         if not os.path.isdir(serving):
-            base = self.df().drop("partition_id")
-            if ts_col not in base.columns:
-                base = base.withColumn(ts_col, F.lit(0).cast("long"))
-            base.write.parquet(serving)
-            mark_seeded_version(serving, cur)
-            # seed the schema sidecar so append-mode reads never need
-            # mergeSchema (after the write: the dir must exist, and a crash
-            # in between just leaves a pre-sidecar log that upgrades on its
-            # first append). set, not extend: the seed owns the whole
-            # fileset, so no merge pass over the just-written files
-            from venice_spark.streaming.hybrid import set_log_schema
-
-            set_log_schema(serving, base.schema)
-        replay = HybridReplay(
-            self.spark,
-            self.catalog,
-            self.name,
-            serving,
-            ts_col=ts_col,
-            rewind_seconds=rewind_seconds,
-            now_ts=now_ts,
-            compact_every=compact_every,
-            ts_unit=self._rt_ts_unit(),
-        )
+            replay.seed(self.df().drop("partition_id"))
+            hybrid.mark_seeded_version(serving, cur)
         rt_dir = self.catalog.update_log_dir(self.name)
         if os.path.isdir(rt_dir) and any(
             f.endswith(".parquet") for f in os.listdir(rt_dir)
         ):
-            from venice_spark.streaming.hybrid import run_replay_query
 
             def _start():
-                # mergeSchema union via the sidecar: each flush writes only
-                # the columns its ops carried; a bare read samples one
-                # footer and would silently drop the other flushes' value
-                # columns. Rebuilt per attempt: a concurrent rt migration
+                # rebuilt per attempt: a concurrent rt migration
                 # (run_replay_query's restart case) changes both the
-                # fileset and the schema.
+                # fileset and the schema
                 schema = read_rt_log(self.spark, self.catalog, self.name).schema
                 stream = self.spark.readStream.schema(schema).parquet(rt_dir)
                 return replay.start(stream, ckpt)
 
-            run_replay_query(_start)
-        self._apply_rt_retention(now_ts, ts_col=ts_col, rewind=rewind_seconds)
+            hybrid.run_replay_query(_start)
+        # now_ts pins the retention clock for replayed/backfilled ts
+        # domains — an unpinnable wall clock would judge every
+        # historical-ts file old (code-review r8)
+        self._apply_rt_retention(now_ts, ts_col=ts_col, rewind=rewind)
         return replay
 
     def _rt_ts_unit(self) -> str:
@@ -1026,17 +1040,8 @@ class StoreHandle:
                     return 0
         except OSError:
             pass
-        unit = self._rt_ts_unit()
-        scales = {"ms": 1000, "s": 1}
-        if unit not in scales:
-            raise ValueError(
-                f"rt_retention_seconds needs an epoch-based ts column: store "
-                f"{self.name!r} declares rt_ts_unit={unit!r} (retention "
-                f"supports {sorted(scales)}). A raw/logical ts cannot be "
-                "compared against wall-clock retention — clear "
-                "rt_retention_seconds or set rt_ts_unit"
-            )
-        scale = scales[unit]
+        # _rt_retention_seconds refused every unit but these two above
+        scale = {"ms": 1000, "s": 1}[self._rt_ts_unit()]
         now_val = int(now_ts) if now_ts is not None else int(time.time() * scale)
         cutoff = now_val - retention * scale
         from venice_spark.producer import RtTruncateBlockedError
@@ -1092,11 +1097,24 @@ class StoreHandle:
         deterministically. The serving table is an LSM log: per-trigger
         write cost O(touched keys) with compaction every `compact_every`
         triggers (see ActiveActiveReplay)."""
-        from venice_spark.streaming.aa import aa_serve
+        from venice_spark.streaming.aa import ActiveActiveReplay
 
-        return aa_serve(
-            self, value_cols, list_fields, map_fields, ts_col,
-            compact_every=compact_every, now_ts=now_ts,
+        return self._serve_replay(
+            "aa_serving",
+            "_aa_checkpoint",
+            lambda serving: ActiveActiveReplay(
+                self.spark,
+                self.catalog,
+                self.name,
+                serving,
+                value_cols,
+                list_fields,
+                map_fields,
+                ts_col,
+                compact_every=compact_every,
+            ),
+            ts_col,
+            now_ts,
         )
 
     # ---- R15 DaVinci-style local materialization ----

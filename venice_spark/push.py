@@ -489,7 +489,14 @@ class BatchPushJob:
         else:
             aggs = []
             if dedup_order_col is not None:
-                picked = F.max_by(F.struct(*value_cols), F.col(dedup_order_col))
+                # an order tie breaks by resolve_latest's value-JSON rule,
+                # as an incremental push with order_col does — never by
+                # the order rows reach the aggregation
+                from venice_spark.streaming.hybrid import value_json
+
+                rest = [c for c in value_cols if c != dedup_order_col]
+                order = [F.col(dedup_order_col)] + ([value_json(rest)] if rest else [])
+                picked = F.max_by(F.struct(*value_cols), F.struct(*order))
             else:
                 picked = F.first(F.struct(*value_cols))
             aggs.append(picked.alias("__v"))

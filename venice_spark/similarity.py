@@ -365,7 +365,7 @@ def knn_classify(
 
 
 def lsh_table_buckets(
-    vec_col: str | "F.Column",
+    vec_col: str,
     dim: int,
     n_planes: int = 8,
     tables: int = 8,
@@ -373,47 +373,38 @@ def lsh_table_buckets(
 ):
     """Array column of per-table hyperplane bucket ids (one entry per LSH
     table). Same plane derivation as lsh_bucket_col/_hyperplanes, so buckets
-    are reproducible anywhere — including in oracle SQL.
+    are reproducible anywhere — including in oracle SQL — and the GEMM
+    edition (_lsh_gemm_buckets) is parity-tested against it.
 
-    String-named columns take the single-parsed-expr HOF fast path (see
-    lsh_bucket_col — string construction beats py4j literals by ~400x and
-    the fold form beats the unrolled tree by ~15x at execution); Column
-    inputs keep the object formulation."""
-    if isinstance(vec_col, str):
-        # ONE nested fold over a single literal plane tensor, not
-        # tables×planes separate aggregate/zip_with folds: the 128-fold
-        # form cost ~3s of DRIVER analysis per invocation (r10
-        # bench_profile: x_knn_join_lsh build=3.07s, 1 job — pure plan
-        # work), because the analyzer resolves every HOF lambda
-        # independently. Bit value parity: per plane the dot is the same
-        # zip_with/aggregate left-to-right fold over the same double
-        # literals; per table the bit sum folds in the same plane order
-        # (integer adds, shiftleft(1, i) == the former 2**i literal).
-        planes3 = ", ".join(
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{float(v)!r}D" for v in plane) + ")"
-                for plane in _hyperplanes(dim, n_planes, seed + 1000 * t)
-            )
-            + ")"
-            for t in range(tables)
+    One single-parsed-expr HOF (see lsh_bucket_col — string construction
+    beats py4j literals by ~400x and the fold form beats the unrolled tree
+    by ~15x at execution)."""
+    # ONE nested fold over a single literal plane tensor, not
+    # tables×planes separate aggregate/zip_with folds: the 128-fold
+    # form cost ~3s of DRIVER analysis per invocation (r10
+    # bench_profile: x_knn_join_lsh build=3.07s, 1 job — pure plan
+    # work), because the analyzer resolves every HOF lambda
+    # independently. Bit value parity: per plane the dot is the same
+    # zip_with/aggregate left-to-right fold over the same double
+    # literals; per table the bit sum folds in the same plane order
+    # (integer adds, shiftleft(1, i) == the former 2**i literal).
+    planes3 = ", ".join(
+        "array("
+        + ", ".join(
+            "array(" + ", ".join(f"{float(v)!r}D" for v in plane) + ")"
+            for plane in _hyperplanes(dim, n_planes, seed + 1000 * t)
         )
-        v = _qident(vec_col)
-        return F.expr(
-            f"transform(array({planes3}), __tbl -> "
-            "aggregate(transform(__tbl, (__p, __i) -> "
-            f"IF(aggregate(zip_with({v}, __p, (x, y) -> CAST(x AS DOUBLE) * y), "
-            "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) > 0, shiftleft(1, __i), 0)), "
-            "0, (a, b) -> a + b))"
-        )
-    entries = []
-    for t in range(tables):
-        b = F.lit(0)
-        for i, plane in enumerate(_hyperplanes(dim, n_planes, seed + 1000 * t)):
-            d = VX.dot_product(vec_col, plane)
-            b = b + F.when(d > 0, F.lit(2**i)).otherwise(F.lit(0))
-        entries.append(b)
-    return F.array(*entries)
+        + ")"
+        for t in range(tables)
+    )
+    v = _qident(vec_col)
+    return F.expr(
+        f"transform(array({planes3}), __tbl -> "
+        "aggregate(transform(__tbl, (__p, __i) -> "
+        f"IF(aggregate(zip_with({v}, __p, (x, y) -> CAST(x AS DOUBLE) * y), "
+        "CAST(0.0 AS DOUBLE), (acc, x) -> acc + x) > 0, shiftleft(1, __i), 0)), "
+        "0, (a, b) -> a + b))"
+    )
 
 
 def knn_join_lsh(

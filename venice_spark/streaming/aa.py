@@ -38,25 +38,29 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from venice_spark.catalog import StoreCatalog
+from venice_spark.streaming.hybrid import (
+    AppendLogReplay,
+    recover_swap_dir,
+    set_log_schema,
+    sweep_leaked_tmps,
+)
 
 
-class ActiveActiveReplay:
-    """The AA serving table is an LSM log, like HybridReplay's: each
-    micro-batch appends ONLY its refreshed rows, stamped with a log-derived
-    monotone sequence number (max existing + 1 — robust to checkpoint
-    resets, unlike the streaming batch id); reads resolve
-    latest-stamp-wins per key. Unlike the raw hybrid log (where slot order
-    would let a stale PUT beat a fresher row), slot order IS correct here:
-    every refreshed row was folded FROM the prior state through the
-    commutative DCR kernel, so a later batch's row is authoritative by
-    construction — the registers inside __state__ carry the cross-batch
-    timestamp truth. `compact()` folds the log to one row per key
-    (tombstone rows kept: their registers are what stop stale
-    resurrections). A stampless flat table (the seed, or a dir written by
-    the whole-table swap mode older releases offered) sorts oldest."""
+class ActiveActiveReplay(AppendLogReplay):
+    """The AA serving log: hybrid.AppendLogReplay's protocol with a DCR
+    fold. Each micro-batch appends ONLY its touched keys' refreshed rows;
+    reads resolve latest-`__aa_batch`-wins per key. Unlike the raw hybrid
+    log (where stamp order would let a stale PUT beat a fresher row),
+    stamp order IS correct here: every refreshed row was folded FROM the
+    prior state through the commutative DCR kernel, so a later batch's row
+    is authoritative by construction — the registers inside __state__
+    carry the cross-batch timestamp truth. Compaction keeps tombstone
+    rows: their registers are what stop stale resurrections."""
+
+    stamp_col = "__aa_batch"
 
     def __init__(
         self,
@@ -70,19 +74,10 @@ class ActiveActiveReplay:
         ts_col: str = "ts",
         compact_every: int = 16,
     ):
-        self.spark = spark
-        self.catalog = catalog
-        self.store = store
-        self.serving_dir = serving_dir
-        self.key_fields = catalog.get_key_fields(store)
+        super().__init__(spark, catalog, store, serving_dir, ts_col, compact_every)
         self.value_cols = list(value_cols)
         self.list_fields = set(list_fields or set())
         self.map_fields = set(map_fields or set())
-        self.ts_col = ts_col
-        self.compact_every = compact_every
-        self._writer_lock_owner = None
-        from venice_spark.streaming.hybrid import recover_swap_dir, sweep_leaked_tmps
-
         # Heal a crash-stranded swap BEFORE probing the layout: between
         # atomic_swap_dir's two renames the serving dir is ABSENT, so an
         # unhealed probe would see no entries and let a retired layout
@@ -102,6 +97,11 @@ class ActiveActiveReplay:
                 "version and replays the RT log"
             )
 
+    def _registry_types(self) -> dict:
+        # the fold writes only this replay's value columns
+        reg = super()._registry_types()
+        return {c: reg[c] for c in self.value_cols if c in reg}
+
     # ---- serving-table schema helpers ----
     def _fold_schema(self, ops: DataFrame, snap: DataFrame | None = None) -> "object":
         from pyspark.sql import types as T
@@ -110,7 +110,7 @@ class ActiveActiveReplay:
         # a value column absent from THIS micro-batch (e.g. an UPDATE-only
         # batch carrying set_<field> columns) must keep the serving
         # snapshot's real type — a StringType default would Arrow-error or
-        # silently widen the serving column on the union-back. _merge_batch
+        # silently widen the serving column on the union-back. _fold_batch
         # passes its already-read snapshot so the footers are not re-listed
         # every trigger (code-review r4).
         snap_types = {}
@@ -120,9 +120,7 @@ class ActiveActiveReplay:
             snap_types = {f.name: f.dataType for f in snap.schema.fields}
         except Exception:
             pass
-        from venice_spark.streaming.hybrid import registered_value_types
-
-        reg = registered_value_types(self.catalog, self.store)
+        reg = self._registry_types()
         from venice_spark.schema_compat import promotion_target
 
         value_types = {}
@@ -170,8 +168,6 @@ class ActiveActiveReplay:
             *[F.col(c) for c in self.value_cols if c in base.columns],
         )
         folded = self._fold_new(ops)
-        from venice_spark.streaming.hybrid import set_log_schema
-
         folded.write.mode("overwrite").parquet(self.serving_dir)
         set_log_schema(self.serving_dir, folded.schema)
 
@@ -229,73 +225,27 @@ class ActiveActiveReplay:
 
         return ops.groupBy(*kf).applyInPandas(fold, schema=out_schema)
 
-    def _raw(self) -> DataFrame:
-        # Read schema = the writers' schema SIDECAR (see hybrid.log_schema)
-        # unioned with the catalog's registered value schema and the
-        # __aa_batch stamp — zero footer reads (mergeSchema read EVERY
-        # footer on EVERY read: 8.9s vs 2.9s flat at 20M in the r6 probe),
-        # and, unlike the pre-r7 one-footer sample, safe under live schema
-        # evolution: a value column registered and written mid-serve can
-        # never be dropped by sampling a file that predates it (the
-        # reference's value schemas are a versioned evolvable list —
-        # schema/SchemaEntry.java:1 — and hybrid stores keep serving
-        # across additions). Files missing a schema column read as NULL,
-        # exactly what the stamp's nulls-last resolution and an added
-        # field's null default want.
-        from pyspark.sql import types as T
-
-        from venice_spark.streaming.hybrid import (
-            log_schema,
-            read_log,
-            recover_swap_dir,
-            registered_value_types,
-            resolve_registry_reader,
-            union_log_fields,
+    def _fold_batch(self, batch_df: DataFrame) -> DataFrame:
+        """The touched keys' refreshed rows. Prior state = the resolved
+        log pruned to the batch's keys BEFORE the window (resolution is
+        per-key independent, so this is equivalent) — without it the
+        window would shuffle the ENTIRE log for a batch-sized probe
+        (code-review r5); scanning the log's files is the read
+        amplification compact() bounds. One `_raw()` serves the prior
+        state and the fold schema — each read re-lists the log dir."""
+        raw = self._raw()
+        touched = batch_df.select(*self.key_fields).distinct()
+        prior = self._resolve(
+            raw.join(F.broadcast(touched), on=self.key_fields, how="left_semi")
         )
+        return self._fold_new(batch_df, prior=prior, snap=raw)
 
-        recover_swap_dir(self.serving_dir)  # self-heal a crashed swap
-        base = log_schema(self.serving_dir)
-        if base is None:
-            # pre-sidecar log: the historical one-footer sample (the AA
-            # fold always emits full rows, so sampling was safe before
-            # evolution existed); its next write upgrades it
-            base = self.spark.read.parquet(self.serving_dir).schema
-        reg = registered_value_types(self.catalog, self.store)
-        reg = {c: reg[c] for c in self.value_cols if c in reg}
-        fields = union_log_fields(
-            list(base.fields),
-            [T.StructField(c, t, True) for c, t in reg.items()]
-            + [T.StructField("__aa_batch", T.LongType(), True)],
-            on_conflict="keep-base",
-            casts_out=[],  # cast-level conflicts keep the scannable type
-        )
-        df = read_log(self.spark, self.serving_dir, T.StructType(fields))
-        # registry promotions the scan cannot widen natively (long→double):
-        # post-scan cast projection (cast-on-read, VERDICT r8 missing #1;
-        # shared helper, code-review r9)
-        return resolve_registry_reader(df, reg)
-
-    def _resolve_log(
-        self, keys: DataFrame | None = None, raw: DataFrame | None = None
-    ) -> DataFrame:
-        """One row per key: the latest batch's refreshed row wins (the fold
+    def _resolve(self, df: DataFrame) -> DataFrame:
+        """One row per key: the latest stamp's refreshed row wins (the fold
         merged prior state, so it is authoritative — see class docstring);
-        the stampless seed row sorts oldest. `keys` prunes the log to the
-        given key set BEFORE the window (resolution is per-key
-        independent, so this is equivalent) — without it the window would
-        shuffle the ENTIRE log for a batch-sized probe instead of relying
-        on an optimizer rule pushing a later semi join through the
-        Filter + Window (code-review r5). `raw` lets a caller reuse one
-        already-listed read of the log (each `_raw()` re-lists the dir)."""
-        from pyspark.sql import Window
-
-        df = self._raw() if raw is None else raw
-        if keys is not None:
-            df = df.join(F.broadcast(keys), on=self.key_fields, how="left_semi")
-        if "__aa_batch" not in df.columns:
-            return df
+        the stampless seed row sorts oldest."""
         w = Window.partitionBy(*self.key_fields).orderBy(
-            F.col("__aa_batch").desc_nulls_last()
+            F.col(self.stamp_col).desc_nulls_last()
         )
         return (
             df.withColumn("__rn", F.row_number().over(w))
@@ -303,196 +253,7 @@ class ActiveActiveReplay:
             .drop("__rn")
         )
 
-    def _serialized_writer(self):
-        """Store writer lock, re-entrant per handle — see
-        HybridReplay._serialized_writer (VERDICT r7 #4); the AA log's
-        sidecar read-union-replace and compact stamp fold share the same
-        single-writer assumption."""
-        from venice_spark.streaming.hybrid import _writer_lock
-
-        return _writer_lock(self)
-
-    def _merge_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        with self._serialized_writer():
-            self._merge_batch_locked(batch_df, batch_id)
-
-    def _merge_batch_locked(self, batch_df: DataFrame, batch_id: int) -> None:
-        from venice_spark.streaming.hybrid import (
-            align_to_log_schema,
-            clear_dead_job_staging,
-            extend_log_schema,
-            log_stamp_pressure,
-            record_stamp_after_append,
-            recover_swap_dir,
-        )
-
-        # heal a swap that died between its renames before reading or
-        # stamping against the serving dir (ADVICE r5)
-        recover_swap_dir(self.serving_dir)
-        # O(batch) writes: only the touched keys' refreshed rows land.
-        # Prior state = resolved log pruned to the touched keys before
-        # the window, so compute is batch-sized too; scanning the
-        # log's files is the LSM read amplification compact() bounds.
-        # Stamp + compaction pressure come from the LOG, not the
-        # streaming batch id / an in-memory counter: batch ids restart
-        # on checkpoint resets, and the aa_serve facade builds a fresh
-        # handle per call so a counter never fires (code-review r5).
-        # One _raw() serves the whole trigger (stamp agg + prior
-        # resolve + fold schema) — each read re-lists the log dir.
-        raw = self._raw()
-        # stamp + pressure via the shared helper (same max/floor-
-        # filtered-distinct semantics this block used to hand-roll):
-        # a one-column scan instead of the full read schema, and the
-        # r9 fileset-signature memo makes steady triggers skip the
-        # store-sized read entirely (hybrid got this first; the 200M
-        # probe showed AA's agg as its own slowly-growing term)
-        stamp, n_stamps = log_stamp_pressure(
-            self.spark, self.serving_dir, "__aa_batch"
-        )
-        touched = batch_df.select(*self.key_fields).distinct()
-        prior = self._resolve_log(keys=touched, raw=raw)
-        refreshed = self._fold_new(batch_df, prior=prior, snap=raw)
-        stamped = refreshed.withColumn("__aa_batch", F.lit(stamp).cast("long"))
-        # write-ahead: the sidecar learns this batch's columns BEFORE any
-        # file lands (see extend_log_schema)
-        extend_log_schema(self.spark, self.serving_dir, stamped.schema)
-        stamped = align_to_log_schema(stamped, self.serving_dir)
-        clear_dead_job_staging(self.serving_dir)
-        stamped.write.mode("append").parquet(self.serving_dir)
-        _, n_live = record_stamp_after_append(
-            self.serving_dir, stamp + 1, n_stamps + 1
-        )
-        # n_live, not n_stamps + 1: an empty batch publishes no files,
-        # so pressure must not advance (ADVICE r9 — a no-op compact
-        # per compact_every empty triggers otherwise)
-        if self.compact_every and n_live >= self.compact_every:
-            self.compact()
-
-    def compact(self) -> None:
-        """Fold the append log to one row per key (tombstone rows kept —
-        their registers stop stale resurrections). Content is unchanged
-        by construction.
-
-        Like HybridReplay.compact: an APPEND + deferred GC, never a dir
-        swap (VERDICT r6 #3). The folded fileset lands in the same dir
-        stamped above every live row; the superseded files are recorded
-        in `_gc_pending.json` and deleted at the START of the next
-        compaction — so a reader whose plan predates this compact keeps
-        reading valid files (identical content) for one full cycle,
-        Venice's retained-backup-version discipline (meta/Version.java).
-        Every crash window is content-safe (see hybrid.merge_fileset_in).
-        Runs under the store writer lock (re-entrant: the inline call
-        from _merge_batch holds one lock for the whole trigger)."""
-        with self._serialized_writer():
-            self._compact_locked()
-
-    def _compact_locked(self) -> None:
-        import uuid
-
-        from venice_spark.streaming.hybrid import (
-            align_to_log_schema,
-            extend_log_schema,
-            list_log_data_files,
-            merge_fileset_in,
-            record_gc_pending,
-            record_stamp_after_append,
-            run_deferred_gc,
-            sweep_compact_orphans,
-        )
-
-        run_deferred_gc(self.serving_dir)
-        sweep_compact_orphans(self.serving_dir)  # crashed-compact staging
-        old_files = list_log_data_files(self.serving_dir)
-        raw = self._raw()
-        m = raw.agg(F.max("__aa_batch")).collect()[0][0]
-        # coalesce to the CURRENT max stamp, not max+1: ties with the
-        # latest append are content-identical (each AA append row is the
-        # authoritative fold for its key), while stamping above the live
-        # max would let a racing trigger's fresher fold tie with this
-        # compact's staler one (see HybridReplay.compact)
-        stamp = 0 if m is None else int(m)
-        out = self._resolve_log(raw=raw).withColumn(
-            "__aa_batch", F.lit(stamp).cast("long")
-        )
-        staging = f"{self.serving_dir}__compact_{uuid.uuid4().hex}"
-        extend_log_schema(self.spark, self.serving_dir, out.schema)
-        out = align_to_log_schema(out, self.serving_dir)
-        out.write.mode("overwrite").parquet(staging)
-        merge_fileset_in(staging, self.serving_dir)
-        record_gc_pending(self.serving_dir, old_files, stamp)
-        record_stamp_after_append(self.serving_dir, stamp + 1, 1)
-
-    def start(self, rt_stream: DataFrame, checkpoint_dir: str):
-        return (
-            rt_stream.writeStream.foreachBatch(self._merge_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-
     def read(self) -> DataFrame:
         """Live view: deleted keys filtered, state column dropped."""
         df = self._resolve_log()
         return df.filter(~F.col("__deleted")).select(*self.key_fields, *self.value_cols)
-
-
-def aa_serve(
-    engine_store,
-    value_cols: list[str],
-    list_fields: set[str] | None = None,
-    map_fields: set[str] | None = None,
-    ts_col: str = "ts",
-    compact_every: int = 16,
-    now_ts: int | None = None,
-):
-    """One-call AA serving loop (the facade twin of hybrid_serve for
-    active-active stores): seed from the current version if needed, replay
-    the RT log through the DCR kernel with a persistent checkpoint, return
-    the replay handle. Like hybrid_serve: a NEW batch version drops the
-    serving table + checkpoint and re-seeds (per-version buffer replay),
-    and the stream schema merges ALL flush footers — a bare read would
-    silently drop columns absent from the sampled flush (code-review r4).
-    Per-trigger write cost is O(touched keys), never O(table), with
-    compaction every `compact_every` triggers — see ActiveActiveReplay."""
-    from venice_spark.producer import read_rt_log
-    from venice_spark.streaming.hybrid import (
-        mark_seeded_version,
-        reset_serving_if_stale,
-    )
-
-    engine_store._rt_retention_seconds()  # misconfig fails before replay
-    spark = engine_store.spark
-    catalog = engine_store.catalog
-    name = engine_store.name
-    store_dir = catalog.store_dir(name)
-    serving = os.path.join(store_dir, "aa_serving")
-    ckpt = os.path.join(store_dir, "_aa_checkpoint")
-    cur = catalog.current_version(name)
-    reset_serving_if_stale(serving, ckpt, cur)
-    replay = ActiveActiveReplay(
-        spark, catalog, name, serving, value_cols, list_fields, map_fields, ts_col,
-        compact_every=compact_every,
-    )
-    if not os.path.isdir(serving):
-        replay.seed(engine_store.df().drop("partition_id"))
-        mark_seeded_version(serving, cur)
-    rt_dir = catalog.update_log_dir(name)
-    if os.path.isdir(rt_dir) and any(f.endswith(".parquet") for f in os.listdir(rt_dir)):
-        from venice_spark.streaming.hybrid import run_replay_query
-
-        def _start():
-            # rebuilt per attempt: a concurrent rt migration (the restart
-            # case) changes both the fileset and the schema
-            schema = read_rt_log(spark, catalog, name).schema
-            stream = spark.readStream.schema(schema).parquet(rt_dir)
-            return replay.start(stream, ckpt)
-
-        run_replay_query(_start)
-    # per-store RT retention after a completed serve (same contract as
-    # hybrid_serve; the consumer guard keeps a lagging hybrid checkpoint's
-    # unread files alive). now_ts pins the retention clock for replayed/
-    # backfilled timestamp domains — an unpinnable wall clock would judge
-    # every historical-ts file old (code-review r8)
-    engine_store._apply_rt_retention(now_ts, ts_col=ts_col)
-    return replay

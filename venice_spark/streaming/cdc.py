@@ -194,7 +194,7 @@ class ChangeCaptureStream:
             snap = spark.read.parquet(self.snapshot_dir)
         except Exception:
             snap = None
-        from venice_spark.streaming.hybrid import _is_delete
+        from venice_spark.streaming.hybrid import _is_delete, resolve_latest
 
         batch = batch_df
         if "op" not in batch.columns:
@@ -234,21 +234,12 @@ class ChangeCaptureStream:
         )
         events.write.mode("append").parquet(self.out_dir)
 
-        # advance the snapshot: latest op per key, deletes drop the key.
-        # Tie ordering matches resolve_latest: DELETE beats PUT on an equal
-        # ts, then a value-payload hash — a ts-only order resolved an
-        # equal-ts PUT/DELETE pair by shuffle order, so the snapshot (and
-        # later batches' `before` values) was nondeterministic across runs
-        # (code-review r4).
-        wd = Window.partitionBy(*kf).orderBy(
-            F.col(tc).desc(),
-            _is_delete().desc(),
-            F.xxhash64(F.to_json(F.struct("op", vc))).desc(),
-        )
-        latest = (
-            batch.withColumn("__rn", F.row_number().over(wd))
-            .filter(F.col("__rn") == 1)
-        )
+        # advance the snapshot: latest op per key, deletes drop the key,
+        # by the serving replays' one latest-wins rule (resolve_latest:
+        # DELETE beats PUT on an equal ts, then the larger value JSON) —
+        # so an equal-ts PUT pair leaves the snapshot holding the value
+        # HybridReplay.read() serves
+        latest = resolve_latest(batch, kf, tc)
         new_rows = latest.filter(~_is_delete()).select(*kf, vc, tc)
         if snap is not None:
             touched = latest.select(*kf)
