@@ -189,6 +189,13 @@ def test_approx_unique_keys_counts_whole_composite_keys(spark, tmp_root):
     for store in ("one", "two"):
         est = eng.store(store).approx_unique_keys(rsd=0.05)
         assert abs(est - 1000) <= 150, (store, est)
+    # a separator inside a string field, and a NULL field, keep keys apart
+    eng.create_store("sep", key_fields=["a", "b"], partition_count=2)
+    eng.push("sep", spark.createDataFrame([("x\x00y", "z", 1), ("x", "y\x00z", 2)], "a string, b string, v int"))
+    eng.create_store("nul", key_fields=["a", "b"], partition_count=2)
+    eng.push("nul", spark.createDataFrame([("x", None, 1), (None, "x", 2)], "a string, b string, v int"))
+    for store in ("sep", "nul"):
+        assert eng.store(store).approx_unique_keys() == 2, store
 
 
 def test_compute_dsl_over_delta_resolved_store(spark, tmp_path):

@@ -312,15 +312,80 @@ def test_keyed_compute_and_facet_counts_launch_no_spark_job(spark, sf_dir, tmp_p
         .project("label")
         .dot_product("embedding", p, "dot")
         .cosine_similarity("embedding", p, "cos")
+        .hadamard_product("embedding", p, "had")
+        .count("embedding", "n")
+        .error_channel()
         .execute([0, 1, 2, 10**9])
         .collect(),
     )
     assert sorted(r["vec_id"] for r in rows) == [0, 1, 2] and jobs == 0
+    assert all(r["n"] == dim and len(r["had"]) == dim for r in rows)
     out, jobs = _spark_jobs(spark, lambda: st.aggregate().count_group_by_value(3, "label", "vec_id"))
     assert jobs == 0
     for f, frame in out.items():
         counted, jobs = _spark_jobs(spark, frame.collect)
         assert 0 < len(counted) <= 3 and jobs == 0, f
+
+
+def _keyed_compute(st, p):
+    return (
+        st.compute()
+        .project("label")
+        .dot_product("embedding", p, "dot")
+        .cosine_similarity("embedding", p, "cos")
+        .hadamard_product("embedding", p, "had")
+        .count("embedding", "n")
+        .error_channel()
+    )
+
+
+def test_keyed_compute_arrow_bound(spark, sf_dir, tmp_path):
+    """ARROW_BATCH_MAX_KEYS bounds the driver-side compute: a batch at the
+    bound is a LocalTableScan computed with no Spark job; one key more
+    takes batch_get's broadcast join and the Column plan, with the same
+    rows (the extra key is absent)."""
+    from venice_spark import VeniceSparkEngine
+    from venice_spark.engine import ARROW_BATCH_MAX_KEYS
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("e", key_fields=["vec_id"], partition_count=8)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    eng.push("e", emb)
+    st = eng.store("e")
+    n_rows = emb.count()
+    assert n_rows < ARROW_BATCH_MAX_KEYS
+    p = [0.1 * (i % 5 - 2) for i in range(len(st.get(0)["embedding"]))]
+    keys = list(range(ARROW_BATCH_MAX_KEYS + 1))
+    at_bound = _keyed_compute(st, p).execute(keys[:-1])
+    plan = _plan(at_bound)
+    assert plan.startswith("LocalTableScan") and "Project" not in plan, plan
+    rows, jobs = _spark_jobs(spark, at_bound.collect)
+    assert len(rows) == n_rows and jobs == 0
+    over = _keyed_compute(st, p).execute(keys)
+    assert "BroadcastHashJoin" in _plan(over), _plan(over)
+    assert over.schema == at_bound.schema
+    assert sorted(over.collect()) == sorted(rows)
+
+
+def test_arrow_keyed_compute_builds_no_column_tree(spark, sf_dir, tmp_path, monkeypatch):
+    """The driver form never lowers the request to Column expressions; a
+    whole-store plan still does."""
+    from venice_spark import VeniceSparkEngine
+    from venice_spark.compute import ComputeRequestBuilder
+
+    eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+    eng.create_store("e", key_fields=["vec_id"], partition_count=8)
+    eng.push("e", spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
+    st = eng.store("e")
+    p = [0.5] * len(st.get(0)["embedding"])
+
+    def no_tree(self):
+        raise AssertionError("built a Column tree")
+
+    monkeypatch.setattr(ComputeRequestBuilder, "_result_columns", no_tree)
+    assert len(_keyed_compute(st, p).execute([0, 1, 2]).collect()) == 3
+    with pytest.raises(AssertionError, match="Column tree"):
+        _keyed_compute(st, p).plan()
 
 
 def test_facet_count_over_arrow_bound_plans_hash_aggregate(spark, tmp_path):

@@ -240,10 +240,9 @@ def test_lazy_and_eager_push_sequences_equivalent(spark, tmp_path, seed):
 
     rng = random.Random(seed)
     seq = []
-    for _ in range(4):  # 4 deltas of 6 ops over 8 keys
+    for _ in range(4):  # 4 deltas of 6 ops over 8 keys, one op per key
         ops = []
-        for _ in range(6):
-            k = rng.randrange(8)
+        for k in rng.sample(range(8), 6):
             if rng.random() < 0.25:
                 ops.append((k, None, None))  # tombstone
             else:

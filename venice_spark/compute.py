@@ -2,8 +2,8 @@
 
 Mirrors the reference's client builder 1:1
 (clients/venice-thin-client/src/main/java/com/linkedin/venice/client/store/ComputeRequestBuilder.java:22-106,
-impl AbstractAvroComputeRequestBuilder.java:123-520) but lowers to Catalyst
-Column expressions instead of an Avro ComputeRequest — Catalyst *is* the IR.
+impl AbstractAvroComputeRequestBuilder.java:123-520) but has two
+evaluators instead of an Avro ComputeRequest:
 
     store.compute()
          .project("name")
@@ -16,10 +16,20 @@ Column expressions instead of an Avro ComputeRequest — Catalyst *is* the IR.
 Every computed field also feeds the __veniceComputationError__ map channel
 (R9, ComputeUtils.java:69-143).
 
-Scale: execute(keys) broadcasts the key set when small (the common case —
-the reference's whole protocol is designed around bounded key batches);
-execute_with_filter relies on predicate pushdown + sorted-by-key parquet for
-rowgroup pruning, the moral equivalent of RocksDB prefix iteration
+Keyed compute runs per record next to the fetched rows, as the
+reference's ReadComputeOperator does: when StoreHandle.compute()'s key
+batch is read through Arrow (batch_get's conditions, at most
+engine.ARROW_BATCH_MAX_KEYS keys), execute(keys) evaluates every op on the
+driver with the numpy twins of functions/vectors and returns a local frame
+with the Spark plan's exact schema — no Column tree, no Spark job. Any
+other key batch, an op the twins do not cover (a vector whose elements are
+not float or integral, a field not in the frame, a repeated output name)
+and every whole-store plan (plan, execute_with_filter, partial_key_lookup,
+a builder over a bare frame) lower to Catalyst Column expressions. The
+Spark form joins the key set: batch_get's partition-pruned broadcast join
+from a store, a broadcast key join over a bare frame.
+execute_with_filter relies on predicate pushdown + sorted-by-key parquet
+for rowgroup pruning, the moral equivalent of RocksDB prefix iteration
 (RocksDBStoragePartition.java:808).
 """
 
@@ -27,14 +37,33 @@ from __future__ import annotations
 
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field as dc_field
-from typing import Any
+from typing import Any, NamedTuple
 
+import pyarrow as pa
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from venice_spark.functions import vectors
 
 ERROR_FIELD = "__veniceComputationError__"
+_ERROR_TYPE = T.MapType(T.StringType(), T.StringType(), True)
+
+# op kind -> (Spark kernel, driver twin); a count takes no param
+_KERNELS = {
+    "dot_product": (vectors.dot_product, vectors.dot_product_py),
+    "cosine_similarity": (vectors.cosine_similarity, vectors.cosine_similarity_py),
+    "hadamard_product": (vectors.hadamard_product, vectors.hadamard_product_py),
+    "count": (vectors.collection_count, vectors.collection_count_py),
+}
+
+# result type of each op kind, as the Spark kernels type it
+_RESULT_TYPES = {
+    "dot_product": T.DoubleType(),
+    "cosine_similarity": T.DoubleType(),
+    "hadamard_product": T.ArrayType(T.DoubleType(), True),
+    "count": T.IntegerType(),
+}
 
 
 @dataclass
@@ -43,6 +72,25 @@ class _Op:
     field: str
     result_name: str
     param: Sequence[float] | None = None
+
+    def apply(self, kernel, vec):
+        return kernel(vec) if self.param is None else kernel(vec, self.param)
+
+    @property
+    def param_len(self) -> int | None:
+        # `is not None`, not truthiness: an explicit empty param list must
+        # still produce the length entries of the error channel
+        return len(self.param) if self.param is not None else None
+
+
+class KeyRows(NamedTuple):
+    """A key batch read on the driver: `table` holds the rows in
+    batch_get's column order, `schema` is their df() schema, and `spark`
+    turns a table into a local frame."""
+
+    spark: SparkSession
+    table: pa.Table
+    schema: T.StructType
 
 
 class _StoreFrame:
@@ -70,6 +118,9 @@ class ComputeRequestBuilder(_StoreFrame):
     # the store's (partition_id, key) routing — directory pruning instead of
     # a full-store scan for a bounded key batch
     key_batch_source: Any = None
+    # ...and batch_get's Arrow read here: keys -> KeyRows, or None when
+    # the batch must go through key_batch_source
+    key_rows_source: Any = None
 
     # ---- builder surface (ComputeRequestBuilder.java:22-106) ----
     def project(self, *fields: str) -> "ComputeRequestBuilder":
@@ -97,21 +148,17 @@ class ComputeRequestBuilder(_StoreFrame):
         return self
 
     # ---- lowering ----
+    def _passed_through(self) -> list[str]:
+        return [*self.key_fields, *(p for p in self.projections if p not in self.key_fields)]
+
+    def _output_names(self) -> list[str]:
+        names = [*self._passed_through(), *(op.result_name for op in self.ops)]
+        return [*names, ERROR_FIELD] if self.with_error_channel else names
+
     def _result_columns(self) -> list[Column]:
-        cols: list[Column] = [F.col(k) for k in self.key_fields]
-        cols += [F.col(p) for p in self.projections if p not in self.key_fields]
+        cols: list[Column] = [F.col(n) for n in self._passed_through()]
         for op in self.ops:
-            if op.kind == "dot_product":
-                c = vectors.dot_product(op.field, op.param)
-            elif op.kind == "cosine_similarity":
-                c = vectors.cosine_similarity(op.field, op.param)
-            elif op.kind == "hadamard_product":
-                c = vectors.hadamard_product(op.field, op.param)
-            elif op.kind == "count":
-                c = vectors.collection_count(op.field)
-            else:  # pragma: no cover
-                raise ValueError(op.kind)
-            cols.append(c.alias(op.result_name))
+            cols.append(op.apply(_KERNELS[op.kind][0], op.field).alias(op.result_name))
         if self.with_error_channel:
             err = F.create_map().cast("map<string,string>")
             for op in self.ops:
@@ -119,14 +166,9 @@ class ComputeRequestBuilder(_StoreFrame):
                 # included — the reference's CountOperator emits -1 + an
                 # error entry for a null collection (code-review r4: the
                 # old vector-ops-only loop made count-of-null silently
-                # indistinguishable from a clean 0). `is not None` not
-                # truthiness: an explicit empty param list must still
-                # produce the null-field entry.
+                # indistinguishable from a clean 0).
                 entry = vectors.compute_error_entries(
-                    op.field,
-                    op.field,
-                    len(op.param) if op.param is not None else None,
-                    key_name=op.result_name,
+                    op.field, op.field, op.param_len, key_name=op.result_name
                 )
                 err = F.map_concat(err, entry)
             cols.append(err.alias(ERROR_FIELD))
@@ -135,6 +177,51 @@ class ComputeRequestBuilder(_StoreFrame):
     def plan(self) -> DataFrame:
         """Lower to a DataFrame over the whole store (no key restriction)."""
         return self.frame().select(*self._result_columns())
+
+    # ---- driver form: the twins over rows the driver holds ----
+    def _driver_schema(self, schema: T.StructType) -> T.StructType | None:
+        """The schema plan() gives over a frame of `schema` when the driver
+        twins cover the request; None when Spark must evaluate it: a name
+        F.col would not resolve to exactly that column (absent, or holding
+        a dot or backtick), an output name given twice, a vector op over
+        anything but an array of TWIN_ELEMENTS, or a count over a
+        non-array."""
+        by = {f.name: f for f in schema.fields}
+        names = self._output_names()
+        fields = [*self._passed_through(), *(op.field for op in self.ops)]
+        if (
+            len({n.lower() for n in names}) < len(names)
+            or not all(f in by and "." not in f and "`" not in f for f in fields)
+        ):
+            return None
+        for op in self.ops:
+            t = by[op.field].dataType
+            if not isinstance(t, T.ArrayType) or (
+                op.kind != "count" and not isinstance(t.elementType, vectors.TWIN_ELEMENTS)
+            ):
+                return None
+        out = T.StructType([by[n] for n in self._passed_through()])
+        for op in self.ops:
+            out.add(op.result_name, _RESULT_TYPES[op.kind], True)
+        if self.with_error_channel:
+            out.add(ERROR_FIELD, _ERROR_TYPE, False)
+        return out
+
+    def _driver_rows(self, table: pa.Table) -> pa.Table:
+        """plan()'s rows computed by the twins over `table`, a frame's rows
+        that _driver_schema accepted."""
+        cols = [table.column(n) for n in self._passed_through()]
+        cols += [op.apply(_KERNELS[op.kind][1], table.column(op.field)) for op in self.ops]
+        if self.with_error_channel:
+            maps: list[list] = [[] for _ in range(table.num_rows)]
+            for op in self.ops:  # map_concat, op by op
+                entries = vectors.compute_error_entries_py(
+                    op.field, table.column(op.field), op.param_len, key_name=op.result_name
+                )
+                for row, more in zip(maps, entries.to_pylist()):
+                    row.extend(more)
+            cols.append(pa.array(maps, pa.map_(pa.string(), pa.string())))
+        return pa.table(cols, names=self._output_names())
 
     def execute(
         self,
@@ -148,12 +235,22 @@ class ComputeRequestBuilder(_StoreFrame):
         Call as .execute(keys) — the documented builder shape; the session
         comes from the frame. The legacy .execute(spark, keys) still works.
 
-        Built via StoreHandle.compute(), the key batch routes through
-        batch_get so partition ids prune version directories; a builder
-        constructed over a bare frame falls back to a broadcast key join."""
+        Built via StoreHandle.compute(), a key batch batch_get reads
+        through Arrow is computed on the driver by the twins
+        (_driver_schema/_driver_rows) into a local frame; any other batch
+        routes through batch_get so partition ids prune version
+        directories. A builder constructed over a bare frame takes a
+        broadcast key join."""
         if keys is None:
             keys = spark_or_keys  # .execute(keys) shape
-        if self.key_batch_source is not None:
+        keys = list(keys)  # read twice when the Arrow read declines
+        rows = self.key_rows_source(keys) if self.key_rows_source is not None else None
+        if rows is not None:
+            schema = self._driver_schema(rows.schema)
+            if schema is not None:
+                return rows.spark.createDataFrame(self._driver_rows(rows.table), schema)
+            joined = rows.spark.createDataFrame(rows.table, rows.schema)
+        elif self.key_batch_source is not None:
             joined = self.key_batch_source(keys)
         else:
             df = self.frame()

@@ -13,9 +13,11 @@ Usage:
 The router/server tier of the reference collapses away. A get or a small
 batch get on a version with no delta log is the Fast Client's one
 partition-aware hop: the driver routes each key and reads only the owning
-partition_id=P parquet dirs through Arrow, with no Spark job; facet counts
-over a small such version are counted on the driver the same way, as the
-reference's client counts them. Anything else
+partition_id=P parquet dirs through Arrow, with no Spark job; a keyed
+compute over such a batch is evaluated on the fetched rows by numpy twins
+of the compute kernels, and facet counts over a small such version are
+counted on the driver the same way, as the reference's client counts them.
+Anything else
 is a broadcast semi-join against the current version's sorted parquet,
 served by the cluster (reference lifecycle:
 docs/contributing/architecture/read-path; StorageReadRequestHandler.java:539,699).
@@ -37,7 +39,7 @@ from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.pandas.types import to_arrow_type
 
 from venice_spark.catalog import StoreCatalog, _data_files, _footer_schema, _partition_dirs
-from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder
+from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder, KeyRows
 from venice_spark.push import (
     BandIndexViewDef,
     BatchPushJob,
@@ -464,20 +466,28 @@ class StoreHandle:
         broadcast hash join on (partition_id, key): the partition ids prune
         version directories (only dirs owning requested keys are scanned),
         key-sorted files prune rowgroups via min/max."""
-        kf = self.key_fields
         kts = self._key_tuples(keys)
         served = self._served_files()
-        found = served.arrow_rows(kts) if served is not None else None
-        if found is not None:
-            order = [*kf, *(n for n in found.column_names if n not in kf)]
-            return self.spark.createDataFrame(found.select(order), served.schema(order))
+        rows = self._arrow_batch(kts, served)
+        if rows is not None:
+            return self.spark.createDataFrame(rows.table, rows.schema)
         kdf, pids = self._keys_with_pid(kts, served)
         return (
             self.df()
             .filter(F.col("partition_id").isin(pids))
-            .join(F.broadcast(kdf), on=["partition_id", *kf], how="inner")
+            .join(F.broadcast(kdf), on=["partition_id", *self.key_fields], how="inner")
             .drop("partition_id")
         )
+
+    def _arrow_batch(self, kts: list[tuple], served: _ServedFiles | None) -> KeyRows | None:
+        """batch_get's rows read through Arrow, the key fields first, then
+        the rest in df() order; None when Spark must serve the batch."""
+        found = served.arrow_rows(kts) if served is not None else None
+        if found is None:
+            return None
+        kf = self.key_fields
+        order = [*kf, *(n for n in found.column_names if n not in kf)]
+        return KeyRows(self.spark, found.select(order), served.schema(order))
 
     # ---- R3 streaming batch get ----
     def streaming_batch_get(self, keys: Sequence[Any]) -> Iterator[Row]:
@@ -729,13 +739,19 @@ class StoreHandle:
 
     # ---- R4-R10 compute ----
     def compute(self) -> ComputeRequestBuilder:
-        # R4-R8 key batches ride R2's routing: execute(keys) goes through
-        # batch_get, so partition ids prune version directories instead of
-        # the compute join scanning every partition for a handful of keys.
-        # The store frame is passed unbuilt (self.df): only a whole-store
-        # plan lists the version for it.
+        # R4-R8 key batches ride R2's routing: a batch batch_get reads
+        # through Arrow is computed on the driver over the fetched rows;
+        # any other goes through batch_get, so partition ids prune version
+        # directories instead of the compute join scanning every partition
+        # for a handful of keys. The store frame is passed unbuilt
+        # (self.df): only a whole-store plan lists the version for it.
         return ComputeRequestBuilder(
-            self.df, self.key_fields, key_batch_source=self.batch_get
+            self.df,
+            self.key_fields,
+            key_batch_source=self.batch_get,
+            key_rows_source=lambda keys: self._arrow_batch(
+                self._key_tuples(keys), self._served_files()
+            ),
         )
 
     # ---- R11/R12 ----
@@ -773,11 +789,13 @@ class StoreHandle:
     # ---- R16 ----
     def approx_unique_keys(self, rsd: float = 0.05) -> int:
         """HLL distinct-key estimate (StoreIngestionTask.java:2901-2907 uses
-        datasketches HLL; Spark's approx_count_distinct is HLL++)."""
+        datasketches HLL; Spark's approx_count_distinct is HLL++) over the
+        whole key as a struct, so no separator inside a string field can
+        make two keys one. Its hash skips a null field, so each field's
+        null flag rides along: (x, NULL) and (NULL, x) stay two keys."""
         kf = self.key_fields
-        row = self.df().select(
-            F.approx_count_distinct(F.concat_ws("\x00", *[F.col(k).cast("string") for k in kf]), rsd).alias("n")
-        ).collect()[0]
+        key = F.struct(*kf, *(F.col(k).isNull() for k in kf))
+        row = self.df().select(F.approx_count_distinct(key, rsd).alias("n")).collect()[0]
         return int(row["n"])
 
     # ---- W12/W13 + §2.5: hybrid store serving loop ----

@@ -8,10 +8,18 @@ Reference operators (internal/venice-client-common/src/main/java/com/linkedin/ve
   - CountOperator.java:12-68           collection size
   - ComputeUtils.java:168-258          4-way unrolled float kernels
 
-Spark-first: everything here is a JVM-side Column expression
+Spark-first: every kernel is a JVM-side Column expression
 (zip_with/aggregate run inside whole-stage codegen; no Python in the hot
 path). Arithmetic is done in float64 with a strict left-to-right fold so
 results are bit-reproducible and oracle-checkable.
+
+Driver twins: each read-compute kernel (R5-R9) has a `*_py` twin beside
+it that computes the same values with numpy over an Arrow list column the
+driver already holds — the keyed compute of a small key batch, whose rows
+batch_get fetched through Arrow. A twin runs the same float64 operations
+in the same order (the casts, the seeded left-to-right fold, the cosine
+guard), so its results equal the kernel's bit for bit; the parity is
+property-tested in tests/test_compute_twins.py.
 
 Semantics parity:
   - empty/null vector -> NULL result (DotProductOperator.java:40-45)
@@ -26,7 +34,11 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
+import pyspark.sql.types as T
 from pyspark.sql import Column
 
 
@@ -74,6 +86,54 @@ def _guard_pair(c: Column, bok: Column) -> Column:
     )
 
 
+# Element types of a vector a twin reads: their float64 cast is the exact
+# value Spark's cast to array<double> gives. A vector of any other element
+# type is computed by the Spark kernel.
+TWIN_ELEMENTS = (
+    T.FloatType, T.DoubleType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+)
+
+
+def _vector_rows(
+    vec: pa.Array | pa.ChunkedArray, dim: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The twins' _guard_pair against a constant param of `dim` elements:
+    (ok, x, gaps). `ok` marks the rows whose vector is not null and has
+    exactly `dim` > 0 elements; `x` holds those rows cast to float64 as a
+    (rows, dim) matrix, null elements read as 0.0; `gaps` marks x's null
+    elements."""
+    if isinstance(vec, pa.ChunkedArray):
+        vec = vec.combine_chunks()
+    lengths = pc.fill_null(pc.list_value_length(vec), -1).to_numpy(zero_copy_only=False)
+    ok = (lengths == dim) & (dim > 0)
+    flat = vec.filter(pa.array(ok)).flatten()
+    shape = (int(ok.sum()), dim)
+    x = pc.fill_null(flat, 0).to_numpy(zero_copy_only=False).astype(np.float64)
+    gaps = flat.is_null().to_numpy(zero_copy_only=False)
+    return ok, x.reshape(shape), gaps.reshape(shape)
+
+
+def _fold_rows(products: np.ndarray) -> np.ndarray:
+    """_fold_sum of each row: ((0.0 + p1) + p2) + ... The seed 0.0 folds
+    -0.0 as Spark's seed does; accumulate adds strictly left to right."""
+    seeded = np.concatenate([np.zeros((len(products), 1)), products], axis=1)
+    return np.add.accumulate(seeded, axis=1)[:, -1]
+
+
+def _rows_where(values: np.ndarray, ok: np.ndarray, keep: np.ndarray) -> pa.Array:
+    """float64 per row: values[i] on the i-th ok row where keep[i], NULL on
+    every other row."""
+    valid = ok.copy()
+    valid[ok] = keep
+    out = np.zeros(len(ok))
+    out[valid] = values[keep]
+    return pa.array(out, mask=~valid)
+
+
+def _param_array(param: Sequence[float]) -> np.ndarray:
+    return np.array([float(v) for v in param], dtype=np.float64)
+
+
 def dot_product(field: Column | str, param: Sequence[float] | Column) -> Column:
     """R5. NULL when either side is null/empty or lengths mismatch."""
     c = F.col(field) if isinstance(field, str) else field
@@ -82,6 +142,17 @@ def dot_product(field: Column | str, param: Sequence[float] | Column) -> Column:
     bok = b if not isinstance(param, Column) else param
     raw = _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
     return F.when(_guard_pair(c, bok), raw)
+
+
+def dot_product_py(vec: pa.Array | pa.ChunkedArray, param: Sequence[float]) -> pa.Array:
+    """Driver twin of dot_product over an Arrow list column: NULL where
+    the guard fails and where the vector holds a null element (Spark's
+    fold of a null is null)."""
+    p = _param_array(param)
+    ok, x, gaps = _vector_rows(vec, len(p))
+    with np.errstate(all="ignore"):
+        dots = _fold_rows(x * p)
+    return _rows_where(dots, ok, ~gaps.any(axis=1))
 
 
 def squared_l2_norm(field: Column | str) -> Column:
@@ -122,6 +193,22 @@ def cosine_similarity(field: Column | str, param: Sequence[float] | Column) -> C
     return _bind(denom, _guarded)
 
 
+def cosine_similarity_py(
+    vec: pa.Array | pa.ChunkedArray, param: Sequence[float]
+) -> pa.Array:
+    """Driver twin of cosine_similarity: the dot fold over
+    sqrt(self-norm fold) * param_l2_norm(param), NULL unless that product
+    is > 0 — in Spark's ordering, where NaN is above every number, so a NaN
+    norm passes and the result is NaN."""
+    p = _param_array(param)
+    ok, x, gaps = _vector_rows(vec, len(p))
+    with np.errstate(all="ignore"):
+        denom = np.sqrt(_fold_rows(x * x)) * param_l2_norm(param)
+        cos = _fold_rows(x * p) / denom
+    live = (denom > 0) | np.isnan(denom)
+    return _rows_where(cos, ok, ~gaps.any(axis=1) & live)
+
+
 def param_l2_norm(param: Sequence[float]) -> float:
     """Driver-side L2 norm with the same left-to-right fold as the SQL path."""
     acc = 0.0
@@ -139,11 +226,34 @@ def hadamard_product(field: Column | str, param: Sequence[float] | Column) -> Co
     return F.when(_guard_pair(c, bok), F.zip_with(a, b, lambda x, y: x * y))
 
 
+def hadamard_product_py(
+    vec: pa.Array | pa.ChunkedArray, param: Sequence[float]
+) -> pa.Array:
+    """Driver twin of hadamard_product: list<double> per row, NULL where
+    the guard fails, a null element where the vector holds one."""
+    p = _param_array(param)
+    ok, x, gaps = _vector_rows(vec, len(p))
+    with np.errstate(all="ignore"):
+        values = pa.array((x * p).ravel(), mask=gaps.ravel())
+    offsets = np.concatenate([[0], np.cumsum(np.where(ok, len(p), 0))])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, pa.int32()), values, mask=pa.array(~ok)
+    )
+
+
 def collection_count(field: Column | str) -> Column:
     """R8. Size of an array or map field; NULL input -> NULL (the reference
     returns -1 + error entry; Spark's size() legacy -1 is disabled)."""
     c = F.col(field) if isinstance(field, str) else field
     return F.when(c.isNotNull(), F.size(c))
+
+
+def collection_count_py(vec: pa.Array | pa.ChunkedArray) -> pa.Array:
+    """Driver twin of collection_count over an Arrow list column: int32
+    size, NULL for a null vector."""
+    if isinstance(vec, pa.ChunkedArray):
+        vec = vec.combine_chunks()
+    return pc.list_value_length(vec)
 
 
 def compute_error_entries(
@@ -175,6 +285,27 @@ def compute_error_entries(
     return F.when(err.isNotNull(), F.create_map(F.lit(key), err)).otherwise(
         F.create_map().cast("map<string,string>")
     )
+
+
+def compute_error_entries_py(
+    field_name: str,
+    vec: pa.Array | pa.ChunkedArray,
+    param_len: int | None,
+    key_name: str | None = None,
+) -> pa.Array:
+    """Driver twin of compute_error_entries over an Arrow list column: one
+    map<string,string> per row with the same key and message."""
+    key = key_name or field_name
+    entries = []
+    for n in collection_count_py(vec).to_pylist():
+        if n is None:
+            entries.append([(key, f"field {field_name} is null")])
+        elif param_len is not None and n != param_len:
+            msg = f"field {field_name} length {n} != param length {param_len}"
+            entries.append([(key, msg)])
+        else:
+            entries.append([])
+    return pa.array(entries, pa.map_(pa.string(), pa.string()))
 
 
 def oracle_dot_sql(array_expr: str, param: Sequence[float]) -> str:
