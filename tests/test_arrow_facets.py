@@ -38,7 +38,7 @@ def _spark_counts(st, top_k, fields):
 
 
 def _check_parity(st, top_k, fields, arrow_served):
-    assert (st._arrow_value_counts(top_k, fields) is not None) == arrow_served
+    assert (st._served().value_counts(top_k, fields) is not None) == arrow_served
     got = st.aggregate().count_group_by_value(top_k, *fields)
     want = _spark_counts(st, top_k, fields)
     assert list(got) == list(want)
@@ -92,7 +92,7 @@ def test_top_values_folds_every_nan_and_signed_zero(arrow_type):
     one group as Spark's float normalisation does."""
     import pyarrow as pa
 
-    from venice_spark.engine import _top_values
+    from venice_spark.served import _top_values
 
     col = pa.array(
         [_nan_neg, math.nan, _nan_payload, -0.0, 0.0, None, None, 1.0], type=arrow_type
@@ -155,15 +155,15 @@ def test_live_delta_slot_counts_through_spark(spark, eng):
 
 
 def test_store_over_the_bound_counts_through_spark(spark, eng, monkeypatch):
-    import venice_spark.engine as engine_mod
+    import venice_spark.served as served_mod
 
     eng.create_store("facet_big", key_fields=["k"], partition_count=4)
     eng.push("facet_big", spark.createDataFrame([(k, k % 3) for k in range(12)], "k long, v int"))
     st = eng.store("facet_big")
     _check_parity(st, 2, ["v"], arrow_served=True)
-    monkeypatch.setattr(engine_mod, "ARROW_SCAN_MAX_ROWS", 11)
+    monkeypatch.setattr(served_mod, "ARROW_SCAN_MAX_ROWS", 11)
     _check_parity(st, 2, ["v"], arrow_served=False)
-    monkeypatch.setattr(engine_mod, "ARROW_SCAN_MAX_ROWS", 12)
+    monkeypatch.setattr(served_mod, "ARROW_SCAN_MAX_ROWS", 12)
     _check_parity(st, 2, ["v"], arrow_served=True)
 
 
@@ -180,7 +180,7 @@ def test_types_arrow_does_not_group_fall_back(spark, eng, ddl, value, field):
     eng.create_store(name, key_fields=["k"], partition_count=2)
     eng.push(name, spark.createDataFrame([(1, value), (2, None), (3, value)], f"k long, {ddl}"))
     st = eng.store(name)
-    assert st._served_files() is not None
+    assert st._served().plain
     # one unsupported field sends the whole call to Spark
     _check_parity(st, 3, ["k", field], arrow_served=False)
 

@@ -135,17 +135,17 @@ def test_arrow_path_serves_plain_versions(stores, monkeypatch):
     below compares two different read paths), and every read through
     batch_get — streaming_batch_get, compute().execute — agrees with the
     forced Spark fallback."""
-    import venice_spark.engine as engine_mod
+    import venice_spark.served as served_mod
 
     for name, keys in (("evo", [3, 7]), ("comp", [("a0", 0), ["a1", 4]])):
         st = stores.store(name)
-        served = st._served_files()
-        assert served is not None
+        served = st._served()
+        assert served.plain
         assert served.arrow_rows([_key_tuple(st, k) for k in keys]).num_rows == 2
         arrow = sorted(map(repr, st.batch_get(keys).collect()))
         assert sorted(map(repr, st.streaming_batch_get(keys))) == arrow
         with monkeypatch.context() as m:  # force the Spark broadcast join
-            m.setattr(engine_mod, "ARROW_BATCH_MAX_KEYS", 0)
+            m.setattr(served_mod, "ARROW_BATCH_MAX_KEYS", 0)
             assert sorted(map(repr, st.batch_get(keys).collect())) == arrow
             spark_schema = st.batch_get(keys).schema
         assert st.batch_get(keys).schema == spark_schema
@@ -201,7 +201,7 @@ def test_live_delta_slot_reads_through_spark(stores, spark):
     eng.push("lazy", spark.createDataFrame([(k, k * 3) for k in range(10)], "k long, count int"))
     eng.incremental_push("lazy", spark.createDataFrame([(2, 100)], "k long, count int"), eager=False)
     st = eng.store("lazy")
-    assert st._served_files() is None
+    assert not st._served().plain
     keys = [2, 3, 50, 2]
     refs = [_reference(st, k) for k in keys]
     assert refs[0][0]["count"] == 100
@@ -241,8 +241,8 @@ def test_types_arrow_cannot_reproduce_fall_back(stores, spark, non_utc_tz, ddl, 
     stores.catalog.create_store(name, key_fields=["k"], partition_count=2)
     stores.push(name, spark.createDataFrame([(1, value), (2, None)], f"k long, {ddl}"))
     st = stores.store(name)
-    served = st._served_files()
-    assert served is not None and served.arrow_rows([(1,)]) is None
+    served = st._served()
+    assert served.plain and served.arrow_rows([(1,)]) is None
     keys = [1, 2, 3]
     refs = [_reference(st, k) for k in keys]
     for k, ref in zip(keys, refs):

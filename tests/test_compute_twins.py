@@ -116,7 +116,7 @@ def store(spark, tmp_path_factory):
     return eng.store("vec")
 
 
-def _spark_form(builder: ComputeRequestBuilder):
+def _spark_form(store, builder: ComputeRequestBuilder):
     """The same request evaluated by the Column plan over batch_get's rows."""
     return ComputeRequestBuilder(
         builder.df,
@@ -124,7 +124,7 @@ def _spark_form(builder: ComputeRequestBuilder):
         builder.projections,
         builder.ops,
         builder.with_error_channel,
-        key_batch_source=builder.key_batch_source,
+        key_rows_source=store.batch_get,
     )
 
 
@@ -136,8 +136,8 @@ def _assert_same(got, want):
 
 
 def test_store_is_served_by_arrow(store):
-    served = store._served_files()
-    assert served is not None and served.arrow_rows([(0,)]).num_rows == 1
+    served = store._served()
+    assert served.plain and served.arrow_rows([(0,)]).num_rows == 1
     assert store.get(0)["extra"] is None
 
 
@@ -145,7 +145,7 @@ def test_store_is_served_by_arrow(store):
 def test_each_twin_matches_its_kernel(spark, store, field):
     """Each twin over an Arrow column equals its Spark kernel over the same
     column, for params of the right length, a short one and an empty one."""
-    rows = store._arrow_batch([(k,) for k in range(N_ROWS)], store._served_files())
+    rows = store._served().key_rows(list(range(N_ROWS)))
     frame = spark.createDataFrame(rows.table, rows.schema)
     vec = rows.table.column(field)
     for param in ([0.5, -2.0, 1e-6, 3e5, -0.0, 1.0] * 2 + [1.0] * 4, [1.0, 2.0], []):
@@ -219,7 +219,7 @@ def test_driver_form_matches_column_plan(store, ops, projections, errors, keys):
         ComputeRequestBuilder, "_result_columns", side_effect=AssertionError("Column tree")
     ):
         got = b.execute(keys)
-    _assert_same(got, _spark_form(b).execute(keys))
+    _assert_same(got, _spark_form(store, b).execute(keys))
     if errors:
         assert got.schema[ERROR_FIELD].nullable is False
 
@@ -229,7 +229,7 @@ def test_uncovered_requests_take_the_column_plan(store):
     same result as before: a repeated output name, a vector op over string
     elements is Spark's to evaluate (and refuse), and an absent field is
     Spark's analysis error."""
-    rows = store._arrow_batch([(1,), (2,)], store._served_files())
+    rows = store._served().key_rows([1, 2])
     dup = store.compute().project("label").count("f", "label")
     assert dup._driver_schema(rows.schema) is None
     assert dup.execute([1, 2]).columns == ["k", "label", "label"]
@@ -280,4 +280,4 @@ def test_param_norm_and_zero_vectors(store):
 def test_empty_batch(store):
     out = store.compute().project("label").dot_product("f", [1.0] * DIM, "d").error_channel()
     got = out.execute([])
-    assert got.collect() == [] and got.schema == _spark_form(out).execute([]).schema
+    assert got.collect() == [] and got.schema == _spark_form(store, out).execute([]).schema

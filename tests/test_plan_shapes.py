@@ -4,6 +4,8 @@ broadcast joins for key lookups, rank-limit pushdown for latest-wins,
 column pruning for projections. If a refactor silently de-optimizes a
 plan, these fail before any benchmark notices."""
 
+import dataclasses
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -209,7 +211,7 @@ def test_store_get_prunes_partition_dirs(spark, sf_dir, tmp_path):
     eng.push("c", cust)
     eng.incremental_push("c", cust.filter("c_custkey = 5"), eager=False)
     st = eng.store("c")
-    assert st._served_files() is None  # the live slot routes reads to Spark
+    assert not st._served().plain  # the live slot routes reads to Spark
     out = st.batch_get([1, 2, 3])
     plan = out._jdf.queryExecution().executedPlan().toString()
     # version layout is partitioned by partition_id -> the scan must carry
@@ -248,7 +250,7 @@ def test_batch_over_arrow_bound_plans_broadcast_join(spark, sf_dir, tmp_path):
     """ARROW_BATCH_MAX_KEYS bounds the driver-side Arrow read: a batch at
     the bound is a local scan, one key over it is the broadcast join."""
     from venice_spark import VeniceSparkEngine
-    from venice_spark.engine import ARROW_BATCH_MAX_KEYS
+    from venice_spark.served import ARROW_BATCH_MAX_KEYS
 
     assert ARROW_BATCH_MAX_KEYS >= 200  # bench.py's r2_store_batch_get batch
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
@@ -345,7 +347,7 @@ def test_keyed_compute_arrow_bound(spark, sf_dir, tmp_path):
     takes batch_get's broadcast join and the Column plan, with the same
     rows (the extra key is absent)."""
     from venice_spark import VeniceSparkEngine
-    from venice_spark.engine import ARROW_BATCH_MAX_KEYS
+    from venice_spark.served import ARROW_BATCH_MAX_KEYS
 
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     eng.create_store("e", key_fields=["vec_id"], partition_count=8)
@@ -393,7 +395,7 @@ def test_facet_count_over_arrow_bound_plans_hash_aggregate(spark, tmp_path):
     one row over it is counted by Spark's HashAggregate, and the bound
     itself would still be counted through Arrow."""
     from venice_spark import VeniceSparkEngine
-    from venice_spark.engine import ARROW_SCAN_MAX_ROWS
+    from venice_spark.served import ARROW_SCAN_MAX_ROWS
 
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     eng.create_store("big", key_fields=["k"], partition_count=4)
@@ -404,7 +406,8 @@ def test_facet_count_over_arrow_bound_plans_hash_aggregate(spark, tmp_path):
     assert eng.catalog.version_manifest("big")["rows"] == ARROW_SCAN_MAX_ROWS + 1
     plan = _plan(st.aggregate().count_group_by_value(3, "v")["v"])
     assert "HashAggregate" in plan and "LocalTableScan" not in plan, plan
-    assert st._served_files().value_counts(3, ["v"], ARROW_SCAN_MAX_ROWS) is not None
+    at_bound = dataclasses.replace(st._served(), rows=ARROW_SCAN_MAX_ROWS)
+    assert at_bound.value_counts(3, ["v"]) is not None
 
 
 def test_per_row_corpus_metrics_have_no_shuffle_and_no_python(spark, sf_dir):

@@ -302,9 +302,55 @@ def test_cdc_stream_with_snapshot(spark, tmp_path):
     assert rows[("a", 10)] == (None, 1.0, "PUT")
     assert rows[("a", 20)] == (1.0, 2.0, "PUT")
     assert rows[("b", 25)][1] is None and rows[("b", 25)][2] == "DELETE"
-    # snapshot: only 'a' remains (b deleted)
-    snap = {r["key"]: r["val"] for r in spark.read.parquet(str(tmp_path / "snap")).collect()}
+    # snapshot: only 'a' remains (b deleted; its tombstone is kept)
+    snap = {
+        r["key"]: r["val"]
+        for r in spark.read.parquet(str(tmp_path / "snap")).collect()
+        if r["op"] != "DELETE"
+    }
     assert snap == {"a": 2.0}
+
+
+def test_cdc_drops_a_stale_put_from_a_later_micro_batch(spark, tmp_path):
+    """A PUT at ts 10 flushed after a PUT at ts 20 loses to the snapshot's
+    row: the snapshot keeps what HybridReplay.read() serves, the stale PUT
+    emits no event, and a later event's `before` is the fresh value. The
+    same holds for a stale PUT behind a tombstone."""
+    catalog = StoreCatalog(str(tmp_path / "cat"))
+    catalog.create_store("h", key_fields=["key"], hybrid=True, rewind_seconds=0)
+    fs = "key string, v string, ts long, op string"
+    rt_dir = str(tmp_path / "rt")
+    serving = str(tmp_path / "serving")
+    spark.createDataFrame([("y", "base", 0)], "key string, v string, ts long").write.parquet(serving)
+    replay = HybridReplay(spark, catalog, "h", serving, compact_every=0)
+    cdc = ChangeCaptureStream(
+        spark, str(tmp_path / "snap"), str(tmp_path / "changes"), ["key"], "v"
+    )
+
+    def flush(rows):
+        spark.createDataFrame(rows, fs).coalesce(1).write.mode("append").parquet(rt_dir)
+        for q, ck in ((replay, "ck_h"), (cdc, "ck_c")):
+            q.start(
+                spark.readStream.schema(fs).parquet(rt_dir), str(tmp_path / ck)
+            ).awaitTermination(120)
+
+    flush([("x", "fresh", 20, "PUT"), ("z", None, 20, "DELETE")])
+    flush([("x", "stale", 10, "PUT"), ("z", "stale", 10, "PUT")])
+    served = {r["key"]: r["v"] for r in replay.read().filter(F.col("key") != "y").collect()}
+    snap = {
+        r["key"]: r["v"]
+        for r in spark.read.parquet(str(tmp_path / "snap")).collect()
+        if r.asDict().get("op") != "DELETE"
+    }
+    assert snap == served == {"x": "fresh"}
+    events = spark.read.parquet(str(tmp_path / "changes"))
+    assert events.filter(F.col("ts") == 10).count() == 0
+    flush([("x", "later", 30, "PUT"), ("z", "back", 30, "PUT")])
+    later = {
+        r["key"]: (r["before"], r["after"])
+        for r in spark.read.parquet(str(tmp_path / "changes")).filter(F.col("ts") == 30).collect()
+    }
+    assert later == {"x": ("fresh", "later"), "z": (None, "back")}
 
 
 def test_cdc_snapshot_breaks_equal_ts_ties_like_hybrid_read(spark, tmp_path):
@@ -584,7 +630,7 @@ def test_cdc_snapshot_equal_ts_delete_wins(spark, tmp_path):
         q.awaitTermination(120)
         assert not os.path.isdir(snap_dir) or spark.read.parquet(
             snap_dir
-        ).count() == 0, "equal-ts DELETE must win over the PUT"
+        ).filter("op != 'DELETE'").count() == 0, "equal-ts DELETE must win over the PUT"
 
 
 def _dir_bytes(path):

@@ -397,20 +397,20 @@ class StoreCatalog:
             cache_key = None
         cached = self._superset_cache.get(store)
         if cached is not None and cache_key is not None and cached[0] == cache_key:
-            return cached[1]
-        meta = self.get_store(store)
-        if not meta.value_schemas:
-            raise SchemaIncompatibleError(f"store {store!r} has no value schemas")
-        from venice_spark.streaming.hybrid import union_log_fields
+            out = cached[1]
+        else:
+            from venice_spark.streaming.hybrid import union_log_fields
 
-        fields: list = []
-        for s in reversed(meta.value_schemas):  # latest first = authority
-            fields = union_log_fields(
-                fields, list(_struct_from_json(s).fields), on_conflict="keep-base"
-            )
-        out = T.StructType(fields)
-        if cache_key is not None:
-            self._superset_cache[store] = (cache_key, out)
+            fields: list | None = None  # None: no schema registered
+            for s in reversed(self.get_store(store).value_schemas):  # latest first = authority
+                fields = union_log_fields(
+                    fields or [], list(_struct_from_json(s).fields), on_conflict="keep-base"
+                )
+            out = None if fields is None else T.StructType(fields)
+            if cache_key is not None:
+                self._superset_cache[store] = (cache_key, out)
+        if out is None:
+            raise SchemaIncompatibleError(f"store {store!r} has no value schemas")
         return out
 
     def get_key_fields(self, store: str) -> list[str]:
@@ -648,9 +648,7 @@ class StoreCatalog:
         return n
 
     # ---- reading ----
-    def read_current(
-        self, spark: SparkSession, store: str, resolve_deltas: bool = True
-    ) -> DataFrame:
+    def read_current(self, spark: SparkSession, store: str) -> DataFrame:
         """The store's current content. With a delta log present (lazy
         incremental pushes, see push.incremental_push eager=False) the view
         is base ∪ deltas resolved latest-delta-wins — the LSM read path:
@@ -661,7 +659,7 @@ class StoreCatalog:
             raise ValueError(f"store {store!r} has no current version")
         base = self.read_version(spark, store, meta.current_version)
         deltas = self.list_delta_dirs(store, meta.current_version)
-        if not deltas or not resolve_deltas:
+        if not deltas:
             return base
         return self._resolve_delta_view(spark, base, deltas, meta.key_fields)
 

@@ -19,7 +19,7 @@ Every computed field also feeds the __veniceComputationError__ map channel
 Keyed compute runs per record next to the fetched rows, as the
 reference's ReadComputeOperator does: when StoreHandle.compute()'s key
 batch is read through Arrow (batch_get's conditions, at most
-engine.ARROW_BATCH_MAX_KEYS keys), execute(keys) evaluates every op on the
+served.ARROW_BATCH_MAX_KEYS keys), execute(keys) evaluates every op on the
 driver with the numpy twins of functions/vectors and returns a local frame
 with the Spark plan's exact schema — no Column tree, no Spark job. Any
 other key batch, an op the twins do not cover (a vector whose elements are
@@ -95,9 +95,10 @@ class KeyRows(NamedTuple):
 
 class _StoreFrame:
     """`df` is the frame a builder plans over, or a zero-arg function
-    building it. StoreHandle passes its unbuilt `df` so that a keyed
-    execute (served by batch_get) or an Arrow facet count never lists the
-    version: the frame is built on the first whole-store plan."""
+    building it. StoreHandle passes its snapshot's unbuilt frame so that a
+    keyed execute (served by batch_get's rows) or an Arrow facet count
+    never lists the version: the frame is built on the first whole-store
+    plan."""
 
     df: DataFrame | Callable[[], DataFrame]
 
@@ -114,12 +115,9 @@ class ComputeRequestBuilder(_StoreFrame):
     projections: list[str] = dc_field(default_factory=list)
     ops: list[_Op] = dc_field(default_factory=list)
     with_error_channel: bool = False
-    # StoreHandle.compute() plugs in batch_get here so execute(keys) rides
-    # the store's (partition_id, key) routing — directory pruning instead of
-    # a full-store scan for a bounded key batch
-    key_batch_source: Any = None
-    # ...and batch_get's Arrow read here: keys -> KeyRows, or None when
-    # the batch must go through key_batch_source
+    # StoreHandle.compute() plugs in batch_get's rows here: keys -> KeyRows
+    # read through Arrow, or the (partition_id, key) join frame, so
+    # execute(keys) prunes directories instead of scanning the whole store
     key_rows_source: Any = None
 
     # ---- builder surface (ComputeRequestBuilder.java:22-106) ----
@@ -238,21 +236,12 @@ class ComputeRequestBuilder(_StoreFrame):
         Built via StoreHandle.compute(), a key batch batch_get reads
         through Arrow is computed on the driver by the twins
         (_driver_schema/_driver_rows) into a local frame; any other batch
-        routes through batch_get so partition ids prune version
+        is batch_get's join, whose partition ids prune version
         directories. A builder constructed over a bare frame takes a
         broadcast key join."""
         if keys is None:
             keys = spark_or_keys  # .execute(keys) shape
-        keys = list(keys)  # read twice when the Arrow read declines
-        rows = self.key_rows_source(keys) if self.key_rows_source is not None else None
-        if rows is not None:
-            schema = self._driver_schema(rows.schema)
-            if schema is not None:
-                return rows.spark.createDataFrame(self._driver_rows(rows.table), schema)
-            joined = rows.spark.createDataFrame(rows.table, rows.schema)
-        elif self.key_batch_source is not None:
-            joined = self.key_batch_source(keys)
-        else:
+        if self.key_rows_source is None:
             df = self.frame()
             spark = df.sparkSession
             # explicit schema from the store frame: with only field NAMES an
@@ -266,6 +255,13 @@ class ComputeRequestBuilder(_StoreFrame):
             else:
                 kdf = spark.createDataFrame(list(keys), schema=key_schema)
             joined = df.join(F.broadcast(kdf), on=self.key_fields, how="inner")
+        else:
+            joined = self.key_rows_source(keys)
+            if isinstance(joined, KeyRows):
+                schema = self._driver_schema(joined.schema)
+                if schema is not None:
+                    return joined.spark.createDataFrame(self._driver_rows(joined.table), schema)
+                joined = joined.spark.createDataFrame(joined.table, joined.schema)
         return ComputeRequestBuilder(
             joined, self.key_fields, self.projections, self.ops, self.with_error_channel
         ).plan()

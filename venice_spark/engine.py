@@ -10,16 +10,18 @@ Usage:
     store.compute().project("name").dot_product(...).execute(keys)  # R4-R10
     store.aggregate().count_group_by_value(5, "field")              # R11
 
-The router/server tier of the reference collapses away. A get or a small
-batch get on a version with no delta log is the Fast Client's one
+The router/server tier of the reference collapses away. Each request
+resolves the served version once (served.ServedVersion: version, layout,
+delta slots, files and reader schema from one store.json read and one
+manifest read) and routes and reads through that one snapshot. A get or a
+small batch get on a version with no delta log is the Fast Client's one
 partition-aware hop: the driver routes each key and reads only the owning
 partition_id=P parquet dirs through Arrow, with no Spark job; a keyed
 compute over such a batch is evaluated on the fetched rows by numpy twins
 of the compute kernels, and facet counts over a small such version are
 counted on the driver the same way, as the reference's client counts them.
-Anything else
-is a broadcast semi-join against the current version's sorted parquet,
-served by the cluster (reference lifecycle:
+Anything else is a broadcast semi-join against the version's sorted
+parquet, served by the cluster (reference lifecycle:
 docs/contributing/architecture/read-path; StorageReadRequestHandler.java:539,699).
 """
 
@@ -27,19 +29,13 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator, Sequence
-from dataclasses import dataclass
 from typing import Any
 
-import pyarrow as pa
-import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Row, SparkSession
-from pyspark.sql.pandas.types import to_arrow_type
 
-from venice_spark.catalog import StoreCatalog, _data_files, _footer_schema, _partition_dirs
-from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder, KeyRows
+from venice_spark.catalog import StoreCatalog
+from venice_spark.compute import ComputeAggregationBuilder, ComputeRequestBuilder
 from venice_spark.push import (
     BandIndexViewDef,
     BatchPushJob,
@@ -54,239 +50,7 @@ from venice_spark.push import (
     open_view,
     repush,
 )
-
-# ---- Arrow point reads (the Fast Client / Da Vinci tier: one
-# partition-aware hop, no query engine in between) ----
-
-# Largest key batch get/batch_get serve through Arrow; past it the batch
-# takes the Spark broadcast join. Measured on a 600k-row, 32-partition
-# lineitem store (sf0.1, 4 cores, median of 5 collected batch_gets): Arrow
-# vs Spark 55 vs 574 ms at 100 keys, 118 vs 604 ms at 2,000, 899 vs
-# 1,118 ms at 30,000, and the crossover at about 45,000 (1,361 vs
-# 1,350 ms). The bound sits well under it because the Arrow read runs on
-# the driver alone and holds its result there: this is the size bound of
-# that driver-side collect.
-ARROW_BATCH_MAX_KEYS = 2000
-
-# Spark types whose Python value Arrow reproduces exactly. Left out, so a
-# store carrying them reads through Spark: TimestampType (Arrow returns a
-# UTC instant — an aware datetime, or a naive UTC pandas.Timestamp from an
-# INT96 file — where Spark returns a naive local-time datetime), MapType
-# (Arrow: list of tuples, Spark: dict), StructType (Arrow: dict, Spark:
-# Row), and every type not listed.
-_ARROW_EXACT = (
-    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.StringType, T.BinaryType, T.DateType,
-    T.TimestampNTZType, T.DecimalType,
-)
-
-_INT_RANGE = {
-    T.ByteType: 7, T.ShortType: 15, T.IntegerType: 31, T.LongType: 63,
-}
-
-
-def _arrow_exact(t: T.DataType) -> bool:
-    if isinstance(t, T.ArrayType):
-        return _arrow_exact(t.elementType)
-    return isinstance(t, _ARROW_EXACT)
-
-
-def _key_fits(v: Any, t: T.DataType) -> bool:
-    """The key component compares exactly against a column of type `t`:
-    a non-bool int in range for an integral column, a str for a
-    (default-collation) string column, a bool for a boolean column."""
-    if isinstance(t, T.BooleanType):
-        return isinstance(v, bool)
-    if t == T.StringType():
-        return isinstance(v, str)
-    bits = _INT_RANGE.get(type(t))
-    return (
-        bits is not None
-        and isinstance(v, int)
-        and not isinstance(v, bool)
-        and -(1 << bits) <= v < (1 << bits)
-    )
-
-
-# ---- Arrow facet counts (the reference counts facets on the client over
-# the records it holds, FacetCountingUtils.java:30) ----
-
-# Largest version, by its manifest `rows`, whose count_group_by_value the
-# driver counts through Arrow; past it the count is Spark's groupBy.
-# Measured on lineitem stores (32 partitions, 4 cores, median of 5
-# collected two-field counts, Arrow vs Spark): sf0.1's 457k rows 102 vs
-# 572 ms (two near-unique fields: 279 vs 680 ms); replicated 4x (1.8M
-# rows) 173 vs 533 ms, 16x (7.3M) 376 vs 669 ms, 32x (14.6M) 895 vs
-# 1,087 ms, so the crossover lies near 20M rows. The bound sits far under
-# it because the count holds the read columns in driver memory: this is
-# the size bound of that driver-side read.
-ARROW_SCAN_MAX_ROWS = 1_000_000
-
-# Reader types whose Arrow grouping and ordering are Spark's: integral,
-# boolean and date values, floats once -0.0 folds into 0.0 and every NaN
-# into one NaN (Spark's float normalisation, done in _top_values), and
-# default-collation strings, which both order by unsigned UTF-8 bytes.
-# Every other type counts through Spark.
-_ARROW_GROUPABLE = (
-    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.DateType,
-)
-
-
-def _arrow_groupable(t: T.DataType) -> bool:
-    return isinstance(t, _ARROW_GROUPABLE) or t == T.StringType()
-
-
-def _top_values(col: pa.ChunkedArray | pa.Array, top_k: int) -> pa.Table:
-    """The top_k (value, count) rows of `col` in the order of Spark's
-    groupBy/orderBy(count desc, value asc): ties by value with nulls first
-    and NaN above every number."""
-    if pa.types.is_floating(col.type):
-        col = pc.add(col, pa.scalar(0.0, col.type))  # -0.0 + 0.0 == +0.0
-        col = pc.if_else(pc.is_nan(col), pa.scalar(float("nan"), col.type), col)
-    counted = pc.value_counts(col)
-    values = counted.field("values")
-    # explicit null / number / NaN ranks, so Arrow's own null and NaN
-    # placement never decides an order
-    special = (
-        pc.if_else(pc.is_nan(values), 2, 1)
-        if pa.types.is_floating(values.type)
-        else pa.repeat(1, len(values))
-    )
-    table = pa.table(
-        {
-            "value": values,
-            "count": counted.field("counts"),
-            "rank": pc.if_else(pc.is_null(values), 0, special),
-        }
-    )
-    order = pc.sort_indices(
-        table,
-        sort_keys=[("count", "descending"), ("rank", "ascending"), ("value", "ascending")],
-    )
-    return table.take(order[:top_k]).select(["value", "count"])
-
-
-def _as_nullable(t: T.DataType) -> T.DataType:
-    """`t` as Spark's parquet reader reports it: array elements nullable
-    (the other nested types never leave Spark)."""
-    if isinstance(t, T.ArrayType):
-        return T.ArrayType(_as_nullable(t.elementType), True)
-    return t
-
-
-@dataclass(frozen=True)
-class _ServedFiles:
-    """A served version whose content is exactly its partition_id=P
-    parquet files (no lazy-delta slot), with its reader-schema plan and
-    the layout it was written with."""
-
-    version: int
-    version_dir: str
-    key_fields: list[str]
-    file_schema: T.StructType
-    plan: list  # [streaming.hybrid.ReaderColumn]
-    n_parts: int
-    md5p: bool
-
-    def schema(self, names: list[str]) -> T.StructType:
-        """df()'s schema of the named columns, in that order."""
-        by = {c.name: _as_nullable(c.type) for c in self.plan}
-        return T.StructType([T.StructField(n, by[n], True) for n in names])
-
-    def arrow_rows(self, kts: list[tuple]) -> pa.Table | None:
-        """Rows of the requested keys read with pyarrow from the owning
-        partition_id=P dirs only: one row per requested key occurrence
-        that exists (a key asked twice comes back twice, as from the
-        broadcast join), in request order, resolved through the reader
-        plan. None when Spark must serve the batch: too many keys, a
-        column type Arrow cannot reproduce, or a key component that does
-        not match its column's type family."""
-        from venice_spark.partitioner import partition_id_py
-
-        kf = self.key_fields
-        ftypes = {f.name: f.dataType for f in self.file_schema.fields}
-        if (
-            len(kts) > ARROW_BATCH_MAX_KEYS
-            or not all(_arrow_exact(c.type) for c in self.plan)
-            or not all(
-                len(kt) == len(kf)
-                and all(_key_fits(v, ftypes.get(k)) for k, v in zip(kf, kt))
-                for kt in kts
-            )
-        ):
-            return None
-        pids = sorted({partition_id_py(kt, self.n_parts, self.md5p) for kt in kts})
-        files = [
-            f
-            for p in pids
-            for f in _data_files(os.path.join(self.version_dir, f"partition_id={p}"))
-        ]
-        found = None
-        if files:  # a missing partition dir owns no rows: its keys are absent
-            cond = None
-            for i, k in enumerate(kf):
-                c = pc.field(k).isin(sorted({kt[i] for kt in kts}))
-                cond = c if cond is None else cond & c
-            found = ds.dataset(files, format="parquet").to_table(
-                columns=[f.name for f in self.file_schema.fields], filter=cond
-            )
-            rows_of: dict[tuple, list[int]] = {}
-            for i, kt in enumerate(zip(*(found.column(k).to_pylist() for k in kf))):
-                rows_of.setdefault(kt, []).append(i)
-            take = [i for kt in kts for i in rows_of.get(kt, ())]
-            found = found.take(pa.array(take, pa.int64()))
-        n = 0 if found is None else found.num_rows
-        cols = [
-            pa.nulls(n, to_arrow_type(c.type))
-            if found is None or c.action == "null"
-            else pc.cast(found.column(c.name), to_arrow_type(c.type), safe=False)
-            for c in self.plan
-        ]
-        return pa.table(cols, names=[c.name for c in self.plan])
-
-    def value_counts(
-        self, top_k: int, fields: Sequence[str], rows: int | None
-    ) -> dict[str, pa.Table] | None:
-        """Each field's top_k (value, count) table, counted with pyarrow
-        over the version's files (`rows` rows, from its manifest) through
-        the reader plan: promoted columns cast, registry-added ones all
-        null. None when Spark must count: no row count or more than
-        ARROW_SCAN_MAX_ROWS rows, a negative top_k, or a field that is not
-        a plain column of a type Arrow groups and orders as Spark does."""
-        by = {c.name: c for c in self.plan}
-        described = {f.name for f in self.file_schema.fields if f.metadata}
-        if (
-            rows is None
-            or rows > ARROW_SCAN_MAX_ROWS
-            or top_k < 0
-            or not all(
-                f in by and f not in described and _arrow_groupable(by[f].type)
-                for f in fields
-            )
-        ):
-            return None
-        files = [f for d in _partition_dirs(self.version_dir) for f in _data_files(d)]
-        read = ds.dataset(files, format="parquet").to_table(
-            columns=sorted({f for f in fields if by[f].action != "null"})
-        )
-        out = {}
-        for f in fields:
-            t = to_arrow_type(by[f].type)
-            col = (
-                pa.nulls(read.num_rows, t)
-                if by[f].action == "null"
-                else pc.cast(read.column(f), t, safe=False)
-            )
-            out[f] = _top_values(col, top_k)
-        return out
-
-
-def _arrow_row(table: pa.Table, i: int) -> Row:
-    """Row i built the way collect() builds its Rows."""
-    row = Row(*(col[i].as_py() for col in table.columns))
-    row.__fields__ = table.column_names
-    return row
+from venice_spark.served import ServedVersion
 
 
 class StoreHandle:
@@ -296,198 +60,42 @@ class StoreHandle:
         self.spark = engine.spark
         self.catalog = engine.catalog
 
+    def _served(self, version: int | None = None) -> ServedVersion:
+        """The one snapshot a request routes and reads through."""
+        return ServedVersion.take(self.spark, self.catalog, self.name, version)
+
     # ---- raw frames ----
     def df(self, version: int | None = None) -> DataFrame:
         """The store's content — delta-resolved for BOTH the current and a
         pinned version: a version's content includes its lazy-delta log
         (caught by the ingest lifecycle fuzzer: df(current_version) used to
         take the raw read_version path and silently drop/stale every
-        delta-touched row, e.g. in an export). Raw file access is
-        catalog.read_version.
-
-        Reader-schema resolution (r8): the reference deserializes every
-        read with the LATEST registered value schema
-        (schema/SchemaEntry.java — a client sees `count long` the moment
-        the promotion registers, old data included), so this surface
-        widens registry-promoted columns on read and null-fills
-        registry-added columns the version's files predate. Pure
-        projection: the casts fold into the scan, no rewrite."""
-        if version is None:
-            out = self.catalog.read_current(self.spark, self.name)
-        else:
-            base = self.catalog.read_version(self.spark, self.name, version)
-            deltas = self.catalog.list_delta_dirs(self.name, version)
-            if deltas:
-                base = self.catalog._resolve_delta_view(
-                    self.spark, base, deltas, self.key_fields
-                )
-            out = base
-        return self._resolve_reader_schema(out)
-
-    def _resolve_reader_schema(self, df: DataFrame) -> DataFrame:
-        """Resolve a batch read against the latest registered value schema:
-        a column whose registry type is an Avro PROMOTION of the file type
-        widens (int→long, float→double, string↔bytes — the same lattice
-        union_log_fields resolves on the serving logs); a registry column
-        absent from the files null-fills (defaulted add). Genuinely
-        incompatible registry types leave the file type untouched — the
-        files are ground truth on read, and a true retype migrates through
-        `admin compact --cast` / the next push."""
-        from venice_spark.streaming.hybrid import (
-            registered_value_types,
-            resolve_registry_reader,
-        )
-
-        return resolve_registry_reader(
-            df, registered_value_types(self.catalog, self.name)
-        )
+        delta-touched row, e.g. in an export), read against the latest
+        registered value schema (ServedVersion.frame). Raw file access is
+        catalog.read_version."""
+        return self._served(version).frame()
 
     @property
     def key_fields(self) -> list[str]:
         return self.catalog.get_key_fields(self.name)
 
-    def _served_partition_count(self) -> int:
-        return self._served_layout()[0]
-
-    def _served_layout(self) -> tuple[int, bool]:
-        """(partition_count, md5_parity) of the version BEING SERVED (its
-        manifest), not the live store config: update_store changes apply
-        from the next push, so routing reads with the new modulus — or the
-        new partitioner hash (code-review r4) — against data stamped with
-        the old one would silently miss every key."""
-        from venice_spark.push import _version_layout
-
-        meta = self.engine.catalog.get_store(self.name)
-        return _version_layout(
-            self.engine.catalog,
-            self.name,
-            self.engine.catalog.current_version(self.name),
-            meta,
-        )
-
-    @staticmethod
-    def _py_routable(key_tuples) -> bool:
-        """True when every key component is int/str/bool — the types whose
-        Python str() is byte-identical to Spark's cast-to-string, so the
-        driver-side hash twin is exact. Floats (Java '1.0E8' vs Python
-        '100000000.0') and nulls (concat_ws skips them) must route through
-        the real column expression instead."""
-        return all(
-            isinstance(c, (int, str)) for kt in key_tuples for c in kt
-        )
-
-    def _served_files(self) -> _ServedFiles | None:
-        """The served version as plain files, or None when its content
-        needs Spark to resolve (a lazy-delta slot, no partition_id= layout,
-        no footer schema)."""
-        from venice_spark.push import _version_layout
-        from venice_spark.streaming.hybrid import reader_plan, registered_value_types
-
-        meta = self.catalog.get_store(self.name)
-        v = meta.current_version
-        if v <= 0 or self.catalog.list_delta_dirs(self.name, v):
-            return None
-        vdir = self.catalog.version_dir(self.name, v)
-        file_schema = _footer_schema(vdir)
-        if file_schema is None:
-            return None
-        plan = reader_plan(
-            file_schema.fields, registered_value_types(self.catalog, self.name)
-        )
-        n_parts, md5p = _version_layout(self.catalog, self.name, v, meta)
-        return _ServedFiles(v, vdir, meta.key_fields, file_schema, plan, n_parts, md5p)
-
-    def _key_tuples(self, keys: Sequence[Any]) -> list[tuple]:
-        kf = self.key_fields
-        return [((k,) if len(kf) == 1 else tuple(k)) for k in keys]
-
-    def _keys_with_pid(
-        self, kts: list[tuple], served: _ServedFiles | None
-    ) -> tuple[DataFrame, list[int]]:
-        """Key DataFrame stamped with each key's partition id — the router's
-        key→partition math (VeniceDelegateMode.java:191). For int/str keys
-        this is computed DRIVER-side with the pure-Python twin of the
-        partitioner (partition_id_py, parity-tested against the column
-        expression) so no Spark job is spent on routing; other key types
-        fall back to stamping with the actual column expression (one tiny
-        local job over the key rows). The ids drive directory pruning. The
-        key types come from the files' footer schema when the version is
-        plain files, so no schema-inference job is spent on them either."""
-        from venice_spark.partitioner import partition_id_py, with_partition_id
-
-        n_parts, md5p = self._served_layout()
-        kf = self.key_fields
-        key_schema = (
-            served.schema(kf) if served is not None else self.df().select(*kf).schema
-        )
-        if self._py_routable(kts):
-            rows = [(*kt, partition_id_py(kt, n_parts, md5p)) for kt in kts]
-            schema = key_schema.add("partition_id", T.IntegerType(), False)
-            kdf = self.spark.createDataFrame(rows, schema=schema)
-            return kdf, sorted({r[-1] for r in rows})
-        base = self.spark.createDataFrame(kts, schema=key_schema)
-        kdf = with_partition_id(base, kf, n_parts, md5p)
-        pids = sorted(
-            r[0] for r in kdf.select("partition_id").distinct().collect()
-        )
-        return kdf, pids
-
     # ---- R1 single get ----
     def get(self, key: Any) -> Row | None:
         """Served from the owning partition dir through Arrow (no Spark
-        job) when _ServedFiles.arrow_rows takes the key; otherwise a
+        job) when ServedVersion.arrow_rows takes the key; otherwise a
         partition-pruned Spark read of df()."""
-        from venice_spark.partitioner import partition_id_py
-
-        kf = self.key_fields
-        key_tuple = self._key_tuples([key])[0]
-        served = self._served_files()
-        found = served.arrow_rows([key_tuple]) if served is not None else None
-        if found is not None:
-            return _arrow_row(found, 0) if found.num_rows else None
-        if self._py_routable([key_tuple]):
-            n_parts, md5p = self._served_layout()
-            pid = partition_id_py(key_tuple, n_parts, md5p)
-        else:
-            _, pids = self._keys_with_pid([key_tuple], served)
-            pid = pids[0]
-        cond = F.col("partition_id") == F.lit(pid)
-        for k, v in zip(kf, key_tuple):
-            cond = cond & (F.col(k) == F.lit(v))
-        rows = self.df().filter(cond).drop("partition_id").limit(1).collect()
-        return rows[0] if rows else None
+        return self._served().get(key)
 
     # ---- R2 batch get ----
     def batch_get(self, keys: Sequence[Any]) -> DataFrame:
         """Missing keys are simply absent (AvroGenericStoreClient.java:58).
         Columns: the key fields, then the rest in df() order. Up to
-        ARROW_BATCH_MAX_KEYS keys on a plain-files version are read through
+        served.ARROW_BATCH_MAX_KEYS keys on a plain-files version are read through
         Arrow into a local frame (no Spark job to collect it). Otherwise a
         broadcast hash join on (partition_id, key): the partition ids prune
         version directories (only dirs owning requested keys are scanned),
         key-sorted files prune rowgroups via min/max."""
-        kts = self._key_tuples(keys)
-        served = self._served_files()
-        rows = self._arrow_batch(kts, served)
-        if rows is not None:
-            return self.spark.createDataFrame(rows.table, rows.schema)
-        kdf, pids = self._keys_with_pid(kts, served)
-        return (
-            self.df()
-            .filter(F.col("partition_id").isin(pids))
-            .join(F.broadcast(kdf), on=["partition_id", *self.key_fields], how="inner")
-            .drop("partition_id")
-        )
-
-    def _arrow_batch(self, kts: list[tuple], served: _ServedFiles | None) -> KeyRows | None:
-        """batch_get's rows read through Arrow, the key fields first, then
-        the rest in df() order; None when Spark must serve the batch."""
-        found = served.arrow_rows(kts) if served is not None else None
-        if found is None:
-            return None
-        kf = self.key_fields
-        order = [*kf, *(n for n in found.column_names if n not in kf)]
-        return KeyRows(self.spark, found.select(order), served.schema(order))
+        return self._served().batch_get(keys)
 
     # ---- R3 streaming batch get ----
     def streaming_batch_get(self, keys: Sequence[Any]) -> Iterator[Row]:
@@ -739,52 +347,24 @@ class StoreHandle:
 
     # ---- R4-R10 compute ----
     def compute(self) -> ComputeRequestBuilder:
-        # R4-R8 key batches ride R2's routing: a batch batch_get reads
-        # through Arrow is computed on the driver over the fetched rows;
-        # any other goes through batch_get, so partition ids prune version
-        # directories instead of the compute join scanning every partition
-        # for a handful of keys. The store frame is passed unbuilt
-        # (self.df): only a whole-store plan lists the version for it.
+        """A builder over one snapshot of the served version. R4-R8 key
+        batches ride R2's routing: a batch batch_get reads through Arrow is
+        computed on the driver over the fetched rows; any other is
+        batch_get's partition-pruned join, so partition ids prune version
+        directories instead of the compute join scanning every partition
+        for a handful of keys. The store frame is passed unbuilt: only a
+        whole-store plan lists the version for it."""
+        served = self._served()
         return ComputeRequestBuilder(
-            self.df,
-            self.key_fields,
-            key_batch_source=self.batch_get,
-            key_rows_source=lambda keys: self._arrow_batch(
-                self._key_tuples(keys), self._served_files()
-            ),
+            served.frame, served.key_fields, key_rows_source=served.key_rows
         )
 
     # ---- R11/R12 ----
     def aggregate(self) -> ComputeAggregationBuilder:
+        served = self._served()
         return ComputeAggregationBuilder(
-            self.df, self.key_fields, value_counts_source=self._arrow_value_counts
+            served.frame, served.key_fields, value_counts_source=served.value_counts
         )
-
-    def _arrow_value_counts(
-        self, top_k: int, fields: Sequence[str]
-    ) -> dict[str, DataFrame] | None:
-        """count_group_by_value counted on the driver through Arrow when
-        _ServedFiles.value_counts takes the version: local frames with the
-        Spark groupBy's exact schema, no Spark job. None otherwise."""
-        served = self._served_files()
-        if served is None:
-            return None
-        manifest = self.catalog.version_manifest(self.name, served.version) or {}
-        tables = served.value_counts(top_k, fields, manifest.get("rows"))
-        if tables is None:
-            return None
-        return {
-            f: self.spark.createDataFrame(
-                table,
-                T.StructType(
-                    [
-                        T.StructField("value", served.schema([f])[f].dataType, True),
-                        T.StructField("count", T.LongType(), False),
-                    ]
-                ),
-            )
-            for f, table in tables.items()
-        }
 
     # ---- R16 ----
     def approx_unique_keys(self, rsd: float = 0.05) -> int:
@@ -793,9 +373,10 @@ class StoreHandle:
         whole key as a struct, so no separator inside a string field can
         make two keys one. Its hash skips a null field, so each field's
         null flag rides along: (x, NULL) and (NULL, x) stay two keys."""
-        kf = self.key_fields
+        served = self._served()
+        kf = served.key_fields
         key = F.struct(*kf, *(F.col(k).isNull() for k in kf))
-        row = self.df().select(F.approx_count_distinct(key, rsd).alias("n")).collect()[0]
+        row = served.frame().select(F.approx_count_distinct(key, rsd).alias("n")).collect()[0]
         return int(row["n"])
 
     # ---- W12/W13 + §2.5: hybrid store serving loop ----
@@ -894,8 +475,6 @@ class StoreHandle:
         union: each flush writes only the columns its ops carried, and a
         bare read samples one footer and would silently drop the other
         flushes' value columns (code-review r4)."""
-        import os
-
         from venice_spark.producer import read_rt_log
         from venice_spark.streaming import hybrid
 
@@ -903,12 +482,12 @@ class StoreHandle:
         store_dir = self.catalog.store_dir(self.name)
         serving = os.path.join(store_dir, serving_name)
         ckpt = os.path.join(store_dir, ckpt_name)
-        cur = self.catalog.current_version(self.name)
-        hybrid.reset_serving_if_stale(serving, ckpt, cur)
+        served = self._served()
+        hybrid.reset_serving_if_stale(serving, ckpt, served.version)
         replay = make_replay(serving)
         if not os.path.isdir(serving):
-            replay.seed(self.df().drop("partition_id"))
-            hybrid.mark_seeded_version(serving, cur)
+            replay.seed(served.frame().drop("partition_id"))
+            hybrid.mark_seeded_version(serving, served.version)
         rt_dir = self.catalog.update_log_dir(self.name)
         if os.path.isdir(rt_dir) and any(
             f.endswith(".parquet") for f in os.listdir(rt_dir)
@@ -1033,7 +612,6 @@ class StoreHandle:
         growth stays bounded and a hot serve loop pays zero extra Spark
         jobs between flushes."""
         import hashlib
-        import os
         import time
         import warnings
 
@@ -1190,10 +768,10 @@ class VeniceSparkEngine:
         path as the API. Re-call after pushes to pick up new versions."""
         names = []
         for s in self.catalog.list_stores():
-            if self.catalog.current_version(s) > 0:
-                name = f"{prefix}{s}"
-                self.catalog.read_current(self.spark, s).createOrReplaceTempView(name)
-                names.append(name)
+            served = ServedVersion.take(self.spark, self.catalog, s)
+            if served.version > 0:
+                served.frame().createOrReplaceTempView(f"{prefix}{s}")
+                names.append(f"{prefix}{s}")
         return names
 
     def store_stats(self, store: str) -> dict:
@@ -1201,9 +779,8 @@ class VeniceSparkEngine:
         bytes, partition count, and per-partition row skew (max/mean — the
         signal that a hot key needs the salting escalation). One scan with
         a partial-agg groupBy on partition_id."""
-        import os
-
-        df = self.catalog.read_current(self.spark, store)
+        served = ServedVersion.take(self.spark, self.catalog, store)
+        df = served.frame()
         by_part = (
             df.groupBy("partition_id").count().collect()
             if "partition_id" in df.columns
@@ -1211,24 +788,19 @@ class VeniceSparkEngine:
         )
         rows = sum(r["count"] for r in by_part) if by_part else df.count()
         counts = [r["count"] for r in by_part]
-        v = self.catalog.current_version(store)
-        vdir = self.catalog.version_dir(store, v)
         size = sum(
             os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(vdir)
+            for dp, _, fs in os.walk(served.version_dir)
             for f in fs
         )
         # skew denominator is the LAYOUT's partition count, not the count of
         # non-empty partitions — a hot key that lands everything in one
         # directory must read as skew = n_parts, not as perfectly balanced
-        from venice_spark.push import _version_layout
-
-        meta = self.catalog.get_store(store)
-        n_parts = _version_layout(self.catalog, store, v, meta)[0]
+        n_parts = served.n_parts
         mean = rows / n_parts if n_parts else float(rows)
         return {
             "store": store,
-            "version": v,
+            "version": served.version,
             "rows": rows,
             "bytes": size,
             "partitions": n_parts,

@@ -113,10 +113,16 @@ def _version_layout(catalog, store: str, version: int, meta) -> tuple[int, bool]
     manifest — never the live config: update_store can change either between
     pushes, and mixing layouts silently splits/misses keys (code-review r4
     extended the ADVICE-r3 count check to the partitioner hash)."""
-    m = catalog.version_manifest(store, version) or {}
-    count = int(m.get("partition_count", meta.partition_count))
-    if "partitioner" in m:
-        md5p = m["partitioner"] == "md5"
+    return manifest_layout(catalog.version_manifest(store, version) or {}, meta)
+
+
+def manifest_layout(manifest: dict, meta) -> tuple[int, bool]:
+    """_version_layout's rule over an already-read manifest: its recorded
+    partition count and partitioner, the store config for a manifest that
+    predates them."""
+    count = int(manifest.get("partition_count", meta.partition_count))
+    if "partitioner" in manifest:
+        md5p = manifest["partitioner"] == "md5"
     else:
         md5p = bool(meta.config.get("md5_parity", False))
     return count, md5p

@@ -157,7 +157,9 @@ def seek_to_beginning_of_push(
 
 class ChangeCaptureStream:
     """Streaming CDC: emits (key, before, after, op, ts) per micro-batch into
-    an output dir, maintaining a snapshot for `before` resolution."""
+    an output dir, maintaining a snapshot of each key's winning row
+    (tombstones kept, as op DELETE) for `before` resolution and for
+    dropping rows that arrive stale."""
 
     def __init__(
         self,
@@ -176,9 +178,6 @@ class ChangeCaptureStream:
         self.ts_col = ts_col
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
         spark = self.spark
         kf = self.key_fields
         vc, tc = self.value_col, self.ts_col
@@ -187,14 +186,18 @@ class ChangeCaptureStream:
         # swap that died between its renames first — the bare except below
         # would otherwise read the absent dir as "no snapshot yet" and emit
         # NULL `before` values for every key (ADVICE r5)
-        from venice_spark.streaming.hybrid import recover_swap_dir
+        from venice_spark.streaming.hybrid import (
+            _is_delete,
+            atomic_swap_dir,
+            recover_swap_dir,
+            resolve_latest,
+        )
 
         recover_swap_dir(self.snapshot_dir)
         try:
             snap = spark.read.parquet(self.snapshot_dir)
         except Exception:
             snap = None
-        from venice_spark.streaming.hybrid import _is_delete, resolve_latest
 
         batch = batch_df
         if "op" not in batch.columns:
@@ -204,6 +207,30 @@ class ChangeCaptureStream:
         batch = batch.withColumn(
             "op", F.when(_is_delete(), F.lit("DELETE")).otherwise(F.lit("PUT"))
         )
+        vtype = batch.schema[vc].dataType
+        # the snapshot keeps each key's winning row, tombstones included,
+        # and a batch row that loses to it by resolve_latest's order (ts,
+        # then DELETE wins a tie; an equal-ts pair of one kind goes to the
+        # later arrival, as HybridReplay's batch stamp orders it) is stale:
+        # it emits no event and leaves the snapshot alone, as the
+        # reference's DCR never writes a stale update to the version topic
+        if snap is not None:
+            if "op" not in snap.columns:  # a snapshot written before tombstones
+                snap = snap.withColumn("op", F.lit("PUT"))
+            snap = snap.select(*kf, vc, tc, "op")
+            prev = snap.select(
+                *kf,
+                F.when(~_is_delete(), F.col(vc)).alias("__snap_val"),
+                F.col(tc).alias("__snap_ts"),
+                _is_delete().alias("__snap_del"),
+            )
+            stale = (F.col("__snap_ts") > F.col(tc)) | (
+                (F.col("__snap_ts") == F.col(tc)) & F.col("__snap_del") & ~_is_delete()
+            )
+            batch = batch.join(prev, on=kf, how="left")
+            batch = batch.filter(~F.coalesce(stale, F.lit(False))).drop("__snap_ts", "__snap_del")
+        else:
+            batch = batch.withColumn("__snap_val", F.lit(None).cast(vtype))
 
         # within-batch ordering: apply ops per key in ts order. `before` is
         # the PREVIOUS row's post-op state: NULL when the previous op was a
@@ -214,15 +241,9 @@ class ChangeCaptureStream:
         seq = batch.withColumn("__prev_op", F.lag("op").over(w)).withColumn(
             "__prev_in_batch", F.lag(vc).over(w)
         )
-        if snap is not None:
-            prev = snap.select(*kf, F.col(vc).alias("__snap_val"))
-            seq = seq.join(prev, on=kf, how="left")
-        else:
-            seq = seq.withColumn("__snap_val", F.lit(None).cast(seq.schema[vc].dataType))
-
         before = (
             F.when(F.col("__prev_op").isNull(), F.col("__snap_val"))
-            .when(F.col("__prev_op") == "DELETE", F.lit(None).cast(seq.schema[vc].dataType))
+            .when(F.col("__prev_op") == "DELETE", F.lit(None).cast(vtype))
             .otherwise(F.col("__prev_in_batch"))
         )
         events = seq.select(
@@ -234,22 +255,17 @@ class ChangeCaptureStream:
         )
         events.write.mode("append").parquet(self.out_dir)
 
-        # advance the snapshot: latest op per key, deletes drop the key,
-        # by the serving replays' one latest-wins rule (resolve_latest:
-        # DELETE beats PUT on an equal ts, then the larger value JSON) —
-        # so an equal-ts PUT pair leaves the snapshot holding the value
-        # HybridReplay.read() serves
-        latest = resolve_latest(batch, kf, tc)
-        new_rows = latest.filter(~_is_delete()).select(*kf, vc, tc)
+        # advance the snapshot: latest op per key by the serving replays'
+        # one latest-wins rule (resolve_latest: DELETE beats PUT on an equal
+        # ts, then the larger value JSON) — so an equal-ts PUT pair leaves
+        # the snapshot holding the value HybridReplay.read() serves. Every
+        # row left beats its key's snapshot row, so the winner replaces it.
+        latest = resolve_latest(batch.drop("__snap_val"), kf, tc)
+        new_rows = latest.select(*kf, F.when(~_is_delete(), F.col(vc)).alias(vc), tc, "op")
         if snap is not None:
-            touched = latest.select(*kf)
-            kept = snap.join(touched, on=kf, how="left_anti")
-            new_snap = kept.unionByName(new_rows)
-        else:
-            new_snap = new_rows
-        from venice_spark.streaming.hybrid import atomic_swap_dir
-
-        atomic_swap_dir(new_snap, self.snapshot_dir, tag="cdc")
+            kept = snap.join(latest.select(*kf), on=kf, how="left_anti")
+            new_rows = kept.unionByName(new_rows)
+        atomic_swap_dir(new_rows, self.snapshot_dir, tag="cdc")
 
     def start(
         self,
