@@ -76,29 +76,30 @@ def test_knn_join_lsh_has_no_cartesian_product(spark, sf_dir):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
 
 
-def test_batch_push_dedup_is_single_shuffle(spark, tmp_path):
-    """The push pipeline's partition + dedup + sort must plan exactly ONE
-    exchange: the groupBy(partition_id, key) dedup reuses the repartition's
-    hash partitioning (partition_id is a function of the key). A second
-    exchange here doubles the dominant cost of every 100 TB push."""
-    from venice_spark.partitioner import with_partition_id
+def test_batch_push_dedup_is_single_shuffle(spark):
+    """The frame every batch push and slot write runs (push._dedup_frame):
+    partition + dedup (+ the I6 distinct count) + sort plan exactly ONE
+    exchange, the partition_id shuffle — the groupBy(partition_id, key)
+    dedup reuses its hash partitioning (partition_id is a function of the
+    key). A second exchange here doubles the dominant cost of every 100 TB
+    push. Cases: dedup_order_col, the conflict check, allow_duplicate_key."""
+    from venice_spark.push import _dedup_frame
 
     df = spark.createDataFrame(
         [(i % 50, float(i), i) for i in range(200)], "k long, v double, ts long"
     )
-    parted = with_partition_id(df, ["k"], 8).repartition(8, F.col("partition_id"))
-    out = (
-        parted.groupBy("partition_id", "k")
-        .agg(F.max_by(F.struct("v", "ts"), F.col("ts")).alias("__v"))
-        .select("partition_id", "k", "__v.*")
-        .sortWithinPartitions("partition_id", "k")
-    )
-    plan = _plan(out)
-    assert plan.count("Exchange") == 1, plan
-    # the output sort must be ELIMINATED: the SortAggregate already emits
-    # (partition_id, key) order, so only the aggregate's own input sort
-    # remains — a second Sort would re-sort every partition after the agg
-    assert plan.count("Sort ") == 1, plan
+    for order_col, check in (("ts", False), (None, True), (None, False)):
+        plan = _plan(_dedup_frame(df, ["k"], 8, False, order_col, check))
+        assert plan.count("Exchange") == 1, plan
+        assert "REPARTITION_BY_COL" in plan, plan
+        # the output sort must be ELIMINATED: the SortAggregate already
+        # emits (partition_id, key) order, so only the aggregation's own
+        # input sorts remain — a Sort above the aggregate would re-sort
+        # every partition
+        lines = plan.splitlines()
+        first_sort = next(i for i, line in enumerate(lines) if "Sort [" in line)
+        first_agg = next(i for i, line in enumerate(lines) if "SortAggregate" in line)
+        assert first_agg < first_sort, plan
 
 
 def test_incremental_push_merge_never_shuffles_base(spark, sf_dir):
@@ -167,7 +168,7 @@ def test_engine_fold_never_shuffles_base(spark, tmp_path, monkeypatch, fold):
         spark.conf.set(key, prev)
     path = _ancestry(plan, f"{eng.catalog.version_dir('f', 1)}]")
     first_exchange = next(i for i, line in enumerate(path) if "Exchange" in line)
-    assert "REPARTITION_BY_NUM" in path[first_exchange], plan
+    assert "REPARTITION_BY_COL" in path[first_exchange], plan
     below = path[:first_exchange]
     assert any("BroadcastHashJoin" in op and "LeftAnti" in op for op in below), plan
     assert not any("Window" in op for op in below), plan
@@ -267,8 +268,11 @@ def test_batch_over_arrow_bound_plans_broadcast_join(spark, sf_dir, tmp_path):
 def test_plain_version_frame_takes_footer_schema_without_a_job(spark, tmp_path):
     """df() of a plain version reads with the files' footer schema: the
     schema (nullability and field metadata included) and rows of an
-    inferred spark.read.parquet, and no schema-inference job."""
+    inferred spark.read.parquet, and no schema-inference job. A live
+    delta slot is read the same way: the resolved frame still builds with
+    no job and matches the resolve over inferred reads."""
     from venice_spark import VeniceSparkEngine
+    from venice_spark.catalog import StoreCatalog
 
     eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
     eng.create_store("p", key_fields=["k"], partition_count=4)
@@ -294,6 +298,21 @@ def test_plain_version_frame_takes_footer_schema_without_a_job(spark, tmp_path):
     assert [f.nullable for f in df.schema.fields] == [f.nullable for f in inferred.schema.fields]
     assert df.schema["s"].metadata == inferred.schema["s"].metadata
     assert sorted(map(repr, df.collect())) == sorted(map(repr, inferred.collect()))
+
+    slot = src.filter("k < 5").withColumn("s", F.lit("new"))
+    eng.incremental_push("p", slot, eager=False)
+    (slot_dir,) = eng.catalog.list_delta_dirs("p", 1)
+    want = StoreCatalog._resolve_delta_view(
+        spark, inferred, [spark.read.parquet(slot_dir)], ["k"]
+    )
+    df, jobs = _spark_jobs(spark, st.df)
+    assert jobs == 0
+    assert df.schema == want.schema
+    assert sorted(map(repr, df.collect())) == sorted(map(repr, want.collect()))
+    # the get under the slot: the resolve's shuffle map stage and its
+    # result, and no inference job for the slot
+    row, jobs = _spark_jobs(spark, lambda: st.get(3))
+    assert row["s"] == "new" and jobs <= 2
 
 
 def test_keyed_compute_and_facet_counts_launch_no_spark_job(spark, sf_dir, tmp_path):

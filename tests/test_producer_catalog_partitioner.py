@@ -63,17 +63,22 @@ def test_md5_partition_parity(spark):
 
 
 def test_repartition_and_sort_layout(spark):
+    """The Spark partition count follows the shuffle settings, not the
+    store's partition count; each partition id lands in exactly one Spark
+    partition, and within it rows come grouped by id and key-sorted (one
+    key-sorted file per id on a partitionBy write)."""
     df = spark.createDataFrame([(i, f"v{i}") for i in range(100)], "k long, v string")
     out = repartition_and_sort(df, ["k"], 4)
-    assert out.rdd.getNumPartitions() == 4
-    # within every partition, keys are sorted
+
     def check(it):
-        keys = [r["k"] for r in it]
-        assert keys == sorted(keys)
-        return iter([len(keys)])
+        rows = [(r["partition_id"], r["k"]) for r in it]
+        assert rows == sorted(rows)
+        return iter([(pid, sum(p == pid for p, _ in rows)) for pid in {p for p, _ in rows}])
 
     counts = out.rdd.mapPartitions(check).collect()
-    assert sum(counts) == 100
+    pids = [pid for pid, _ in counts]
+    assert sorted(pids) == sorted(set(pids)) == [0, 1, 2, 3]
+    assert sum(n for _, n in counts) == 100
 
 
 def test_version_manifest_written_and_readable(spark, tmp_path):

@@ -996,3 +996,137 @@ def test_batch_push_order_ties_break_like_incremental_push(spark, tmp_root, d_fi
     eng.push("i", spark.createDataFrame([("z", "base", 0)], fs))
     eng.incremental_push("i", dup, order_col="_rmd_ts")
     assert eng.store("b").get("k")["val"] == eng.store("i").get("k")["val"] == "d"
+
+
+def _spark_jobs(spark, fn):
+    """(result, Spark jobs launched while fn ran)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
+def test_refused_batch_push_changes_nothing(engine, spark):
+    """The I6 verdict is observed on the version write and taken before
+    the views, the manifest and the commit: a refused push leaves the
+    versions, the pointer, the view declaration and the session cache as
+    they were, and removes its version dir. Its reserved version number
+    stays burnt."""
+    import os
+
+    from venice_spark.push import DuplicateKeyError
+
+    cat = engine.catalog
+    schema = "key string, val double, _rmd_ts long"
+    view = MaterializedViewDef("by_val", partition_count=1, key_fields=["val"])
+    engine.push("s", engine.store("s").df(), allow_duplicate_key=True, views=[view])
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def state():
+        meta = cat.get_store("s")
+        return (
+            cat.list_versions("s"), meta.current_version,
+            meta.config.get("views"), cm.cachedData().size(),
+        )
+
+    before = state()
+    refused = cat.get_store("s").largest_used_version + 1
+    bad = spark.createDataFrame(
+        [("k1", 1.0, 1), ("k1", 2.0, 1), ("k2", 3.0, 1)], schema
+    )
+    other = MaterializedViewDef("other", partition_count=1, key_fields=["val"])
+    with pytest.raises(DuplicateKeyError, match="k1"):
+        engine.push("s", bad, views=[other], storage_quota_bytes=10**9)
+    assert state() == before
+    assert not [
+        n for n in os.listdir(cat.store_dir("s")) if n.startswith(f"v{refused}")
+    ]
+    res = engine.push("s", bad.filter("key = 'k2'"))
+    assert res.version == refused + 1
+    assert engine.store("s").get("k2")["val"] == 3.0
+
+
+def test_refused_lazy_push_leaves_no_slot_or_staging(engine, spark):
+    """A lazy push's verdict is observed on its staging write and taken
+    before the rename: no d{K} slot, and the staging dir is removed."""
+    import os
+
+    from venice_spark.push import DuplicateKeyError
+
+    cat = engine.catalog
+    bad = spark.createDataFrame(
+        [("k7", 1.0, 5), ("k7", 2.0, 5), ("k8", 1.0, 5)],
+        "key string, val double, _rmd_ts long",
+    )
+    with pytest.raises(DuplicateKeyError, match="k7"):
+        engine.incremental_push("s", bad, eager=False)
+    assert cat.list_delta_dirs("s", 1) == []
+    assert not os.path.exists(cat.deltas_dir("s", 1))
+    assert not [
+        n for n in os.listdir(cat.store_dir("s")) if n.startswith("_delta_staging-")
+    ]
+
+
+def test_clean_pushes_run_one_shuffle_and_one_write(engine, spark):
+    """A clean batch push and a clean lazy push (both with the duplicate-key
+    check on) run two jobs: the partition_id shuffle's map stage and the
+    write, the check observed on the write — no persist, no separate
+    conflict collect, no aggregation exchange of its own."""
+    schema = "key string, val double, _rmd_ts long"
+    full = spark.createDataFrame([(f"k{i}", float(i), 1) for i in range(200)], schema)
+    _, jobs = _spark_jobs(spark, lambda: engine.push("s", full))
+    assert jobs <= 2
+    delta = spark.createDataFrame(
+        [(f"k{i}", -1.0, 2) for i in range(0, 200, 4)] * 2, schema
+    )
+    res, jobs = _spark_jobs(
+        spark, lambda: engine.incremental_push("s", delta, eager=False)
+    )
+    assert res.rows == 50 and jobs <= 2
+    assert engine.store("s").get("k8")["val"] == -1.0
+
+
+@pytest.mark.parametrize("shuffle_partitions", [3, 64])
+def test_writes_leave_one_key_sorted_file_per_partition_id(
+    spark, tmp_path, shuffle_partitions
+):
+    """The layout the Arrow reads depend on, whatever the shuffle's task
+    count (spark.sql.shuffle.partitions below and above the store's
+    partition count): a full push, a lazy slot and a compaction each leave
+    exactly one data file per partition_id=P dir, key-sorted, holding only
+    keys that route to P."""
+    import pyarrow.parquet as pq
+
+    from venice_spark.catalog import _data_files, _partition_dirs
+    from venice_spark.partitioner import partition_id_py
+
+    schema = "k long, v double"
+    full = [(i, i * 1.0) for i in range(400)]
+    upserts = [(i, -1.0) for i in range(0, 400, 3)]
+    conf = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, str(shuffle_partitions))
+    try:
+        eng = VeniceSparkEngine(spark, str(tmp_path / "root"))
+        eng.create_store("L", key_fields=["k"], partition_count=8)
+        eng.push("L", spark.createDataFrame(full, schema))
+        eng.incremental_push("L", spark.createDataFrame(upserts, schema), eager=False)
+        (slot,) = eng.catalog.list_delta_dirs("L", 1)
+        compacted = eng.compact("L").version
+    finally:
+        spark.conf.set(conf, prev)
+    written = {
+        "push": (eng.catalog.version_dir("L", 1), full),
+        "slot": (slot, upserts),
+        "compaction": (eng.catalog.version_dir("L", compacted), full),
+    }
+    for what, (d, rows) in written.items():
+        dirs = {int(p.rsplit("=", 1)[1]): p for p in _partition_dirs(d)}
+        assert set(dirs) == {partition_id_py((k,), 8) for k, _ in rows}, what
+        for pid, p in dirs.items():
+            files = _data_files(p)
+            assert len(files) == 1, (what, p, files)
+            keys = pq.read_table(files[0]).column("k").to_pylist()
+            assert keys == sorted(keys), (what, p)
+            assert {partition_id_py((k,), 8) for k in keys} == {pid}, (what, p)
+    assert eng.store("L").get(3)["v"] == -1.0 and eng.store("L").get(4)["v"] == 4.0

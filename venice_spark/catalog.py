@@ -144,6 +144,18 @@ def _footer_schema(version_dir: str) -> T.StructType | None:
     return None
 
 
+def read_partitioned(spark: SparkSession, d: str) -> DataFrame:
+    """A partition_id=P-partitioned dir (a version or a delta slot). With a
+    footer schema the read takes it (plus the int partition column)
+    instead of running Spark's schema-inference job; otherwise (an empty
+    dir written plain) Spark infers."""
+    schema = _footer_schema(d)
+    if schema is None:
+        return spark.read.parquet(d)
+    pid = T.StructField("partition_id", T.IntegerType(), True)
+    return spark.read.schema(T.StructType([*schema.fields, pid])).parquet(d)
+
+
 class StoreCatalog:
     """Filesystem-backed catalog of versioned stores."""
 
@@ -696,7 +708,7 @@ class StoreCatalog:
         wkeys = window_keys if window_keys is not None else ["partition_id"] + list(key_fields)
         parts = [base.withColumn("__src", F.lit(0))]
         for i, d in enumerate(delta_dirs, start=1):
-            dd = spark.read.parquet(d) if isinstance(d, str) else d
+            dd = read_partitioned(spark, d) if isinstance(d, str) else d
             parts.append(dd.withColumn("__src", F.lit(i)))
         allp = parts[0]
         for p in parts[1:]:
@@ -710,15 +722,8 @@ class StoreCatalog:
         return drop_tombstones(out)
 
     def read_version(self, spark: SparkSession, store: str, version: int) -> DataFrame:
-        """A version's files. With a footer schema the read takes it (plus
-        the int partition column) instead of running Spark's
-        schema-inference job; otherwise Spark infers."""
-        vdir = self.version_dir(store, version)
-        schema = _footer_schema(vdir)
-        if schema is None:
-            return spark.read.parquet(vdir)
-        pid = T.StructField("partition_id", T.IntegerType(), True)
-        return spark.read.schema(T.StructType([*schema.fields, pid])).parquet(vdir)
+        """A version's files (`read_partitioned`)."""
+        return read_partitioned(spark, self.version_dir(store, version))
 
     # ---- internals ----
     def _write_meta(self, meta: StoreMeta) -> None:

@@ -7,9 +7,10 @@ Byte-wise Horner reduction of the digest mod N is mathematically identical to
 interpreting the 16-byte digest as a big-endian unsigned integer mod N, so we
 compute exactly that — parity without porting the loop.
 
-At scale: the partition id is computed as a *column*, so repartition(n, col)
-stays in the DataFrame API (no RDD escape hatch like the reference's
-spark/utils/SparkPartitionUtils.java:22-28 needs) and survives AQE.
+At scale: the partition id is computed as a *column*, so the shuffle on it
+(`partition_shuffle`) stays in the DataFrame API (no RDD escape hatch like
+the reference's spark/utils/SparkPartitionUtils.java:22-28 needs) and
+AQE can coalesce it.
 """
 
 from __future__ import annotations
@@ -61,16 +62,35 @@ def with_partition_id(
     return df.withColumn("partition_id", pid)
 
 
+def partition_shuffle(
+    df: DataFrame, key_fields: list[str], num_partitions: int, md5_parity: bool = False
+) -> DataFrame:
+    """Stamp `partition_id` and shuffle on it: the one partition_id
+    exchange every version, slot and view write plans. The shuffle is
+    REPARTITION_BY_COL, so its task count follows
+    `spark.sql.shuffle.partitions` and AQE coalesces it to the data's size
+    — a 500-row slot of a 32-partition store runs a task or two, not 32
+    with a dozen empty. A partition id still hashes to exactly one reducer
+    and coalescing only merges whole adjacent reducers, so each id's rows
+    stay in one task and a partitionBy("partition_id") write leaves one
+    file per id. A groupBy(partition_id, key) above reuses this exchange
+    (partition_id is a pure function of the key)."""
+    with_pid = with_partition_id(df, key_fields, num_partitions, md5_parity)
+    return with_pid.repartition(F.col("partition_id"))
+
+
 def repartition_and_sort(
     df: DataFrame, key_fields: list[str], num_partitions: int, md5_parity: bool = False
 ) -> DataFrame:
     """Stage I4 of the reference push pipeline: custom hash partition + sort
     within partition by key (AbstractDataWriterSparkJob.java:942-947,
     PartitionSorter.java:17-21). Sorted-by-key parquet gives rowgroup min/max
-    pruning on key lookups — the same win as RocksDB SST bulk ingest."""
-    with_pid = with_partition_id(df, key_fields, num_partitions, md5_parity)
-    return with_pid.repartition(num_partitions, F.col("partition_id")).sortWithinPartitions(
-        *key_fields
+    pruning on key lookups — the same win as RocksDB SST bulk ingest. The
+    sort leads with partition_id: a task may hold several ids, and the
+    partitioned write needs its input grouped by id, so each id's file
+    comes out key-sorted with no second sort."""
+    return partition_shuffle(df, key_fields, num_partitions, md5_parity).sortWithinPartitions(
+        "partition_id", *key_fields
     )
 
 

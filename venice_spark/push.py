@@ -6,17 +6,24 @@ Mirrors the reference's own Spark data-writer pipeline stage-for-stage
 
   I1 input read            -> spark.read.parquet/avro + select
   I3 record processing     -> values stay native columns (no serialization)
-  I6 duplicate-key policy  -> window dedup + conflict detection
   I7 storage quota         -> persist + size accounting before write
-  I4 partition + sort      -> repartition(n, partition_id) + sortWithinPartitions
-  I5 partition write       -> write.parquet(version_dir), counts via group-by
+  I4 partition + sort      -> partition_shuffle (shuffle on partition_id)
+                              + sortWithinPartitions(partition_id, key)
+  I6 duplicate-key policy  -> groupBy(partition_id, key) dedup inside the
+                              I4 shuffle; the conflict verdict observed on
+                              the I5 write job (no pass of its own)
+  I5 partition write       -> write.parquet(version_dir), counts observed
   W8 atomic swap           -> catalog.commit_version (pointer flip)
 
-Scale notes: the only shuffle is the single repartition on the partition id;
-dedup happens INSIDE it (groupBy(partition_id, key) — the repartition's hash
-partitioning satisfies the grouping distribution because partition_id is a
-pure function of the key, so Catalyst plans exactly one exchange). Values
-are never funneled through Python.
+Scale notes: the only shuffle is the one on the partition id, and its task
+count follows spark.sql.shuffle.partitions and AQE coalescing, not the
+store's partition count — each id still lands in one task, so each
+partition_id=P dir holds one key-sorted file. Dedup happens INSIDE it
+(groupBy(partition_id, key) — the shuffle's hash partitioning satisfies
+the grouping distribution because partition_id is a pure function of the
+key, so Catalyst plans exactly one exchange). A version or slot write is
+that shuffle plus one write job. Values are never funneled through
+Python.
 
 One version writer: the batch push, compaction and the eager incremental
 push all land and commit a version through `_write_version` (the store's
@@ -41,9 +48,15 @@ from typing import NamedTuple
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Observation, SparkSession
 
-from venice_spark.catalog import StoreCatalog, _slot_index, bucketed_view_dir, drop_tombstones
+from venice_spark.catalog import (
+    StoreCatalog,
+    _slot_index,
+    bucketed_view_dir,
+    drop_tombstones,
+    read_partitioned,
+)
 from venice_spark.catalog import view_dir as _plain_view_dir
-from venice_spark.partitioner import repartition_and_sort, with_partition_id
+from venice_spark.partitioner import partition_shuffle, repartition_and_sort
 
 
 class DuplicateKeyError(ValueError):
@@ -91,6 +104,88 @@ def _fix_empty_partitioned_dir(out: DataFrame, path: str, col: str = "partition_
     pre-write take(1), which would recompute the pipeline's first partition."""
     if not any(e.startswith(f"{col}=") for e in os.listdir(path)):
         out.write.mode("overwrite").parquet(path)
+
+
+# A dedup aggregation's per-key count of distinct value rows, carried to
+# the write that observes it (stage I6) and dropped before the files land.
+_DISTINCT = "__distinct_values"
+
+
+def _observe_write(out: DataFrame, key_fields: list[str]) -> tuple[DataFrame, Observation]:
+    """`out` observed on its own write job: the row count and, when `out`
+    carries `_DISTINCT`, the I6 verdict — the least key with more than one
+    distinct value row, NULL when every key is clean — with the column
+    dropped. The check costs no pass of its own: no persist, no separate
+    conflict collect (the reference's partition writer applies the policy
+    while it writes, AbstractPartitionWriter.java)."""
+    obs = Observation()
+    metrics = [F.count(F.lit(1)).alias("rows")]
+    if _DISTINCT in out.columns:
+        conflict = F.when(F.col(_DISTINCT) > 1, F.struct(*key_fields))
+        metrics.append(F.min(conflict).alias("conflict"))
+    return out.observe(obs, *metrics).drop(_DISTINCT), obs
+
+
+_DELTA_HINT = " in the delta — pass order_col to resolve them latest-wins"
+
+
+def _refuse_conflict(conflict, written: str | None = None, hint: str = "") -> None:
+    """Raise DuplicateKeyError when an I6 verdict names a conflicting key
+    (a Row of the key fields), after removing what a refused write left at
+    `written`."""
+    if conflict is not None:
+        if written is not None:
+            shutil.rmtree(written, ignore_errors=True)
+        raise DuplicateKeyError(f"key {tuple(conflict)} has conflicting values{hint}")
+
+
+def _dedup_frame(
+    df: DataFrame,
+    key_fields: list[str],
+    partition_count: int,
+    md5p: bool,
+    dedup_order_col: str | None,
+    check_conflicts: bool,
+) -> DataFrame:
+    """A batch push's or slot's write frame: I4 partition + I6 dedup +
+    sort, fused into ONE shuffle. `partition_shuffle` exchanges on
+    partition_id, then the dedup's grouping on (partition_id, key) reuses
+    that hash partitioning (partition_id is a pure function of the key),
+    so Catalyst plans no second exchange, and first/max_by
+    partial-aggregate map-side. This is the reference's own shape: the
+    partition writer dedups while iterating the already-partitioned
+    sorted reducer stream (AbstractPartitionWriter.java, after
+    repartitionAndSortWithinPartitions). With `check_conflicts` the frame
+    carries `_DISTINCT` for the write to observe (`_observe_write`)."""
+    parted = partition_shuffle(df, key_fields, partition_count, md5p)
+    value_cols = [c for c in df.columns if c not in key_fields]
+    if not value_cols:
+        out = parted.dropDuplicates(["partition_id", *key_fields])  # key-only table
+    else:
+        if dedup_order_col is not None:
+            # an order tie breaks by resolve_latest's value-JSON rule,
+            # as an incremental push with order_col does — never by
+            # the order rows reach the aggregation
+            from venice_spark.streaming.hybrid import value_json
+
+            rest = [c for c in value_cols if c != dedup_order_col]
+            order = [F.col(dedup_order_col)] + ([value_json(rest)] if rest else [])
+            picked = F.max_by(F.struct(*value_cols), F.struct(*order))
+        else:
+            picked = F.first(F.struct(*value_cols))
+        aggs = [picked.alias("__v")]
+        if check_conflicts:
+            aggs.append(F.countDistinct(F.struct(*value_cols)).alias(_DISTINCT))
+        carried = [_DISTINCT] if check_conflicts else []
+        out = parted.groupBy("partition_id", *key_fields).agg(*aggs).select(
+            "partition_id", *key_fields, "__v.*", *carried
+        )
+    # Sort on (partition_id, key): each written file holds ONE pid, so
+    # per-file key order is identical to a bare key sort — but this
+    # ordering matches what the SortAggregate above already emits, so
+    # EliminateSorts removes the node entirely (a bare key sort re-sorts
+    # the full partition; pinned by the single-Sort plan test).
+    return out.sortWithinPartitions("partition_id", *key_fields)
 
 
 def check_duplicate_keys(df: DataFrame, key_fields: list[str]) -> DataFrame:
@@ -184,7 +279,7 @@ def sweep_late_deltas(
                 os.rename(d, target)
             else:
                 staging, _ = _stage_slot(
-                    catalog, store, spark.read.parquet(d).drop("partition_id"),
+                    catalog, store, read_partitioned(spark, d).drop("partition_id"),
                     key_fields, (new_parts, new_md5p),
                 )
                 side = os.path.join(d, "_slot_meta.json")
@@ -206,14 +301,19 @@ def _stage_slot(
     rows: DataFrame,
     key_fields: list[str],
     layout: tuple[int, bool],
+    check_conflicts: bool = False,
 ) -> tuple[str, int]:
     """Write `rows` (store-shaped, no partition_id) as a slot stamped with
     `layout` — the (partition count, md5 parity) of the version whose log
     it joins — into a fresh staging dir under the store; returns (staging
-    dir, rows written). Every slot write (a lazy push's append, the sweep's
-    restamp) goes through here, and the caller renames the dir into its log
-    under the store lock: a crash mid-write never leaves a half-written
-    d{K} visible to list_delta_dirs. The stamp MUST match the base's full
+    dir, rows written). The write dedups `rows` to one per key inside its
+    one partition shuffle (`_dedup_frame`); with `check_conflicts` (a lazy
+    push without order_col) a key with differing rows is refused on the
+    write's observed verdict: the staging dir is removed and
+    DuplicateKeyError raised before anything is renamed. Every slot write
+    (a lazy push's append, the sweep's restamp) goes through here, and the
+    caller renames the dir into its log under the store lock: a crash
+    mid-write never leaves a half-written d{K} visible to list_delta_dirs. The stamp MUST match the base's full
     layout (modulus AND hash — code-review r4): the read-side resolve
     groups on (partition_id, key), so a mismatched stamp would split one
     key's base and slot rows (duplicate served rows)."""
@@ -221,13 +321,16 @@ def _stage_slot(
     staging = os.path.join(
         catalog.store_dir(store), f"_delta_staging-{uuid.uuid4().hex}"
     )
-    obs = Observation()
-    out = repartition_and_sort(rows, key_fields, n_parts, md5p)
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    out, obs = _observe_write(
+        _dedup_frame(rows, key_fields, n_parts, md5p, None, check_conflicts),
+        key_fields,
+    )
     out.write.mode("overwrite").partitionBy("partition_id").parquet(staging)
     _fix_empty_partitioned_dir(out, staging)
-    # row count observed on the write job itself — no re-read pass
-    return staging, int(obs.get["rows"])
+    # row count and verdict observed on the write job itself — no re-read pass
+    metrics = obs.get
+    _refuse_conflict(metrics.get("conflict"), staging, _DELTA_HINT)
+    return staging, int(metrics["rows"])
 
 
 def recover_stranded_deltas(
@@ -303,7 +406,11 @@ def _write_version(
     version writer behind the batch push, compaction and the eager
     incremental push. `out` carries `partition_id` stamped with the
     store's partition count and `md5p`, already repartitioned on it and
-    sorted within partitions.
+    sorted within partitions. An `out` carrying `_DISTINCT` (the batch
+    push's I6 check) is refused on the write's observed verdict before
+    the views, the manifest and the commit: the version dir is removed,
+    its reserved number stays burnt (as a failed push burns it in the
+    reference), and DuplicateKeyError is raised.
 
     `swept_from` is the version whose slot log the caller snapshotted
     (`resolved_deltas` — folded into `out`, or superseded by a full push);
@@ -326,13 +433,12 @@ def _write_version(
     codec = {"no_op": "none", "gzip": "gzip", "zstd": "zstd"}[
         str(meta.config.get("compression", "zstd")).lower()
     ]
-    # manifest row count observed ON the write job (CollectMetrics)
-    # instead of a post-write `written.count()` pass — one less job per
-    # push, and at scale one less listing+footer sweep of the version
-    # dir (guide §1.4 territory: don't re-run a pass to learn what the
-    # pass you just ran already knew)
-    obs = Observation()
-    out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+    # manifest row count and I6 verdict observed ON the write job
+    # (CollectMetrics) instead of a post-write `written.count()` pass and
+    # a pre-write conflict pass — at scale each would be one more sweep
+    # of the data (guide §1.4 territory: don't re-run a pass to learn what
+    # the pass you just ran already knew)
+    out, obs = _observe_write(out, meta.key_fields)
     writer = out.write.mode("overwrite").option("compression", codec)
     # Store config `bloom_filter=True`: write parquet bloom filters on
     # the key columns — the RocksDB-bloom parity for point-get-heavy
@@ -345,6 +451,8 @@ def _write_version(
             writer = writer.option(f"parquet.bloom.filter.enabled#{k}", "true")
     writer.partitionBy("partition_id").parquet(path)
     _fix_empty_partitioned_dir(out, path)
+    metrics = obs.get
+    _refuse_conflict(metrics.get("conflict"), path)
 
     # W15 views are rebuilt in full from the FILES just written, never
     # from the in-flight `out` (that would re-run the write's shuffle once
@@ -358,10 +466,10 @@ def _write_version(
     # the lazy eager=False mode, where view readers fold the slot log.
     views = declared_views(meta) if views is None else views
     if views:
-        written = spark.read.parquet(path)
+        written = read_partitioned(spark, path)
         for view in views:
             view.write(catalog, store, version, written)
-    rows = int(obs.get["rows"])
+    rows = int(metrics["rows"])
 
     # W8 atomic swap (+ Version-record manifest, meta/Version.java:1)
     won = catalog.commit_version(
@@ -464,7 +572,6 @@ class BatchPushJob:
         # the write; released after the write lands (never leaks into the
         # caller's long-lived session)
         quota_persisted = None
-        conflict_persisted = None
         if storage_quota_bytes is not None:
             df = quota_persisted = df.persist()
             rows = df.count()
@@ -477,67 +584,10 @@ class BatchPushJob:
                     f"~{est_row_bytes * rows} bytes exceeds quota {storage_quota_bytes}"
                 )
 
-        # I4 partition + I6 dedup + sort, fused into ONE shuffle: repartition
-        # on partition_id, then dedup via groupBy(partition_id, key) — the
-        # existing hash partitioning satisfies the grouping's distribution
-        # (partition_id is a pure function of the key), so Catalyst plans no
-        # second exchange, and first/max_by partial-aggregate map-side. This
-        # is the reference's own shape: the partition writer dedups while
-        # iterating the already-partitioned sorted reducer stream
-        # (AbstractPartitionWriter.java, after
-        # repartitionAndSortWithinPartitions). The previous dropDuplicates →
-        # repartition sequence shuffled the full input twice.
-        parted = with_partition_id(df, key_fields, meta.partition_count, md5_parity)
-        parted = parted.repartition(meta.partition_count, F.col("partition_id"))
-        value_cols = [c for c in df.columns if c not in key_fields]
-        if not value_cols:
-            out = parted.dropDuplicates(key_fields)  # key-only table
-        else:
-            aggs = []
-            if dedup_order_col is not None:
-                # an order tie breaks by resolve_latest's value-JSON rule,
-                # as an incremental push with order_col does — never by
-                # the order rows reach the aggregation
-                from venice_spark.streaming.hybrid import value_json
-
-                rest = [c for c in value_cols if c != dedup_order_col]
-                order = [F.col(dedup_order_col)] + ([value_json(rest)] if rest else [])
-                picked = F.max_by(F.struct(*value_cols), F.struct(*order))
-            else:
-                picked = F.first(F.struct(*value_cols))
-            aggs.append(picked.alias("__v"))
-            if not allow_duplicate_key and dedup_order_col is None:
-                aggs.append(
-                    F.countDistinct(F.struct(*value_cols)).alias("__distinct_values")
-                )
-            grouped = parted.groupBy("partition_id", *key_fields).agg(*aggs)
-            if not allow_duplicate_key and dedup_order_col is None:
-                # persist: the conflict check EXECUTES the shuffle+dedup
-                # aggregation; without the barrier the write re-runs the
-                # same heaviest stage from scratch (code-review r4 —
-                # measured below in w8). Released in the finally.
-                grouped = conflict_persisted = grouped.persist()
-                conflict = (
-                    grouped.filter(F.col("__distinct_values") > 1)
-                    .select(*key_fields)
-                    .limit(1)
-                    .collect()
-                )
-                if conflict:
-                    grouped.unpersist()
-                    if quota_persisted is not None:
-                        quota_persisted.unpersist()
-                    raise DuplicateKeyError(
-                        f"key {tuple(conflict[0])} has conflicting values"
-                    )
-                grouped = grouped.drop("__distinct_values")
-            out = grouped.select("partition_id", *key_fields, "__v.*")
-        # Sort on (partition_id, key): each written file holds ONE pid, so
-        # per-file key order is identical to a bare key sort — but this
-        # ordering matches what the SortAggregate above already emits, so
-        # EliminateSorts removes the node entirely (a bare key sort re-sorts
-        # the full partition; pinned by the single-Sort plan test).
-        out = out.sortWithinPartitions("partition_id", *key_fields)
+        out = _dedup_frame(
+            df, key_fields, meta.partition_count, md5_parity, dedup_order_col,
+            check_conflicts=not allow_duplicate_key and dedup_order_col is None,
+        )
         try:
             res = _write_version(
                 spark, self.catalog, store, meta, out,
@@ -546,13 +596,11 @@ class BatchPushJob:
                 defer_swap=defer_swap,
             )
         finally:
-            # the quota/conflict persists must never outlive the push — a
-            # DuplicateKeyError/validation/write failure above would
-            # otherwise pin data in the caller's session
+            # the quota persist must never outlive the push — a
+            # DuplicateKeyError/write failure above would otherwise pin
+            # data in the caller's session
             if quota_persisted is not None:
                 quota_persisted.unpersist()
-            if conflict_persisted is not None:
-                conflict_persisted.unpersist()
 
         # registration lands only after the version COMMITTED: a failure in
         # the count/commit steps above must leave the declaration untouched
@@ -1157,7 +1205,7 @@ def _fold_slots(
     their missing columns null-fill. Keys are the full store key list."""
     # one read PER SLOT DIR: a multi-path read over partition_id-
     # partitioned sibling dirs raises CONFLICTING_DIRECTORY_STRUCTURES
-    logs = [spark.read.parquet(d).drop("partition_id") for d in slots]
+    logs = [read_partitioned(spark, d).drop("partition_id") for d in slots]
     if top is not None:
         logs.append(top)
     touched = functools.reduce(
@@ -1208,7 +1256,11 @@ def fold_index_deltas(
 
 
 def _prepare_delta(
-    delta: DataFrame, key_fields: list[str], order_col: str | None, nulls_as_deletes: bool
+    delta: DataFrame,
+    key_fields: list[str],
+    order_col: str | None,
+    nulls_as_deletes: bool,
+    lazy: bool,
 ) -> DataFrame:
     """One row per key, tombstones marked: the canonical delta shape.
 
@@ -1220,9 +1272,12 @@ def _prepare_delta(
     ties by streaming.hybrid.resolve_latest's rule (the larger canonical
     JSON of the value columns), so one delta always resolves the same way.
     Without it a key's rows must be identical: conflicting values raise
-    DuplicateKeyError, the batch push's I6 policy. The dedup and the
-    conflict count are one delta-sized aggregation; the base is never
-    read."""
+    DuplicateKeyError, the batch push's I6 policy. For a `lazy` push that
+    dedup and check are left to the slot write, which runs them inside
+    its partition shuffle and observes the verdict on its own job
+    (`_stage_slot`); the eager merge, whose delta feeds its fold twice,
+    runs them here as one delta-sized aggregation and a check collect.
+    The base is never read."""
     if nulls_as_deletes:
         vcols = [c for c in delta.columns if c not in key_fields and c != order_col]
         is_del = F.lit(True)
@@ -1233,24 +1288,22 @@ def _prepare_delta(
         from venice_spark.streaming.hybrid import resolve_latest
 
         return resolve_latest(delta, key_fields, order_col)
+    if lazy:
+        return delta
     value_cols = [c for c in delta.columns if c not in key_fields]
     if not value_cols:
         return delta.dropDuplicates(key_fields)  # key-only rows never conflict
     grouped = delta.groupBy(*key_fields).agg(
         F.first(F.struct(*value_cols)).alias("__v"),
-        F.countDistinct(F.struct(*value_cols)).alias("__distinct_values"),
+        F.countDistinct(F.struct(*value_cols)).alias(_DISTINCT),
     )
     conflict = (
-        grouped.filter(F.col("__distinct_values") > 1)
+        grouped.filter(F.col(_DISTINCT) > 1)
         .select(*key_fields)
         .limit(1)
         .collect()
     )
-    if conflict:
-        raise DuplicateKeyError(
-            f"key {tuple(conflict[0])} has conflicting values in the delta "
-            "— pass order_col to resolve them latest-wins"
-        )
+    _refuse_conflict(conflict[0] if conflict else None, hint=_DELTA_HINT)
     return grouped.select(*key_fields, "__v.*")
 
 
@@ -1260,10 +1313,13 @@ def _append_delta_slot(
     store: str,
     delta: DataFrame,
     key_fields: list[str],
+    check_conflicts: bool = False,
 ) -> tuple[int, str, int, int]:
-    """Append a canonical delta (one row per key, `__del` tombstones) as the
-    next lazy slot on the store's CURRENT version; returns
-    (version, slot_path, rows, total_slots_on_version).
+    """Append a delta (`__del` tombstones marked) as the next lazy slot on
+    the store's CURRENT version; returns (version, slot_path, rows,
+    total_slots_on_version). The staging write dedups it to one row per
+    key; with `check_conflicts` a key with differing rows is refused
+    before the slot is renamed into the log.
 
     Staged by `_stage_slot`, then renamed to its log slot while holding
     the store lock: readers (list_delta_dirs matches only complete d{K}
@@ -1277,7 +1333,9 @@ def _append_delta_slot(
     if cur <= 0:
         raise ValueError(f"store {store!r} has no current version to delta onto")
     staged_layout = _version_layout(catalog, store, cur, meta)
-    staging, rows = _stage_slot(catalog, store, delta, key_fields, staged_layout)
+    staging, rows = _stage_slot(
+        catalog, store, delta, key_fields, staged_layout, check_conflicts
+    )
     with catalog._locked(store):
         # re-resolve the CURRENT version under the lock: the staging
         # write can take minutes, and a concurrent compact/eager/batch
@@ -1290,7 +1348,8 @@ def _append_delta_slot(
         target_layout = _version_layout(catalog, store, cur, meta)
         if target_layout != staged_layout:
             # rare: the new current version was written with a
-            # different layout — restage to match it
+            # different layout — restage to match it (the first staging
+            # write already passed the I6 verdict)
             shutil.rmtree(staging, ignore_errors=True)
             staging, rows = _stage_slot(
                 catalog, store, delta, key_fields, target_layout
@@ -1349,11 +1408,11 @@ def incremental_push(
     recover_stranded_deltas(spark, catalog, store)
     meta = catalog.get_store(store)
     key_fields = meta.key_fields
-    delta = _prepare_delta(delta, key_fields, order_col, nulls_as_deletes)
+    delta = _prepare_delta(delta, key_fields, order_col, nulls_as_deletes, lazy=not eager)
 
     if not eager:
         cur, dpath, rows, n_slots = _append_delta_slot(
-            spark, catalog, store, delta, key_fields
+            spark, catalog, store, delta, key_fields, check_conflicts=order_col is None
         )
         threshold = int(meta.config.get("delta_compact_threshold", 8))
         if n_slots >= threshold:
