@@ -149,3 +149,34 @@ def assert_seed_coverage(cond, msg):
 
         pytest.skip(f"battery seed without coverage: {msg}")
     raise AssertionError(msg)
+
+
+def hide_late_slots(monkeypatch, catalog, slots, target=None):
+    """Make `slots` arrive just after a delta-log snapshot: the first
+    `catalog.list_delta_dirs` call inside the next call of `target` — by
+    default `push._fold_version`, whose first listing is the fold's
+    snapshot; `(push.BatchPushJob, "run")` hides them from a batch push's
+    — misses them, and every other listing (an append's, a sweep's, a
+    reader's) sees them. The slots are hidden by path, never by call
+    count, so the listing a lazy push's own append makes is left alone."""
+    import venice_spark.push as push_mod
+
+    owner, name = target or (push_mod, "_fold_version")
+    real_call, real_list = getattr(owner, name), catalog.list_delta_dirs
+    hidden = set(slots)
+    state = {"calls": 0, "snapshot": False}
+
+    def listing(store, version):
+        out = real_list(store, version)
+        if state["snapshot"]:
+            state["snapshot"] = False
+            out = [d for d in out if d not in hidden]
+        return out
+
+    def call(*a, **k):
+        state["calls"] += 1
+        state["snapshot"] = state["calls"] == 1
+        return real_call(*a, **k)
+
+    monkeypatch.setattr(catalog, "list_delta_dirs", listing)
+    monkeypatch.setattr(owner, name, call)

@@ -25,6 +25,7 @@ _SPEC = importlib.util.spec_from_file_location(
 admin = importlib.util.module_from_spec(_SPEC)
 _SPEC.loader.exec_module(admin)
 
+from _crash_schedule import hide_late_slots  # noqa: E402
 from venice_spark.engine import VeniceSparkEngine  # noqa: E402
 
 
@@ -39,22 +40,12 @@ def test_recover_heals_stranded_swap_and_slots(spark, tmp_path, capsys, monkeypa
     cat = eng.catalog
 
     # strand a lazy slot on v1 exactly like the crash-atomicity suite:
-    # hide it from an eager push that then dies before its sweep
-    incremental_push(
+    # hide it from an eager push's fold that then dies before its sweep
+    late = incremental_push(
         spark, cat, "s",
         spark.createDataFrame([(2, "late")], "k long, v string"), eager=False,
-    )
-    real_list = cat.list_delta_dirs
-    hidden = {"left": 2}
-
-    def hiding(store, version):
-        out = real_list(store, version)
-        if version == 1 and hidden["left"] > 0:
-            hidden["left"] -= 1
-            return []
-        return out
-
-    monkeypatch.setattr(cat, "list_delta_dirs", hiding)
+    ).path
+    hide_late_slots(monkeypatch, cat, [late])
     monkeypatch.setattr(
         push_mod, "sweep_late_deltas",
         lambda *a, **k: (_ for _ in ()).throw(RuntimeError("died post-commit")),
@@ -65,7 +56,7 @@ def test_recover_heals_stranded_swap_and_slots(spark, tmp_path, capsys, monkeypa
             spark.createDataFrame([(1, "eager")], "k long, v string"),
         )
     monkeypatch.undo()
-    assert cat.list_delta_dirs("s", 1), "precondition: slot stranded on v1"
+    assert late in cat.list_delta_dirs("s", 1), "precondition: slot stranded on v1"
 
     # and strand a serving-dir swap (process died between the two renames)
     p = eng.store("s").producer()

@@ -21,6 +21,7 @@ import shutil
 import pyspark.sql.functions as F
 import pytest
 
+from _crash_schedule import hide_late_slots
 from venice_spark.catalog import StoreCatalog
 from venice_spark.streaming.hybrid import (
     HybridReplay,
@@ -32,8 +33,11 @@ from venice_spark.streaming.hybrid import (
 )
 
 # Release-gate battery: every test is marked slow (run with
-# SPARK_GRAFT_SLOW=1) except test_swap_crash_between_renames_promotes_completed_tmp,
-# the cheap canary that keeps swap-crash recovery in the default tier.
+# SPARK_GRAFT_SLOW=1) except the cheap canaries that keep swap-crash
+# recovery (test_swap_crash_between_renames_promotes_completed_tmp) and
+# the eager push's staged fold
+# (test_eager_push_crash_in_fold_leaves_the_store_as_it_was) in the
+# default tier.
 
 SCHEMA = "key string, val double, ts long"
 
@@ -511,6 +515,43 @@ def test_aa_compact_crash_then_merge_heals_and_serves_exact_content(
     assert 2 not in out, f"stale PUT resurrected a deleted key across the crash: {out}"
 
 
+def test_eager_push_crash_in_fold_leaves_the_store_as_it_was(spark, tmp_path, monkeypatch):
+    """An eager incremental push folds its staged delta without appending
+    it to the serving version's log: a process death inside the fold
+    leaves the pointer, the log and the content as they were (so a
+    rollback over a completed eager push undoes it), and a retry lands
+    the delta."""
+    import venice_spark.push as push_mod
+    from venice_spark.push import BatchPushJob, incremental_push
+
+    catalog = StoreCatalog(str(tmp_path / "cat"))
+    catalog.create_store("s", key_fields=["k"], partition_count=2)
+    BatchPushJob(catalog).run(
+        spark, "s", spark.createDataFrame([(1, "base"), (2, "base")], "k long, v string")
+    )
+    delta = spark.createDataFrame([(2, "eager"), (3, "new")], "k long, v string")
+
+    def dying_write(*a, **k):
+        raise SimulatedCrash("died in the fold")
+
+    monkeypatch.setattr(push_mod, "_write_version", dying_write)
+    with pytest.raises(SimulatedCrash):
+        incremental_push(spark, catalog, "s", delta)
+    monkeypatch.undo()
+
+    assert catalog.current_version("s") == 1
+    assert catalog.list_delta_dirs("s", 1) == []
+    assert not [d for d in os.listdir(catalog.store_dir("s")) if "staging" in d]
+    got = {r["k"]: r["v"] for r in catalog.read_current(spark, "s").collect()}
+    assert got == {1: "base", 2: "base"}, got
+
+    res = incremental_push(spark, catalog, "s", delta)
+    assert catalog.current_version("s") == res.version == 2
+    assert catalog.list_delta_dirs("s", 1) == catalog.list_delta_dirs("s", 2) == []
+    got = {r["k"]: r["v"] for r in catalog.read_current(spark, "s").collect()}
+    assert got == {1: "base", 2: "eager", 3: "new"}, got
+
+
 @pytest.mark.slow
 def test_crash_between_commit_and_sweep_heals_on_next_committer(
     spark, tmp_path, monkeypatch
@@ -534,22 +575,12 @@ def test_crash_between_commit_and_sweep_heals_on_next_committer(
         spark, "s", spark.createDataFrame([(1, "base"), (2, "base")], "k long, v string")
     )
     # a lazy slot that the eager push below will NOT see (hidden from its
-    # snapshot + resolve — the standard late-arrival interleaving)
-    incremental_push(
+    # fold's snapshot — the standard late-arrival interleaving)
+    late = incremental_push(
         spark, catalog, "s",
         spark.createDataFrame([(2, "late")], "k long, v string"), eager=False,
-    )
-    real_list = catalog.list_delta_dirs
-    hidden = {"left": 2}
-
-    def hiding(store, version):
-        out = real_list(store, version)
-        if version == 1 and hidden["left"] > 0:
-            hidden["left"] -= 1
-            return []
-        return out
-
-    monkeypatch.setattr(catalog, "list_delta_dirs", hiding)
+    ).path
+    hide_late_slots(monkeypatch, catalog, [late])
     # the push dies right after its commit: its sweep never runs
     real_sweep = push_mod.sweep_late_deltas
     state = {"calls": 0}
@@ -566,11 +597,10 @@ def test_crash_between_commit_and_sweep_heals_on_next_committer(
             spark, catalog, "s",
             spark.createDataFrame([(1, "eager")], "k long, v string"),
         )
-    monkeypatch.setattr(catalog, "list_delta_dirs", real_list)
 
     # loss state: v2 is current and serves WITHOUT the late slot
     assert catalog.current_version("s") == 2
-    assert catalog.list_delta_dirs("s", 1), "precondition: slot stranded on v1"
+    assert late in catalog.list_delta_dirs("s", 1), "precondition: slot stranded on v1"
     got = {r["k"]: r["v"] for r in catalog.read_current(spark, "s").collect()}
     assert got == {1: "eager", 2: "base"}, got
 
@@ -610,25 +640,15 @@ def test_stacked_commit_sweep_crashes_heal_along_the_lineage(
     real_recover = push_mod.recover_stranded_deltas
     monkeypatch.setattr(push_mod, "recover_stranded_deltas", lambda *a, **k: 0)
 
-    def crash_push(value, late_value, old_v):
+    def crash_push(value, late_value):
         # the late slot lands while the push runs: hide it from the push's
-        # snapshot/resolve listing, then let the push die at its sweep
-        incremental_push(
+        # fold snapshot, then let the push die at its sweep
+        late = incremental_push(
             spark, catalog, "s",
             spark.createDataFrame([(2, late_value)], "k long, v string"),
             eager=False,
-        )
-        real_list = catalog.list_delta_dirs
-        hidden = {"left": 2}
-
-        def hiding(store, version):
-            out = real_list(store, version)
-            if version == old_v and hidden["left"] > 0:
-                hidden["left"] -= 1
-                return []
-            return out
-
-        monkeypatch.setattr(catalog, "list_delta_dirs", hiding)
+        ).path
+        hide_late_slots(monkeypatch, catalog, [late])
         monkeypatch.setattr(
             push_mod, "sweep_late_deltas",
             lambda *a, **k: (_ for _ in ()).throw(SimulatedCrash("post-commit")),
@@ -638,14 +658,15 @@ def test_stacked_commit_sweep_crashes_heal_along_the_lineage(
                 spark, catalog, "s",
                 spark.createDataFrame([(1, value)], "k long, v string"),
             )
-        monkeypatch.setattr(catalog, "list_delta_dirs", real_list)
         monkeypatch.setattr(push_mod, "sweep_late_deltas", real_sweep)
+        return late
 
-    crash_push("eager1", "lateA", old_v=1)   # strands lateA on v1
-    crash_push("eager2", "lateB", old_v=2)   # strands lateB on v2
+    late_a = crash_push("eager1", "lateA")   # strands lateA on v1
+    late_b = crash_push("eager2", "lateB")   # strands lateB on v2
     monkeypatch.setattr(push_mod, "recover_stranded_deltas", real_recover)
 
-    assert catalog.list_delta_dirs("s", 1) and catalog.list_delta_dirs("s", 2)
+    assert late_a in catalog.list_delta_dirs("s", 1)
+    assert late_b in catalog.list_delta_dirs("s", 2)
     got = {r["k"]: r["v"] for r in catalog.read_current(spark, "s").collect()}
     assert got[2] == "base", f"precondition: both slots stranded, got {got}"
 
@@ -687,21 +708,11 @@ def test_carried_stranded_slot_never_outranks_fresher_arrivals(
         spark, "s", spark.createDataFrame([(1, "base"), (2, "base")], "k long, v string")
     )
     # the slot that will strand on v1 (arrival #1)
-    incremental_push(
+    stranded = incremental_push(
         spark, catalog, "s",
         spark.createDataFrame([(2, "stranded")], "k long, v string"), eager=False,
-    )
-    real_list = catalog.list_delta_dirs
-    hidden = {"left": 2}
-
-    def hiding(store, version):
-        out = real_list(store, version)
-        if version == 1 and hidden["left"] > 0:
-            hidden["left"] -= 1
-            return []
-        return out
-
-    monkeypatch.setattr(catalog, "list_delta_dirs", hiding)
+    ).path
+    hide_late_slots(monkeypatch, catalog, [stranded])
     monkeypatch.setattr(
         push_mod, "sweep_late_deltas",
         lambda *a, **k: (_ for _ in ()).throw(SimulatedCrash("post-commit")),
@@ -711,11 +722,10 @@ def test_carried_stranded_slot_never_outranks_fresher_arrivals(
             spark, catalog, "s",
             spark.createDataFrame([(1, "eager")], "k long, v string"),
         )
-    monkeypatch.setattr(catalog, "list_delta_dirs", real_list)
     monkeypatch.setattr(push_mod, "sweep_late_deltas", real_sweep)
 
     assert catalog.current_version("s") == 2
-    assert catalog.list_delta_dirs("s", 1), "precondition: slot stranded on v1"
+    assert stranded in catalog.list_delta_dirs("s", 1), "precondition: slot stranded on v1"
 
     # a FRESH lazy slot lands on the current version after the crash
     # (arrival #2 — newer than the stranded slot in wall-clock order). It

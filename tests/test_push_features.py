@@ -3,7 +3,10 @@ quota (I7), materialized views (W15), record transformer (W14)."""
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st_
 
+from _crash_schedule import hide_late_slots
 from venice_spark.engine import VeniceSparkEngine
 from venice_spark.push import MaterializedViewDef, QuotaExceededError, RecordTransformer
 
@@ -628,28 +631,17 @@ def test_partitioner_flip_never_splits_keys(engine, spark):
 
 
 def test_eager_push_carries_concurrent_lazy_delta(engine, spark, monkeypatch):
-    """code-review r4: a lazy delta landing between an eager push's
-    read_current snapshot and its commit must be swept onto the new
-    version, not silently dropped with the retired one."""
+    """code-review r4: a lazy delta landing between an eager push's fold
+    snapshot and its commit must be swept onto the new version, not
+    silently dropped with the retired one."""
     cat = engine.catalog
     lazy = spark.createDataFrame([("late", 5.0, 50)], "key string, val double, _rmd_ts long")
-    engine.incremental_push("s", lazy, eager=False)
-    old_v = cat.current_version("s")
+    late = engine.incremental_push("s", lazy, eager=False).path
 
-    # hide the slot from the eager push's snapshot (it "lands" after it),
-    # then reveal it to the sweep
-    real = cat.list_delta_dirs
-    hidden = {"left": 1}
-    def fake(store, version):
-        out = real(store, version)
-        if version == old_v and hidden["left"] > 0:
-            hidden["left"] -= 1
-            return []
-        return out
-    monkeypatch.setattr(cat, "list_delta_dirs", fake)
+    # the slot "lands" after the eager fold's snapshot; the sweep sees it
+    hide_late_slots(monkeypatch, cat, [late])
     eager = spark.createDataFrame([("b", 99.0, 60)], "key string, val double, _rmd_ts long")
-    engine.incremental_push("s", eager)  # eager path
-    monkeypatch.setattr(cat, "list_delta_dirs", real)
+    engine.incremental_push("s", eager)
 
     new_v = cat.current_version("s")
     assert cat.list_delta_dirs("s", new_v), "concurrent lazy delta dropped"
@@ -657,28 +649,18 @@ def test_eager_push_carries_concurrent_lazy_delta(engine, spark, monkeypatch):
     assert out["late"] == 5.0 and out["b"] == 99.0
 
 
-def _race_newer_version(cat, spark, state, rows):
-    """A commit_version stand-in: before the first commit it sees, a
-    concurrent writer lands and commits a newer version holding `rows`."""
-    from venice_spark.partitioner import repartition_and_sort
-
+def _commit_after(cat, monkeypatch, state, winner):
+    """A commit_version stand-in: before the first commit it sees, the real
+    committer `winner()` runs to completion and commits a newer version."""
     real_commit = cat.commit_version
 
     def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            w = cat.begin_version(store)
-            wdf = spark.createDataFrame(rows, "key string, val double, _rmd_ts long")
-            out = repartition_and_sort(wdf, ["key"], 2, False)
-            out.write.mode("overwrite").partitionBy("partition_id").parquet(
-                cat.version_dir(store, w)
-            )
-            real_commit(
-                store, w, manifest={"partition_count": 2, "partitioner": "xxhash64"}
-            )
-            state["winner"] = w
+        if state.get("winner") is None:
+            monkeypatch.setattr(cat, "commit_version", real_commit)
+            state["winner"] = winner().version
         return real_commit(store, version, manifest=manifest, make_current=make_current)
 
-    return racing_commit
+    monkeypatch.setattr(cat, "commit_version", racing_commit)
 
 
 def test_sweep_targets_actual_current_version_after_lost_race(engine, spark, monkeypatch):
@@ -687,151 +669,157 @@ def test_sweep_targets_actual_current_version_after_lost_race(engine, spark, mon
     then target the winning (current) version, not the loser's never-served
     one, or those upserts are stranded forever."""
     cat = engine.catalog
-    lazy = spark.createDataFrame([("late", 5.0, 50)], "key string, val double, _rmd_ts long")
-    engine.incremental_push("s", lazy, eager=False)
-    old_v = cat.current_version("s")
+    schema = "key string, val double, _rmd_ts long"
+    lazy = spark.createDataFrame([("late", 5.0, 50)], schema)
+    late = engine.incremental_push("s", lazy, eager=False).path
+    # the lazy slot lands after the eager push's fold snapshot (so its
+    # sweep sees it as late) and before the winner's
+    hide_late_slots(monkeypatch, cat, [late])
+    state = {}
+    _commit_after(cat, monkeypatch, state, lambda: engine.incremental_push(
+        "s", spark.createDataFrame([("winner", 7.0, 70)], schema)
+    ))
 
-    # hide the lazy slot from the eager push's snapshot so the sweep sees
-    # it as late (same interleaving as the carry test above)
-    real_list = cat.list_delta_dirs
-    hidden = {"left": 1}
-    def fake_list(store, version):
-        out = real_list(store, version)
-        if version == old_v and hidden["left"] > 0:
-            hidden["left"] -= 1
-            return []
-        return out
-    monkeypatch.setattr(cat, "list_delta_dirs", fake_list)
-
-    # when the eager push (the loser) tries to commit, a concurrent winner
-    # lands a higher version first
-    state = {"winner": None}
-    monkeypatch.setattr(
-        cat, "commit_version",
-        _race_newer_version(cat, spark, state, [("winner", 7.0, 70)]),
-    )
-
-    eager = spark.createDataFrame([("b", 99.0, 60)], "key string, val double, _rmd_ts long")
+    eager = spark.createDataFrame([("b", 99.0, 60)], schema)
     res = engine.incremental_push("s", eager)  # loses the commit race
     monkeypatch.undo()
 
     cur = cat.current_version("s")
-    assert cur == state["winner"], "winner's version should be current"
-    # the late delta must be on the CURRENT version's log, so reads see it
+    assert res.superseded_by == state["winner"] == cur
+    # the late delta must be on the CURRENT version's log, not the loser's
+    assert cat.list_delta_dirs("s", res.version) == []
     assert cat.list_delta_dirs("s", cur), "late delta stranded off-current"
     out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
     assert out["late"] == 5.0 and out["winner"] == 7.0
-    # ADVICE r5: the losing push's OWN upserts must also reach the serving
-    # version (restaged as a lazy slot on the winner) — pre-fix they lived
-    # only in the superseded orphan version, reachable via set_version
-    assert out["b"] == 99.0, "loser's merged upserts stranded in orphan version"
-    assert res.superseded_by == state["winner"]
+    # ADVICE r5: the losing push's OWN upserts serve too — its staged slot
+    # is appended to the winner's log, not left in the orphan version
+    assert out["b"] == 99.0, "loser's upserts stranded in the orphan version"
+
+
+@pytest.mark.parametrize("winner", ["compaction", "eager_push"])
+def test_eager_push_losing_to_a_fold_serves_its_upserts_and_tombstones(
+    engine, spark, monkeypatch, winner
+):
+    """An eager push whose fold loses the commit race to a compaction or
+    another eager push appends its staged slot to the winner's log:
+    upserts and nulls_as_deletes tombstones both serve over the winning
+    version."""
+    from venice_spark.push import compact_store
+
+    cat = engine.catalog
+    schema = "key string, val double, _rmd_ts long"
+    state = {}
+    _commit_after(cat, monkeypatch, state, (
+        (lambda: compact_store(spark, cat, "s")) if winner == "compaction"
+        else lambda: engine.incremental_push(
+            "s", spark.createDataFrame([("w", 7.0, 70)], schema)
+        )
+    ))
+    delta = spark.createDataFrame(
+        [("a", None, None), ("b", 20.0, 60)], schema  # 'a' tombstoned
+    )
+    res = engine.incremental_push("s", delta, nulls_as_deletes=True)
+    monkeypatch.undo()
+
+    assert res.superseded_by == state["winner"] == cat.current_version("s")
+    assert len(cat.list_delta_dirs("s", state["winner"])) == 1
+    want = {"b": 20.0, "c": 3.0} | ({"w": 7.0} if winner == "eager_push" else {})
+    assert {r["key"]: r["val"] for r in engine.store("s").df().collect()} == want
 
 
 def test_lost_race_restages_tombstones_too(engine, spark, monkeypatch):
-    """ADVICE r5 companion: a lost-race eager push whose delta DELETED a key
-    (nulls_as_deletes) must delete it on the winning version too — the
-    restaged lazy slot carries the __del tombstone through the resolve
-    view, not just the upsert rows."""
+    """ADVICE r5 companion: an eager push that loses its commit to a full
+    batch push and whose delta DELETED a key (nulls_as_deletes) deletes it
+    on the winning version too — the slot appended to the winner's log
+    carries the __del tombstone through the resolve view, not just the
+    upsert rows."""
     cat = engine.catalog
-    state = {"winner": None}
-    monkeypatch.setattr(
-        cat, "commit_version",
-        _race_newer_version(cat, spark, state, [("a", 100.0, 70), ("winner", 7.0, 70)]),
-    )
+    schema = "key string, val double, _rmd_ts long"
+    state = {}
+    _commit_after(cat, monkeypatch, state, lambda: engine.push(
+        "s", spark.createDataFrame([("a", 100.0, 70), ("winner", 7.0, 70)], schema)
+    ))
     # all value columns NULL == tombstone (ETL union[null, T] convention)
-    tomb = spark.createDataFrame(
-        [("a", None, None)], "key string, val double, _rmd_ts long"
-    )
+    tomb = spark.createDataFrame([("a", None, None)], schema)
     res = engine.incremental_push("s", tomb, nulls_as_deletes=True)
     monkeypatch.undo()
 
     assert res.superseded_by == state["winner"]
     # winner's FULL snapshot replaced the base (only a+winner rows); the
-    # restaged tombstone must then delete 'a' from the served view
+    # appended tombstone must then delete 'a' from the served view
     out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
-    assert "a" not in out, "loser's tombstone did not reach the winner"
-    assert out == {"winner": 7.0}
-
-
-def test_lost_race_restage_resolves_overlapping_keys_by_order_col(
-    engine, spark, monkeypatch
-):
-    """ADVICE r6 (low): the restaged slot outranks the winner's base, so on
-    overlapping keys the push that LOST the commit race used to win
-    resolution unconditionally. With order_col supplied, the restage keeps
-    only delta rows at least as fresh as the winner's value for the key —
-    record-order resolution (the reference resolves concurrent RT/
-    incremental writes by record timestamp/offset, never commit order)."""
-    cat = engine.catalog
-    state = {"winner": None}
-    monkeypatch.setattr(
-        cat, "commit_version",
-        _race_newer_version(cat, spark, state, [("a", 100.0, 70), ("b", 200.0, 70)]),
-    )
-    # loser's delta: 'a' is STALER than the winner's (60 < 70) and must not
-    # override; 'b' is FRESHER (80 > 70) and must
-    delta = spark.createDataFrame(
-        [("a", 1.0, 60), ("b", 2.0, 80)], "key string, val double, _rmd_ts long"
-    )
-    res = engine.incremental_push("s", delta, order_col="_rmd_ts")
-    monkeypatch.undo()
-
-    assert res.superseded_by == state["winner"]
-    out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
-    assert out["a"] == 100.0, f"stale loser row overrode the fresher winner: {out}"
-    assert out["b"] == 2.0, f"fresh loser row failed to restage: {out}"
-
-
-def test_lost_race_restage_with_all_stale_rows_appends_no_slot(
-    engine, spark, monkeypatch
-):
-    """Companion: when every delta row is staler than the winner, nothing
-    restages — no empty slot joins the resolve union for every later read."""
-    cat = engine.catalog
-    state = {"winner": None}
-    monkeypatch.setattr(
-        cat, "commit_version",
-        _race_newer_version(cat, spark, state, [("a", 100.0, 70)]),
-    )
-    delta = spark.createDataFrame(
-        [("a", 1.0, 60)], "key string, val double, _rmd_ts long"
-    )
-    res = engine.incremental_push("s", delta, order_col="_rmd_ts")
-    monkeypatch.undo()
-
-    assert res.superseded_by == state["winner"]
-    assert cat.list_delta_dirs("s", state["winner"]) == []
-    out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
-    assert out["a"] == 100.0
+    assert out == {"winner": 7.0}, "loser's tombstone did not reach the winner"
 
 
 def test_lost_race_restage_keeps_null_order_rows(engine, spark, monkeypatch):
-    """ADVICE r7 (low): a delta row whose order_col value is NULL on a key
-    the winner also wrote used to be silently dropped — NULL >= winner_ord
-    evaluates to NULL and fails the freshness filter. The non-racing path
-    applies an unordered upsert unconditionally (slot outranks base), so
-    the racing path must restage it too."""
+    """ADVICE r7 (low): a losing eager push's delta row whose order_col
+    value is NULL, on a key the winning batch push also wrote, still
+    serves: the slot appended to the winner's log outranks the winner's
+    base, as an unordered upsert outranks the base on the non-racing
+    path."""
     cat = engine.catalog
-    state = {"winner": None}
-    monkeypatch.setattr(
-        cat, "commit_version",
-        _race_newer_version(cat, spark, state, [("a", 100.0, 70), ("c", 300.0, 70)]),
-    )
-    # 'a' has NO order value but is contested by the winner — must still
-    # restage (non-racing parity); 'b' is uncontested control
-    delta = spark.createDataFrame(
-        [("a", 1.0, None), ("b", 2.0, None)],
-        "key string, val double, _rmd_ts long",
-    )
+    schema = "key string, val double, _rmd_ts long"
+    state = {}
+    _commit_after(cat, monkeypatch, state, lambda: engine.push(
+        "s", spark.createDataFrame([("a", 100.0, 70), ("c", 300.0, 70)], schema)
+    ))
+    # 'a' has NO order value but is contested by the winner; 'b' is
+    # uncontested control
+    delta = spark.createDataFrame([("a", 1.0, None), ("b", 2.0, None)], schema)
     res = engine.incremental_push("s", delta, order_col="_rmd_ts")
     monkeypatch.undo()
 
     assert res.superseded_by == state["winner"]
     out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
-    assert out["a"] == 1.0, f"NULL-order row dropped on contested key: {out}"
-    assert out["b"] == 2.0
-    assert out["c"] == 300.0
+    assert out == {"a": 1.0, "b": 2.0, "c": 300.0}, out
+
+
+def test_batch_push_committing_before_an_eager_fold_keeps_the_delta(
+    engine, spark, monkeypatch
+):
+    """A full batch push that commits after an eager push staged its delta
+    and before the fold snapshots the log: the fold starts from the batch
+    push's version, so the delta applies over the batch data and the
+    eager push wins its commit."""
+    import venice_spark.push as push_mod
+
+    cat = engine.catalog
+    schema = "key string, val double, _rmd_ts long"
+    real_fold = push_mod._fold_version
+    state = {}
+
+    def batch_then_fold(*a, **k):
+        batch = spark.createDataFrame([("a", 100.0, 70), ("w", 7.0, 70)], schema)
+        state["batch"] = engine.push("s", batch)
+        return real_fold(*a, **k)
+
+    monkeypatch.setattr(push_mod, "_fold_version", batch_then_fold)
+    delta = spark.createDataFrame([("a", 1.0, 60), ("b", 2.0, 80)], schema)
+    res = engine.incremental_push("s", delta)
+    monkeypatch.undo()
+
+    assert state["batch"].superseded_by is None and res.superseded_by is None
+    assert cat.current_version("s") == res.version > state["batch"].version
+    assert cat.list_delta_dirs("s", state["batch"].version) == []
+    out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
+    assert out == {"a": 1.0, "b": 2.0, "w": 7.0}
+
+
+def test_rollback_over_an_eager_push_undoes_it(engine, spark):
+    """The eager push folds its staged delta without appending it to the
+    pre-push version's log: a rollback to that version serves the
+    pre-push content (the bad-push escape hatch), and the pushed version
+    stays for roll-forward."""
+    cat = engine.catalog
+    delta = spark.createDataFrame(
+        [("a", 9.0, 90), ("d", 4.0, 90)], "key string, val double, _rmd_ts long"
+    )
+    res = engine.incremental_push("s", delta)
+    assert res.version == 2 and cat.list_delta_dirs("s", 1) == []
+    cat.rollback("s")
+    assert cat.current_version("s") == 1
+    out = {r["key"]: r["val"] for r in engine.store("s").df().collect()}
+    assert out == {"a": 1.0, "b": 2.0, "c": 3.0}
 
 
 def test_lost_compaction_reports_superseded_by(engine, spark, monkeypatch):
@@ -844,19 +832,10 @@ def test_lost_compaction_reports_superseded_by(engine, spark, monkeypatch):
     cat = engine.catalog
     schema = "key string, val double, _rmd_ts long"
     engine.incremental_push("s", spark.createDataFrame([("a", 9.0, 90)], schema), eager=False)
-    real_commit = cat.commit_version
-    state = {"winner": None}
-
-    def racing_commit(store, version, manifest=None, make_current=True):
-        if state["winner"] is None:
-            monkeypatch.setattr(cat, "commit_version", real_commit)
-            won = engine.incremental_push(
-                "s", spark.createDataFrame([("z", 1.0, 1)], schema)
-            )
-            state["winner"] = won.version
-        return real_commit(store, version, manifest=manifest, make_current=make_current)
-
-    monkeypatch.setattr(cat, "commit_version", racing_commit)
+    state = {}
+    _commit_after(cat, monkeypatch, state, lambda: engine.incremental_push(
+        "s", spark.createDataFrame([("z", 1.0, 1)], schema)
+    ))
     res = compact_store(spark, cat, "s")
 
     assert res.superseded_by == state["winner"] == cat.current_version("s")
@@ -876,10 +855,10 @@ def test_lost_batch_push_reports_superseded_by_and_defer_swap_does_not(
     assert deferred.superseded_by is None
     assert cat.current_version("s") == 1
 
-    state = {"winner": None}
-    monkeypatch.setattr(
-        cat, "commit_version", _race_newer_version(cat, spark, state, [("w", 7.0, 70)])
-    )
+    state = {}
+    _commit_after(cat, monkeypatch, state, lambda: engine.push(
+        "s", spark.createDataFrame([("w", 7.0, 70)], "key string, val double, _rmd_ts long")
+    ))
     res = engine.push("s", df)
     assert res.superseded_by == state["winner"] == cat.current_version("s")
     assert {r["key"] for r in engine.store("s").df().collect()} == {"w"}
@@ -915,6 +894,118 @@ def test_incremental_push_order_col_ties_break_by_value_json(engine, spark, firs
     delta = spark.createDataFrame(rows, "key string, val double, _rmd_ts long")
     engine.incremental_push("s", delta, order_col="_rmd_ts", eager=False)
     assert engine.store("s").get("k7")["val"] == 2.0
+
+
+@pytest.mark.parametrize("eager", [True, False], ids=["eager", "lazy"])
+def test_incremental_push_order_col_op_and_colo_are_plain_values(spark, tmp_root, eager):
+    """With order_col, a delta's `op` and `colo` columns are plain value
+    columns of the slot's pick, as for the batch push's dedup_order_col:
+    an order tie goes to the larger canonical value JSON over every
+    non-order column — a PUT beats a DELETE ('PUT' > 'DELETE'), and colo
+    orders the JSON with the values rather than breaking a value tie."""
+    eng = VeniceSparkEngine(spark, tmp_root)
+    schema = "key string, v string, op string, colo string, ts long"
+    eng.create_store("o", key_fields=["key"], partition_count=2)
+    eng.push("o", spark.createDataFrame([("k0", "base", "PUT", "a", 1)], schema))
+    delta = spark.createDataFrame(
+        [
+            ("k1", "x", "DELETE", "a", 5), ("k1", "x", "PUT", "a", 5),
+            ("k2", "y", "PUT", "a", 5), ("k2", "x", "PUT", "b", 5),
+        ],
+        schema,
+    )
+    eng.incremental_push("o", delta, order_col="ts", eager=eager)
+    got = {
+        r["key"]: (r["v"], r["op"], r["colo"])
+        for r in eng.store("o").df().collect()
+    }
+    assert got == {
+        "k0": ("base", "PUT", "a"), "k1": ("x", "PUT", "a"), "k2": ("x", "PUT", "b"),
+    }, got
+
+
+@pytest.mark.parametrize("eager", [True, False], ids=["eager", "lazy"])
+def test_nulls_as_deletes_refuses_a_key_only_delta(spark, tmp_root, eager):
+    """A key-only delta has no value column to test for NULL, so
+    nulls_as_deletes would tombstone every key it names: the push is
+    refused before anything lands."""
+    eng = VeniceSparkEngine(spark, tmp_root)
+    eng.create_store("k", key_fields=["key"], partition_count=2)
+    eng.push("k", spark.createDataFrame([("a",), ("b",)], "key string"))
+    delta = spark.createDataFrame([("c",)], "key string")
+    with pytest.raises(ValueError, match="nulls_as_deletes"):
+        eng.incremental_push("k", delta, nulls_as_deletes=True, eager=eager)
+    assert eng.catalog.current_version("k") == 1
+    assert eng.catalog.list_delta_dirs("k", 1) == []
+    eng.incremental_push("k", delta, eager=eager)
+    assert sorted(r["key"] for r in eng.store("k").df().collect()) == ["a", "b", "c"]
+
+
+@pytest.fixture(scope="module")
+def pick_catalog(spark, tmp_path_factory):
+    from venice_spark.catalog import StoreCatalog
+
+    cat = StoreCatalog(str(tmp_path_factory.mktemp("pick")))
+    cat.create_store("p", key_fields=["k1", "k2"], partition_count=4)
+    return cat
+
+
+_PICK_ROW = st_.tuples(
+    st_.integers(0, 2),  # composite key (k1, k2)
+    st_.sampled_from(["x", "y"]),
+    st_.one_of(st_.none(), st_.integers(0, 2)),  # order: NULLs and ties
+    st_.one_of(st_.none(), st_.sampled_from(["a", "b"])),
+    st_.sampled_from([0.5, 1.5]),
+    st_.booleans(),  # __del tombstone
+)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(rows=st_.lists(_PICK_ROW, min_size=1, max_size=12))
+def test_slot_order_col_pick_matches_resolve_latest(spark, pick_catalog, rows):
+    """The slot write's latest-wins pick (`_dedup_frame` with order_col,
+    inside the slot's one shuffle) keeps, per key, the row
+    streaming.hybrid.resolve_latest keeps: highest order, NULL orders
+    below every value, an order tie broken by the larger value JSON —
+    tombstones and composite keys included."""
+    import shutil
+
+    from venice_spark.push import _stage_slot
+    from venice_spark.streaming.hybrid import resolve_latest
+
+    cols = ["k1", "k2", "ord", "v", "w", "__del"]
+    delta = spark.createDataFrame(
+        rows, "k1 long, k2 string, ord long, v string, w double, __del boolean"
+    )
+    staging, n = _stage_slot(
+        pick_catalog, "p", delta, ["k1", "k2"], (4, False), order_col="ord"
+    )
+    try:
+        slot = sorted(tuple(r) for r in spark.read.parquet(staging).select(*cols).collect())
+    finally:
+        shutil.rmtree(staging)
+    want = resolve_latest(delta, ["k1", "k2"], "ord").select(*cols).collect()
+    assert slot == sorted(tuple(r) for r in want)
+    assert n == len(slot)
+
+
+@pytest.mark.parametrize("order_col", [None, "_rmd_ts"], ids=["unordered", "order_col"])
+def test_eager_push_runs_at_most_five_jobs(spark, tmp_root, order_col):
+    """An eager push is the slot write (the partition_id shuffle's map
+    stage and the write, the duplicate-key verdict or the order_col pick
+    inside it) plus compaction's fold (touched-key broadcast, version
+    shuffle, write): at most five Spark jobs — no duplicate-key pass and
+    no latest-wins window of its own."""
+    eng = VeniceSparkEngine(spark, tmp_root)
+    eng.create_store("j", key_fields=["key"], partition_count=32)
+    schema = "key string, val double, _rmd_ts long"
+    eng.push("j", spark.createDataFrame([(f"k{i}", float(i), 1) for i in range(5000)], schema))
+    delta = spark.createDataFrame([(f"k{i}", -1.0, 2) for i in range(0, 5000, 10)], schema)
+    res, jobs = _spark_jobs(
+        spark, lambda: eng.incremental_push("j", delta, order_col=order_col)
+    )
+    assert res.rows == 5000 and jobs <= 5, jobs
+    assert eng.store("j").get("k10")["val"] == -1.0
 
 
 def test_batch_push_accepts_partition_id_input(engine, spark):

@@ -139,19 +139,27 @@ def _footer_schema(version_dir: str) -> T.StructType | None:
     for p in _partition_dirs(version_dir):
         files = _data_files(p)
         if files:
-            raw = (pq.read_schema(files[0]).metadata or {}).get(_SPARK_ROW_METADATA)
-            return None if raw is None else T.StructType.fromJson(json.loads(raw))
+            return _file_schema(files[0])
     return None
+
+
+def _file_schema(path: str) -> T.StructType | None:
+    """The Spark schema in one parquet file's footer, None without one."""
+    raw = (pq.read_schema(path).metadata or {}).get(_SPARK_ROW_METADATA)
+    return None if raw is None else T.StructType.fromJson(json.loads(raw))
 
 
 def read_partitioned(spark: SparkSession, d: str) -> DataFrame:
     """A partition_id=P-partitioned dir (a version or a delta slot). With a
     footer schema the read takes it (plus the int partition column)
-    instead of running Spark's schema-inference job; otherwise (an empty
-    dir written plain) Spark infers."""
+    instead of running Spark's schema-inference job; a dir written plain
+    (an empty version, an eager push's fold-only slot) is read with its
+    own first file's footer schema, and Spark infers only without one."""
     schema = _footer_schema(d)
     if schema is None:
-        return spark.read.parquet(d)
+        files = _data_files(d)
+        plain = _file_schema(files[0]) if files else None
+        return spark.read.parquet(d) if plain is None else spark.read.schema(plain).parquet(*files)
     pid = T.StructField("partition_id", T.IntegerType(), True)
     return spark.read.schema(T.StructType([*schema.fields, pid])).parquet(d)
 
@@ -446,9 +454,10 @@ class StoreCatalog:
         """Atomically make `version` current (pointer flip == os.replace).
         Returns True when the pointer now serves `version`; False when the
         commit was superseded (a concurrent push committed a newer version
-        first — see below) or make_current=False. Committers use the False
-        return to restage their payload onto the winner (push.py lost-race
-        handling, ADVICE r5).
+        first — see below) or make_current=False. Committers report the
+        winner on a False return (PushResult.superseded_by), and a losing
+        eager incremental push restages its delta onto the winner's log
+        (push.incremental_push).
 
         `manifest` records push metadata alongside the version dir (row
         count, partitioner, push type, timestamps) — the role of the
@@ -684,8 +693,8 @@ class StoreCatalog:
         window_keys: list[str] | None = None,
     ) -> DataFrame:
         """base ∪ d1 ∪ ... ∪ dk with per-key precedence dk > ... > d1 > base.
-        Each d is a slot dir, or an already-read frame (the eager push's
-        in-flight delta rides on top of the slots this way).
+        Each d is a slot dir, or that slot already read as a frame (how
+        push._fold_slots passes its slots).
 
         Each delta is already one-row-per-key (deduped at push time), so
         precedence is purely the delta index. By default the window
@@ -698,7 +707,7 @@ class StoreCatalog:
         hides a put in d1.
 
         This is the ONE latest-wins LSM kernel. Folds that must not window
-        their base (compaction, the eager merge, every view reader) reach
+        their base (compaction, an eager push's fold, every view reader) reach
         it through push._fold_slots, which resolves the slots among
         themselves over an empty base with `window_keys` = the store key
         (slot reads carry no base partition_id there)."""

@@ -25,13 +25,17 @@ key, so Catalyst plans exactly one exchange). A version or slot write is
 that shuffle plus one write job. Values are never funneled through
 Python.
 
-One version writer: the batch push, compaction and the eager incremental
-push all land and commit a version through `_write_version` (the store's
-codec and key blooms, declared views, manifest, commit, late-slot sweep,
-lost-race report). Compaction and the eager merge fold the slot log the
-way the index readers do (`_fold_slots`): base ⟕anti touched keys ∪ the
-slots resolved among themselves, so the base crosses one exchange — the
-version repartition. Every slot write goes through `_stage_slot`.
+One version writer: the batch push, compaction and the eager
+incremental push all land and commit a version through `_write_version`
+(the store's codec and key blooms, declared views, manifest, commit,
+late-slot sweep, lost-race report).
+One landing path for incremental data: every incremental push writes
+its delta as a staged slot (`_stage_slot`, the one slot writer); a lazy
+push appends it to the serving version's log, and an eager push folds it
+on top of that log with compaction's fold (`_fold_version`). The fold
+resolves slots the way the index readers do (`_fold_slots`): base ⟕anti
+touched keys ∪ the slots resolved among themselves, so the base crosses
+one exchange — the version repartition.
 """
 
 from __future__ import annotations
@@ -81,19 +85,12 @@ class PushResult:
     # became current: the winning (serving) version number. Every
     # committer reports it (batch push, compaction, eager incremental
     # push — the one version writer); a defer_swap push never asked to
-    # serve, so it is not a loss. A lost compaction's slots stay on the
-    # log it folded. For an eager incremental push the delta was restaged
-    # as a lazy slot on the winner
-    # (reference semantics: incremental data applies to current and future
-    # versions — VenicePushJob.java:919-931; ADVICE r5), so the upserts ARE
-    # served; the orphan version stays addressable via set_version.
-    # Overlapping-key semantics of the restage: with order_col given, only
-    # delta rows at least as fresh as the winner's value for the key are
-    # restaged (record-order resolution, matching the reference's
-    # timestamp/offset discipline). WITHOUT order_col the restaged slot
-    # outranks the winner's base wholesale — i.e. on keys both pushes
-    # wrote, the push that lost the commit race wins resolution. Callers
-    # racing concurrent pushes over overlapping keys should pass order_col.
+    # serve, so it is not a loss. A lost fold's log slots stay where the
+    # winner folded, carried or superseded them, and an eager incremental
+    # push appends its staged delta to the winner's log, so it still
+    # serves (reference semantics: incremental data applies to current and
+    # future versions — VenicePushJob.java:919-931); the orphan version
+    # stays addressable via set_version.
     superseded_by: int | None = None
 
 
@@ -164,8 +161,8 @@ def _dedup_frame(
     else:
         if dedup_order_col is not None:
             # an order tie breaks by resolve_latest's value-JSON rule,
-            # as an incremental push with order_col does — never by
-            # the order rows reach the aggregation
+            # never by the order rows reach the aggregation; `op` and
+            # `colo` are plain value columns here
             from venice_spark.streaming.hybrid import value_json
 
             rest = [c for c in value_cols if c != dedup_order_col]
@@ -235,9 +232,10 @@ def sweep_late_deltas(
     new_md5p: bool,
 ) -> None:
     """Carry delta slots that landed on `old_version` after our resolve
-    snapshot over to `new_version`'s log (arrival order preserved) — a lazy
-    push racing ANY version-producing operation (compaction, eager
-    incremental, full batch push) would otherwise be silently lost, because
+    snapshot over to `new_version`'s log (arrival order preserved) — an
+    incremental push's slot racing ANY version-producing operation
+    (compaction, an eager push's fold, full batch push) would otherwise be
+    silently lost, because
     retired versions are never read again (code-review r4 generalized
     compact_store's private sweep to every committer). A carried slot is
     restamped when the old and new layouts disagree on EITHER the modulus
@@ -302,31 +300,44 @@ def _stage_slot(
     key_fields: list[str],
     layout: tuple[int, bool],
     check_conflicts: bool = False,
+    order_col: str | None = None,
+    fold_only: bool = False,
 ) -> tuple[str, int]:
     """Write `rows` (store-shaped, no partition_id) as a slot stamped with
     `layout` — the (partition count, md5 parity) of the version whose log
     it joins — into a fresh staging dir under the store; returns (staging
     dir, rows written). The write dedups `rows` to one per key inside its
-    one partition shuffle (`_dedup_frame`); with `check_conflicts` (a lazy
-    push without order_col) a key with differing rows is refused on the
-    write's observed verdict: the staging dir is removed and
-    DuplicateKeyError raised before anything is renamed. Every slot write
-    (a lazy push's append, the sweep's restamp) goes through here, and the
-    caller renames the dir into its log under the store lock: a crash
-    mid-write never leaves a half-written d{K} visible to list_delta_dirs. The stamp MUST match the base's full
+    one partition shuffle (`_dedup_frame`): with `order_col` the highest
+    order wins, an order tie breaking by the larger value JSON; with
+    `check_conflicts` (an incremental push without order_col) a key with
+    differing rows is refused on the write's observed verdict: the staging
+    dir is removed and DuplicateKeyError raised before anything is
+    renamed. Every slot write (an incremental push's delta, the sweep's
+    restamp) goes through here, and the caller renames the dir into its
+    log under the store lock (or, for an eager push, folds it without
+    renaming): a crash mid-write never leaves a half-written d{K} visible
+    to list_delta_dirs. The stamp MUST match the base's full
     layout (modulus AND hash — code-review r4): the read-side resolve
     groups on (partition_id, key), so a mismatched stamp would split one
-    key's base and slot rows (duplicate served rows)."""
+    key's base and slot rows (duplicate served rows).
+
+    A `fold_only` slot is an eager push's fold input and never joins a log
+    as written: the fold repartitions it, so it is written without the
+    partition_id dirs — one file per write task instead of one per
+    partition id, which halves the slot write at delta sizes."""
     n_parts, md5p = layout
     staging = os.path.join(
         catalog.store_dir(store), f"_delta_staging-{uuid.uuid4().hex}"
     )
     out, obs = _observe_write(
-        _dedup_frame(rows, key_fields, n_parts, md5p, None, check_conflicts),
+        _dedup_frame(rows, key_fields, n_parts, md5p, order_col, check_conflicts),
         key_fields,
     )
-    out.write.mode("overwrite").partitionBy("partition_id").parquet(staging)
-    _fix_empty_partitioned_dir(out, staging)
+    if fold_only:
+        out.drop("partition_id").write.mode("overwrite").parquet(staging)
+    else:
+        out.write.mode("overwrite").partitionBy("partition_id").parquet(staging)
+        _fix_empty_partitioned_dir(out, staging)
     # row count and verdict observed on the write job itself — no re-read pass
     metrics = obs.get
     _refuse_conflict(metrics.get("conflict"), staging, _DELTA_HINT)
@@ -337,7 +348,7 @@ def recover_stranded_deltas(
     spark: SparkSession, catalog: StoreCatalog, store: str
 ) -> int:
     """Heal the crash window between commit_version and sweep_late_deltas:
-    a process death there leaves late lazy slots stranded on the retired
+    a process death there leaves late slots stranded on the retired
     version FOREVER (retired versions are never read, and nothing re-runs
     the sweep). Post-hoc, a leftover slot on the old version is ambiguous
     — resolved slots legitimately remain there for rollback — so every
@@ -1189,14 +1200,12 @@ def _fold_slots(
     base: DataFrame,
     slots: list[str],
     keys: list[str],
-    top: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """The one slot fold — compaction, the eager merge and the index
-    readers all resolve a slot log here. Returns (kept, latest): `base`
-    minus every key a slot (or `top`, an in-flight prepared delta that
-    outranks them all) touched, and each touched key's latest row with
-    tombstones dropped. For a touched key the latest slot row IS its
-    current row (slots outrank the base), so latest-wins resolves among
+    """The one slot fold — compaction (an eager incremental push's too)
+    and the index readers all resolve a slot log here. Returns (kept,
+    latest): `base` minus every key a slot touched, and each touched key's
+    latest row with tombstones dropped. For a touched key the latest slot
+    row IS its current row (slots outrank the base), so latest-wins resolves among
     the slots alone — a delta-sized window, never a corpus rescan — and
     the base meets only a broadcast left-anti join: no exchange, sort or
     window touches it (a windowed merge would shuffle AND sort 100 TB to
@@ -1206,8 +1215,6 @@ def _fold_slots(
     # one read PER SLOT DIR: a multi-path read over partition_id-
     # partitioned sibling dirs raises CONFLICTING_DIRECTORY_STRUCTURES
     logs = [read_partitioned(spark, d).drop("partition_id") for d in slots]
-    if top is not None:
-        logs.append(top)
     touched = functools.reduce(
         DataFrame.unionByName, [log.select(*keys) for log in logs]
     )
@@ -1260,99 +1267,92 @@ def _prepare_delta(
     key_fields: list[str],
     order_col: str | None,
     nulls_as_deletes: bool,
-    lazy: bool,
 ) -> DataFrame:
-    """One row per key, tombstones marked: the canonical delta shape.
+    """The delta with its tombstones marked; the slot write dedups it.
 
     nulls_as_deletes: ETL-shaped inputs encode deletes as null values
     (union[null, T] — etl/UnionValueWithNull.avsc, TestBatch.java:768-791);
-    a delta row whose value columns are all NULL tombstones its key.
-
-    With `order_col` the highest value wins per key and equal values break
-    ties by streaming.hybrid.resolve_latest's rule (the larger canonical
-    JSON of the value columns), so one delta always resolves the same way.
-    Without it a key's rows must be identical: conflicting values raise
-    DuplicateKeyError, the batch push's I6 policy. For a `lazy` push that
-    dedup and check are left to the slot write, which runs them inside
-    its partition shuffle and observes the verdict on its own job
-    (`_stage_slot`); the eager merge, whose delta feeds its fold twice,
-    runs them here as one delta-sized aggregation and a check collect.
-    The base is never read."""
-    if nulls_as_deletes:
-        vcols = [c for c in delta.columns if c not in key_fields and c != order_col]
-        is_del = F.lit(True)
-        for c in vcols:
-            is_del = is_del & F.col(c).isNull()
-        delta = delta.withColumn("__del", is_del)
-    if order_col is not None:
-        from venice_spark.streaming.hybrid import resolve_latest
-
-        return resolve_latest(delta, key_fields, order_col)
-    if lazy:
+    a delta row whose value columns (`order_col` aside) are all NULL
+    tombstones its key. A delta with no such column has nothing to test,
+    so it is refused. The base is never read."""
+    if not nulls_as_deletes:
         return delta
-    value_cols = [c for c in delta.columns if c not in key_fields]
-    if not value_cols:
-        return delta.dropDuplicates(key_fields)  # key-only rows never conflict
-    grouped = delta.groupBy(*key_fields).agg(
-        F.first(F.struct(*value_cols)).alias("__v"),
-        F.countDistinct(F.struct(*value_cols)).alias(_DISTINCT),
-    )
-    conflict = (
-        grouped.filter(F.col(_DISTINCT) > 1)
-        .select(*key_fields)
-        .limit(1)
-        .collect()
-    )
-    _refuse_conflict(conflict[0] if conflict else None, hint=_DELTA_HINT)
-    return grouped.select(*key_fields, "__v.*")
+    vcols = [c for c in delta.columns if c not in key_fields and c != order_col]
+    if not vcols:
+        raise ValueError(
+            "nulls_as_deletes needs a value column: every row of a key-only "
+            "delta would tombstone its key"
+        )
+    is_del = functools.reduce(lambda a, b: a & b, [F.col(c).isNull() for c in vcols])
+    return delta.withColumn("__del", is_del)
 
 
-def _append_delta_slot(
-    spark: SparkSession,
+def _stage_delta(
     catalog: StoreCatalog,
     store: str,
     delta: DataFrame,
     key_fields: list[str],
-    check_conflicts: bool = False,
-) -> tuple[int, str, int, int]:
-    """Append a delta (`__del` tombstones marked) as the next lazy slot on
-    the store's CURRENT version; returns (version, slot_path, rows,
-    total_slots_on_version). The staging write dedups it to one row per
-    key; with `check_conflicts` a key with differing rows is refused
-    before the slot is renamed into the log.
-
-    Staged by `_stage_slot`, then renamed to its log slot while holding
-    the store lock: readers (list_delta_dirs matches only complete d{K}
-    names) never observe a half-written delta, and two concurrent lazy
-    pushes never claim the same K — each appends its own slot, ordered by
-    whoever locks first (the reference serializes incremental pushes per
-    store through the controller the same way). Shared by the lazy push
-    mode and the eager push's lost-race restage (ADVICE r5)."""
+    order_col: str | None = None,
+    fold_only: bool = False,
+) -> tuple[str, tuple[int, bool] | None, int]:
+    """Stage a delta (`__del` tombstones marked) as a slot stamped with the
+    store's CURRENT version's layout; returns (staging dir, layout, rows).
+    The staging write (`_stage_slot`) dedups it to one row per key (latest
+    `order_col` wins); without `order_col` a key with differing rows is
+    refused before anything is visible. Nothing reads a staging dir until
+    `_append_delta_slot` renames it into a log or `_fold_version` folds
+    it. A `fold_only` slot (an eager push's) has no layout (None)."""
     meta = catalog.get_store(store)
     cur = meta.current_version
     if cur <= 0:
         raise ValueError(f"store {store!r} has no current version to delta onto")
-    staged_layout = _version_layout(catalog, store, cur, meta)
+    layout = _version_layout(catalog, store, cur, meta)
     staging, rows = _stage_slot(
-        catalog, store, delta, key_fields, staged_layout, check_conflicts
+        catalog, store, delta, key_fields, layout, order_col is None, order_col,
+        fold_only,
     )
+    return staging, None if fold_only else layout, rows
+
+
+def _append_delta_slot(
+    catalog: StoreCatalog,
+    store: str,
+    delta: DataFrame,
+    key_fields: list[str],
+    staged: tuple[str, tuple[int, bool] | None],
+    order_col: str | None = None,
+) -> tuple[int, str, int]:
+    """Rename a staged delta (`_stage_delta`: its dir and layout) into the
+    store's CURRENT version's log as the next slot; returns (version,
+    slot_path, total_slots_on_version).
+
+    The rename runs while holding the store lock: readers
+    (list_delta_dirs matches only complete d{K} names) never observe a
+    half-written delta, and two concurrent incremental pushes never claim
+    the same K — each appends its own slot, ordered by whoever locks first
+    (the reference serializes incremental pushes per store through the
+    controller the same way)."""
+    staging, staged_layout = staged
     with catalog._locked(store):
         # re-resolve the CURRENT version under the lock: the staging
         # write can take minutes, and a concurrent compact/eager/batch
-        # push may have committed a new version since `cur` was read —
+        # push may have committed a new version since it was staged —
         # renaming into the old version's delta log would silently lose
         # this push (retired versions are never read again). A delta is
         # pure upsert data, so landing it on whatever is current now
         # preserves the caller's intent exactly.
-        cur = catalog.get_store(store).current_version
+        meta = catalog.get_store(store)
+        cur = meta.current_version
         target_layout = _version_layout(catalog, store, cur, meta)
         if target_layout != staged_layout:
             # rare: the new current version was written with a
-            # different layout — restage to match it (the first staging
-            # write already passed the I6 verdict)
+            # different layout, or the delta was staged as an eager
+            # push's fold input and that fold lost its commit — restage
+            # to match it (the first staging write already passed the I6
+            # verdict)
             shutil.rmtree(staging, ignore_errors=True)
-            staging, rows = _stage_slot(
-                catalog, store, delta, key_fields, target_layout
+            staging, _ = _stage_slot(
+                catalog, store, delta, key_fields, target_layout, order_col=order_col
             )
         existing = catalog.list_delta_dirs(store, cur)
         # Arrival sequence sidecar: precedence metadata rides INSIDE the
@@ -1368,7 +1368,7 @@ def _append_delta_slot(
             catalog.deltas_dir(store, cur), f"d{_next_slot_index(existing)}"
         )
         os.rename(staging, dpath)
-    return cur, dpath, rows, len(existing) + 1
+    return cur, dpath, len(existing) + 1
 
 
 def incremental_push(
@@ -1382,107 +1382,72 @@ def incremental_push(
 ) -> PushResult:
     """W9: apply a keyed delta onto the current version's content.
 
-    The reference applies incremental-push records in place on the current
-    version (VenicePushJob.java:919-931). Two Spark-first materializations:
+    The reference lands incremental-push records on the current (and any
+    future) version; nothing merges ahead of the write
+    (VenicePushJob.java:919-931). Every push here writes the delta once,
+    as a staged slot (`_stage_delta`): one delta-sized write that never
+    touches the base. Then:
 
-    eager=True (default): fold the current version — base, pending lazy
-    slots, and the delta on top — into a NEW version dir (compact_store's
-    fold, `_fold_slots`) and flip the catalog pointer — atomic (os.replace
-    of store.json), a crash mid-push never loses the previous snapshot.
-    The base meets only a BROADCAST LEFT-ANTI join on the touched keys +
-    union: the delta is tiny relative to the base, so the base side is
-    never shuffled or sorted for the merge — only the unavoidable
-    repartition for the version write remains.
+    eager=True (default): compaction's fold (`_fold_version`) lands the
+    serving version's base ⟕anti touched keys ∪ its slot log ∪ the staged
+    slot (highest precedence) as a NEW version and flips the pointer
+    (atomic os.replace of store.json). The staged slot never joins the
+    pre-push version's log, so a rollback to that version undoes the push.
+    When a concurrent committer's newer version wins the commit instead,
+    the result names it in superseded_by and the delta is restaged onto
+    the serving version's log (`_append_delta_slot`), so the delta
+    still serves — as a lazy push landing after the winner would. A crash
+    before the commit leaves the store as it was.
 
-    eager=False: LSM shape — append the delta to the current version's
-    delta log (catalog.deltas_dir) WITHOUT touching the base; reads resolve
-    base ∪ deltas latest-wins (StoreCatalog._resolve_delta_view) and
-    compaction is deferred to compact_store / the `delta_compact_threshold`
-    store config (default 8). At 100 TB an incremental push then costs
-    delta-sized I/O, not a full rewrite.
+    eager=False: append the staged slot to the serving version's delta log
+    now; reads resolve base ∪ slots latest-wins
+    (StoreCatalog._resolve_delta_view), and the fold is left to
+    compact_store or the `delta_compact_threshold` store config (default
+    8 slots). At 100 TB an incremental push then costs delta-sized I/O,
+    not a full rewrite.
 
-    A delta holding one key with conflicting values needs `order_col`
-    (see _prepare_delta); without it the push raises DuplicateKeyError."""
-    # heal a predecessor that died between commit and sweep first — the
-    # eager path's slot snapshot must include recovered slots
-    recover_stranded_deltas(spark, catalog, store)
+    Within one delta, with `order_col` the highest value wins per key and
+    an order tie breaks by the larger canonical JSON of the other columns
+    — streaming.hybrid.resolve_latest's pick, made inside the slot write's
+    one shuffle; a delta column named `op` or `colo` is a plain value
+    column here, as it is for the batch push's `dedup_order_col`. Without
+    `order_col` a key's rows must be identical: conflicting values raise
+    DuplicateKeyError (the batch push's I6 policy, observed on the slot
+    write) before anything lands."""
     meta = catalog.get_store(store)
-    key_fields = meta.key_fields
-    delta = _prepare_delta(delta, key_fields, order_col, nulls_as_deletes, lazy=not eager)
-
-    if not eager:
-        cur, dpath, rows, n_slots = _append_delta_slot(
-            spark, catalog, store, delta, key_fields, check_conflicts=order_col is None
-        )
-        threshold = int(meta.config.get("delta_compact_threshold", 8))
-        if n_slots >= threshold:
-            return compact_store(spark, catalog, store)
-        return PushResult(store, cur, rows, meta.partition_count, dpath)
-
-    res = _fold_version(spark, catalog, store, "incremental", top=delta)
-    if res.superseded_by is None:
+    delta = _prepare_delta(delta, meta.key_fields, order_col, nulls_as_deletes)
+    # heal a predecessor that died between commit and sweep first — the
+    # fold's slot snapshot must include recovered slots
+    recover_stranded_deltas(spark, catalog, store)
+    staging, layout, rows = _stage_delta(
+        catalog, store, delta, meta.key_fields, order_col, fold_only=eager
+    )
+    if eager:
+        try:
+            res = _fold_version(spark, catalog, store, "incremental", staged=staging)
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        if res.superseded_by is None:
+            shutil.rmtree(staging, ignore_errors=True)
+        else:
+            _append_delta_slot(
+                catalog, store, delta, meta.key_fields, (staging, layout), order_col
+            )
         return res
-    # Lost the commit race: a concurrent push committed a newer version
-    # first, so this push's merged snapshot never serves and its upserts
-    # lived only in the orphan version (reachable via set_version).
-    # Reference semantics apply incremental data to current AND future
-    # versions (VenicePushJob.java:919-931), so restage the delta —
-    # tombstones included — as a lazy slot on the version actually serving
-    # (ADVICE r5). The restage only fires on a commit-time LOSS: after a
-    # won commit, a later winner's base already contains these rows, and
-    # re-appending them could regress the later push's fresher values.
-    #
-    # Freshness on overlapping keys (ADVICE r6, low): a restaged slot
-    # outranks the winner's base unconditionally, which would let the race
-    # LOSER override the winner regardless of record order. When the
-    # caller supplied order_col (the reference's record timestamp/offset —
-    # ActiveActiveStoreIngestionTask resolves concurrent writes by it,
-    # never by commit order), the restage keeps only delta rows at least as
-    # fresh as the winner's current value for that key (>= : the
-    # incremental write wins ties, same as put's last-writer-wins). Without
-    # order_col there is nothing to compare, and the restage keeps the
-    # documented last-RESTAGED-wins semantics (see PushResult.superseded_by).
-    restage = delta
-    if order_col is not None and order_col in restage.columns:
-        winner = catalog.read_current(spark, store)
-        if order_col in winner.columns:
-            cur_ord = (
-                winner.join(
-                    F.broadcast(restage.select(*key_fields).distinct()),
-                    on=key_fields,
-                    how="left_semi",
-                ).select(
-                    *key_fields, F.col(order_col).alias("__winner_ord")
-                )
-            )
-            # NULL-order delta rows stay restageable (ADVICE r7, low): the
-            # non-racing path applies an unordered upsert unconditionally
-            # (the slot outranks the base by arrival), so losing the commit
-            # race must not silently drop it — NULL >= __winner_ord would
-            # evaluate to NULL and fail the filter. An unordered row
-            # therefore restages even on a contested key, keeping racing
-            # and non-racing outcomes identical for writers that never
-            # supplied order_col values.
-            restage = (
-                restage.join(F.broadcast(cur_ord), on=key_fields, how="left")
-                .filter(
-                    F.col("__winner_ord").isNull()
-                    | F.col(order_col).isNull()
-                    | (F.col(order_col) >= F.col("__winner_ord"))
-                )
-                .drop("__winner_ord")
-            )
-    if restage.limit(1).count() > 0:
-        _append_delta_slot(spark, catalog, store, restage, key_fields)
-    return res
+    cur, dpath, n_slots = _append_delta_slot(
+        catalog, store, delta, meta.key_fields, (staging, layout), order_col
+    )
+    if n_slots >= int(meta.config.get("delta_compact_threshold", 8)):
+        return compact_store(spark, catalog, store)
+    return PushResult(store, cur, rows, meta.partition_count, dpath)
 
 
 def compact_store(spark: SparkSession, catalog: StoreCatalog, store: str) -> PushResult:
     """Fold the current version's delta log into a new compacted version and
-    flip the pointer (the lazy half of eager=False incremental pushes —
-    RocksDB compaction's role in the reference's storage tier). The fold
-    (`_fold_slots`) resolves latest-wins exactly as readers do, so
-    compaction never changes observable content, only read cost. A
+    flip the pointer (RocksDB compaction's role in the reference's storage
+    tier). The fold (`_fold_slots`) resolves latest-wins exactly as readers
+    do, so compaction never changes observable content, only read cost. A
     compaction that loses its commit to a newer version reports it in
     superseded_by; the slots it folded stay on their log."""
     recover_stranded_deltas(spark, catalog, store)
@@ -1494,21 +1459,23 @@ def _fold_version(
     catalog: StoreCatalog,
     store: str,
     push_type: str,
-    top: DataFrame | None = None,
+    staged: str | None = None,
 ) -> PushResult:
-    """Compaction and the eager merge: the serving version's base with its
-    slot log — and `top`, the eager push's prepared delta, over it — folded
-    by `_fold_slots` into a new version (`_write_version`). The slots listed
-    here are exactly the ones folded, so the manifest's resolved set
-    matches the content and every later slot carries over."""
+    """Compaction, and the fold of an eager incremental push: the serving
+    version's base with its slot log folded by `_fold_slots` into a new
+    version (`_write_version`). An eager push's `staged` slot dir folds
+    last, above the log, without joining it. The log slots listed here are
+    exactly the ones folded, so the manifest's resolved set matches the
+    content and every later slot carries over."""
     meta = catalog.get_store(store)
     old = meta.current_version
     if old <= 0:
         raise ValueError(f"store {store!r} has no current version")
     slots = catalog.list_delta_dirs(store, old)
+    folded = slots + ([staged] if staged is not None else [])
     merged = catalog.read_version(spark, store, old).drop("partition_id")
-    if slots or top is not None:
-        kept, latest = _fold_slots(spark, merged, slots, meta.key_fields, top)
+    if folded:
+        kept, latest = _fold_slots(spark, merged, folded, meta.key_fields)
         merged = kept.unionByName(latest, allowMissingColumns=True)
     md5p = bool(meta.config.get("md5_parity", False))
     out = repartition_and_sort(merged, meta.key_fields, meta.partition_count, md5p)
